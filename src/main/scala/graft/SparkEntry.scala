@@ -87,10 +87,11 @@ object SparkEntry {
     * monitor family); the rule sizes those streams to 1 partition at
     * this input (a few MB) at EITHER core count.
     */
-  private def streamStateParts(s: SparkSession, sizingPath: String): Int = {
+  private[graft] def streamStateParts(s: SparkSession, sizingPath: String): Int = {
     val target = sys.env.get("GRAFT_STREAM_STATE_TARGET_BYTES")
       .map(_.toLong).filter(_ > 0L)
       .getOrElse(64L * 1024L * 1024L)
+    val cores = s.sparkContext.defaultParallelism.toLong
     // a parquet "table" here is a file or a directory of part files
     val bytes =
       try {
@@ -109,8 +110,7 @@ object SparkEntry {
           } finally walk.close()
         } else java.nio.file.Files.size(p)
       }
-      catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
-    val cores = s.sparkContext.defaultParallelism.toLong
+      catch { case scala.util.control.NonFatal(_) => return cores.toInt }
     math.max(1L, math.min(cores, (bytes + target - 1L) / target)).toInt
   }
 

@@ -9,12 +9,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Per study: discover files → normalize metadata (X6 accession
   * override) → maintain dims (D1-D3) → melt + whitelist-filter the
   * expression matrix (R1/F1-F4) → key the facts through broadcast dim
-  * joins (J3/J4) → anti-join dedup against existing facts (J7, the
-  * idempotence contract REQ-005/REQ-007) → append.
+  * joins (J3/J4) → anti-join dedup against the batch's existing facts
+  * (J7 over an F7-pruned read, the idempotence contract
+  * REQ-005/REQ-007) → append.
   *
-  * Studies process sequentially on the driver but every per-study plan
-  * is fully distributed; failure isolation per study matches the
-  * reference's swallow-log-continue (pipeline.py:351-356).
+  * Studies are DATA parallelism (SURVEY.md §2.10 X1), not a driver
+  * loop: every study's rows flow through ONE set of batched plans —
+  * one upsert per dimension, one whitelist-filtered melt union, one
+  * anti-join dedup, one fact append. The reference loads studies one
+  * at a time in a thread pool (pipeline.py:340-356); here the job
+  * count does not grow with the study count. Failure isolation per
+  * study (the reference's swallow-log-continue, pipeline.py:351-356)
+  * happens where its format errors surface: driver-side discovery and
+  * header validation exclude a bad study before anything publishes.
   */
 class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -23,56 +30,29 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
   case class StudyResult(accession: String, samples: Long, facts: Long,
       error: Option[String] = None, skipped: Boolean = false)
 
-  /** Sequential per-study run. With `resume = true`, studies whose
-    * [[StudyState]] row is terminal (facts_loaded) are skipped without
-    * touching their data — the D4 resume surface. The default processes
-    * everything and relies on the J7 anti-join for idempotence, the
-    * reference's own behavior for studies it has already finished
-    * (their cleared state means a plain re-run re-scans them too).
+  /** Load every study directory under the configured input root. With
+    * `resume = true`, studies whose [[StudyState]] row is terminal
+    * (facts_loaded) are skipped without touching their data — the D4
+    * resume surface. The default processes everything and relies on
+    * the J7 anti-join for idempotence, the reference's own behavior
+    * for studies it has already finished (their cleared state means a
+    * plain re-run re-scans them too).
     */
-  def run(resume: Boolean = false): Seq[StudyResult] = {
-    val genes = GeneFilter.load(spark, config.processing.geneFilterFile.toString)
-    val dirs = StudyDiscovery.discoverStudyDirs(config.processing.inputDirectory)
-    val done = if (resume) StudyState.completed(wh) else Set.empty[String]
-    dirs.map { dir =>
-      try {
-        val files = StudyDiscovery.discoverStudyFiles(dir)
-        if (done.contains(files.studyAccession)) {
-          log.info(s"Skipping completed study ${files.studyAccession} (resume)")
-          StudyResult(files.studyAccession, 0, 0, skipped = true)
-        } else processStudy(files, genes)
-      } catch {
-        case e: Exception =>
-          log.error(s"Failed to process study ${dir.getFileName}: ${e.getMessage}")
-          StudyResult(dir.getFileName.toString, 0, 0, Some(e.getMessage))
-      }
-    }
-  }
+  def run(resume: Boolean = false): Seq[StudyResult] =
+    processUnioned(StudyDiscovery.discoverStudyDirs(config.processing.inputDirectory), resume)
 
   private case class Prep(acc: String, samples: DataFrame, melted: DataFrame)
 
-  /** Scale path (SURVEY.md §2.10 X1): studies become DATA parallelism.
-    * All studies' rows flow through ONE set of batched plans — one
-    * upsert per dimension, one whitelist-filtered melt union, one
-    * anti-join dedup, one fact append — instead of a per-study driver
-    * loop issuing jobs study by study. With hundreds of studies the
-    * loop is scheduler-bound; here the union is a single pipeline whose
-    * parallelism is the data itself.
+  /** The load over an EXPLICIT study-directory list — the engine of
+    * [[run]] (which discovers from the config root) and of
+    * [[graft.streaming.StreamingEtl]] (which receives newly arrived
+    * directories per micro-batch).
     *
-    * Failure isolation (X3) happens where the reference's format errors
-    * surface: driver-side file discovery and header validation. A study
-    * failing there is reported and excluded; the distributed execution
-    * then runs over the good studies only. Warehouse contents are
-    * value-identical to [[run]] (surrogate keys may be assigned in a
-    * different order).
-    */
-  def runUnioned(resume: Boolean = false): Seq[StudyResult] =
-    processUnioned(StudyDiscovery.discoverStudyDirs(config.processing.inputDirectory), resume)
-
-  /** The unioned pipeline over an EXPLICIT study-directory list — the
-    * shared engine of [[runUnioned]] (which discovers from the config
-    * root) and [[graft.streaming.StreamingEtl]] (which receives newly
-    * arrived directories per micro-batch).
+    * A study failing discovery or header validation is reported and
+    * excluded; the distributed execution then runs over the good
+    * studies only. A failure inside the publish phase fails every
+    * prepared study of the batch: the error is reported per study,
+    * never thrown.
     */
   def processUnioned(dirs: Seq[java.nio.file.Path], resume: Boolean = false): Seq[StudyResult] = {
     val done = if (resume) StudyState.completed(wh) else Set.empty[String]
@@ -99,7 +79,7 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
           Right(Prep(acc, samples, melted))
         }
       } catch {
-        case e: Exception =>
+        case e: Exception if !interrupted(e) =>
           log.error(s"Failed to prepare study ${dir.getFileName}: ${e.getMessage}")
           Left(StudyResult(dir.getFileName.toString, 0, 0, Some(e.getMessage)))
       }
@@ -115,12 +95,30 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
     // transaction (pipeline.py:271-301) extended to multi-table reader
     // isolation. Other backends publish table-by-table (each op
     // individually crash-safe; X2 idempotence covers re-runs).
-    val ok = wh match {
-      case sw: SnapshotWarehouse => sw.transact(txn => publishUnioned(txn, preps))
-      case other => publishUnioned(other, preps)
-    }
+    val ok =
+      try wh match {
+        case sw: SnapshotWarehouse => sw.transact(txn => publishUnioned(txn, preps))
+        case other => publishUnioned(other, preps)
+      } catch {
+        case e: Exception if !interrupted(e) =>
+          log.error(s"Failed to publish studies ${preps.map(_.acc).mkString(", ")}: ${e.getMessage}")
+          preps.map(p => StudyResult(p.acc, 0, 0, Some(e.getMessage)))
+      }
     (ok ++ failures).sortBy(_.accession)
   }
+
+  /** An interrupt is the caller stopping the load (a streaming query's
+    * `stop()`), not a failed study: it must propagate, so the stopped
+    * micro-batch stays uncommitted instead of reporting its studies
+    * as failed.
+    */
+  private def interrupted(e: Throwable): Boolean =
+    Thread.currentThread().isInterrupted ||
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+        case _: InterruptedException | _: java.io.InterruptedIOException |
+             _: java.nio.channels.ClosedByInterruptException => true
+        case _ => false
+      }
 
   /** The publish phase of [[processUnioned]] — all warehouse reads and
     * writes go through `w`, which is either the backend itself or a
@@ -175,10 +173,20 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
       .join(sampleDim, Seq("sample_accession", "study_key"))
       .join(broadcast(geneDim), Seq("gene_id"))
       .select("sample_key", "gene_key", "study_key", "expression_value")
-      // intra-batch dedup, same contract as processStudy
+      // intra-batch dedup: the reference's per-row seen-set also drops
+      // duplicates WITHIN one file (repeated gene row / repeated GSM
+      // column); min() is the deterministic stand-in for its
+      // first-in-file-order pick
       .groupBy("sample_key", "gene_key", "study_key")
       .agg(min(col("expression_value")).as("expression_value"))
-    val existing = w.read("fact_expression").select("sample_key", "gene_key")
+    // J7 against the batch's own studies only: a sample key belongs to
+    // one study, so facts outside the batch can never match, and the
+    // study_key predicate prunes their partitions at the scan (F7)
+    val keyByAcc = studyDim.where(col("study_accession").isin(preps.map(_.acc): _*)).collect()
+      .map(r => r.getAs[String]("study_accession") -> r.getAs[Long]("study_key")).toMap
+    val existing = w.read("fact_expression")
+      .where(col("study_key").isin(keyByAcc.values.toSeq: _*))
+      .select("sample_key", "gene_key")
     val fresh = keyed.join(existing, Seq("sample_key", "gene_key"), "left_anti").cache()
 
     val factsByStudy = fresh.groupBy("study_key").count().collect()
@@ -190,128 +198,29 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
     StudyState.upsert(w, spark, preps.map(_.acc), metadataLoaded = true,
       factsLoaded = true)
 
-    val samplesByAcc = allSamples.groupBy("study_accession").count().collect()
-      .map(r => r.getAs[String]("study_accession") -> r.getAs[Long]("count")).toMap
+    // per-study sample counts and A1 completion (metadata_processing.py:26-38)
+    // in the one aggregate the result needs anyway
+    val sampleStats = allSamples.groupBy("study_accession").agg(
+        count(lit(1)).as("total"),
+        sum(when(col("age") =!= Schema.UnknownValue, 1L).otherwise(0L)).as("complete_age"),
+        sum(when(col("sex") =!= Schema.UnknownValue, 1L).otherwise(0L)).as("complete_sex"))
+      .collect()
+      .map(r => r.getAs[String]("study_accession") ->
+        (r.getAs[Long]("total"), r.getAs[Long]("complete_age"), r.getAs[Long]("complete_sex")))
+      .toMap
     allSamples.unpersist()
-    val keyByAcc = studyDim.collect()
-      .map(r => r.getAs[String]("study_accession") -> r.getAs[Long]("study_key")).toMap
     preps.map { p =>
-      StudyResult(p.acc, samplesByAcc.getOrElse(p.acc, 0L),
-        keyByAcc.get(p.acc).flatMap(factsByStudy.get).getOrElse(0L))
+      val (samples, age, sex) = sampleStats.getOrElse(p.acc, (0L, 0L, 0L))
+      val facts = keyByAcc.get(p.acc).flatMap(factsByStudy.get).getOrElse(0L)
+      if (config.logging.logDataQuality) {
+        val total = samples.max(1L)
+        log.info(f"Study ${p.acc}: $samples samples, " +
+          f"age completion ${100.0 * age / total}%.2f%%, " +
+          f"sex completion ${100.0 * sex / total}%.2f%%")
+      }
+      if (config.logging.logRecordCounts)
+        log.info(s"Study ${p.acc}: $facts expression facts written")
+      StudyResult(p.acc, samples, facts)
     }
-  }
-
-  /** Per-study load. On the snapshot backend the whole study — dims,
-    * state, facts — publishes as ONE manifest commit. That is STRICTER
-    * than the reference's per-study transaction: pipeline.py commits
-    * the metadata phase mid-study (upsert_state + session.commit,
-    * pipeline.py:274-280) before expression processing, so a
-    * mid-expression failure there retains the dims and the
-    * `metadata_loaded` resume checkpoint; here a failed study leaves
-    * NOTHING, including that mid-study resume state — the trade is
-    * all-or-nothing isolation for resume granularity (a retried study
-    * redoes its metadata phase; X2 idempotence makes that safe). Other
-    * backends keep the documented batch-level approximation
-    * (metadata-phase dims persist past a later facts failure).
-    */
-  def processStudy(files: StudyFiles, geneWhitelist: DataFrame): StudyResult =
-    wh match {
-      case sw: SnapshotWarehouse =>
-        sw.transact(txn => processStudyWith(txn, files, geneWhitelist))
-      case other => processStudyWith(other, files, geneWhitelist)
-    }
-
-  private def processStudyWith(w: Warehouse, files: StudyFiles,
-      geneWhitelist: DataFrame): StudyResult = {
-    val acc = files.studyAccession
-
-    // --- metadata → dims -------------------------------------------------
-    val rawSamples = Metadata.load(spark, files.metadataFile.toString, config.fieldMappings)
-    val samples0 = rawSamples.cache()
-    if (samples0.limit(1).count() == 0)
-      throw new StudyProcessingError(s"No valid samples found in metadata ${files.metadataFile}")
-    val mismatches = Metadata.mismatchCount(samples0, acc)
-    if (mismatches > 0)
-      log.warn(s"$mismatches samples referenced differing study accession (expected $acc)")
-    val samples = Metadata.overrideStudyAccession(samples0, acc)
-
-    val dimStudy = Dims.upsertDim(w.read("dim_study"),
-      spark.createDataFrame(Seq(Tuple1(acc))).toDF("gse_accession"),
-      "study_key", "gse_accession")
-    w.writeDim("dim_study", dimStudy)
-    val studyKey = w.read("dim_study")
-      .where(col("gse_accession") === acc).head.getAs[Long]("study_key")
-
-    val dimPlatform = Dims.upsertDim(w.read("dim_platform"),
-      samples.select(col("platform_accession")), "platform_key", "platform_accession")
-    w.writeDim("dim_platform", dimPlatform)
-    val dimIllness = Dims.upsertDim(w.read("dim_illness"),
-      samples.select(col("illness_label")), "illness_key", "illness_label")
-    w.writeDim("dim_illness", dimIllness)
-
-    // __ord = per-file byte offset from Metadata.load — true file
-    // order under any split layout (see the runUnioned call site)
-    val incoming = Dims.resolveFk(
-      Dims.resolveFk(
-        samples.withColumn("study_key", lit(studyKey)),
-        w.read("dim_platform"), "platform_accession", "platform_accession", "platform_key"),
-      w.read("dim_illness"), "illness_label", "illness_label", "illness_key")
-      .select("gsm_accession", "study_key", "platform_key", "illness_key", "age", "sex", "__ord")
-    w.writeDim("dim_sample", Dims.upsertSampleDim(w.read("dim_sample"), incoming))
-    // D4: metadata phase committed (pipeline.py:274-280)
-    StudyState.upsert(w, spark, Seq(acc), metadataLoaded = true, factsLoaded = false)
-
-    val quality = Metadata.quality(samples0).head
-    if (config.logging.logDataQuality) {
-      val total = quality.getAs[Long]("total_samples").max(1L)
-      log.info(f"Study $acc: ${quality.getAs[Long]("total_samples")} samples, " +
-        f"age completion ${100.0 * quality.getAs[Long]("complete_age") / total}%.2f%%, " +
-        f"sex completion ${100.0 * quality.getAs[Long]("complete_sex") / total}%.2f%%")
-    }
-
-    // --- expression → facts ----------------------------------------------
-    val expectedSamples = samples.select("gsm_accession").distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    val melted = ExpressionMatrix.load(spark, files.expressionFile.toString, expectedSamples)
-    val filtered = GeneFilter.filterGenes(melted, geneWhitelist, "gene_id")
-
-    val dimGene = Dims.upsertGeneDim(w.read("dim_gene"),
-      filtered.select(col("gene_id").as("ensembl_id")))
-    w.writeDim("dim_gene", dimGene)
-
-    val sampleDim = w.read("dim_sample")
-      .where(col("study_key") === studyKey)
-      .select(col("gsm_accession").as("sample_accession"), col("sample_key"))
-    val geneDim = w.read("dim_gene").select(col("ensembl_id").as("gene_id"), col("gene_key"))
-
-    val keyed = filtered
-      .join(broadcast(sampleDim), Seq("sample_accession")) // J3
-      .join(broadcast(geneDim), Seq("gene_id"))            // J4
-      .select(col("sample_key"), col("gene_key"), lit(studyKey).as("study_key"),
-        col("expression_value"))
-      // intra-batch dedup: the reference's per-row seen-set also drops
-      // duplicates WITHIN one file (repeated gene row / repeated GSM
-      // column); min() is the deterministic stand-in for its
-      // first-in-file-order pick
-      .groupBy("sample_key", "gene_key", "study_key")
-      .agg(min(col("expression_value")).as("expression_value"))
-
-    val existing = w.read("fact_expression")
-      .where(col("study_key") === studyKey)                // F7: partition-pruned
-      .select("sample_key", "gene_key")
-    val fresh = keyed.join(existing, Seq("sample_key", "gene_key"), "left_anti") // J7
-      .cache()
-
-    val factCount = fresh.count()
-    w.appendFacts("fact_expression", fresh)
-    fresh.unpersist()
-    // D4 terminal state: batch analog of clear_state-on-success
-    StudyState.upsert(w, spark, Seq(acc), metadataLoaded = true, factsLoaded = true)
-
-    val sampleCount = samples0.count()
-    samples0.unpersist()
-    if (config.logging.logRecordCounts)
-      log.info(s"Study $acc: $factCount expression facts written")
-    StudyResult(acc, sampleCount, factCount)
   }
 }

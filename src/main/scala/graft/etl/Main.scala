@@ -64,18 +64,12 @@ object Main {
       case "etl" =>
         val cfg = EtlConfig.load(required("config"))
         val wh = warehouseFor(cfg)
-        val job = new EtlJob(spark, cfg, wh)
-        val mode = opts.get("mode").flatMap(_.headOption).getOrElse("sequential")
         // The reference resumes unconditionally — every run loads state
         // and skips completed studies (reference pipeline.py:101-105,
         // 255-270) — so resume is the DEFAULT; --no-resume forces a full
         // re-scan (still idempotent via the J7 anti-join, just slower).
         val resume = !flag(opts, "no-resume")
-        val results = mode match {
-          case "unioned"    => job.runUnioned(resume)
-          case "sequential" => job.run(resume)
-          case other => usageError(s"Unknown --mode: $other (expected sequential|unioned)")
-        }
+        val results = new EtlJob(spark, cfg, wh).run(resume)
         printResults(results)
         if (results.exists(_.error.isDefined)) 1 else 0
       case "etl-stream" =>
@@ -293,7 +287,7 @@ object Main {
     }
 
   private def usage(): Unit = System.err.println(
-    """usage: graft.etl.Main etl --config <yaml> [--warehouse <dir|jdbc:url>] [--mode unioned] [--no-resume]
+    """usage: graft.etl.Main etl --config <yaml> [--warehouse <dir|jdbc:url>] [--no-resume]
       |       graft.etl.Main etl-stream --config <yaml> --manifest <dir> [--warehouse <dir|jdbc:url>] [--checkpoint <dir>] [--no-resume] [--follow [--interval "10 seconds"]]
       |       graft.etl.Main correlate [--warehouse <dir|jdbc:url>] [--study <GSE>]... [--exact-p]
       |       graft.etl.Main curate --config <pipeline.yaml> --input <parquet> --output <dir>

@@ -190,13 +190,6 @@ object Metadata {
       .where(col("gsm_accession") =!= "") // F5: blank-GSM rows dropped
   }
 
-  /** Per-study metadata quality aggregate (A1, metadata_processing.py:26-38). */
-  def quality(samples: DataFrame): DataFrame =
-    samples.agg(
-      count(lit(1)).as("total_samples"),
-      sum(when(col("age") =!= UnknownValue, 1L).otherwise(0L)).as("complete_age"),
-      sum(when(col("sex") =!= UnknownValue, 1L).otherwise(0L)).as("complete_sex"))
-
   /** X6: samples referencing a different experiment accession are
     * forced to the directory-derived study (pipeline.py:131-139);
     * returns the overridden frame (the caller logs the mismatch count).

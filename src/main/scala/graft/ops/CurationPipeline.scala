@@ -276,7 +276,12 @@ object CurationPipeline {
             .withColumn(cfg.text, col("redacted"))
             .select(shape: _*)
         case BoilerplateDrop(minDocs, source) =>
-          TextStats.dropBoilerplateLines(df, minDocs, cfg.id, source, cfg.text)
+          // the line filter returns only (id, source, text_clean, ...):
+          // the cleaned text rejoins the input rows so every other
+          // column of the frame survives the stage
+          val cleaned = TextStats.dropBoilerplateLines(df, minDocs, cfg.id, source, cfg.text)
+            .select(col(cfg.id), col("text_clean"))
+          df.join(cleaned, Seq(cfg.id))
             .withColumn(cfg.text, col("text_clean"))
             .select(shape: _*)
         case HashSample(pct) =>

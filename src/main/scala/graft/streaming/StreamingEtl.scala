@@ -16,9 +16,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * file log gives exactly-once manifest processing across restarts.
   *
   * Each micro-batch routes its studies through the SAME batched plans
-  * as `EtlJob.runUnioned` ([[graft.etl.EtlJob.processUnioned]]): one
-  * upsert per dimension, one whitelist-filtered melt union, one
-  * anti-join fact dedup, one append, StudyState committed per phase.
+  * as `EtlJob.run` ([[graft.etl.EtlJob.processUnioned]]): one upsert
+  * per dimension, one whitelist-filtered melt union, one anti-join fact
+  * dedup, one append, StudyState committed per phase. A study that
+  * fails — in preparation or in the publish phase — is reported in the
+  * batch's results; with `failOpen = false` that fails the micro-batch,
+  * so its manifests are retried (see [[ingestAvailable]]).
   * So the warehouse after N arrival batches is value-identical to one
   * batch load of the same studies (StreamingEtlSpec pins it), and a
   * REPLAYED batch — crash between the foreachBatch side-effect and the
@@ -27,8 +30,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * 100 TB: the manifest stream is driver-scale (paths, not data); all
   * heavy lifting stays in the distributed batch plans, which scale
-  * with the studies IN the batch, not the warehouse size (F7-pruned
-  * anti-join reads). Run with [[ingestAvailable]] on a schedule or a
+  * with the studies IN the batch, not the warehouse size (the J7
+  * anti-join reads only the batch's `study_key` partitions of the
+  * fact table, F7). Run with [[ingestAvailable]] on a schedule or a
   * long-lived `Trigger.ProcessingTime` query — same code path.
   */
 class StreamingEtl(spark: SparkSession, config: AppConfig, warehouseDir: String) {

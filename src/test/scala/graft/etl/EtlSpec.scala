@@ -362,7 +362,7 @@ class EtlSpec extends SparkSpec {
     assert(r.isNullAt(r.fieldIndex("q_value")))
   }
 
-  test("X1: unioned ETL produces a value-identical warehouse to the per-study loop") {
+  test("X1: the batched load isolates a bad study; a re-run adds no facts") {
     val root = tmpDir()
     makeStudy(root) // GSE9006 (incomplete matrix + messy metadata)
     val d = Files.createDirectories(root.resolve("GSE0002"))
@@ -370,26 +370,19 @@ class EtlSpec extends SparkSpec {
       metadataTsv.replace("GSE9006", "GSE0002").replace("GSE_OTHER", "GSE0002"))
     write(d, "expression_GSE0002.tsv",
       "gene\tGSM1\tGSM2\tGSM3\tGSM4\nENSG1\t1.0\t2.0\t3.0\t4.0\nENSG2\t2.0\t4.0\t6.0\t8.0\n")
-    // a broken study must fail in BOTH modes without hurting the others
+    // a broken study must fail without hurting the others
     val bad = Files.createDirectories(root.resolve("GSEBAD"))
     write(bad, "metadata_GSEBAD.tsv", "wrong\tcols\nx\ty\n")
     write(bad, "expression_GSEBAD.tsv", "gene\tGSMX\nENSG1\t1\n")
     val filter = write(root, "filter.tsv", filterTsv)
 
-    val whSeq = tmpDir().toString
-    val whUni = tmpDir().toString
-    val rSeq = new EtlJob(spark, config(root, filter), whSeq).run()
-    val rUni = new EtlJob(spark, config(root, filter), whUni).runUnioned()
+    val whDir = tmpDir().toString
+    val results = new EtlJob(spark, config(root, filter), whDir).run()
+    // GSE0002: 2 genes x 4 samples; GSE9006: 3 x 4 minus the bad cell
+    assert(results.map(r => (r.accession, r.samples, r.facts, r.error.isDefined)) == Seq(
+      ("GSE0002", 4L, 8L, false), ("GSE9006", 4L, 11L, false), ("GSEBAD", 0L, 0L, true)))
 
-    // same per-study outcomes
-    def summary(rs: Seq[EtlJob#StudyResult]) =
-      rs.map(r => (r.accession, r.samples, r.facts, r.error.isDefined)).sortBy(_._1)
-    assert(summary(rSeq) == summary(rUni))
-    assert(rSeq.count(_.error.isDefined) == 1)
-
-    // value-identical warehouses (keys may be assigned in another
-    // order, so compare natural-value tuples through the dims)
-    def factTuples(whDir: String) = {
+    def factTuples() = {
       val wh = Warehouse(spark, whDir)
       wh.read("fact_expression")
         .join(wh.read("dim_sample")
@@ -400,20 +393,58 @@ class EtlSpec extends SparkSpec {
           "age", "sex")
         .collect().map(_.toSeq).toSet
     }
-    assert(factTuples(whSeq) == factTuples(whUni))
-    def dimVals(whDir: String, table: String, natural: String) =
-      Warehouse(spark, whDir).read(table).select(natural)
-        .collect().map(_.getString(0)).toSet
-    assert(dimVals(whSeq, "dim_platform", "platform_accession") ==
-      dimVals(whUni, "dim_platform", "platform_accession"))
-    assert(dimVals(whSeq, "dim_illness", "illness_label") ==
-      dimVals(whUni, "dim_illness", "illness_label"))
+    assert(factTuples().size == 19)
 
-    // idempotent re-run in union mode too (J7 holds across the union)
-    val rerun = new EtlJob(spark, config(root, filter), whUni).runUnioned()
+    // idempotent re-run (J7 holds across the batch)
+    val rerun = new EtlJob(spark, config(root, filter), whDir).run()
     assert(rerun.filter(_.error.isEmpty).forall(_.facts == 0))
-    assert(factTuples(whUni).size == Warehouse(spark, whUni)
+    assert(factTuples().size == Warehouse(spark, whDir)
       .read("fact_expression").count().toInt)
+  }
+
+  test("F7: the load's J7 anti-join scans only the batch's study_key partitions") {
+    val root = tmpDir()
+    val first = makeStudy(root, "GSE0001")
+    val second = makeStudy(root, "GSE0002")
+    val filter = write(root, "filter.tsv", filterTsv)
+    val whDir = tmpDir().toString
+    val job = new EtlJob(spark, config(root, filter), whDir)
+    assert(job.processUnioned(Seq(first)).forall(_.error.isEmpty))
+
+    // the second load runs against a fact table that already holds a
+    // partition; every plan it executes is captured
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = { plans.add(qe.executedPlan.toString); () }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val lenKey = "spark.sql.maxMetadataStringLength" // keep scan paths unabbreviated
+    val prevLen = spark.conf.getOption(lenKey)
+    spark.conf.set(lenKey, "10000")
+    spark.listenerManager.register(listener)
+    try {
+      assert(job.processUnioned(Seq(second)).map(_.facts) == Seq(11L))
+      // listener events arrive asynchronously: wait for the fact scan
+      def factScans = plans.toArray(Array.empty[String]).toSeq
+        .flatMap(_.linesIterator).filter(l => l.contains("FileScan") &&
+          l.contains(s"$whDir/fact_expression"))
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (factScans.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(factScans.nonEmpty, s"no fact_expression scan captured:\n${plans.toArray.mkString("\n")}")
+      factScans.foreach { l =>
+        val partitionFilters = "PartitionFilters: \\[[^\\]]*".r.findFirstIn(l).getOrElse("")
+        assert(partitionFilters.contains("study_key"),
+          s"fact_expression scan is not pruned to the batch's studies:\n$l")
+      }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      prevLen match {
+        case Some(v) => spark.conf.set(lenKey, v)
+        case None => spark.conf.unset(lenKey)
+      }
+    }
   }
 
   test("intra-batch duplicate gene rows collapse to one fact (reference seen-set parity)") {
@@ -536,6 +567,50 @@ class EtlSpec extends SparkSpec {
     val third = runCli("etl", "--config", yaml.toString, "--warehouse", whDir, "--no-resume")
     assert(third.contains("facts=0 ok"), third)
     assert(Warehouse(spark, whDir).read("fact_expression").count() == 11)
+  }
+
+  test("CLI: a publish-time failure reports FAILED for every study, exits 1, commits nothing") {
+    val root = tmpDir()
+    makeStudy(root, "GSE0001")
+    makeStudy(root, "GSE0002")
+    val filter = write(root, "filter.tsv", filterTsv)
+    val snapDir = tmpDir()
+    // both studies prepare cleanly; the fact append then fails because
+    // the fact table's path is a plain file, not a parquet directory
+    write(snapDir, "fact_expression", "not parquet\n")
+    val yaml = write(root, "etl.yaml",
+      s"""database:
+         |  connection_string: unused
+         |processing:
+         |  input_directory: $root
+         |  gene_filter_file: $filter
+         |logging:
+         |  log_level: WARN
+         |""".stripMargin)
+    val out = new java.io.ByteArrayOutputStream()
+    val code = Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+      Main.run(Array("etl", "--config", yaml.toString, "--warehouse", s"snapshot:$snapDir"), spark)
+    }
+    val lines = out.toString("UTF-8").linesIterator.toSeq
+    assert(code == 1, s"exit $code; output: $lines")
+    Seq("GSE0001", "GSE0002").foreach { acc =>
+      assert(lines.exists(l => l.startsWith(s"study=$acc ") && l.contains("FAILED")), lines)
+    }
+    assert(new SnapshotWarehouse(spark, snapDir.toString).currentVersion() == 0L)
+  }
+
+  test("an interrupted load propagates the interrupt instead of reporting failed studies") {
+    // a streaming query's stop() interrupts its micro-batch mid-load;
+    // the batch must stay uncommitted, not report its studies as FAILED
+    val root = tmpDir()
+    makeStudy(root)
+    val filter = write(root, "filter.tsv", filterTsv)
+    val job = new EtlJob(spark, config(root, filter), tmpDir().toString)
+    // every other exception becomes a per-study result, so a throw
+    // here is the interrupt propagating
+    Thread.currentThread().interrupt()
+    try intercept[Exception](job.run())
+    finally Thread.interrupted() // clear the flag for the next test
   }
 
   test("X6: differing experiment accession is overridden to directory accession") {

@@ -471,10 +471,8 @@ class SnapshotWarehouseSpec extends SparkSpec {
 
   test("per-study rollback: a study failing AFTER its dim upserts publishes nothing on the snapshot backend") {
     // the reference's per-study transaction made literal (pipeline.py
-    // rollback-on-error): metadata is valid — on the plain backend the
-    // dim writes would land and survive the later expression failure —
-    // but the corrupt expression file kills the study, and the
-    // transaction publishes NOTHING
+    // rollback-on-error): metadata is valid, but the corrupt expression
+    // file kills the study, and NOTHING publishes
     val root = tmpDir()
     val d = Files.createDirectories(root.resolve("GSE1"))
     Files.writeString(d.resolve("metadata_GSE1.tsv"),
@@ -495,11 +493,11 @@ class SnapshotWarehouseSpec extends SparkSpec {
     assert(snap.read("dim_study").count() == 0)
     assert(snap.read("etl_study_state").count() == 0)
 
-    // the plain backend keeps its documented batch-level approximation:
-    // the metadata-phase dims persist past the failure
+    // the plain backend publishes nothing either: the expression header
+    // fails validation before any warehouse write
     val plainDir = tmpDir().toString
     new EtlJob(spark, cfg, plainDir).run()
-    assert(Warehouse(spark, plainDir).read("dim_study").count() == 1)
+    assert(Warehouse(spark, plainDir).read("dim_study").count() == 0)
   }
 
   test("E2E: the unioned ETL against the snapshot backend matches the plain parquet backend") {
@@ -527,8 +525,8 @@ class SnapshotWarehouseSpec extends SparkSpec {
 
     val plainDir = tmpDir().toString
     val snapDir = s"snapshot:${tmpDir()}"
-    val rPlain = new EtlJob(spark, cfg, plainDir).runUnioned()
-    val rSnap = new EtlJob(spark, cfg, snapDir).runUnioned()
+    val rPlain = new EtlJob(spark, cfg, plainDir).run()
+    val rSnap = new EtlJob(spark, cfg, snapDir).run()
     assert(rPlain.map(r => (r.accession, r.samples, r.facts)) ==
       rSnap.map(r => (r.accession, r.samples, r.facts)))
 
@@ -549,7 +547,7 @@ class SnapshotWarehouseSpec extends SparkSpec {
     val snap = Warehouse(spark, snapDir).asInstanceOf[SnapshotWarehouse]
     assert(snap.currentVersion() == 1L)
     // re-run idempotence (X2) through the anti-join, one more commit
-    new EtlJob(spark, cfg, snapDir).runUnioned()
+    new EtlJob(spark, cfg, snapDir).run()
     assert(dump(plainDir) == dump(snapDir))
 
     // the correlation job routes its F7 study read through the

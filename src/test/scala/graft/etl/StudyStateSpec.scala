@@ -76,25 +76,4 @@ class StudyStateSpec extends SparkSpec {
     val r4 = job.run(resume = true)
     assert(!r4.find(_.accession == "GSE0001").get.skipped)
   }
-
-  test("unioned run writes the same state lifecycle") {
-    val root = tmpDir()
-    makeStudy(root, "GSE0001")
-    makeStudy(root, "GSE0002")
-    val filter = write(root, "filter.tsv", "ensembl_id\nENSG1\nENSG2\n")
-    val whDir = tmpDir().toString
-    val wh = Warehouse(spark, whDir)
-    val job = new EtlJob(spark, config(root, filter), whDir)
-
-    assert(job.runUnioned().forall(r => r.error.isEmpty && !r.skipped))
-    assert(StudyState.completed(wh) == Set("GSE0001", "GSE0002"))
-
-    StudyState.upsert(wh, spark, Seq("GSE0001"), metadataLoaded = true,
-      factsLoaded = false)
-    val r2 = job.runUnioned(resume = true)
-    val byAcc = r2.map(r => r.accession -> r).toMap
-    assert(byAcc("GSE0002").skipped && !byAcc("GSE0001").skipped)
-    assert(wh.read("fact_expression").count() == 8)
-    assert(StudyState.completed(wh) == Set("GSE0001", "GSE0002"))
-  }
 }

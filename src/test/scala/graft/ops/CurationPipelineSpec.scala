@@ -99,6 +99,14 @@ class CurationPipelineSpec extends SparkSpec {
     val out = CurationPipeline.run(d, cfg)
       .select("doc_id", "text").as[(Long, String)].collect().toMap
     assert(out(1L) == "real content one" && out(3L) == "real content three")
+    // on the documents schema every other column survives the stage
+    val wide = d.withColumn("lang", lit("en")).withColumn("n_chars", length(col("text")))
+    val wideOut = CurationPipeline.run(wide, cfg)
+    assert(wideOut.columns.toSeq == wide.columns.toSeq)
+    assert(wideOut.select("doc_id", "text", "lang", "n_chars")
+      .as[(Long, String, String, Int)].collect().toSet == Set(
+        (1L, "real content one", "en", 21), (2L, "real content two", "en", 21),
+        (3L, "real content three", "en", 23)))
   }
 
   test("hash_sample and split_assign stages match the standalone samplers") {

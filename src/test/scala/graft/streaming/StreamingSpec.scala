@@ -268,4 +268,16 @@ class StreamingSpec extends SparkSpec {
         s"post-eviction re-arrival must re-emit (bounded state), got $ids")
     } finally q.stop()
   }
+
+  test("state-partition sizing falls back to cores when the input cannot be sized") {
+    val cores = spark.sparkContext.defaultParallelism
+    assert(cores > 1, "the fallback is only distinguishable from 1 with several cores")
+    val missing = java.nio.file.Files.createTempDirectory("graft-sizing")
+      .resolve("no-such-input.parquet").toString
+    assert(graft.SparkEntry.streamStateParts(spark, missing) == cores)
+    // a readable small input still sizes down to one partition
+    val small = java.nio.file.Files.createTempFile("graft-sizing", ".parquet")
+    java.nio.file.Files.writeString(small, "x" * 1024)
+    assert(graft.SparkEntry.streamStateParts(spark, small.toString) == 1)
+  }
 }

@@ -77,7 +77,7 @@ object MakeScaleFixture {
       ProcessingConfig(input, filt),
       LoggingConfig(logLevel = "WARN"))
     val t0 = System.nanoTime()
-    val results = new EtlJob(spark, cfg, s"$root/wh").runUnioned()
+    val results = new EtlJob(spark, cfg, s"$root/wh").run()
     results.foreach(r => println(
       s"fixture: study=${r.accession} samples=${r.samples} facts=${r.facts} " +
         r.error.map("FAILED: " + _).getOrElse("ok")))
