@@ -92,23 +92,13 @@ object SparkEntry {
       .map(_.toLong).filter(_ > 0L)
       .getOrElse(64L * 1024L * 1024L)
     val cores = s.sparkContext.defaultParallelism.toLong
-    // a parquet "table" here is a file or a directory of part files
+    // a parquet "table" here is a file or a directory of part files;
+    // sized through its Hadoop FileSystem, so file://, hdfs:// and s3a://
+    // inputs size like plain local paths
     val bytes =
       try {
-        val p = java.nio.file.Paths.get(sizingPath)
-        if (java.nio.file.Files.isDirectory(p)) {
-          val walk = java.nio.file.Files.walk(p)
-          try {
-            val it = walk.iterator()
-            var b = 0L
-            while (it.hasNext) {
-              val f = it.next()
-              if (java.nio.file.Files.isRegularFile(f))
-                b += java.nio.file.Files.size(f)
-            }
-            b
-          } finally walk.close()
-        } else java.nio.file.Files.size(p)
+        val p = new org.apache.hadoop.fs.Path(sizingPath)
+        p.getFileSystem(s.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
       }
       catch { case scala.util.control.NonFatal(_) => return cores.toInt }
     math.max(1L, math.min(cores, (bytes + target - 1L) / target)).toInt

@@ -56,22 +56,20 @@ class CorrelationJob(spark: SparkSession, warehouseDir: String,
 
   /** J2 + F6 + O6: studies having >= 1 expression fact, optionally
     * restricted to the requested accessions (order-preserving dedup of
-    * the request is the caller's list semantics; missing ones warned).
+    * the request is the caller's list semantics). A request resolves
+    * its accessions' keys first, so the fact probe reads only their
+    * `study_key` partitions (F7).
     */
   def resolveTargetStudies(requested: Seq[String]): DataFrame = {
     val dimStudy = wh.read("dim_study")
-    val withFacts = dimStudy.join(
-      wh.read("fact_expression").select("study_key"), Seq("study_key"), "left_semi")
+    def withFacts(studies: DataFrame, facts: DataFrame): DataFrame =
+      studies.join(facts.select("study_key"), Seq("study_key"), "left_semi")
     val target =
-      if (requested.isEmpty) withFacts
+      if (requested.isEmpty) withFacts(dimStudy, wh.read("fact_expression"))
       else {
-        val req = requested.distinct
-        val found = withFacts.where(col("gse_accession").isin(req: _*))
-        val foundAcc = found.select("gse_accession").collect().map(_.getString(0)).toSet
-        val missing = req.filterNot(foundAcc.contains)
-        if (missing.nonEmpty)
-          log.warn(s"Requested studies without expression data: ${missing.sorted.mkString(", ")}")
-        found
+        val named = dimStudy.where(col("gse_accession").isin(requested.distinct: _*))
+        val keys = named.select("study_key").collect().map(_.getLong(0)).toSeq
+        if (keys.isEmpty) named else withFacts(named, factsForStudies(keys))
       }
     target.orderBy("gse_accession") // O3
   }
@@ -145,6 +143,10 @@ class CorrelationJob(spark: SparkSession, warehouseDir: String,
     */
   def run(requested: Seq[String] = Seq.empty): JobSummary = {
     val targets = resolveTargetStudies(requested).collect()
+    val found = targets.map(_.getAs[String]("gse_accession")).toSet
+    val missing = requested.distinct.filterNot(found.contains)
+    if (missing.nonEmpty)
+      log.warn(s"Requested studies without expression data: ${missing.sorted.mkString(", ")}")
     if (targets.isEmpty) return JobSummary(Seq.empty, 0L)
     val keys = targets.map(_.getAs[Long]("study_key")).toSeq
     // matches Python's datetime.isoformat(timespec="seconds"): +00:00, not Z

@@ -1,7 +1,10 @@
 package graft.etl
 
+import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
+
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, classic}
 
 /** The full ETL pipeline (reference: scripts/run_etl.py →
   * src/etl_for_all_studies/pipeline.py:255-356; SURVEY.md §3.1).
@@ -13,15 +16,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (J7 over an F7-pruned read, the idempotence contract
   * REQ-005/REQ-007) → append.
   *
-  * Studies are DATA parallelism (SURVEY.md §2.10 X1), not a driver
-  * loop: every study's rows flow through ONE set of batched plans —
-  * one upsert per dimension, one whitelist-filtered melt union, one
-  * anti-join dedup, one fact append. The reference loads studies one
-  * at a time in a thread pool (pipeline.py:340-356); here the job
-  * count does not grow with the study count. Failure isolation per
-  * study (the reference's swallow-log-continue, pipeline.py:351-356)
-  * happens where its format errors surface: driver-side discovery and
-  * header validation exclude a bad study before anything publishes.
+  * Studies are DATA parallelism (SURVEY.md §2.10 X1) from the dims on:
+  * every study's rows flow through ONE set of batched plans — one
+  * upsert per dimension, one whitelist-filtered melt union, one
+  * anti-join dedup, one fact append. Before that, each study's prep
+  * (discovery, one metadata aggregate, the driver-side expression
+  * header read) runs one Spark action per study; the preps run at once on a
+  * driver pool, the reference's per-study thread pool
+  * (pipeline.py:340-356). The four vocabulary branches (dim_study,
+  * dim_platform, dim_illness, and the gene whitelist → dim_gene) read
+  * and write only their own tables and run at once on the same kind of
+  * pool; dim_sample, StudyState and the fact append then follow in
+  * order, since each reads what the step before it wrote. Every pool is
+  * bounded by min(tasks, driver cores) and lives for one call
+  * ([[EtlJob.inParallel]]). Failure isolation per study (the
+  * reference's swallow-log-continue, pipeline.py:351-356) happens where
+  * its format errors surface: prep excludes a bad study before
+  * anything publishes.
   */
 class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -41,7 +52,11 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
   def run(resume: Boolean = false): Seq[StudyResult] =
     processUnioned(StudyDiscovery.discoverStudyDirs(config.processing.inputDirectory), resume)
 
-  private case class Prep(acc: String, samples: DataFrame, melted: DataFrame)
+  /** A prepared study: its normalized samples, its melted expression
+    * rows, and the A1 sample / age / sex completion counts.
+    */
+  private case class Prep(acc: String, samples: DataFrame, melted: DataFrame,
+      total: Long, completeAge: Long, completeSex: Long)
 
   /** The load over an EXPLICIT study-directory list — the engine of
     * [[run]] (which discovers from the config root) and of
@@ -56,34 +71,7 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
     */
   def processUnioned(dirs: Seq[java.nio.file.Path], resume: Boolean = false): Seq[StudyResult] = {
     val done = if (resume) StudyState.completed(wh) else Set.empty[String]
-
-    val attempts: Seq[Either[StudyResult, Prep]] = dirs.map { dir =>
-      try {
-        val files = StudyDiscovery.discoverStudyFiles(dir)
-        val acc = files.studyAccession
-        if (done.contains(acc)) {
-          log.info(s"Skipping completed study $acc (resume)")
-          Left(StudyResult(acc, 0, 0, skipped = true))
-        } else {
-          val raw = Metadata.load(spark, files.metadataFile.toString, config.fieldMappings)
-          if (raw.limit(1).count() == 0)
-            throw new StudyProcessingError(s"No valid samples found in metadata ${files.metadataFile}")
-          val mismatches = Metadata.mismatchCount(raw, acc)
-          if (mismatches > 0)
-            log.warn(s"$mismatches samples referenced differing study accession (expected $acc)")
-          val samples = Metadata.overrideStudyAccession(raw, acc)
-          val expected = samples.select("gsm_accession").distinct()
-            .collect().map(_.getString(0)).toSeq.sorted
-          val melted = ExpressionMatrix.load(spark, files.expressionFile.toString, expected)
-            .withColumn("study_accession", lit(acc))
-          Right(Prep(acc, samples, melted))
-        }
-      } catch {
-        case e: Exception if !interrupted(e) =>
-          log.error(s"Failed to prepare study ${dir.getFileName}: ${e.getMessage}")
-          Left(StudyResult(dir.getFileName.toString, 0, 0, Some(e.getMessage)))
-      }
-    }
+    val attempts = EtlJob.inParallel(spark, dirs.map(dir => () => prepare(dir, done)))
     val failures = attempts.collect { case Left(f) => f }
     val preps = attempts.collect { case Right(p) => p }
     if (preps.isEmpty) return failures
@@ -107,6 +95,44 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
     (ok ++ failures).sortBy(_.accession)
   }
 
+  /** One study's prep, a task of [[processUnioned]]'s pool: discovery,
+    * then ONE metadata aggregate that serves the empty check, the X6
+    * mismatch warning, the A1 completion counts and the expected sample
+    * columns, then the expression header read on the driver. A failure
+    * is this study's result, never the batch's.
+    */
+  private def prepare(dir: java.nio.file.Path, done: Set[String]): Either[StudyResult, Prep] =
+    try {
+      val files = StudyDiscovery.discoverStudyFiles(dir)
+      val acc = files.studyAccession
+      if (done.contains(acc)) {
+        log.info(s"Skipping completed study $acc (resume)")
+        Left(StudyResult(acc, 0, 0, skipped = true))
+      } else {
+        val raw = Metadata.load(spark, files.metadataFile.toString, config.fieldMappings)
+        def countWhere(c: org.apache.spark.sql.Column) = sum(when(c, 1L).otherwise(0L))
+        val stats = raw.agg(
+          count(lit(1)),
+          countWhere(col("study_accession") =!= acc && col("study_accession") =!= Schema.UnknownValue),
+          countWhere(col("age") =!= Schema.UnknownValue),
+          countWhere(col("sex") =!= Schema.UnknownValue),
+          array_sort(collect_set(col("gsm_accession")))).head()
+        if (stats.getLong(0) == 0)
+          throw new StudyProcessingError(s"No valid samples found in metadata ${files.metadataFile}")
+        val mismatches = stats.getLong(1)
+        if (mismatches > 0)
+          log.warn(s"$mismatches samples referenced differing study accession (expected $acc)")
+        val melted = ExpressionMatrix.load(spark, files.expressionFile.toString, stats.getSeq[String](4))
+          .withColumn("study_accession", lit(acc))
+        Right(Prep(acc, Metadata.overrideStudyAccession(raw, acc), melted,
+          stats.getLong(0), stats.getLong(2), stats.getLong(3)))
+      }
+    } catch {
+      case e: Exception if !interrupted(e) =>
+        log.error(s"Failed to prepare study ${dir.getFileName}: ${e.getMessage}")
+        Left(StudyResult(dir.getFileName.toString, 0, 0, Some(e.getMessage)))
+    }
+
   /** An interrupt is the caller stopping the load (a streaming query's
     * `stop()`), not a failed study: it must propagate, so the stopped
     * micro-batch stays uncommitted instead of reporting its studies
@@ -126,19 +152,31 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
     * one atomic commit).
     */
   private def publishUnioned(w: Warehouse, preps: Seq[Prep]): Seq[StudyResult] = {
-    val genes = GeneFilter.load(spark, config.processing.geneFilterFile.toString)
     val allSamples = preps.map(_.samples).reduce(_ unionByName _).cache()
 
-    // ---- dims: one upsert each across every study -----------------------
-    w.writeDim("dim_study", Dims.upsertDim(w.read("dim_study"),
-      allSamples.select(col("study_accession").as("gse_accession")),
-      "study_key", "gse_accession"))
+    // ---- vocabulary dims: one upsert each across every study, the four
+    // branches at once; each reads and writes only its own table -------
+    def vocab(table: String, keyCol: String, natural: String,
+        incoming: DataFrame): () => Option[DataFrame] = () => {
+      w.writeDim(table, Dims.upsertDim(w.read(table), incoming, keyCol, natural))
+      None
+    }
+    val filtered = EtlJob.inParallel(spark, Seq(
+      vocab("dim_study", "study_key", "gse_accession",
+        allSamples.select(col("study_accession").as("gse_accession"))),
+      vocab("dim_platform", "platform_key", "platform_accession",
+        allSamples.select(col("platform_accession"))),
+      vocab("dim_illness", "illness_key", "illness_label",
+        allSamples.select(col("illness_label"))),
+      () => {
+        val genes = GeneFilter.load(spark, config.processing.geneFilterFile.toString)
+        val f = GeneFilter.filterGenes(preps.map(_.melted).reduce(_ unionByName _), genes, "gene_id")
+        w.writeDim("dim_gene", Dims.upsertGeneDim(w.read("dim_gene"),
+          f.select(col("gene_id").as("ensembl_id"))))
+        Some(f) // the fact join below keys this same filtered union
+      })).flatten.head
     val studyDim = w.read("dim_study")
       .select(col("gse_accession").as("study_accession"), col("study_key"))
-    w.writeDim("dim_platform", Dims.upsertDim(w.read("dim_platform"),
-      allSamples.select(col("platform_accession")), "platform_key", "platform_accession"))
-    w.writeDim("dim_illness", Dims.upsertDim(w.read("dim_illness"),
-      allSamples.select(col("illness_label")), "illness_key", "illness_label"))
 
     // __ord pins the reference's "first row in file wins" duplicate-GSM
     // resolution (Dims.upsertSampleDim). It comes from Metadata.load:
@@ -153,16 +191,13 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
       w.read("dim_illness"), "illness_label", "illness_label", "illness_key")
       .select("gsm_accession", "study_key", "platform_key", "illness_key", "age", "sex", "__ord")
     w.writeDim("dim_sample", Dims.upsertSampleDim(w.read("dim_sample"), incoming))
+    allSamples.unpersist()
     // D4: metadata phase committed for every prepared study
     StudyState.upsert(w, spark, preps.map(_.acc), metadataLoaded = true,
       factsLoaded = false)
 
-    // ---- facts: one melt union, one key join, one dedup, one append -----
-    val allMelted = preps.map(_.melted).reduce(_ unionByName _)
-    val filtered = GeneFilter.filterGenes(allMelted, genes, "gene_id")
-    w.writeDim("dim_gene", Dims.upsertGeneDim(w.read("dim_gene"),
-      filtered.select(col("gene_id").as("ensembl_id"))))
-
+    // ---- facts: the gene branch's filtered melt union, one key join, one
+    // dedup, one append ----------------------------------------------------
     // sample dim joins on (gsm, study) WITHOUT an explicit broadcast:
     // across many studies it is not small; AQE picks the strategy.
     val sampleDim = w.read("dim_sample")
@@ -199,18 +234,12 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
       factsLoaded = true)
 
     // per-study sample counts and A1 completion (metadata_processing.py:26-38)
-    // in the one aggregate the result needs anyway
-    val sampleStats = allSamples.groupBy("study_accession").agg(
-        count(lit(1)).as("total"),
-        sum(when(col("age") =!= Schema.UnknownValue, 1L).otherwise(0L)).as("complete_age"),
-        sum(when(col("sex") =!= Schema.UnknownValue, 1L).otherwise(0L)).as("complete_sex"))
-      .collect()
-      .map(r => r.getAs[String]("study_accession") ->
-        (r.getAs[Long]("total"), r.getAs[Long]("complete_age"), r.getAs[Long]("complete_sex")))
-      .toMap
-    allSamples.unpersist()
+    // from the prep aggregates, summed per accession like the dims
+    val sampleStats = preps.groupMapReduce(_.acc)(p => (p.total, p.completeAge, p.completeSex)) {
+      case ((n1, a1, s1), (n2, a2, s2)) => (n1 + n2, a1 + a2, s1 + s2)
+    }
     preps.map { p =>
-      val (samples, age, sex) = sampleStats.getOrElse(p.acc, (0L, 0L, 0L))
+      val (samples, age, sex) = sampleStats(p.acc)
       val facts = keyByAcc.get(p.acc).flatMap(factsByStudy.get).getOrElse(0L)
       if (config.logging.logDataQuality) {
         val total = samples.max(1L)
@@ -221,6 +250,54 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
       if (config.logging.logRecordCounts)
         log.info(s"Study ${p.acc}: $facts expression facts written")
       StudyResult(p.acc, samples, facts)
+    }
+  }
+}
+
+object EtlJob {
+
+  /** Runs a load's independent branches at once and returns their
+    * results in input order. The pool is created per call, bounded by
+    * min(tasks, driver cores), and shut down before returning. Each
+    * task runs through `SQLExecution.withThreadLocalCaptured`, so it
+    * sees the caller's active session and local properties — among
+    * them a streaming query's job group, which its `stop()` cancels.
+    *
+    * Every task settles before a failure is rethrown (the first, in
+    * input order). If the caller is interrupted while it waits, the
+    * pool threads are interrupted, the tasks' Spark jobs cancelled
+    * through a per-call job tag, and the interrupt rethrown: a pool
+    * thread's interrupt flag is not the caller's, so a task alone
+    * cannot tell a stopped load from a failed study.
+    */
+  private[etl] def inParallel[A](spark: SparkSession, tasks: Seq[() => A]): Seq[A] = {
+    if (tasks.isEmpty) return Seq.empty
+    val pool = Executors.newFixedThreadPool(
+      math.min(tasks.size, Runtime.getRuntime.availableProcessors), (r: Runnable) => {
+        val t = new Thread(r, "etl-load-branch")
+        t.setDaemon(true)
+        t
+      })
+    val sc = spark.sparkContext
+    val tag = s"etl-load-${java.util.UUID.randomUUID()}"
+    try {
+      val futures = tasks.map(task => SQLExecution.withThreadLocalCaptured(
+        spark.asInstanceOf[classic.SparkSession], pool) { sc.addJobTag(tag); task() })
+      // scala.util.Try lets an InterruptedException through to the catch
+      val settled = futures.map(f => scala.util.Try(f.get()))
+      if (Thread.interrupted()) throw new InterruptedException()
+      settled.map {
+        case scala.util.Failure(e: ExecutionException) if e.getCause != null => throw e.getCause
+        case other => other.get
+      }
+    } catch {
+      case e: InterruptedException =>
+        pool.shutdownNow()
+        sc.cancelJobsWithTag(tag)
+        throw e
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
     }
   }
 }

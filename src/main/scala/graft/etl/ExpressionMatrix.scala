@@ -54,18 +54,18 @@ object ExpressionMatrix {
 
   /** Read the TSV and melt to (gene_id, sample_accession,
     * expression_value). `expectedSamples` comes from the study's
-    * metadata (gsm accessions).
+    * metadata (gsm accessions). The header is read on the driver
+    * ([[Metadata.firstLine]]), so building the frame runs no job.
     */
   def load(spark: SparkSession, path: String, expectedSamples: Seq[String]): DataFrame = {
-    val lines = spark.read.text(path)
-    val headerLine = lines.head(1).headOption.map(_.getString(0)).getOrElse(
+    val headerLine = Metadata.firstLine(spark, path).getOrElse(
       throw new ExpressionFormatError(s"Expression file $path is empty"))
     val headers = headerLine.split("\t", -1).map(_.trim).toSeq
     val kept = validateHeaders(headers, expectedSamples, path)
 
     val n = headers.size
     val names = array(headers.tail.map(lit): _*)
-    val long = lines
+    val long = spark.read.text(path)
       .where(col("value") =!= headerLine)
       .select(split(col("value"), "\t", -1).as("f"))
       .select(trim(element_at(col("f"), 1)).as("gene_id"),

@@ -93,22 +93,18 @@ object Metadata {
     files.map(_.getPath.toString).sorted
   }
 
-  /** One file → all-strings DataFrame in header shape + `__ord`.
-    * TextInputFormat's record key IS the record's byte offset in the
-    * file; the header is the offset-0 record. fileIdx lives in the
-    * ordinal's high bits (44-bit offsets ⇒ files up to 16 TiB).
-    *
-    * The header line is read DRIVER-side through the FileSystem (a
-    * few-KB stream read) — a Spark job per file just for the header
-    * would make a multi-file load scheduler-bound.
+  /** The first line of `file`, read DRIVER-side through the Hadoop
+    * FileSystem (a few-KB stream read) with the codec resolution the
+    * TextInputFormat body scan uses, so a .tsv.gz header decompresses
+    * instead of parsing gzip bytes; None for an empty file. Shared by
+    * the metadata and expression header reads — a Spark job per file
+    * just for the header would make a multi-study load scheduler-bound.
     */
-  private def headerLine(spark: SparkSession, file: String): String = {
+  private[etl] def firstLine(spark: SparkSession, file: String): Option[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(file)
     val fs = p.getFileSystem(conf)
     val raw = fs.open(p)
-    // honor the same codec resolution the TextInputFormat body scan
-    // uses — a .tsv.gz header must decompress, not parse gzip bytes
     val in = Option(new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
         .getCodec(p))
       .map(_.createInputStream(raw): java.io.InputStream)
@@ -117,10 +113,14 @@ object Metadata {
       val reader = new java.io.BufferedReader(
         new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
       Option(reader.readLine())
-        .getOrElse(throw new MetadataFormatError(s"Metadata file $file is empty"))
     } finally in.close()
   }
 
+  /** One file → all-strings DataFrame in header shape + `__ord`.
+    * TextInputFormat's record key IS the record's byte offset in the
+    * file; the header is the offset-0 record. fileIdx lives in the
+    * ordinal's high bits (44-bit offsets ⇒ files up to 16 TiB).
+    */
   private def rawWithOrdinal(spark: SparkSession, file: String, fileIdx: Int): DataFrame = {
     import org.apache.hadoop.io.{LongWritable, Text}
     import org.apache.hadoop.mapreduce.lib.input.TextInputFormat
@@ -135,7 +135,9 @@ object Metadata {
     // — a padded required header fails there too), and a padded
     // optional header still resolves through the tier-3 rule because
     // _normalize_header strips whitespace (:58), as does ours.
-    val rawNames = headerLine(spark, file).split("\t", -1)
+    val rawNames = firstLine(spark, file)
+      .getOrElse(throw new MetadataFormatError(s"Metadata file $file is empty"))
+      .split("\t", -1)
     // duplicate header cells get the same position-suffix rename
     // spark.read.csv applied (makeSafeHeader): the exact-name candidate
     // no longer matches but the digit-stripped tier-3 rule still does —
@@ -196,8 +198,4 @@ object Metadata {
     */
   def overrideStudyAccession(samples: DataFrame, accession: String): DataFrame =
     samples.withColumn("study_accession", lit(accession))
-
-  def mismatchCount(samples: DataFrame, accession: String): Long =
-    samples.where(col("study_accession") =!= accession &&
-      col("study_accession") =!= UnknownValue).count()
 }

@@ -676,15 +676,23 @@ final class SnapshotTxn private[etl] (spark: SparkSession, baseDir: String,
   import SnapshotWarehouse._
   import Warehouse.schemas
 
+  // Guarded by its own lock: a load's independent branches stage
+  // segments of distinct tables into one transaction from several
+  // threads. Segment writes run outside the lock; only the manifest
+  // entries are read and swapped under it.
   private val pending = scala.collection.mutable.LinkedHashMap[String, Seq[Segment]]()
 
-  private[etl] def pendingTables: Map[String, Seq[Segment]] = pending.toMap
+  private[etl] def pendingTables: Map[String, Seq[Segment]] = pending.synchronized(pending.toMap)
 
-  private def entry(table: String): Seq[Segment] =
-    pending.getOrElse(table, base.tables.getOrElse(table, Nil))
+  private def entry(table: String): Seq[Segment] = pending.synchronized(
+    pending.getOrElse(table, base.tables.getOrElse(table, Nil)))
 
-  def read(table: String): DataFrame =
-    owner.readTable(Manifest(base.version, base.tables ++ pending), table)
+  private def view: Manifest = pending.synchronized(Manifest(base.version, base.tables ++ pending))
+
+  private def stage(table: String)(segments: Seq[Segment] => Seq[Segment]): Unit =
+    pending.synchronized { pending(table) = segments(entry(table)) }
+
+  def read(table: String): DataFrame = owner.readTable(view, table)
 
   /** The commit-time SCHEMA CONTRACT (nothing a transaction stages is
     * visible before the manifest rename, so rejecting here rejects the
@@ -793,11 +801,14 @@ final class SnapshotTxn private[etl] (spark: SparkSession, baseDir: String,
     // (read-modify-write, e.g. StudyState.upsert) — safe, because the
     // write lands in a fresh directory and the sources are immutable;
     // ParquetWarehouse needed a 3-rename dance for exactly this
-    pending(table) = Seq(writeSegment(table, df))
+    val seg = writeSegment(table, df)
+    stage(table)(_ => Seq(seg))
   }
 
-  def appendFacts(table: String, df: DataFrame): Unit =
-    pending(table) = entry(table) :+ writeSegment(table, df)
+  def appendFacts(table: String, df: DataFrame): Unit = {
+    val seg = writeSegment(table, df)
+    stage(table)(_ :+ seg)
+  }
 
   /** S7 delete-then-insert without the delete: prior segments get the
     * studies masked via their exclusion lists (directory-pruned at
@@ -807,9 +818,9 @@ final class SnapshotTxn private[etl] (spark: SparkSession, baseDir: String,
     */
   def replaceStudyPartitions(table: String, df: DataFrame, studyKeys: Seq[Long]): Unit = {
     if (studyKeys.isEmpty) return
-    val masked = entry(table).map(s =>
-      s.copy(exclude = (s.exclude ++ studyKeys).distinct.sorted))
-    pending(table) = masked :+ writeSegment(table, df)
+    val seg = writeSegment(table, df)
+    stage(table)(_.map(s =>
+      s.copy(exclude = (s.exclude ++ studyKeys).distinct.sorted)) :+ seg)
   }
 
   /** Rewrite `table` as one segment holding exactly its current visible
@@ -817,8 +828,8 @@ final class SnapshotTxn private[etl] (spark: SparkSession, baseDir: String,
     * the compaction primitive.
     */
   private[etl] def rewrite(table: String, df: DataFrame): Unit = {
-    val rows = Option(df).getOrElse(read(table))
-    pending(table) = Seq(writeSegment(table, rows))
+    val seg = writeSegment(table, Option(df).getOrElse(read(table)))
+    stage(table)(_ => Seq(seg))
   }
 
   /** Predicate-scoped delete — see [[SnapshotWarehouse.deleteWhere]]
@@ -828,7 +839,6 @@ final class SnapshotTxn private[etl] (spark: SparkSession, baseDir: String,
     * matches. Returns rows deleted.
     */
   private[etl] def deleteWhere(table: String, pred: Column): Long = {
-    val view = Manifest(base.version, base.tables ++ pending)
     val core = owner.baseSchema(view, table)
     // the FULL evolved schema (core ++ every additive column any live
     // segment carries): a predicate naming an additive column must
@@ -881,8 +891,7 @@ final class SnapshotTxn private[etl] (spark: SparkSession, baseDir: String,
         }
       }
     }
-    pending(table) =
-      if (kept.nonEmpty) kept.toSeq else schemaCarrier.toSeq
+    stage(table)(_ => if (kept.nonEmpty) kept.toSeq else schemaCarrier.toSeq)
     deleted
   }
 }

@@ -447,6 +447,36 @@ class EtlSpec extends SparkSpec {
     }
   }
 
+  test("F7: correlate's target-study probe reads only the requested studies' fact partitions") {
+    val root = tmpDir()
+    Seq("GSE0001", "GSE0002", "GSE0003").foreach(makeStudy(root, _))
+    val filter = write(root, "filter.tsv", filterTsv)
+    val whDir = tmpDir().toString
+    assert(new EtlJob(spark, config(root, filter), whDir).run().forall(_.error.isEmpty))
+
+    val target = new CorrelationJob(spark, whDir)
+      .resolveTargetStudies(Seq("GSE0001", "GSE0003", "GSE_NONE"))
+    assert(target.collect().map(_.getAs[String]("gse_accession")).toSeq ==
+      Seq("GSE0001", "GSE0003"))
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, In, InSet}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(target.queryExecution.executedPlan) {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.toString.contains("fact_expression")) => s
+      }
+    assert(scans.nonEmpty, target.queryExecution.executedPlan.toString)
+    scans.foreach { s =>
+      // isnotnull(study_key) names the column too, so require the IN list
+      assert(s.partitionFilters.exists(_.exists {
+        case In(a: Attribute, _) => a.name == "study_key"
+        case InSet(a: Attribute, _) => a.name == "study_key"
+        case _ => false
+      }), s"fact scan is not pruned to the requested studies: ${s.partitionFilters}")
+      assert(s.metrics("numPartitions").value == 2L)
+    }
+  }
+
   test("intra-batch duplicate gene rows collapse to one fact (reference seen-set parity)") {
     val root = tmpDir()
     val d = Files.createDirectories(root.resolve("GSE0004"))

@@ -347,6 +347,48 @@ class SnapshotWarehouseSpec extends SparkSpec {
     }
   }
 
+  test("concurrent writes in ONE transaction: four threads stage four tables, one commit holds all") {
+    // a load's independent branches write their dims from pool threads
+    // into the same transaction; every staged table must reach the
+    // commit (an unguarded pending map can drop an entry). Looped so
+    // the overlap is likely, not lucky.
+    val wh = sw()
+    val frames = Map(
+      "dim_gene" -> ((r: Int) => gene(1L -> s"ENSG$r", 2L -> s"ENSG${r + 1}")),
+      "dim_study" -> ((r: Int) => Seq((1L, s"GSE$r")).toDF("study_key", "gse_accession")),
+      "dim_platform" -> ((r: Int) =>
+        Seq((1L, s"GPL$r"), (2L, s"GPL${r}b")).toDF("platform_key", "platform_accession")),
+      "dim_illness" -> ((r: Int) => Seq((1L, s"ill-$r")).toDF("illness_key", "illness_label")))
+    for (round <- 0 until 5) {
+      val base = wh.currentVersion()
+      wh.transact { txn =>
+        val gate = new java.util.concurrent.CountDownLatch(frames.size)
+        val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+        val threads = frames.toSeq.map { case (table, frame) =>
+          new Thread(() => {
+            try {
+              val df = frame(round)
+              gate.countDown()
+              gate.await()
+              txn.writeDim(table, df)
+            } catch { case t: Throwable => errors.add(t) }
+            ()
+          })
+        }
+        threads.foreach(_.start()); threads.foreach(_.join(300000))
+        assert(errors.isEmpty, s"round $round: ${errors.toArray.mkString(", ")}")
+      }
+      assert(wh.currentVersion() == base + 1, s"round $round: expected one commit")
+      assert(frames.keySet.subsetOf(wh.currentManifest().tables.keySet))
+      frames.foreach { case (table, frame) =>
+        val expected = frame(round).collect().map(_.toSeq).toSet
+        assert(wh.read(table).collect().map(_.toSeq).toSet == expected,
+          s"round $round: $table does not read back what was written")
+        assert(wh.currentManifest().tables(table).size == 1)
+      }
+    }
+  }
+
   test("contended stale-lock break: racing waiters never delete each other's fresh lock") {
     // The TOCTOU hazard: waiters A and B both judge the planted lock
     // stale; A breaks it and acquires a FRESH lock; a naive delete by

@@ -280,4 +280,17 @@ class StreamingSpec extends SparkSpec {
     java.nio.file.Files.writeString(small, "x" * 1024)
     assert(graft.SparkEntry.streamStateParts(spark, small.toString) == 1)
   }
+
+  test("state-partition sizing reads a file:// URI through the Hadoop FileSystem") {
+    assert(spark.sparkContext.defaultParallelism > 1,
+      "a sizing fallback (cores) is only distinguishable from 1 with several cores")
+    val dir = java.nio.file.Files.createTempDirectory("graft-sizing-uri")
+    java.nio.file.Files.writeString(dir.resolve("part-0.parquet"), "x" * 1024)
+    java.nio.file.Files.writeString(dir.resolve("part-1.parquet"), "y" * 1024)
+    // a few KB of input sizes to one partition; an unsized input would
+    // fall back to cores
+    assert(graft.SparkEntry.streamStateParts(spark, dir.toUri.toString) == 1)
+    assert(graft.SparkEntry.streamStateParts(spark,
+      dir.resolve("part-0.parquet").toUri.toString) == 1)
+  }
 }
