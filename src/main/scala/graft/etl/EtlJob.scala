@@ -2,9 +2,11 @@ package graft.etl
 
 import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
 
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession, classic}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, SparkSession, classic}
 
 /** The full ETL pipeline (reference: scripts/run_etl.py →
   * src/etl_for_all_studies/pipeline.py:255-356; SURVEY.md §3.1).
@@ -23,11 +25,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession, classic}
   * (discovery, one metadata aggregate, the driver-side expression
   * header read) runs one Spark action per study; the preps run at once on a
   * driver pool, the reference's per-study thread pool
-  * (pipeline.py:340-356). The four vocabulary branches (dim_study,
-  * dim_platform, dim_illness, and the gene whitelist → dim_gene) read
-  * and write only their own tables and run at once on the same kind of
-  * pool; dim_sample, StudyState and the fact append then follow in
-  * order, since each reads what the step before it wrote. Every pool is
+  * (pipeline.py:340-356). The gene whitelist is read on the driver,
+  * and the whitelist-filtered melt union is cached for the publish
+  * phase: dim_gene and the fact join both read it, so the expression
+  * matrices are parsed once. The four vocabulary branches (dim_study,
+  * dim_platform, dim_illness, dim_gene) read and write only their own
+  * tables and run at once on the same kind of pool; dim_sample,
+  * StudyState and the fact append then follow in order, since each
+  * reads what the step before it wrote. The append is not cached or
+  * counted beforehand: the per-study fact counts are an `Observation`
+  * on the append itself. Every pool is
   * bounded by min(tasks, driver cores) and lives for one call
   * ([[EtlJob.inParallel]]). Failure isolation per study (the
   * reference's swallow-log-continue, pipeline.py:351-356) happens where
@@ -153,108 +160,120 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
     */
   private def publishUnioned(w: Warehouse, preps: Seq[Prep]): Seq[StudyResult] = {
     val allSamples = preps.map(_.samples).reduce(_ unionByName _).cache()
+    // the whitelist-filtered melt union is read twice, by dim_gene and
+    // by the fact join below: cached, the expression matrices are
+    // parsed once per load
+    val filtered = GeneFilter.filterGenes(preps.map(_.melted).reduce(_ unionByName _),
+      GeneFilter.load(spark, config.processing.geneFilterFile.toString), "gene_id").cache()
+    try {
+      // ---- vocabulary dims: one upsert each across every study, the four
+      // branches at once; each reads and writes only its own table -------
+      def vocab(table: String, upsert: DataFrame => DataFrame): () => Unit =
+        () => w.writeDim(table, upsert(w.read(table)))
+      EtlJob.inParallel(spark, Seq(
+        vocab("dim_study", Dims.upsertDim(_,
+          allSamples.select(col("study_accession").as("gse_accession")), "study_key", "gse_accession")),
+        vocab("dim_platform", Dims.upsertDim(_,
+          allSamples.select(col("platform_accession")), "platform_key", "platform_accession")),
+        vocab("dim_illness", Dims.upsertDim(_,
+          allSamples.select(col("illness_label")), "illness_key", "illness_label")),
+        vocab("dim_gene", Dims.upsertGeneDim(_, filtered.select(col("gene_id").as("ensembl_id"))))))
+      val studyDim = w.read("dim_study")
+        .select(col("gse_accession").as("study_accession"), col("study_key"))
 
-    // ---- vocabulary dims: one upsert each across every study, the four
-    // branches at once; each reads and writes only its own table -------
-    def vocab(table: String, keyCol: String, natural: String,
-        incoming: DataFrame): () => Option[DataFrame] = () => {
-      w.writeDim(table, Dims.upsertDim(w.read(table), incoming, keyCol, natural))
-      None
-    }
-    val filtered = EtlJob.inParallel(spark, Seq(
-      vocab("dim_study", "study_key", "gse_accession",
-        allSamples.select(col("study_accession").as("gse_accession"))),
-      vocab("dim_platform", "platform_key", "platform_accession",
-        allSamples.select(col("platform_accession"))),
-      vocab("dim_illness", "illness_key", "illness_label",
-        allSamples.select(col("illness_label"))),
-      () => {
-        val genes = GeneFilter.load(spark, config.processing.geneFilterFile.toString)
-        val f = GeneFilter.filterGenes(preps.map(_.melted).reduce(_ unionByName _), genes, "gene_id")
-        w.writeDim("dim_gene", Dims.upsertGeneDim(w.read("dim_gene"),
-          f.select(col("gene_id").as("ensembl_id"))))
-        Some(f) // the fact join below keys this same filtered union
-      })).flatten.head
-    val studyDim = w.read("dim_study")
-      .select(col("gse_accession").as("study_accession"), col("study_key"))
+      // __ord pins the reference's "first row in file wins" duplicate-GSM
+      // resolution (Dims.upsertSampleDim). It comes from Metadata.load:
+      // per-file byte offsets, so the order is FILE order regardless of
+      // how the scan packs splits — safe for multi-file metadata too.
+      // (Cross-study collisions are harmless: __ord only orders rows
+      // within one (gsm, study) group.)
+      val incoming = Dims.resolveFk(
+        Dims.resolveFk(
+          allSamples.join(broadcast(studyDim), Seq("study_accession")),
+          w.read("dim_platform"), "platform_accession", "platform_accession", "platform_key"),
+        w.read("dim_illness"), "illness_label", "illness_label", "illness_key")
+        .select("gsm_accession", "study_key", "platform_key", "illness_key", "age", "sex", "__ord")
+      w.writeDim("dim_sample", Dims.upsertSampleDim(w.read("dim_sample"), incoming))
+      allSamples.unpersist()
+      // D4: metadata phase committed for every prepared study
+      StudyState.upsert(w, spark, preps.map(_.acc), metadataLoaded = true,
+        factsLoaded = false)
 
-    // __ord pins the reference's "first row in file wins" duplicate-GSM
-    // resolution (Dims.upsertSampleDim). It comes from Metadata.load:
-    // per-file byte offsets, so the order is FILE order regardless of
-    // how the scan packs splits — safe for multi-file metadata too.
-    // (Cross-study collisions are harmless: __ord only orders rows
-    // within one (gsm, study) group.)
-    val incoming = Dims.resolveFk(
-      Dims.resolveFk(
-        allSamples.join(broadcast(studyDim), Seq("study_accession")),
-        w.read("dim_platform"), "platform_accession", "platform_accession", "platform_key"),
-      w.read("dim_illness"), "illness_label", "illness_label", "illness_key")
-      .select("gsm_accession", "study_key", "platform_key", "illness_key", "age", "sex", "__ord")
-    w.writeDim("dim_sample", Dims.upsertSampleDim(w.read("dim_sample"), incoming))
-    allSamples.unpersist()
-    // D4: metadata phase committed for every prepared study
-    StudyState.upsert(w, spark, preps.map(_.acc), metadataLoaded = true,
-      factsLoaded = false)
+      // ---- facts: the cached filtered melt union, one key join, one dedup,
+      // one append -------------------------------------------------------------
+      // sample dim joins on (gsm, study) WITHOUT an explicit broadcast:
+      // across many studies it is not small; AQE picks the strategy.
+      val sampleDim = w.read("dim_sample")
+        .select(col("gsm_accession").as("sample_accession"), col("study_key"), col("sample_key"))
+      val geneDim = w.read("dim_gene").select(col("ensembl_id").as("gene_id"), col("gene_key"))
+      val keyed = filtered
+        .join(broadcast(studyDim), Seq("study_accession"))
+        .join(sampleDim, Seq("sample_accession", "study_key"))
+        .join(broadcast(geneDim), Seq("gene_id"))
+        .select("sample_key", "gene_key", "study_key", "expression_value")
+        // intra-batch dedup: the reference's per-row seen-set also drops
+        // duplicates WITHIN one file (repeated gene row / repeated GSM
+        // column); min() is the deterministic stand-in for its
+        // first-in-file-order pick
+        .groupBy("sample_key", "gene_key", "study_key")
+        .agg(min(col("expression_value")).as("expression_value"))
+      // J7 against the batch's own studies only: a sample key belongs to
+      // one study, so facts outside the batch can never match, and the
+      // study_key predicate prunes their partitions at the scan (F7)
+      val keyByAcc = studyDim.where(col("study_accession").isin(preps.map(_.acc): _*)).collect()
+        .map(r => r.getAs[String]("study_accession") -> r.getAs[Long]("study_key")).toMap
+      val existing = w.read("fact_expression")
+        .where(col("study_key").isin(keyByAcc.values.toSeq: _*))
+        .select("sample_key", "gene_key")
+      val fresh = keyed.join(existing, Seq("sample_key", "gene_key"), "left_anti")
+      // per-study fact counts ride the append: ONE observed aggregate,
+      // whose per-row cost does not grow with the batch's study count.
+      // Observation.get blocks until the observed write has finished.
+      val appended = Observation()
+      w.appendFacts("fact_expression",
+        fresh.observe(appended, EtlJob.countPerKey(col("study_key")).as("facts")))
+      val factsByStudy = appended.get("facts").asInstanceOf[scala.collection.Map[Long, Long]]
+      // D4 terminal state: the batch analog of the reference's
+      // clear_state-on-success (pipeline.py:299-301) — see StudyState
+      StudyState.upsert(w, spark, preps.map(_.acc), metadataLoaded = true,
+        factsLoaded = true)
 
-    // ---- facts: the gene branch's filtered melt union, one key join, one
-    // dedup, one append ----------------------------------------------------
-    // sample dim joins on (gsm, study) WITHOUT an explicit broadcast:
-    // across many studies it is not small; AQE picks the strategy.
-    val sampleDim = w.read("dim_sample")
-      .select(col("gsm_accession").as("sample_accession"), col("study_key"), col("sample_key"))
-    val geneDim = w.read("dim_gene").select(col("ensembl_id").as("gene_id"), col("gene_key"))
-    val keyed = filtered
-      .join(broadcast(studyDim), Seq("study_accession"))
-      .join(sampleDim, Seq("sample_accession", "study_key"))
-      .join(broadcast(geneDim), Seq("gene_id"))
-      .select("sample_key", "gene_key", "study_key", "expression_value")
-      // intra-batch dedup: the reference's per-row seen-set also drops
-      // duplicates WITHIN one file (repeated gene row / repeated GSM
-      // column); min() is the deterministic stand-in for its
-      // first-in-file-order pick
-      .groupBy("sample_key", "gene_key", "study_key")
-      .agg(min(col("expression_value")).as("expression_value"))
-    // J7 against the batch's own studies only: a sample key belongs to
-    // one study, so facts outside the batch can never match, and the
-    // study_key predicate prunes their partitions at the scan (F7)
-    val keyByAcc = studyDim.where(col("study_accession").isin(preps.map(_.acc): _*)).collect()
-      .map(r => r.getAs[String]("study_accession") -> r.getAs[Long]("study_key")).toMap
-    val existing = w.read("fact_expression")
-      .where(col("study_key").isin(keyByAcc.values.toSeq: _*))
-      .select("sample_key", "gene_key")
-    val fresh = keyed.join(existing, Seq("sample_key", "gene_key"), "left_anti").cache()
-
-    val factsByStudy = fresh.groupBy("study_key").count().collect()
-      .map(r => r.getAs[Number]("study_key").longValue() -> r.getAs[Long]("count")).toMap
-    w.appendFacts("fact_expression", fresh)
-    fresh.unpersist()
-    // D4 terminal state: the batch analog of the reference's
-    // clear_state-on-success (pipeline.py:299-301) — see StudyState
-    StudyState.upsert(w, spark, preps.map(_.acc), metadataLoaded = true,
-      factsLoaded = true)
-
-    // per-study sample counts and A1 completion (metadata_processing.py:26-38)
-    // from the prep aggregates, summed per accession like the dims
-    val sampleStats = preps.groupMapReduce(_.acc)(p => (p.total, p.completeAge, p.completeSex)) {
-      case ((n1, a1, s1), (n2, a2, s2)) => (n1 + n2, a1 + a2, s1 + s2)
-    }
-    preps.map { p =>
-      val (samples, age, sex) = sampleStats(p.acc)
-      val facts = keyByAcc.get(p.acc).flatMap(factsByStudy.get).getOrElse(0L)
-      if (config.logging.logDataQuality) {
-        val total = samples.max(1L)
-        log.info(f"Study ${p.acc}: $samples samples, " +
-          f"age completion ${100.0 * age / total}%.2f%%, " +
-          f"sex completion ${100.0 * sex / total}%.2f%%")
+      // per-study sample counts and A1 completion (metadata_processing.py:26-38)
+      // from the prep aggregates, summed per accession like the dims
+      val sampleStats = preps.groupMapReduce(_.acc)(p => (p.total, p.completeAge, p.completeSex)) {
+        case ((n1, a1, s1), (n2, a2, s2)) => (n1 + n2, a1 + a2, s1 + s2)
       }
-      if (config.logging.logRecordCounts)
-        log.info(s"Study ${p.acc}: $facts expression facts written")
-      StudyResult(p.acc, samples, facts)
-    }
+      preps.map { p =>
+        val (samples, age, sex) = sampleStats(p.acc)
+        val facts = keyByAcc.get(p.acc).flatMap(factsByStudy.get).getOrElse(0L)
+        if (config.logging.logDataQuality) {
+          val total = samples.max(1L)
+          log.info(f"Study ${p.acc}: $samples samples, " +
+            f"age completion ${100.0 * age / total}%.2f%%, " +
+            f"sex completion ${100.0 * sex / total}%.2f%%")
+        }
+        if (config.logging.logRecordCounts)
+          log.info(s"Study ${p.acc}: $facts expression facts written")
+        StudyResult(p.acc, samples, facts)
+      }
+    } finally filtered.unpersist()
   }
 }
 
 object EtlJob {
+
+  /** Row count per key, as one typed aggregate (`Map[key, count]`). */
+  private object PerKeyCount extends Aggregator[Long, Map[Long, Long], Map[Long, Long]] {
+    def zero: Map[Long, Long] = Map.empty
+    def reduce(b: Map[Long, Long], k: Long): Map[Long, Long] = b.updated(k, b.getOrElse(k, 0L) + 1L)
+    def merge(a: Map[Long, Long], b: Map[Long, Long]): Map[Long, Long] =
+      b.foldLeft(a) { case (acc, (k, n)) => acc.updated(k, acc.getOrElse(k, 0L) + n) }
+    def finish(b: Map[Long, Long]): Map[Long, Long] = b
+    def bufferEncoder: Encoder[Map[Long, Long]] = ExpressionEncoder[Map[Long, Long]]()
+    def outputEncoder: Encoder[Map[Long, Long]] = ExpressionEncoder[Map[Long, Long]]()
+  }
+
+  private val countPerKey = udaf(PerKeyCount, Encoders.scalaLong)
 
   /** Runs a load's independent branches at once and returns their
     * results in input order. The pool is created per call, bounded by

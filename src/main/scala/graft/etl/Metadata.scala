@@ -101,19 +101,25 @@ object Metadata {
     * just for the header would make a multi-study load scheduler-bound.
     */
   private[etl] def firstLine(spark: SparkSession, file: String): Option[String] = {
+    val reader = openText(spark, file)
+    try Option(reader.readLine())
+    finally reader.close()
+  }
+
+  /** `file` as UTF-8 text, opened DRIVER-side through the Hadoop
+    * FileSystem of its URI and decompressed by the codec its extension
+    * names (the TextInputFormat resolution). The caller closes it.
+    */
+  private[etl] def openText(spark: SparkSession, file: String): java.io.BufferedReader = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(file)
-    val fs = p.getFileSystem(conf)
-    val raw = fs.open(p)
+    val raw = p.getFileSystem(conf).open(p)
     val in = Option(new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
         .getCodec(p))
       .map(_.createInputStream(raw): java.io.InputStream)
       .getOrElse(raw)
-    try {
-      val reader = new java.io.BufferedReader(
-        new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
-      Option(reader.readLine())
-    } finally in.close()
+    new java.io.BufferedReader(
+      new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** One file → all-strings DataFrame in header shape + `__ord`.

@@ -33,7 +33,7 @@ object AsOfJoin {
     * partitioning GROUPS nulls — so they must not enter the union at
     * all (left rows with null keys then correctly keep nulls).
     */
-  private def taggedUnion(left: DataFrame, right: DataFrame,
+  private[ops] def taggedUnion(left: DataFrame, right: DataFrame,
       keys: Seq[String], time: String, payload: Seq[String]): DataFrame = {
     require(payload.nonEmpty, "as-of join needs at least one payload column")
     val leftCols = left.columns.toSeq
@@ -72,23 +72,26 @@ object AsOfJoin {
         col("__p").asc_nulls_first)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
-  /** Forward window: the mirror — right rows must sort AFTER left rows
-    * at equal time so the co-timed right row lands in the following
-    * frame (>= semantics): the ordering DESCENDS on `__side` (left 1
-    * first, right 0 after) and `first(ignoreNulls)` over the following
-    * frame picks the earliest. Ties on time resolve to the largest
-    * payload struct (desc ordering), matching the backward variant's
-    * pick.
+  /** Forward window: the mirror — the key group sorts by time
+    * DESCENDING, and right rows must sort BEFORE left rows at equal
+    * time so the co-timed right row lands in the preceding frame (>=
+    * semantics); `last(ignoreNulls)` over the preceding frame picks
+    * the earliest right time at or after the left row. Ties on time
+    * resolve to the largest payload struct (last in `__p` ascending),
+    * matching the backward variant's pick. The frame grows from the
+    * partition head, so it is evaluated incrementally (one update per
+    * row); the equivalent ascending order over a
+    * `currentRow..unboundedFollowing` frame recomputes per row, O(n²).
     */
   private def forwardWindow(keys: Seq[String], time: String) =
     Window.partitionBy(keys.map(col): _*)
-      // time nulls LAST: the mirror of the backward window's guarantee
-      // — a null-time left row must see an EMPTY following frame
-      // (nulls-first would put it at the head and hand it the whole
-      // partition as spurious forward matches)
-      .orderBy(col(time).asc_nulls_last, col("__side").desc,
-        col("__p").desc_nulls_last)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+      // time nulls FIRST in the descending order: a null-time left row
+      // must see an EMPTY preceding frame (right rows never carry a
+      // null time) instead of the whole partition as spurious forward
+      // matches
+      .orderBy(col(time).desc_nulls_first, col("__side").asc,
+        col("__p").asc_nulls_first)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
   /** As-of backward (most-recent-at-or-before) join.
     *
@@ -120,7 +123,7 @@ object AsOfJoin {
       time: String, payload: Seq[String]): DataFrame = {
     val leftCols = left.columns.toSeq
     taggedUnion(left, right, keys, time, payload)
-      .withColumn("__p", first(col("__p"), ignoreNulls = true)
+      .withColumn("__p", last(col("__p"), ignoreNulls = true)
         .over(forwardWindow(keys, time)))
       .where(col("__side") === 1)
       .select(leftCols.map(col) ++ payload.map(c => col(s"__p.$c").as(c)): _*)
@@ -141,7 +144,7 @@ object AsOfJoin {
     taggedUnion(left, right, keys, time, payload)
       .withColumn("__pb", last(col("__p"), ignoreNulls = true)
         .over(backwardWindow(keys, time)))
-      .withColumn("__pf", first(col("__p"), ignoreNulls = true)
+      .withColumn("__pf", last(col("__p"), ignoreNulls = true)
         .over(forwardWindow(keys, time)))
       .where(col("__side") === 1)
       .select(leftCols.map(col) ++

@@ -12,11 +12,20 @@ import org.apache.spark.sql.{Column, DataFrame}
   * clamped to <= 1. Rows with invalid p keep a null q. Ties in p get
   * identical q because the running min from the worst p dominates.
   *
-  * Spark shape (SURVEY.md §2.6 C5): three windows sharing the family
-  * partitioning — count, row_number ordered by p (nulls last), and a
-  * running min over the suffix — so Catalyst plans a single shuffle.
-  * Family cardinality (pairs per study) bounds the window partition;
-  * at 100 TB the families themselves distribute across executors.
+  * Spark shape (SURVEY.md §2.6 C5): the family count, the ascending
+  * rank `__i` (nulls last) and the suffix min, all partitioned by the
+  * family, so Catalyst plans a single shuffle. The suffix min is the
+  * reference's reversed running min: a running min over p DESCENDING,
+  * framed `unboundedPreceding..currentRow`. A growing frame is
+  * evaluated incrementally, one update per row, so the family costs
+  * its O(m log m) sort; the mirror frame `currentRow..unboundedFollowing`
+  * would recompute the aggregate per row, O(m²). The frame is RANGE,
+  * so tied p values are peers: a tie group's frame holds the whole
+  * group, whose largest `__i` gives the smallest `__raw` — ties keep
+  * identical q. Invalid p (sorted first) have a null `__raw`, which
+  * `min` ignores. Family cardinality (pairs per study) bounds the
+  * window partition; at 100 TB the families themselves distribute
+  * across executors.
   */
 object BenjaminiHochberg {
 
@@ -27,12 +36,13 @@ object BenjaminiHochberg {
     val valid = p.isNotNull && !isnan(p)
     val fam = Window.partitionBy(family: _*)
     val byP = fam.orderBy(p.asc_nulls_last)
-    val suffix = byP.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    val fromWorst = fam.orderBy(p.desc_nulls_first)
+      .rangeBetween(Window.unboundedPreceding, Window.currentRow)
     df.withColumn("__m", sum(when(valid, 1L).otherwise(0L)).over(fam))
       .withColumn("__i", row_number().over(byP))
       .withColumn("__raw",
         when(valid, p * col("__m").cast("double") / col("__i").cast("double")))
-      .withColumn(out, when(valid, least(min(col("__raw")).over(suffix), lit(1.0))))
+      .withColumn(out, when(valid, least(min(col("__raw")).over(fromWorst), lit(1.0))))
       .drop("__m", "__i", "__raw")
   }
 }

@@ -187,9 +187,11 @@ object Spearman {
     // "more than the limit?", so a large inventory (the genomic case —
     // hundreds of genes) short-circuits instead of paying a full
     // distinct+sort; at or under the limit, the probe IS the complete
-    // inventory and is canonicalized driver-side.
+    // inventory and is canonicalized driver-side. Below a limit of 2
+    // no inventory can select the wide plan, so the probe is skipped.
     val items = knownItems.getOrElse(
-      df.select(col(item)).distinct().limit(wideLimit + 1)
+      if (wideLimit < 2) Seq.empty
+      else df.select(col(item)).distinct().limit(wideLimit + 1)
         .collect().map(_.get(0)).toSeq)
       .distinct.sortWith(sqlLt)
     if (items.length >= 2 && items.length <= wideLimit)

@@ -156,6 +156,17 @@ class EtlSpec extends SparkSpec {
     intercept[GeneFilterError] { GeneFilter.load(spark, noCol.toString) }
     val empty = write(root, "f3.tsv", "ensembl_id\n\n  \n")
     intercept[GeneFilterError] { GeneFilter.load(spark, empty.toString) }
+    // CSV quoting as spark.read parses it; the id column need not be first
+    val quoted = write(root, "f4.tsv",
+      "symbol\tensembl_id\nA\t\"ENSG9\"\nB\t\" ENSG1 \"\nC\t\"\"\nD\n")
+    assert(GeneFilter.load(spark, quoted.toString).as[String].collect().sorted.toSeq ==
+      Seq("ENSG1", "ENSG9"))
+    // a compressed whitelist decompresses through its codec
+    val gz = root.resolve("filter.tsv.gz")
+    val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(gz))
+    try out.write(filterTsv.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
+    assert(GeneFilter.load(spark, gz.toString).as[String].collect().sorted.toSeq ==
+      Seq("ENSG1", "ENSG2", "ENSG3"))
   }
 
   test("D1/D2: dim upsert is idempotent with deterministic keys") {
@@ -447,6 +458,34 @@ class EtlSpec extends SparkSpec {
     }
   }
 
+  /** Runs `body` and returns its result with every SQL execution it
+    * ran, as seen by a QueryExecutionListener. Listener events arrive
+    * asynchronously but in order, so a sentinel query run afterwards
+    * marks the point by which all of `body`'s events were delivered.
+    */
+  private def withExecutions[T](body: => T)
+      : (T, Seq[org.apache.spark.sql.execution.QueryExecution]) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = { seen.add(qe); () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = { seen.add(qe); () }
+    }
+    val marker = s"sentinel-${java.util.UUID.randomUUID()}"
+    def isSentinel(qe: QueryExecution) = qe.analyzed.toString.contains(marker)
+    spark.listenerManager.register(listener)
+    try {
+      val result = body
+      spark.range(1).select(lit(marker)).collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.toArray(Array.empty[QueryExecution]).exists(isSentinel) &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+      val all = seen.toArray(Array.empty[QueryExecution]).toSeq
+      assert(all.exists(isSentinel), "listener never delivered the sentinel query")
+      (result, all.filterNot(isSentinel))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("F7: correlate's target-study probe reads only the requested studies' fact partitions") {
     val root = tmpDir()
     Seq("GSE0001", "GSE0002", "GSE0003").foreach(makeStudy(root, _))
@@ -454,18 +493,27 @@ class EtlSpec extends SparkSpec {
     val whDir = tmpDir().toString
     assert(new EtlJob(spark, config(root, filter), whDir).run().forall(_.error.isEmpty))
 
-    val target = new CorrelationJob(spark, whDir)
-      .resolveTargetStudies(Seq("GSE0001", "GSE0003", "GSE_NONE"))
-    assert(target.collect().map(_.getAs[String]("gse_accession")).toSeq ==
-      Seq("GSE0001", "GSE0003"))
+    // targets resolve through the per-study shape aggregate over the
+    // requested studies' facts: every fact scan correlate runs, that
+    // aggregate's included, must be pruned to the two named studies
+    val (summary, executions) = withExecutions(
+      new CorrelationJob(spark, whDir).run(Seq("GSE0001", "GSE0003", "GSE_NONE")))
+    assert(summary.studies == Seq("GSE0001", "GSE0003"))
     import org.apache.spark.sql.catalyst.expressions.{Attribute, In, InSet}
     import org.apache.spark.sql.execution.FileSourceScanExec
-    val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-      .collect(target.queryExecution.executedPlan) {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def factScans(qe: org.apache.spark.sql.execution.QueryExecution) =
+      helper.collect(qe.executedPlan) {
         case s: FileSourceScanExec
             if s.relation.location.rootPaths.exists(_.toString.contains("fact_expression")) => s
       }
-    assert(scans.nonEmpty, target.queryExecution.executedPlan.toString)
+    val scans = executions.flatMap(factScans)
+    assert(scans.nonEmpty, executions.map(_.executedPlan).mkString("\n"))
+    // the target-resolving query: an aggregate over a fact scan
+    assert(executions.exists(qe => factScans(qe).nonEmpty &&
+      helper.collect(qe.executedPlan) { case a: BaseAggregateExec => a }.nonEmpty),
+      "no fact-scanning aggregate among correlate's executions")
     scans.foreach { s =>
       // isnotnull(study_key) names the column too, so require the IN list
       assert(s.partitionFilters.exists(_.exists {
@@ -475,6 +523,67 @@ class EtlSpec extends SparkSpec {
       }), s"fact scan is not pruned to the requested studies: ${s.partitionFilters}")
       assert(s.metrics("numPartitions").value == 2L)
     }
+  }
+
+  test("correlate: a 2-study run takes at most 5 SQL executions; its pair count is the rows it wrote") {
+    val root = tmpDir()
+    Seq("GSE0001", "GSE0002", "GSE0003").foreach(makeStudy(root, _))
+    val filter = write(root, "filter.tsv", filterTsv)
+    val whDir = tmpDir().toString
+    assert(new EtlJob(spark, config(root, filter), whDir).run().forall(_.error.isEmpty))
+    val job = new CorrelationJob(spark, whDir)
+    val wh = Warehouse(spark, whDir)
+    def written(accs: Seq[String]) = wh.read("fact_gene_pair_corr")
+      .join(wh.read("dim_study").where(col("gse_accession").isin(accs: _*)), "study_key")
+      .count()
+
+    val (summary, executions) = withExecutions(job.run(Seq("GSE0001", "GSE0002")))
+    assert(summary.studies == Seq("GSE0001", "GSE0002"))
+    assert(executions.size <= 5,
+      s"${executions.size} SQL executions:\n${executions.map(_.analyzed.nodeName).mkString("\n")}")
+    assert(summary.pairs == 6) // C(3,2) per study
+    assert(summary.pairs == written(summary.studies))
+    // a full run reports every target's rows, the earlier ones replaced
+    val all = job.run()
+    assert(all.studies == Seq("GSE0001", "GSE0002", "GSE0003"))
+    assert(all.pairs == 9 && all.pairs == written(all.studies))
+    assert(wh.read("fact_gene_pair_corr").count() == 9)
+  }
+
+  test("load: per-study fact counts equal the rows each study added; a full re-run reports 0") {
+    val root = tmpDir()
+    makeStudy(root, "GSE0001")
+    val filter = write(root, "filter.tsv", filterTsv)
+    val whDir = tmpDir().toString
+    val wh = Warehouse(spark, whDir)
+    def perStudy(): Map[String, Long] = wh.read("fact_expression")
+      .join(wh.read("dim_study"), "study_key").groupBy("gse_accession").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(new EtlJob(spark, config(root, filter), whDir).run().map(r => (r.accession, r.facts)) ==
+      Seq(("GSE0001", 11L)))
+    val before = perStudy()
+    assert(before == Map("GSE0001" -> 11L))
+
+    // GSE0001 re-delivered with its bad cell fixed (one new fact) beside
+    // a new study: each study's reported count is exactly its delta
+    write(root.resolve("GSE0001"), "expression_GSE0001.tsv",
+      expressionTsv.replace("\tbad", "\t7.0"))
+    makeStudy(root, "GSE0002")
+    val second = new EtlJob(spark, config(root, filter), whDir).run()
+    val after = perStudy()
+    assert(second.map(r => (r.accession, r.facts)) == Seq(("GSE0001", 1L), ("GSE0002", 11L)))
+    second.foreach(r =>
+      assert(r.facts == after(r.accession) - before.getOrElse(r.accession, 0L), r.accession))
+
+    // a plain re-run (no resume) where every fact already exists appends
+    // nothing: the observed count must still arrive, as 0, not block
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val rerun = scala.concurrent.Await.result(scala.concurrent.Future(
+      new EtlJob(spark, config(root, filter), whDir).run(resume = false)),
+      scala.concurrent.duration.Duration(120, "s"))
+    assert(rerun.map(r => (r.accession, r.facts, r.error)) ==
+      Seq(("GSE0001", 0L, None), ("GSE0002", 0L, None)))
+    assert(perStudy() == after)
   }
 
   test("intra-batch duplicate gene rows collapse to one fact (reference seen-set parity)") {

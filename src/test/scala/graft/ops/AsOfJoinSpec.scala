@@ -146,4 +146,52 @@ class AsOfJoinSpec extends SparkSpec {
     assert(got(4L).contains(100.0))   // forward fallback
     assert(got(5L).contains(200.0))   // backward only
   }
+
+  test("forward/both/nearest equal the currentRow..unboundedFollowing formulation they replaced") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val rng = new scala.util.Random(31)
+    // times on a 0..7 grid so left and right rows are often co-timed;
+    // right rows repeat (key, t, payload) exactly and tie on time with
+    // differing payloads; some left times and keys are null
+    val left = (1L to 300L).map { id =>
+      (id, if (rng.nextInt(15) == 0) None else Some(s"k${rng.nextInt(4)}"),
+        if (rng.nextInt(10) == 0) None else Some(rng.nextInt(8).toLong))
+    }.toDF("id", "key", "t")
+    val right = (1 to 60).flatMap { _ =>
+      val t = rng.nextInt(8).toLong
+      val row = (s"k${rng.nextInt(4)}", t,
+        if (rng.nextInt(6) == 0) None else Some(rng.nextInt(3).toDouble), t)
+      if (rng.nextBoolean()) Seq(row, row) else Seq(row)
+    }.toDF("key", "t", "rv", "mt")
+    val keys = Seq("key")
+    val payload = Seq("rv", "mt")
+    type Pick = (Option[Double], Option[Long])
+    def picks(df: org.apache.spark.sql.DataFrame, rv: String, mt: String): Map[Long, Pick] =
+      df.select(col("id"), col(rv), col(mt)).collect().map(r => r.getLong(0) ->
+        ((Option(r.get(1)).map(_.asInstanceOf[Double]), Option(r.get(2)).map(_.asInstanceOf[Long]))))
+        .toMap
+    val oldWindow = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("t").asc_nulls_last, col("__side").desc, col("__p").desc_nulls_last)
+      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    val oldFwd = picks(AsOfJoin.taggedUnion(left, right, keys, "t", payload)
+      .withColumn("__p", first(col("__p"), ignoreNulls = true).over(oldWindow))
+      .where(col("__side") === 1)
+      .select(col("id"), col("__p.rv").as("rv"), col("__p.mt").as("mt")), "rv", "mt")
+    assert(oldFwd.size == 300 && oldFwd.values.exists(_._2.nonEmpty))
+
+    assert(picks(AsOfJoin.asofForward(left, right, keys, "t", payload), "rv", "mt") == oldFwd)
+    val both = AsOfJoin.asofBoth(left, right, keys, "t", payload)
+    assert(picks(both, "fwd_rv", "fwd_mt") == oldFwd)
+    val bwd = picks(AsOfJoin.asof(left, right, keys, "t", payload), "rv", "mt")
+    assert(picks(both, "bwd_rv", "bwd_mt") == bwd)
+    val times = left.collect().map(r => r.getLong(0) -> Option(r.get(2)).map(_.asInstanceOf[Long])).toMap
+    val nearest = oldFwd.map { case (id, f) =>
+      val b = bwd(id)
+      val pickBackward = b._2.nonEmpty && (f._2.isEmpty ||
+        times(id).exists(t => t - b._2.get <= f._2.get - t))
+      id -> (if (pickBackward) b else f)
+    }
+    assert(picks(AsOfJoin.asofNearest(left, right, keys, "t", payload, "mt"), "rv", "mt") == nearest)
+  }
 }

@@ -275,4 +275,76 @@ class StatsSpec extends SparkSpec {
     assert(got.forall(q => q >= 0 && q <= 1))
     assert(got.zip(got.tail).forall { case (a, b) => a <= b })
   }
+
+  /** The pre-O(m log m) formulation, kept as an independent oracle:
+    * the suffix min over `currentRow..unboundedFollowing` in ascending
+    * p, which Spark recomputes per row (O(m²)).
+    */
+  private def qValuesSuffixFrame(df: org.apache.spark.sql.DataFrame,
+      family: Seq[org.apache.spark.sql.Column], p: org.apache.spark.sql.Column,
+      out: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val valid = p.isNotNull && !isnan(p)
+    val fam = Window.partitionBy(family: _*)
+    val byP = fam.orderBy(p.asc_nulls_last)
+    val suffix = byP.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    df.withColumn("__m", sum(when(valid, 1L).otherwise(0L)).over(fam))
+      .withColumn("__i", row_number().over(byP))
+      .withColumn("__raw",
+        when(valid, p * col("__m").cast("double") / col("__i").cast("double")))
+      .withColumn(out, when(valid, least(min(col("__raw")).over(suffix), lit(1.0))))
+      .drop("__m", "__i", "__raw")
+  }
+
+  test("benjamini-hochberg: q bit-identical to the suffix-frame oracle (ties, null, NaN, families)") {
+    val rng = new scala.util.Random(23)
+    // p on a 3-dp grid so ties are common; every family mixes in null
+    // and NaN p; one family is all-invalid and one has a single row
+    val rows = (for {
+      fam <- Seq("f1", "f2", "f3"); i <- 1 to 400
+    } yield {
+      val p: Option[Double] = rng.nextInt(20) match {
+        case 0 => None
+        case 1 => Some(Double.NaN)
+        case _ => Some(math.round(rng.nextDouble() * 1000) / 1000.0)
+      }
+      (fam, s"$fam-$i", p)
+    }) ++ Seq(("bad", "bad-1", None), ("bad", "bad-2", Some(Double.NaN)),
+      ("one", "one-1", Some(0.25)))
+    val df = rows.toDF("fam", "id", "p")
+    def qs(out: org.apache.spark.sql.DataFrame): Map[String, Option[Long]] =
+      out.select("id", "q").collect().map(r => r.getString(0) ->
+        Option(r.get(1)).map(q => java.lang.Double.doubleToRawLongBits(q.asInstanceOf[Double])))
+        .toMap
+    val got = qs(BenjaminiHochberg.qValues(df, Seq(col("fam")), col("p"), "q"))
+    val want = qs(qValuesSuffixFrame(df, Seq(col("fam")), col("p"), "q"))
+    assert(got.size == rows.size)
+    assert(got.count(_._2.isEmpty) == rows.count(r => r._3.forall(_.isNaN)))
+    val diff = want.collect { case (id, q) if got(id) != q => (id, q, got(id)) }
+    assert(diff.isEmpty, s"q differs from the oracle on ${diff.size} rows, e.g. ${diff.take(5)}")
+    // tied p within a family share one q
+    val byP = BenjaminiHochberg.qValues(df, Seq(col("fam")), col("p"), "q")
+      .where(!isnan(col("p"))).groupBy("fam", "p").agg(countDistinct("q").as("nq"))
+    assert(byP.where(col("nq") > 1).count() == 0)
+  }
+
+  test("benjamini-hochberg: no window frame runs currentRow..unboundedFollowing") {
+    import org.apache.spark.sql.catalyst.expressions.{CurrentRow, SpecifiedWindowFrame,
+      UnboundedFollowing, WindowExpression}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val df = Seq(("f", 0.01), ("f", 0.2), ("g", 0.03)).toDF("fam", "p")
+    val plan = BenjaminiHochberg.qValues(df, Seq(col("fam")), col("p"), "q")
+      .queryExecution.executedPlan
+    val windows = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(plan) { case w: WindowExec => w }
+    assert(windows.nonEmpty, plan.toString)
+    val frames = windows.flatMap(_.windowExpression.flatMap(_.collect {
+      case w: WindowExpression => w.windowSpec.frameSpecification
+    }))
+    assert(frames.nonEmpty)
+    val suffix = frames.collect {
+      case f @ SpecifiedWindowFrame(_, CurrentRow, UnboundedFollowing) => f
+    }
+    assert(suffix.isEmpty, s"quadratic suffix frame in the BH plan: $suffix")
+  }
 }
