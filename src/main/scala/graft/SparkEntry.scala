@@ -190,8 +190,6 @@ object SparkEntry {
         Array(col("discount"), col("extendedprice"), col("quantity")),
         "item", "v")
 
-  private val LineitemItems = Seq("discount", "extendedprice", "quantity")
-
   /** The passage p36 plants at a per-doc-varying offset (ASCII only —
     * it rides inside the oracle SQL as a literal). Four distinct
     * sentences, no internal repetition, so every duplicated segment
@@ -355,8 +353,7 @@ object SparkEntry {
 
   private def spearmanPairs(s: SparkSession, dir: String): DataFrame =
     Spearman.pairCorrelationsDense(
-      lineitemLong(s, dir), Seq("l_returnflag"), "item", "sk", "v",
-      knownItems = Some(LineitemItems))
+      lineitemLong(s, dir), Seq("l_returnflag"), "item", "sk", "v")
 
   private def corrPipeline(s: SparkSession, dir: String): DataFrame = {
     val withP = spearmanPairs(s, dir)

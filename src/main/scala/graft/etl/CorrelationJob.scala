@@ -13,10 +13,11 @@ import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
   * sequentially; SURVEY.md §2.10 X1 maps that to data parallelism):
   *
   *   fact ⋈ dim_sample (J1, broadcast) → pair self-join + shared-sample
-  *   intersection (J5/J6) → per-pair fractional ranks + corr (C1/C2/A4)
-  *   → p-values (C3, erf approx) → per-study BH (C5) → assembly with
-  *   the reference's persist-time NaN policy (C4: null p stored as 1.0,
-  *   q null when p invalid) → delete-then-append of the targets'
+  *   intersection (J5/J6) → per-pair Spearman (C1/C2/A4; [[Spearman]]'s
+  *   dense plan for complete studies, exact plan otherwise) → p-values
+  *   (C3, erf approx) → per-study BH (C5) → assembly with the
+  *   reference's persist-time NaN policy (C4: null p stored as 1.0, q
+  *   null when p invalid) → delete-then-append of the targets'
   *   partitions (S7 replace).
   *
   * Each piece of work runs once. The per-study shape aggregate that
@@ -25,29 +26,16 @@ import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
   * its write, and the reported pair count is an `Observation` on that
   * write — no cache and no separate count pass. BH is O(m log m) per
   * study ([[BenjaminiHochberg]]).
-  */
-/** @param exactPValues opt-in exact Student-t p-values (the reference's
+  *
+  * @param exactPValues opt-in exact Student-t p-values (the reference's
   *   scipy primary path, correlation.py:11-12); the default stays the
   *   normal approximation the cross-engine oracle pins
   *   (correlation.py:50-61, SURVEY.md §7.4.2).
-  * @param useBucketedFacts read facts from the bucketed catalog table
-  *   written by [[CorrelationJob.bucketizeFacts]] — the scan then
-  *   arrives hash-partitioned by `gene_key`, which satisfies the dense
-  *   path's (study, gene) rank-window distribution, so the window's
-  *   Exchange of ALL fact rows disappears (the first and largest
-  *   shuffle of the dense plan; pinned by BucketingSpec). At 100 TB the
-  *   bucketize is paid once per warehouse load, the rank shuffle once
-  *   per correlation run.
   */
 class CorrelationJob(spark: SparkSession, warehouseDir: String,
-    exactPValues: Boolean = false, useBucketedFacts: Boolean = false) {
-  import CorrelationJob.BucketedFactsTable
+    exactPValues: Boolean = false) {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
   private val wh = Warehouse(spark, warehouseDir)
-
-  private def factSource(): DataFrame =
-    if (useBucketedFacts) spark.table(BucketedFactsTable)
-    else wh.read("fact_expression")
 
   /** F7 study-filtered facts. On the snapshot backend the predicate
     * ALSO prunes at manifest resolution (whole segments whose stamped
@@ -56,17 +44,16 @@ class CorrelationJob(spark: SparkSession, warehouseDir: String,
     * it as a hive partition filter at the scan.
     */
   private def factsForStudies(studyKeys: Seq[Long]): DataFrame = wh match {
-    case sw: SnapshotWarehouse if !useBucketedFacts =>
-      sw.readStudies("fact_expression", studyKeys)
+    case sw: SnapshotWarehouse => sw.readStudies("fact_expression", studyKeys)
     case _ =>
-      factSource().where(col("study_key").isin(studyKeys: _*)) // partition pruning
+      wh.read("fact_expression").where(col("study_key").isin(studyKeys: _*)) // partition pruning
   }
 
   /** J1: facts keyed to their sample accessions — the requested
     * studies' (F7-pruned) when `studyKeys` is given, else every study's.
     */
   private def longFacts(studyKeys: Option[Seq[Long]]): DataFrame = {
-    val facts = studyKeys.fold(factSource())(factsForStudies)
+    val facts = studyKeys.fold(wh.read("fact_expression"))(factsForStudies)
     val dimSample = wh.read("dim_sample").select("sample_key", "gsm_accession")
     facts.join(broadcast(dimSample), Seq("sample_key"))
       .select(col("study_key"), col("gene_key"), col("gsm_accession"), col("expression_value"))
@@ -168,33 +155,5 @@ class CorrelationJob(spark: SparkSession, warehouseDir: String,
     // Observation.get blocks until the observed write has finished.
     wh.replaceStudyPartitions("fact_gene_pair_corr", out, targets.map(_._1))
     JobSummary(targets.map(_._2), observed.get("pairs").asInstanceOf[Long])
-  }
-}
-
-object CorrelationJob {
-
-  /** Catalog name of the bucketed fact twin (bucketed layout needs the
-    * session catalog — see [[ParquetWarehouse.writeBucketed]]).
-    */
-  val BucketedFactsTable = "fact_expression_bucketed"
-
-  /** One-time (per warehouse load) re-layout of `fact_expression` into
-    * a catalog table bucketed by `gene_key` and partitioned by
-    * `study_key` — study pruning is preserved, and every correlation
-    * run over it skips the dense path's rank-window Exchange because
-    * the scan is already hash-partitioned on a subset of the window's
-    * (study, gene) keys. Parquet warehouses only: bucketing is a file
-    * layout, meaningless over JDBC.
-    */
-  def bucketizeFacts(spark: SparkSession, warehouseDir: String,
-      buckets: Int = 32): Unit = {
-    val wh = Warehouse(spark, warehouseDir) match {
-      case p: ParquetWarehouse => p
-      case _ => throw new IllegalArgumentException(
-        "bucketizeFacts requires a parquet warehouse (bucketing is file layout)")
-    }
-    wh.writeBucketed(BucketedFactsTable, wh.read("fact_expression"),
-      bucketCol = "gene_key", buckets = buckets,
-      partitionCols = Seq("study_key"))
   }
 }

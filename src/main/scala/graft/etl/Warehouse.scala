@@ -137,20 +137,17 @@ class ParquetWarehouse(spark: SparkSession, baseDir: String) extends Warehouse {
 
 object Warehouse {
 
-  /** Backend dispatch on the connection string, like the reference's
-    * SQLAlchemy URL (database.py:28-36): a `jdbc:` URL gets the JDBC
-    * backend, a `snapshot:` prefix the manifest-committed
-    * [[SnapshotWarehouse]], anything else a plain parquet
-    * directory/URI.
+  /** The three-argument form with [[DatabaseConfig]]'s defaults (the
+    * reference's, config.py:14-18).
     */
   def apply(spark: SparkSession, target: String): Warehouse =
-    if (target.startsWith("jdbc:")) new JdbcWarehouse(spark, target)
-    else if (target.startsWith("snapshot:"))
-      new SnapshotWarehouse(spark, target.stripPrefix("snapshot:"))
-    else new ParquetWarehouse(spark, target)
+    apply(spark, target, DatabaseConfig(target))
 
-  /** As [[apply]], but wiring the reference's database tuning knobs
-    * (config.py:14-18) into the JDBC backend.
+  /** Backend dispatch on the connection string, like the reference's
+    * SQLAlchemy URL (database.py:28-36): a `jdbc:` URL gets the JDBC
+    * backend, wired with `db`'s tuning knobs, a `snapshot:` prefix the
+    * manifest-committed [[SnapshotWarehouse]], anything else a plain
+    * parquet directory/URI.
     */
   def apply(spark: SparkSession, target: String, db: DatabaseConfig): Warehouse =
     if (target.startsWith("jdbc:"))

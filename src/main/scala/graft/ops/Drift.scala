@@ -138,6 +138,9 @@ object Drift {
     val spark = a.sparkSession
     import spark.implicits._
     val spine = (0 until nBins).map(_.toLong).toDF("bin")
+    // Partition-less windows (`w` and the two totals), bounded: they see
+    // exactly nBins rows — the spine above, which the left joins keep
+    // one row per bin because each `binned` side is grouped by bin.
     val w = Window.orderBy(col("bin").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     spine

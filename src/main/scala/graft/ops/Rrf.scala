@@ -41,7 +41,8 @@ object Rrf {
     require(n >= 1 && topL >= 1, s"need n >= 1 and topL >= 1, got n=$n topL=$topL")
     val ranked = lists.map { case (name, df) =>
       // top-L per signal: TakeOrdered (heap + merge), never a global
-      // sort; the row_number window then runs over <= L rows
+      // sort. Partition-less window, bounded: it sees at most topL rows,
+      // enforced by the `limit(topL)` on the line below.
       val top = df.orderBy(col("score").desc, col(id).asc).limit(topL)
       val w = Window.orderBy(col("score").desc, col(id).asc)
       name -> top.withColumn(s"${name}_rank", row_number().over(w).cast("long"))
@@ -56,6 +57,8 @@ object Rrf {
       case (df, (name, _)) =>
         df.withColumn(s"${name}_rank", coalesce(col(s"${name}_rank"), lit(-1L)))
     }
+    // Partition-less window, bounded: it sees at most n rows, enforced
+    // by the `limit(n)` it runs after.
     val wOut = Window.orderBy(col("rrf_micro").desc, col(id).asc)
     filled.orderBy(col("rrf_micro").desc, col(id).asc).limit(n)
       .withColumn("rank", row_number().over(wOut).cast("long"))

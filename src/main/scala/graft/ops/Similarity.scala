@@ -126,10 +126,8 @@ object Similarity {
     * candidate join is quadratic in occupancy ~ n/2^planes — measured
     * 8.1x wall at 10x data (BASELINE round 7). Growing planes with
     * log2(n) pins occupancy, making the join work ~n * target per
-    * band — linear. The same applied-auto discipline as
-    * `Spearman.pairCorrelationsBlocked`'s block count: the documented
-    * knob is now code, not advice. `target <= 0` disables auto (the
-    * explicit override path: you get exactly `floor` planes).
+    * band — linear. `target <= 0` disables auto (the explicit
+    * override path: you get exactly `floor` planes).
     *
     * NOTE more planes LOWER per-band collision probability
     * (1-theta/pi)^planes — recall at a given band count drops as auto

@@ -134,65 +134,7 @@ class StatsSpec extends SparkSpec {
     }
   }
 
-  test("dense wide and join plans agree (wide is opt-in via wideLimit)") {
-    // The default (WideItemLimit = 0) routes everything to the join
-    // plan; an explicit wideLimit opts the 6-item subset into the wide
-    // pivot plan. Pairs present in both outputs must agree exactly —
-    // same ranks, same corr, same gates.
-    val rng = new scala.util.Random(11)
-    val rows = for {
-      g <- (10 to 43).map(i => s"g$i"); s <- (1 to 8).map(i => s"s$i")
-    } yield ("ST1", g, s, rng.nextDouble() * 100)
-    val df = rows.toDF("study", "gene", "sample", "v")
-    val joinPath = Spearman.pairCorrelationsDense(df, Seq("study"), "gene", "sample", "v")
-      .orderBy("item_a", "item_b").collect()
-    assert(joinPath.length == 34 * 33 / 2)
-    val small = df.where(col("gene").isin((10 to 15).map(i => s"g$i"): _*))
-    val widePath = Spearman.pairCorrelationsDense(small, Seq("study"), "gene", "sample", "v",
-      wideLimit = 32)
-      .orderBy("item_a", "item_b").collect()
-    assert(widePath.length == 15)
-    val byPair = joinPath.map(r =>
-      (r.getAs[String]("item_a"), r.getAs[String]("item_b")) -> r).toMap
-    widePath.foreach { w =>
-      val j = byPair((w.getAs[String]("item_a"), w.getAs[String]("item_b")))
-      assert(w.getAs[Long]("n_samples") == j.getAs[Long]("n_samples"))
-      assert(math.abs(w.getAs[Double]("rho") - j.getAs[Double]("rho")) < 1e-12)
-    }
-  }
-
-  test("blocked pair enumeration equals the dense join plan (complete, incomplete, multi-family, odd block counts)") {
-    val rng = new scala.util.Random(13)
-    // complete 2-family matrix + an incomplete variant (30% dropped):
-    // blocked must equal dense on BOTH — same global per-item ranks,
-    // same shared-sample corr, same gates
-    val complete = for {
-      st <- Seq("ST1", "ST2"); g <- (10 to 30).map(i => s"g$i"); s <- (1 to 9).map(i => s"s$i")
-    } yield (st, g, s, rng.nextDouble() * 100)
-    val incomplete = complete.filter(_ => rng.nextDouble() > 0.3)
-    for ((rows, label) <- Seq((complete, "complete"), (incomplete, "incomplete"));
-         nBlocks <- Seq(1, 3, 16, 64)) {
-      val df = rows.toDF("study", "gene", "sample", "v")
-      val dense = Spearman.pairCorrelationsDense(df, Seq("study"), "gene", "sample", "v")
-        .orderBy("study", "item_a", "item_b").collect()
-      val blocked = Spearman.pairCorrelationsBlocked(df, Seq("study"), "gene", "sample", "v",
-        nBlocks = nBlocks)
-        .orderBy("study", "item_a", "item_b").collect()
-      assert(dense.length == blocked.length,
-        s"$label nBlocks=$nBlocks: ${dense.length} dense vs ${blocked.length} blocked pairs")
-      dense.zip(blocked).foreach { case (d, b) =>
-        assert(d.getAs[String]("study") == b.getAs[String]("study") &&
-          d.getAs[String]("item_a") == b.getAs[String]("item_a") &&
-          d.getAs[String]("item_b") == b.getAs[String]("item_b"),
-          s"$label nBlocks=$nBlocks: pair key mismatch")
-        assert(d.getAs[Long]("n_samples") == b.getAs[Long]("n_samples"))
-        assert(math.abs(d.getAs[Double]("rho") - b.getAs[Double]("rho")) < 1e-12,
-          s"$label nBlocks=$nBlocks: rho diverged")
-      }
-    }
-  }
-
-  test("dense path edge cases: 1 item yields empty; unsorted knownItems canonicalize; dup observation fails loudly") {
+  test("dense path edge cases: 1 item yields empty; 2 items give one a < b pair") {
     val one = Seq(("ST1", "g1", "s1", 1.0), ("ST1", "g1", "s2", 2.0))
       .toDF("study", "gene", "sample", "v")
     assert(Spearman.pairCorrelationsDense(one, Seq("study"), "gene", "sample", "v").count() == 0)
@@ -200,27 +142,12 @@ class StatsSpec extends SparkSpec {
     val two = Seq(("ST1", "b", "s1", 1.0), ("ST1", "b", "s2", 2.0),
       ("ST1", "a", "s1", 2.0), ("ST1", "a", "s2", 4.0))
       .toDF("study", "gene", "sample", "v")
-    val out = Spearman.pairCorrelationsDense(two, Seq("study"), "gene", "sample", "v",
-      knownItems = Some(Seq("b", "a", "b")), // unsorted + duplicated list
-      wideLimit = 32).collect()
+    val out = Spearman.pairCorrelationsDense(two, Seq("study"), "gene", "sample", "v").collect()
     assert(out.length == 1)
     assert(out(0).getAs[String]("item_a") == "a" && out(0).getAs[String]("item_b") == "b")
-
-    // the duplicate-observation guard is the wide plan's stricter
-    // validation — the reason the plan stays available as an opt-in
-    val dup = Seq(("ST1", "g1", "s1", 1.0), ("ST1", "g1", "s1", 5.0),
-      ("ST1", "g1", "s2", 2.0), ("ST1", "g2", "s1", 3.0), ("ST1", "g2", "s2", 1.0))
-      .toDF("study", "gene", "sample", "v")
-    val ex = intercept[Exception] {
-      Spearman.pairCorrelationsDense(dup, Seq("study"), "gene", "sample", "v",
-        wideLimit = 32).collect()
-    }
-    def msgs(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ msgs(e.getCause))
-    assert(msgs(ex).exists(_.contains("unique (family, item, sample)")))
   }
 
-  test("wide dense path: incomplete matrix pairs over shared samples with global ranks") {
+  test("dense path: incomplete matrix pairs over shared samples with global ranks") {
     // g1 on s1..s4, g2 on s2..s4: global g1 ranks on the intersection
     // are (1,2,3) (s1's 999 is rank 4, excluded by the pair), g2 ranks
     // (3,2,1) -> rho = -1 over n = 3 shared samples.
@@ -229,8 +156,7 @@ class StatsSpec extends SparkSpec {
       ("ST1", "g1", "s3", 20.0), ("ST1", "g1", "s4", 30.0),
       ("ST1", "g2", "s2", 3.0), ("ST1", "g2", "s3", 2.0), ("ST1", "g2", "s4", 1.0))
       .toDF("study", "gene", "sample", "v")
-    val out = Spearman.pairCorrelationsDense(df, Seq("study"), "gene", "sample", "v",
-      wideLimit = 32).collect()
+    val out = Spearman.pairCorrelationsDense(df, Seq("study"), "gene", "sample", "v").collect()
     assert(out.length == 1)
     assert(out(0).getAs[Long]("n_samples") == 3)
     assert(math.abs(out(0).getAs[Double]("rho") + 1.0) < 1e-12)
