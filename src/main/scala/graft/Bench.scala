@@ -1,8 +1,17 @@
 package graft
 import scala.util.control.NonFatal
 
-/** Benchmark main: one JSON metric line over SparkEntry.benchQueries.
-  * Same engine config as Verify (GraftSession.builder).
+/** Benchmark main: per-query min-of-3 timings over
+  * SparkEntry.benchQueries, printed as JSON on stdout. Same engine
+  * config as Verify (GraftSession.builder).
+  *
+  * Stdout ends with TWO lines tagged `"metric":"total"`: a compact
+  * headline, then the full record (the same headline fields plus the
+  * per-query `queries` and `spread` dicts). The LAST line is the
+  * authoritative record; the compact one is a copy of its headline
+  * that survives a short tail capture. A consumer must take the last
+  * `"metric":"total"` line, never the first. bench_out.json holds the
+  * full record too.
   */
 object Bench {
   /** A failed query must read as a regression, not a speedup: without

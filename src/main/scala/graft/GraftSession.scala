@@ -11,9 +11,50 @@ import org.apache.spark.sql.SparkSession
   * are EXPLICIT here and take precedence over spark-submit --conf /
   * spark-defaults — a cluster deployment should build its own session
   * and apply only the semantic settings below (ANSI off, UTC,
-  * nanosAsLong, AQE) rather than reuse this local-mode builder.
+  * nanosAsLong, AQE, the codegen cache size) rather than reuse this
+  * local-mode builder.
+  *
+  * == Generated-code cache ==
+  * Spark keeps compiled whole-stage and projection classes in one
+  * JVM-wide LRU keyed on the generated source. Its default of 100
+  * entries is smaller than the working set of one incremental ingest
+  * step, so a long-lived driver (`etl-stream --follow`, or any JVM
+  * that runs drain after drain) evicted every class before the next
+  * micro-batch needed it and recompiled all of them each time.
+  * [[CodegenCacheEntries]] sizes the cache from the measured working
+  * set (classes compiled per warm repetition, perfbench traced runs
+  * and graft.Bench on 4 cores):
+  *
+  * {{{
+  *   operation                               at 100 (default)   at 1024
+  *   etl-stream drain + correlate --study         237               2
+  *   curate (8-stage pipeline)                     88               0
+  *   graft.Bench pass (182 queries)             ~4.1k     still misses
+  * }}}
+  *
+  * The size is a power of two at least 4x the largest per-operation
+  * set, because the Guava cache behind it splits `maximumSize` across
+  * its segments and each segment evicts on its own share. It is
+  * deliberately NOT sized to hold a whole `graft.Bench` pass: that
+  * would pin ~4k classes in metaspace and turn the bench's min-of-3
+  * into a measurement of the cache instead of the plans. A one-shot
+  * CLI JVM gains nothing; the gain is cross-batch reuse in one JVM.
+  *
+  * Spark reads the size ONCE per JVM, in the static initializer of
+  * `CodeGenerator` (from `SQLConf.get` at the JVM's first use of the
+  * code generator). It therefore works only if the session carries it
+  * before the first query runs; setting it on a session afterwards is
+  * silently ignored for the life of the JVM. A cluster deployment
+  * that builds its own session should pass
+  * `--conf spark.sql.codegen.cache.maxEntries=1024` at submit time:
+  * the driver then reads it from its session, and each executor JVM
+  * (which has its own cache) reads it from the SQL conf the driver
+  * propagates with every task.
   */
 object GraftSession {
+  /** Entries in the JVM-wide generated-code cache (see the object doc). */
+  val CodegenCacheEntries: Int = 1024
+
   def builder(appName: String = "graft", cores: String = "32"): SparkSession.Builder =
     SparkSession
       .builder()
@@ -39,6 +80,7 @@ object GraftSession {
       // or stall C2; falling back to Volcano beyond this size is far
       // more predictable on this box (see BENCH notes).
       .config("spark.sql.codegen.hugeMethodLimit", "8000")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // several operators pin eager localCheckpoint blocks (Spearman
       // pair subtree, MinHash/SimHash signatures); the ContextCleaner
       // only reclaims them after a driver GC and its default forced-GC

@@ -128,6 +128,9 @@ case class L2SqDistance(left: Expression, right: Expression) extends BinaryExpre
   *
   * The codebook rides as reference objects (like any literal array),
   * so identical plans stay codegen-cache-friendly across refits.
+  * Equality and hash compare the codebook by content
+  * ([[Codebooks]]), so equal codebooks from separate fits are
+  * `semanticEquals`.
   */
 case class NearestL2Entry(child: Expression,
     cents: Array[Array[Double]], cids: Array[Int]) extends UnaryExpression {
@@ -206,6 +209,17 @@ case class NearestL2Entry(child: Expression,
 
   override protected def withNewChildInternal(newChild: Expression): NearestL2Entry =
     copy(child = newChild)
+
+  override def equals(o: Any): Boolean = o match {
+    case that: NearestL2Entry => child == that.child &&
+      Codebooks.same(cents, that.cents) && java.util.Arrays.equals(cids, that.cids)
+    case _ => false
+  }
+
+  private lazy val contentHash = java.util.Arrays.hashCode(Array(
+    child.hashCode, Codebooks.hash(cents), java.util.Arrays.hashCode(cids)))
+
+  override def hashCode(): Int = contentHash
 }
 
 /** Ranked top-k centroid entries by cosine against a small literal
@@ -225,8 +239,9 @@ case class NearestL2Entry(child: Expression,
   * (k = nProbe, single digits).
   *
   * The codebook rides as reference objects, so identical plans stay
-  * codegen-cache-friendly across refits. Integer cids only (the
-  * kmeans/prefit path); the "minid" stand-in keeps the unrolled form.
+  * codegen-cache-friendly across refits; equality and hash compare it
+  * by content ([[Codebooks]]). Integer cids only (the kmeans/prefit
+  * path); the "minid" stand-in keeps the unrolled form.
   */
 case class TopKCentroidEntries(vec: Expression, norm: Expression,
     cents: Array[Array[Double]], cnorms: Array[Double], cids: Array[Int],
@@ -314,6 +329,34 @@ case class TopKCentroidEntries(vec: Expression, norm: Expression,
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): TopKCentroidEntries =
     copy(vec = l, norm = r)
+
+  override def equals(o: Any): Boolean = o match {
+    case that: TopKCentroidEntries => vec == that.vec && norm == that.norm && k == that.k &&
+      Codebooks.same(cents, that.cents) && java.util.Arrays.equals(cnorms, that.cnorms) &&
+      java.util.Arrays.equals(cids, that.cids)
+    case _ => false
+  }
+
+  private lazy val contentHash = java.util.Arrays.hashCode(Array(
+    vec.hashCode, norm.hashCode, k, Codebooks.hash(cents),
+    java.util.Arrays.hashCode(cnorms), java.util.Arrays.hashCode(cids)))
+
+  override def hashCode(): Int = contentHash
+}
+
+/** Content equality for the literal codebooks [[NearestL2Entry]] and
+  * [[TopKCentroidEntries]] carry. A case class compares `Array` fields
+  * by reference, so two equal codebooks from separate fits would never
+  * compare equal and every `semanticEquals`-based reuse would miss.
+  * Doubles compare by bits (`java.util.Arrays`): NaN equals NaN, and
+  * -0.0 differs from 0.0, as it can change the output.
+  */
+private[functions] object Codebooks {
+  def same(a: Array[Array[Double]], b: Array[Array[Double]]): Boolean =
+    java.util.Arrays.deepEquals(a.asInstanceOf[Array[AnyRef]], b.asInstanceOf[Array[AnyRef]])
+
+  def hash(a: Array[Array[Double]]): Int =
+    java.util.Arrays.deepHashCode(a.asInstanceOf[Array[AnyRef]])
 }
 
 object VectorMath {

@@ -22,6 +22,9 @@ object SparkSpec {
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.hugeMethodLimit", "8000")
+      // the production cache size, so the suite compiles and reuses
+      // generated code as a long-lived driver does
+      .config("spark.sql.codegen.cache.maxEntries", graft.GraftSession.CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -250,6 +250,51 @@ class StreamingEtlSpec extends SparkSpec {
     assert(factTuples(whDir) == after)
   }
 
+  test("a second drain+correlate of new studies reuses the first round's generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val root = tmpDir()
+    val filter = write(root, "filter.tsv", filterTsv)
+    val cfg = config(root, filter)
+    val whDir = tmpDir().toString
+    val manifests = tmpDir()
+    val checkpoint = tmpDir().resolve("ckpt").toString
+    val etl = new StreamingEtl(spark, cfg, whDir)
+
+    // one complete study (dense correlate path) and one with a bad cell
+    // (exact path), with accessions and GSM ids new to the warehouse
+    def study(gse: String, complete: Boolean): Path = {
+      val d = Files.createDirectories(root.resolve(gse))
+      write(d, s"metadata_$gse.tsv",
+        metadataTsv.replace("GSE9006", gse).replace("GSM", s"GSM$gse-"))
+      write(d, s"expression_$gse.tsv",
+        (if (complete) expressionTsv.replace("bad", "0.5") else expressionTsv)
+          .replace("GSM", s"GSM$gse-"))
+      d
+    }
+    /** Classes compiled by one drain of a two-study manifest and the
+      * correlate of its studies.
+      */
+    def round(n: Int): Long = {
+      val (dense, exact) = (s"GSE70$n", s"GSE80$n")
+      write(manifests, s"arrival_$n.txt",
+        s"${study(dense, complete = true)}\n${study(exact, complete = false)}\n")
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val loaded = etl.ingestAvailable(manifests.toString, checkpoint)
+      assert(loaded.map(r => (r.accession, r.facts, r.error)).sortBy(_._1) ==
+        Seq((dense, 12L, None), (exact, 11L, None)), loaded.toString)
+      val summary = new graft.etl.CorrelationJob(spark, whDir).run(Seq(dense, exact))
+      assert(summary.studies == Seq(dense, exact) && summary.pairs == 6, summary.toString)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+
+    val first = round(1)
+    val second = round(2)
+    // same plan shapes, new literals: the second round finds its classes
+    // in the cache (GraftSession.CodegenCacheEntries); at Spark's default
+    // size of 100 it recompiles ~240
+    assert(second <= 20, s"second round compiled $second classes (first: $first)")
+  }
+
   private def copyTree(from: Path, to: Path): Unit = {
     import scala.jdk.CollectionConverters._
     Files.walk(from).iterator().asScala.foreach { p =>
