@@ -4,6 +4,7 @@ import graft.ops.{Dedup, EventTime, Multimodal, Similarity, TextStats}
 import graft.stats.{BenjaminiHochberg, PValues, Ranks, Spearman}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -22,7 +23,7 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** Recursive delete for the streaming queries' staged temp dirs
+  /** Recursive delete for the staged and scratch temp dirs
     * (deleteOnExit is a no-op on non-empty directories — without this,
     * every bench/verify pass would leak a parquet copy under /tmp).
     */
@@ -39,8 +40,8 @@ object SparkEntry {
   /** Staged-directory cache for the streaming queries: the file source
     * needs a DIRECTORY, the testdata is a single file, and Bench runs
     * each query twice — staging once per (key, source) and cleaning on
-    * JVM exit avoids re-copying (x7/x9) or re-writing (x8) the events
-    * table every invocation.
+    * JVM exit avoids re-copying ([[fileStream]]) or re-writing (x8,
+    * p16, x24) a table every invocation.
     */
   private val stagedDirs =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
@@ -59,38 +60,39 @@ object SparkEntry {
       p
     })
 
-  /** Drain a finished memory-sink table into a local DataFrame and drop
-    * the temp view. The memory sink pins its full result in driver
-    * memory for as long as the view exists; with a fresh UUID-named sink
-    * per execution (needed — a streaming query cannot reuse a running
-    * query's name) the copies would otherwise accumulate across Bench's
-    * repeated passes for the JVM lifetime. Results here are small
-    * (aggregates / session summaries), so the defensive copy is cheap.
+  /** The persisted-model round trip (fit → save → load → serve) of
+    * x26, x29, x30, p42 and p67: `save` writes the artifact under a
+    * fresh scratch directory, `load` reads it back, and the directory
+    * is deleted once loaded — every loader collects eagerly, so
+    * nothing reads the files afterwards.
     */
-  /** Run a streaming body under the RocksDB state store provider (the
-    * production provider for large state — heap stores OOM first at
-    * scale), restoring the previous conf after. Used by the monitors
-    * that run their PRODUCTION form in the harness (x22, x31).
-    */
-  /** Data-derived state-partition count for the update-mode monitors:
-    * ceil(input_bytes / target) bounded to [1, cores]. State-partition
-    * count is a WORKLOAD decision, not a harness constant — each
-    * partition is a RocksDB instance with a fixed open/commit cost per
-    * micro-batch, so partitions should hold tens of MB of state each
-    * (target 64 MB of source input per partition, env-overridable),
-    * while min(cores) keeps a corpus-scale stream at full compute
-    * parallelism (at 100 TB/day bytes/target >> cores, so a cluster
-    * run is unchanged; only overhead on small inputs shrinks).
-    * Sizing failure (no such file) falls back to cores — the previous
-    * behavior. Measured at sf0.1: 32 state partitions per monitor were
-    * pure overhead (the 8-core driver run beat the 32-core run on the
+  private def savedAndLoaded[A](save: String => Unit)(load: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_model")
+    try {
+      val path = dir.resolve("model").toString
+      save(path)
+      load(path)
+    } finally deleteRecursively(dir)
+  }
+
+  /** Source bytes per streaming state partition ([[streamStateParts]]). */
+  private val StreamStateTargetBytes = 64L * 1024L * 1024L
+
+  /** Data-derived state-partition count for the streaming queries:
+    * ceil(input_bytes / [[StreamStateTargetBytes]]) bounded to
+    * [1, cores]. State-partition count is a WORKLOAD decision, not a
+    * harness constant — each partition is a state store with a fixed
+    * open/commit cost per micro-batch, so partitions should hold tens
+    * of MB of state each, while min(cores) keeps a corpus-scale stream
+    * at full compute parallelism (at 100 TB/day bytes/target >> cores,
+    * so a cluster run is unchanged; only overhead on small inputs
+    * shrinks). Sizing failure (no such file) falls back to cores.
+    * Measured at sf0.1: 32 state partitions per monitor were pure
+    * overhead (the 8-core driver run beat the 32-core run on the
     * monitor family); the rule sizes those streams to 1 partition at
     * this input (a few MB) at EITHER core count.
     */
   private[graft] def streamStateParts(s: SparkSession, sizingPath: String): Int = {
-    val target = sys.env.get("GRAFT_STREAM_STATE_TARGET_BYTES")
-      .map(_.toLong).filter(_ > 0L)
-      .getOrElse(64L * 1024L * 1024L)
     val cores = s.sparkContext.defaultParallelism.toLong
     // a parquet "table" here is a file or a directory of part files;
     // sized through its Hadoop FileSystem, so file://, hdfs:// and s3a://
@@ -101,73 +103,70 @@ object SparkEntry {
         p.getFileSystem(s.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
       }
       catch { case scala.util.control.NonFatal(_) => return cores.toInt }
-    math.max(1L, math.min(cores, (bytes + target - 1L) / target)).toInt
+    math.max(1L, math.min(cores,
+      (bytes + StreamStateTargetBytes - 1L) / StreamStateTargetBytes)).toInt
   }
 
-  /** Run a streaming start+drain body with the data-derived
-    * shuffle-partition count ([[streamStateParts]]); restores the
-    * session conf after. The partition count is read at query START,
-    * so only the stream inside the scope is affected — batch plans
-    * built outside keep the session default. Applies to every
-    * stateful streaming query (default-provider and RocksDB alike):
-    * each state partition is a per-micro-batch commit cycle whether
-    * the store is HDFS-backed or RocksDB.
+  /** Run one streaming query to completion and return its output as a
+    * local DataFrame — the one harness every stream query goes through.
+    *
+    *  - `Trigger.AvailableNow` into a memory sink: the stream processes
+    *    everything present at start and stops; the sink's rows are
+    *    copied into a local DataFrame. The sink name is unique per run
+    *    (a streaming query cannot reuse a running query's name).
+    *  - State partitions (`spark.sql.shuffle.partitions`, read at query
+    *    start) are sized from the `sizedBy` input by
+    *    [[streamStateParts]]; each one is a per-micro-batch commit
+    *    cycle whatever the state store.
+    *  - `update` mode runs on the RocksDB state store (the production
+    *    provider for large state — heap stores OOM first at scale) with
+    *    the no-data micro-batch OFF. Every update-mode query here is a
+    *    monitor whose drain reads only rows the data batches emitted
+    *    (monotone max / latest-update / top-k-union semantics). The
+    *    trailing no-data batch exists to advance the watermark for
+    *    APPEND-mode final emission and to evict closed state early — it
+    *    emits ZERO rows to an update-mode sink, so skipping it cannot
+    *    change a drain, and eviction simply merges into the next data
+    *    batch (on a flowing production stream the two are equivalent;
+    *    WatermarkEvictionSpec pins eviction itself on a multi-batch
+    *    stream). Its cost is one full state-store commit cycle across
+    *    every state partition per run — measured 0.7-1.9 s per monitor
+    *    at sf0.1 (x22 3.8→2.4 s, x34 2.7→1.9 s, x25 5.1→3.3 s
+    *    steady-state). `complete` and `append` keep the session's
+    *    provider and the no-data batch.
+    *
+    * The confs are restored, the query stopped and the sink view
+    * dropped in a `finally`, so a failing stream leaks neither settings
+    * nor the pinned sink rows (the memory sink holds its full result in
+    * driver memory for as long as its view exists).
     */
-  private def withStreamParts[T](s: SparkSession, sizingPath: String)(body: => T): T = {
-    val pkey = "spark.sql.shuffle.partitions"
-    val prevP = s.conf.getOption(pkey)
-    // GRAFT_STREAM_PARTS force-overrides the data-derived default (A/B)
-    s.conf.set(pkey, sys.env.getOrElse("GRAFT_STREAM_PARTS",
-      streamStateParts(s, sizingPath).toString))
-    try body
-    finally {
-      prevP match {
-        case Some(v) => s.conf.set(pkey, v)
-        case None    => s.conf.unset(pkey)
+  private[graft] def drain(s: SparkSession, sizedBy: String, mode: String)(query: => DataFrame): DataFrame = {
+    val sink = s"graft_sink_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val confs = ("spark.sql.shuffle.partitions" -> streamStateParts(s, sizedBy).toString) +:
+      (if (mode == "update") Seq(
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+      else Nil)
+    // prior value or None when unset: getAll holds only set entries,
+    // where getOption would report a registered default and restoring
+    // that would pin it as explicitly set
+    val set = s.conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    try {
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      val q = query.writeStream.format("memory").queryName(sink)
+        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+      val out = s.table(sink)
+      s.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
+    } finally {
+      s.catalog.dropTempView(sink)
+      prev.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None)    => s.conf.unset(k)
       }
     }
-  }
-
-  private def withRocksStateStore[T](s: SparkSession, sizingPath: String)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // Every withRocksStateStore caller is an UPDATE-mode monitor whose
-    // drain reads only rows the data batches emitted (monotone max /
-    // latest-update / top-k-union semantics). The trailing no-data
-    // micro-batch exists to advance the watermark for APPEND-mode final
-    // emission and to evict closed state early — it emits ZERO rows to
-    // an update-mode sink, so skipping it cannot change a drain, and
-    // eviction simply merges into the next data batch (on a flowing
-    // production stream the two are equivalent; WatermarkEvictionSpec
-    // pins eviction itself on a multi-batch stream). Cost of the no-op
-    // batch is one full state-store commit cycle across every state
-    // partition per run — measured 0.7-1.9 s per monitor at sf0.1
-    // (x22 3.8→2.4 s, x34 2.7→1.9 s, x25 5.1→3.3 s steady-state).
-    // GRAFT_STREAM_NODATA=true restores the default for A/B runs.
-    val nkey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevN = s.conf.getOption(nkey)
-    s.conf.set(nkey, sys.env.getOrElse("GRAFT_STREAM_NODATA", "false"))
-    try withStreamParts(s, sizingPath)(body)
-    finally {
-      prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
-      }
-      prevN match {
-        case Some(v) => s.conf.set(nkey, v)
-        case None    => s.conf.unset(nkey)
-      }
-    }
-  }
-
-  private def drainMemorySink(s: SparkSession, sink: String): DataFrame = {
-    val out = s.table(sink)
-    val rows = out.collect()
-    val df = s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-    s.catalog.dropTempView(sink)
-    df
   }
 
   // ===== analytical core (C1-C6 over TPC-H-ish data) ===================
@@ -282,56 +281,63 @@ object SparkEntry {
         EventTime.nsToMicros("last.ts_ns").as("last_ts_us"),
         col("last.event_type").as("last_type"))
 
-  /** The events table as an unbounded file-source stream (the file
-    * source monitors a DIRECTORY; the single-file testdata table is
-    * staged into one, once per JVM per sf dir). Shared by every
-    * streaming twin that consumes raw events.
-    */
-  /** Stage a parquet table into a flat directory of data files. The
+  /** A testdata table as an unbounded file-source stream — the one
+    * source every stream query over a raw table reads. The file source
+    * monitors a DIRECTORY, so the table is staged into one, once per
+    * JVM per (table, sf dir), as a flat directory of data files. The
     * driver's testdata tables are single FILES, but any Spark-written
     * fixture (the sf1 scale probe) is a DIRECTORY of part files — a
     * bare Files.copy of that copies only the empty dir entry and the
     * stream silently reads ZERO rows (caught by the round-7 scale
     * probe: x23 "ran" 3× faster at 10× the data).
     */
-  private def stageParquet(src: String, p: java.nio.file.Path): Unit = {
-    val s0 = java.nio.file.Paths.get(src)
-    if (java.nio.file.Files.isDirectory(s0)) {
-      val walk = java.nio.file.Files.walk(s0)
-      try {
-        val it = walk.iterator()
-        var i = 0
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.toString.endsWith(".parquet") && java.nio.file.Files.isRegularFile(f)) {
-            java.nio.file.Files.copy(f, p.resolve(f"part$i%05d.parquet"))
-            i += 1
+  private def fileStream(s: SparkSession, dir: String, table: String): DataFrame = {
+    import java.nio.file.{Files, Paths}
+    val src = s"$dir/$table.parquet"
+    val staged = stagedDir(s"$table:$dir") { p =>
+      val s0 = Paths.get(src)
+      if (Files.isDirectory(s0)) {
+        val walk = Files.walk(s0)
+        try {
+          val it = walk.iterator()
+          var i = 0
+          while (it.hasNext) {
+            val f = it.next()
+            if (f.toString.endsWith(".parquet") && Files.isRegularFile(f)) {
+              Files.copy(f, p.resolve(f"part$i%05d.parquet"))
+              i += 1
+            }
           }
-        }
-        require(i > 0, s"no parquet files under $src")
-      } finally walk.close()
-    } else {
-      java.nio.file.Files.copy(s0, p.resolve(s0.getFileName.toString))
-      ()
+          require(i > 0, s"no parquet files under $src")
+        } finally walk.close()
+      } else {
+        Files.copy(s0, p.resolve(s0.getFileName.toString))
+        ()
+      }
     }
+    s.readStream.schema(s.read.parquet(src).schema).parquet(staged.toString)
   }
 
-  private def eventStream(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val staged = stagedDir(s"events:$dir")(stageParquet(s"$dir/events.parquet", _))
-    s.readStream.schema(schema).parquet(staged.toString)
-  }
-
-  private def embStream(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-    val staged = stagedDir(s"embeddings:$dir")(stageParquet(s"$dir/embeddings.parquet", _))
-    s.readStream.schema(schema).parquet(staged.toString)
-  }
-
-  private def docStream(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    val staged = stagedDir(s"documents:$dir")(stageParquet(s"$dir/documents.parquet", _))
-    s.readStream.schema(schema).parquet(staged.toString)
+  /** The drift monitors' one state shape (x22 PSI, x32 KS, x34 TVD):
+    * the odd-id events streamed into per-(1-hour event-time window,
+    * value bin) counts under a 1-hour watermark in update mode, then
+    * the monotone drain — a (window, bin) group's successive updates
+    * carry strictly growing counts, so max is the final state. A
+    * deployment keeps this one windowed count state and fans the
+    * drained frame into all three post-passes; each query here adds
+    * only its reference side and statistic.
+    */
+  private def driftCounts(s: SparkSession, dir: String): DataFrame = {
+    val binned = EventTime.withTsNanos(fileStream(s, dir, "events").where(col("event_id") % 2 === 1))
+      .withColumn("ts_t", timestamp_micros(EventTime.nsToMicros("ts_ns")))
+      .withWatermark("ts_t", "1 hour")
+      .groupBy(window(col("ts_t"), "1 hour").as("w"),
+        ops.Drift.binCol(col("value"), 0.0, 40.0, 10).as("bin"))
+      .agg(count(lit(1)).as("n_cur"))
+    drain(s, s"$dir/events.parquet", "update")(binned)
+      .groupBy(col("w"), col("bin"))
+      .agg(max(col("n_cur")).as("n_cur"))
+      .select(col("w.start").as("win_start"), col("bin"), col("n_cur"))
   }
 
   /** The document-table row expectations — ONE rule list feeding both
@@ -926,17 +932,9 @@ object SparkEntry {
     // unbounded, state = one struct per user, emitted from the
     // complete-mode sink after AvailableNow drains. Shares d5's
     // oracle — the eighth batch/stream parity pair.
-    "x20_stream_latest" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val sink = s"stream_latest_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      withStreamParts(s, s"$dir/events.parquet") {
-      val q = latestSnapshot(eventStream(s, dir))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      }
-      drainMemorySink(s, sink)
-    }),
+    "x20_stream_latest" -> ((s, dir) =>
+      drain(s, s"$dir/events.parquet", "complete")(
+        latestSnapshot(fileStream(s, dir, "events")))),
 
     // X22: streaming drift monitor — the a14 PSI math applied online:
     // the stream (odd-id events) maintains per-(hour-window, value-bin)
@@ -956,30 +954,10 @@ object SparkEntry {
     // events in a window (vanished mass, via the windows×ref-bins
     // spine).
     "x22_stream_psi" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val refShares = ops.Drift.binShares(
         t(s, dir, "events").where(col("event_id") % 2 === 0),
         "value", lo = 0.0, binWidth = 40.0, nBins = 10)
-      val cur = eventStream(s, dir).where(col("event_id") % 2 === 1)
-      val binned = EventTime.withTsNanos(cur)
-        .withColumn("ts_t", timestamp_micros(EventTime.nsToMicros("ts_ns")))
-        .withWatermark("ts_t", "1 hour")
-        .groupBy(window(col("ts_t"), "1 hour").as("w"),
-          ops.Drift.binCol(col("value"), 0.0, 40.0, 10).as("bin"))
-        .agg(count(lit(1)).as("n_cur"))
-      val sink = s"stream_psi_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      withRocksStateStore(s, s"$dir/events.parquet") {
-        val q = binned.writeStream.format("memory").queryName(sink)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      // monotone drain: a (window, bin) group's successive updates
-      // carry strictly growing counts — max is the final state
-      val drained = drainMemorySink(s, sink)
-        .groupBy(col("w"), col("bin"))
-        .agg(max(col("n_cur")).as("n_cur"))
-        .select(col("w.start").as("win_start"), col("bin"), col("n_cur"))
-      ops.Drift.psiAgainstReference(drained, refShares)
+      ops.Drift.psiAgainstReference(driftCounts(s, dir), refShares)
     }),
 
     // X32: streaming KS drift monitor — a20's statistic in x22's
@@ -993,28 +971,10 @@ object SparkEntry {
     // them, and the whole per-window statistic + argmax bin replays
     // bit-for-bit. Post-pass cost: |windows| × 10 rows.
     "x32_stream_ks" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val refCounts = t(s, dir, "events").where(col("event_id") % 2 === 0)
         .select(ops.Drift.binCol(col("value"), 0.0, 40.0, 10).as("bin"))
         .groupBy("bin").agg(count(lit(1)).as("n_ref"))
-      val cur = eventStream(s, dir).where(col("event_id") % 2 === 1)
-      val binned = EventTime.withTsNanos(cur)
-        .withColumn("ts_t", timestamp_micros(EventTime.nsToMicros("ts_ns")))
-        .withWatermark("ts_t", "1 hour")
-        .groupBy(window(col("ts_t"), "1 hour").as("w"),
-          ops.Drift.binCol(col("value"), 0.0, 40.0, 10).as("bin"))
-        .agg(count(lit(1)).as("n_cur"))
-      val sink = s"stream_ks_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      withRocksStateStore(s, s"$dir/events.parquet") {
-        val q = binned.writeStream.format("memory").queryName(sink)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      val drained = drainMemorySink(s, sink)
-        .groupBy(col("w"), col("bin"))
-        .agg(max(col("n_cur")).as("n_cur"))
-        .select(col("w.start").as("win_start"), col("bin"), col("n_cur"))
-      ops.Drift.ksAgainstReference(drained, refCounts, nBins = 10)
+      ops.Drift.ksAgainstReference(driftCounts(s, dir), refCounts, nBins = 10)
     }),
 
     // X34: streaming TVD drift monitor — a22's statistic in the
@@ -1028,28 +988,10 @@ object SparkEntry {
     // input to a mixture-rebalance (x28) decision. Post-pass cost:
     // |windows| × 10 rows, integer-exact.
     "x34_stream_tvd" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val refCounts = t(s, dir, "events").where(col("event_id") % 2 === 0)
         .select(ops.Drift.binCol(col("value"), 0.0, 40.0, 10).as("bin"))
         .groupBy("bin").agg(count(lit(1)).as("n_ref"))
-      val cur = eventStream(s, dir).where(col("event_id") % 2 === 1)
-      val binned = EventTime.withTsNanos(cur)
-        .withColumn("ts_t", timestamp_micros(EventTime.nsToMicros("ts_ns")))
-        .withWatermark("ts_t", "1 hour")
-        .groupBy(window(col("ts_t"), "1 hour").as("w"),
-          ops.Drift.binCol(col("value"), 0.0, 40.0, 10).as("bin"))
-        .agg(count(lit(1)).as("n_cur"))
-      val sink = s"stream_tvd_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      withRocksStateStore(s, s"$dir/events.parquet") {
-        val q = binned.writeStream.format("memory").queryName(sink)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      val drained = drainMemorySink(s, sink)
-        .groupBy(col("w"), col("bin"))
-        .agg(max(col("n_cur")).as("n_cur"))
-        .select(col("w.start").as("win_start"), col("bin"), col("n_cur"))
-      ops.Drift.tvdAgainstReference(drained, refCounts, nBins = 10)
+      ops.Drift.tvdAgainstReference(driftCounts(s, dir), refCounts, nBins = 10)
     }),
 
     // X25: streaming VOCABULARY drift monitor — the x22 PSI machinery
@@ -1071,7 +1013,6 @@ object SparkEntry {
     // the groupBy(window, key) + count eviction shape); drain is the
     // family's monotone max-count discipline.
     "x25_stream_vocab_drift" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val d = t(s, dir, "documents")
       def tokens(df: org.apache.spark.sql.DataFrame) = df
         .select(col("doc_id"), explode(split(trim(lower(col("text"))), "\\s+")).as("token"))
@@ -1085,7 +1026,7 @@ object SparkEntry {
       val refShares = refCounts
         .crossJoin(broadcast(refCounts.agg(sum("n_ref").as("__t"))))
         .select(col("bin"), (col("n_ref") / col("__t")).as("p_ref"))
-      val binned = docStream(s, dir).where(col("doc_id") % 2 === 1)
+      val binned = fileStream(s, dir, "documents").where(col("doc_id") % 2 === 1)
         .withColumn("ts", timestamp_seconds(col("doc_id")))
         .withWatermark("ts", "100 seconds")
         .select(col("ts"), explode(split(trim(lower(col("text"))), "\\s+")).as("token"))
@@ -1094,13 +1035,7 @@ object SparkEntry {
         .groupBy(window(col("ts"), "100 seconds").as("w"),
           coalesce(col("token_id"), lit(0L)).as("bin"))
         .agg(count(lit(1)).as("n_cur"))
-      val sink = s"stream_vocab_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      withRocksStateStore(s, s"$dir/documents.parquet") {
-        val q = binned.writeStream.format("memory").queryName(sink)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      val drained = drainMemorySink(s, sink)
+      val drained = drain(s, s"$dir/documents.parquet", "update")(binned)
         .groupBy(col("w"), col("bin"))
         .agg(max(col("n_cur")).as("n_cur"))
         .select(expr("unix_timestamp(w.start) div 100").as("win_start"),
@@ -1539,17 +1474,8 @@ object SparkEntry {
     // Trigger.AvailableNow, drained to completion, and returned from
     // the complete-mode sink. Hash-matches the batch oracle: streaming
     // and batch are two physical executions of one logical query.
-    "x7_stream_hourly" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val sink = s"stream_hourly_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      withStreamParts(s, s"$dir/events.parquet") {
-      val q = hourlyAgg(eventStream(s, dir))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      }
-      drainMemorySink(s, sink)
-    }),
+    "x7_stream_hourly" -> ((s, dir) =>
+      drain(s, s"$dir/events.parquet", "complete")(hourlyAgg(fileStream(s, dir, "events")))),
     // X8: Structured Streaming parity for sessionization — the SAME
     // gap-split semantics as x3, but executed as a
     // flatMapGroupsWithState state machine over the file source
@@ -1559,7 +1485,7 @@ object SparkEntry {
     // emits); session_seq comes from the state's per-user counter.
     // Hash-matches the batch x3 oracle.
     "x8_stream_sessionize" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.{GroupStateTimeout, Trigger}
+      import org.apache.spark.sql.streaming.GroupStateTimeout
       // canonical ts_ns BEFORE the max/sentinel staging: the sentinel
       // arithmetic and the EventNs dataset contract are Long-ns, so
       // the timestamp[us] encoding must be converted up front (getLong
@@ -1584,18 +1510,11 @@ object SparkEntry {
         import s.implicits._
         val stream = s.readStream.schema(core.schema).parquet(staged.toString)
           .as[graft.streaming.EventStreams.EventNs]
-        val sink = s"stream_sessions_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-        withStreamParts(s, s"$dir/events.parquet") {
-        val q = graft.streaming.EventStreams
+        drain(s, s"$dir/events.parquet", "append")(graft.streaming.EventStreams
           .sessionizeNs(stream, gapNs, GroupStateTimeout.NoTimeout)
           .toDF()
           .select(col("user_id"), col("session_seq"), col("n_events"),
-            round(col("sum_value"), 4).as("sum_value"), col("session_start_us"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        }
-        drainMemorySink(s, sink)
+            round(col("sum_value"), 4).as("sum_value"), col("session_start_us")))
       }
     }),
     // X3: sessionization (gaps-and-islands) — lag/gap flag, running-sum
@@ -1633,34 +1552,16 @@ object SparkEntry {
     // complete-mode memory sink (same drain shape as x7). Overlapping
     // windows in streaming exercise the multi-window state update path
     // (each event lands in two state keys). Same oracle as x11.
-    "x13_stream_sliding" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val sink = s"stream_sliding_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      withStreamParts(s, s"$dir/events.parquet") {
-      val q = slidingAgg(eventStream(s, dir))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      }
-      drainMemorySink(s, sink)
-    }),
+    "x13_stream_sliding" -> ((s, dir) =>
+      drain(s, s"$dir/events.parquet", "complete")(slidingAgg(fileStream(s, dir, "events")))),
     // X14: Structured Streaming parity for the NATIVE session window —
     // the SAME sessionWindowAgg as x12, in its actual production shape:
     // an unbounded plan whose state store MERGES overlapping session
     // ranges per user as events arrive (the one windowing mode where
     // streaming state keys are not fixed — ranges grow and coalesce).
     // Complete-mode memory sink; same oracle as x12.
-    "x14_stream_session_window" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val sink = s"stream_sesswin_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      withStreamParts(s, s"$dir/events.parquet") {
-      val q = sessionWindowAgg(eventStream(s, dir))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      }
-      drainMemorySink(s, sink)
-    }),
+    "x14_stream_session_window" -> ((s, dir) =>
+      drain(s, s"$dir/events.parquet", "complete")(sessionWindowAgg(fileStream(s, dir, "events")))),
     // X15: funnel analysis — ordered signup → click → purchase
     // progression per user (each stage's timestamp must be at-or-after
     // the previous stage's FIRST occurrence). Three filtered min-aggs
@@ -1802,19 +1703,10 @@ object SparkEntry {
     // range condition lets it evict). Same oracle as x6: one logical
     // join, batch and streaming physical executions.
     "x9_stream_interval_join" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val staged = stagedDir(s"events:$dir") { p =>
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          p.resolve("events.parquet"))
-      }
-      def stream() = {
-        val raw = s.readStream.schema(schema).parquet(staged.toString)
-        EventTime.withTsNanos(raw)
+      def stream() =
+        EventTime.withTsNanos(fileStream(s, dir, "events"))
           .withColumn("ts_us", EventTime.nsToMicros("ts_ns"))
           .withColumn("ts_t", timestamp_micros(col("ts_us")))
-      }
       val errors = stream().where(col("event_type") === "error")
         .select(col("event_id").as("error_id"), col("user_id"),
           col("ts_us"), col("ts_t").as("err_t"))
@@ -1824,20 +1716,13 @@ object SparkEntry {
           col("ts_us").as("right_ts_us"), col("event_type").as("other_type"),
           col("ts_t").as("oth_t"))
         .withWatermark("oth_t", "10 minutes")
-      val joined = errors.join(others,
+      drain(s, s"$dir/events.parquet", "append")(errors.join(others,
         col("user_id") === col("user_id_b") &&
           col("oth_t") >= col("err_t") - expr("INTERVAL 5 MINUTES") &&
           col("oth_t") <= col("err_t") + expr("INTERVAL 5 MINUTES") &&
           col("error_id") =!= col("other_id"))
         .select(col("error_id"), col("other_id"), col("user_id"), col("other_type"),
-          (col("right_ts_us") - col("ts_us")).as("delta_us"))
-      val sink = s"stream_join_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      withStreamParts(s, s"$dir/events.parquet") {
-      val q = joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      }
-      drainMemorySink(s, sink)
+          (col("right_ts_us") - col("ts_us")).as("delta_us")))
     }),
     // X10: STREAM-STATIC join — the third Structured Streaming join
     // shape (after x9's stream-stream): an unbounded event stream
@@ -1846,26 +1731,12 @@ object SparkEntry {
     // deployments (slowly-changing dims come free); here it is a
     // per-type average the oracle recomputes in SQL.
     "x10_stream_static_join" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val staged = stagedDir(s"events:$dir") { p =>
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$dir/events.parquet"),
-          p.resolve("events.parquet"))
-      }
       val dim = t(s, dir, "events").groupBy(col("event_type"))
         .agg(round(avg(col("value")), 4).as("type_avg"))
-      val joined = s.readStream.schema(schema).parquet(staged.toString)
+      drain(s, s"$dir/events.parquet", "complete")(fileStream(s, dir, "events")
         .join(broadcast(dim), Seq("event_type")) // stream-static join
         .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"), max(col("type_avg")).as("type_avg"))
-      val sink = s"stream_static_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      withStreamParts(s, s"$dir/events.parquet") {
-      val q = joined.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      }
-      drainMemorySink(s, sink)
+        .agg(count(lit(1)).as("n_events"), max(col("type_avg")).as("type_avg")))
     }),
     // X4: semi-structured props — JSON field extraction + agg.
     "x4_json_extract" -> ((s, dir) =>
@@ -1890,24 +1761,17 @@ object SparkEntry {
     // (state keyed by content digest; the shape of online corpus dedup
     // in a training-data pipeline). Same planted dups, same oracle.
     "p16_stream_dedup" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val d = t(s, dir, "documents").select("doc_id", "text")
       val staged = stagedDir(s"docs_dup:$dir") { p =>
         val planted = d.where(col("doc_id") % 50 === 0)
           .withColumn("doc_id", col("doc_id") + 100000L)
         d.unionByName(planted).write.mode("overwrite").parquet(p.toString)
       }
-      val sink = s"stream_dedup_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      withStreamParts(s, s"$dir/documents.parquet") {
-      val q = s.readStream.schema(d.schema).parquet(staged.toString)
-        .groupBy(md5(col("text")).as("text_md5"))
-        .agg(count(lit(1)).as("n_copies"), min(col("doc_id")).as("keep_id"))
-        .where(col("n_copies") > 1)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      }
-      drainMemorySink(s, sink)
+      drain(s, s"$dir/documents.parquet", "complete")(
+        s.readStream.schema(d.schema).parquet(staged.toString)
+          .groupBy(md5(col("text")).as("text_md5"))
+          .agg(count(lit(1)).as("n_copies"), min(col("doc_id")).as("keep_id"))
+          .where(col("n_copies") > 1))
     }),
     // P17: deterministic sampling — hash-Bernoulli (pure map, no
     // shuffle, membership stable under layout changes and appends) +
@@ -2018,17 +1882,11 @@ object SparkEntry {
     // watermark needed. Uniqueness rules stay batch-side: streaming
     // countDistinct needs the p16 dedup-state machinery, a
     // deliberately different op.
-    "x23_stream_expectations" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val sink = s"stream_exp_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      withStreamParts(s, s"$dir/documents.parquet") {
-      val q = ops.Expectations.aggRow(docStream(s, dir), docRowRules)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      }
-      ops.Expectations.reshape(drainMemorySink(s, sink), docRowRules.map(_._1))
-    }),
+    "x23_stream_expectations" -> ((s, dir) =>
+      ops.Expectations.reshape(
+        drain(s, s"$dir/documents.parquet", "complete")(
+          ops.Expectations.aggRow(fileStream(s, dir, "documents"), docRowRules)),
+        docRowRules.map(_._1))),
     // X24: the p37 UNIQUENESS rule as a streaming monitor — the rule
     // list x23 deliberately left batch-side. The SAME docUniqueRules
     // definition drives dropDuplicatesWithinWatermark (state bounded
@@ -2042,7 +1900,6 @@ object SparkEntry {
     // micro-batch, so nothing is watermark-late and the DuckDB twin
     // replays the exact counts.
     "x24_stream_uniqueness" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val staged = stagedDir(s"docdups:$dir") { p =>
         val d = s.read.parquet(s"$dir/documents.parquet")
         // +1000s offset: doc_id 0 would otherwise sit exactly ON the
@@ -2055,24 +1912,15 @@ object SparkEntry {
       val schema = s.read.parquet(staged.toString).schema
       def stream = s.readStream.schema(schema).parquet(staged.toString)
       val (name, keys) = docUniqueRules.head
-      val arrSink = s"stream_uni_a_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val survSink = s"stream_uni_s_${java.util.UUID.randomUUID().toString.replace("-", "")}"
       val allSet = keys.map(col(_).isNotNull).reduce(_ && _)
-      withStreamParts(s, s"$dir/documents.parquet") {
-      val qa = stream
+      val sizedBy = s"$dir/documents.parquet"
+      val arr = drain(s, sizedBy, "complete")(stream
         .agg(count(lit(1)).as("__n"),
-          sum(when(allSet, 1L).otherwise(0L)).as("__nn"))
-        .writeStream.format("memory").queryName(arrSink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      val qs = ops.Expectations.uniqueSurvivors(stream, keys, "ts", "10 minutes")
-        .select(keys.map(col): _*)
-        .writeStream.format("memory").queryName(survSink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      qa.awaitTermination(); qs.awaitTermination()
-      }
-      val arr = drainMemorySink(s, arrSink).head()
-      ops.Expectations.uniqueReportRow(s, name,
-        arr.getLong(0), arr.getLong(1), drainMemorySink(s, survSink).count())
+          sum(when(allSet, 1L).otherwise(0L)).as("__nn"))).head()
+      val survivors = drain(s, sizedBy, "append")(
+        ops.Expectations.uniqueSurvivors(stream, keys, "ts", "10 minutes")
+          .select(keys.map(col): _*)).count()
+      ops.Expectations.uniqueReportRow(s, name, arr.getLong(0), arr.getLong(1), survivors)
     }),
     // X26: the p57 classifier SERVED on a stream — train offline on
     // the batch table (the p57 fit, bit-identical weights), broadcast
@@ -2083,7 +1931,6 @@ object SparkEntry {
     // data pipeline: bounded training state, map-only scoring inside
     // each micro-batch, cohort counts as the only streaming state.
     "x26_stream_quality_score" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val feat = ops.Logistic.features(t(s, dir, "documents")
         .repartition(s.sparkContext.defaultParallelism))
         .localCheckpoint(true)
@@ -2091,23 +1938,15 @@ object SparkEntry {
       // (the p42 codebook precedent): train, save the 4-long model
       // artifact, and serve from the loaded copy — weights are exact
       // integers, so the round trip is bit-identical
-      val wPath = java.nio.file.Files
-        .createTempDirectory("graft_lrw").resolve("weights").toString
-      ops.Logistic.saveWeights(s, wPath, ops.Logistic.train(feat, rounds = 3))
-      val w = ops.Logistic.loadWeights(s, wPath, expectedN = 4)
-      val sink = s"stream_lrq_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      withStreamParts(s, s"$dir/documents.parquet") {
-      val q = ops.Logistic.scoreWith(
-          ops.Logistic.features(docStream(s, dir), carry = Seq("source")),
+      val w = savedAndLoaded(
+        ops.Logistic.saveWeights(s, _, ops.Logistic.train(feat, rounds = 3)))(
+        ops.Logistic.loadWeights(s, _, expectedN = 4))
+      drain(s, s"$dir/documents.parquet", "complete")(ops.Logistic.scoreWith(
+          ops.Logistic.features(fileStream(s, dir, "documents"), carry = Seq("source")),
           w, carry = Seq("source"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("keep"), 1L).otherwise(0L)).as("n_keep"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      }
-      drainMemorySink(s, sink)
+          sum(when(col("keep"), 1L).otherwise(0L)).as("n_keep")))
         .select(col("source"), col("n_docs"), col("n_keep"),
           (round(col("n_keep") / col("n_docs") * lit(1e6)).cast("long") / lit(1e6))
             .as("keep_rate"))
@@ -2120,22 +1959,14 @@ object SparkEntry {
     // exact integers, so the streaming totals replay bit-for-bit on
     // any engine. State is |sources| count rows.
     "x27_stream_dsir" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val scores = ops.Dsir.bucketScores(t(s, dir, "documents"),
         col("source").isin("src0", "src1", "src2"), buckets = 256)
-      val sink = s"stream_dsir_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      withStreamParts(s, s"$dir/documents.parquet") {
-      val q = ops.Dsir.scoreDocs(docStream(s, dir), scores,
-          carry = Seq("source"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("keep"), 1L).otherwise(0L)).as("n_keep"),
-          sum(col("dsir_micro")).as("total_micro"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      }
-      drainMemorySink(s, sink)
+      drain(s, s"$dir/documents.parquet", "complete")(
+        ops.Dsir.scoreDocs(fileStream(s, dir, "documents"), scores, carry = Seq("source"))
+          .groupBy(col("source"))
+          .agg(count(lit(1)).as("n_docs"),
+            sum(when(col("keep"), 1L).otherwise(0L)).as("n_keep"),
+            sum(col("dsir_micro")).as("total_micro")))
         .select(col("source"), col("n_docs"), col("n_keep"), col("total_micro"))
     }),
     // X35: the DECLARATIVE curation funnel as an INGEST GATE (round
@@ -2153,7 +1984,6 @@ object SparkEntry {
     // is safe (the x26/x27 convention); the stages themselves add
     // ZERO state (pure column math per micro-batch).
     "x35_stream_curation" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val cfg = ops.CurationPipeline.loadString(
         """pipeline:
           |  stages:
@@ -2165,17 +1995,11 @@ object SparkEntry {
           |    - kind: hash_sample
           |      pct: 60
           |""".stripMargin)
-      val sink = s"stream_cur_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      withStreamParts(s, s"$dir/documents.parquet") {
-      val q = ops.CurationPipeline.runStreaming(docStream(s, dir), cfg)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(length(col("text"))).as("total_chars"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      }
-      drainMemorySink(s, sink)
+      drain(s, s"$dir/documents.parquet", "complete")(
+        ops.CurationPipeline.runStreaming(fileStream(s, dir, "documents"), cfg)
+          .groupBy(col("source"))
+          .agg(count(lit(1)).as("n_docs"),
+            sum(length(col("text"))).as("total_chars")))
         .select(col("source"), col("n_docs"), col("total_chars"))
     }),
     // X28: per-window mixture REBALANCE — p48's calibration recomputed
@@ -2197,21 +2021,14 @@ object SparkEntry {
     // shape). The drain is the family's monotone max-count discipline;
     // the rate derivation only ever sees the dim-bounded counts frame.
     "x28_stream_rebalance" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val sink = s"stream_rebal_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val binned = docStream(s, dir)
+      val binned = fileStream(s, dir, "documents")
         .withColumn("ts", timestamp_seconds(col("doc_id")))
         .withWatermark("ts", "256 seconds")
         .groupBy(window(col("ts"), "256 seconds").as("w"), col("source"))
         .agg(count(lit(1)).as("n"))
-      withRocksStateStore(s, s"$dir/documents.parquet") {
-        val q = binned.writeStream.format("memory").queryName(sink)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
       // monotone drain: a (window, source) group's successive updates
       // carry strictly growing counts — max is the final state
-      val counts = drainMemorySink(s, sink)
+      val counts = drain(s, s"$dir/documents.parquet", "update")(binned)
         .groupBy(col("w"), col("source"))
         .agg(max(col("n")).as("n"))
         .select(expr("unix_timestamp(w.start) div 256").as("window_id"),
@@ -2240,7 +2057,6 @@ object SparkEntry {
     // definition, two executions). A falling live kappa means the two
     // models' agreement structure drifted — retrain before routing.
     "x31_stream_kappa" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val docs = t(s, dir, "documents")
       // spread before the regex-heavy featurization (single-split trap)
       val featB = ops.Logistic.features(
@@ -2248,9 +2064,8 @@ object SparkEntry {
       val w1 = ops.Logistic.train(featB, rounds = 3)
       val hfeatB = ops.Logistic.hashedFeatures(docs, 64).localCheckpoint(true)
       val w2 = ops.Logistic.trainHashed(hfeatB, 64, rounds = 2, lrNum = 64)
-      val sink = s"stream_kap_${java.util.UUID.randomUUID().toString.replace("-", "")}"
       val scoredA = ops.Logistic.scoreWith(
-          ops.Logistic.features(docStream(s, dir), carry = Seq("text")),
+          ops.Logistic.features(fileStream(s, dir, "documents"), carry = Seq("text")),
           w1, carry = Seq("text"))
         .select(col("doc_id"), col("text"), col("keep").as("keep_a"))
       val scoredBoth = ops.Logistic.scoreHashed(
@@ -2258,13 +2073,9 @@ object SparkEntry {
           w2, carry = Seq("keep_a"))
         .select(col("doc_id"), col("keep_a"), col("keep").as("keep_b"))
         .withColumn("event_ts", timestamp_seconds(col("doc_id")))
-      withRocksStateStore(s, s"$dir/documents.parquet") {
-        val q = ops.Evaluation.windowedAgreementCounts(scoredBoth)
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      val counts = ops.Evaluation.drainLatestWindowCounts(drainMemorySink(s, sink))
+      val counts = ops.Evaluation.drainLatestWindowCounts(
+          drain(s, s"$dir/documents.parquet", "update")(
+            ops.Evaluation.windowedAgreementCounts(scoredBoth)))
         .select(expr("unix_timestamp(w.start) div 256").as("window_id"),
           col("n_docs"), col("n_agree"), col("n_keep_a"), col("n_keep_b"))
       ops.Evaluation.kappaFromCounts(counts, Seq("window_id"))
@@ -2282,25 +2093,19 @@ object SparkEntry {
     // window carries its own yardstick: a source whose gate drifts
     // harder than its window's pool shows up as a widening gap, live.
     "x33_stream_parity" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val docs = t(s, dir, "documents")
       // spread before the regex-heavy featurization (single-split trap)
       val featB = ops.Logistic.features(
         docs.repartition(s.sparkContext.defaultParallelism)).localCheckpoint(true)
       val w1 = ops.Logistic.train(featB, rounds = 3)
       val scored = ops.Logistic.scoreWith(
-          ops.Logistic.features(docStream(s, dir), carry = Seq("source")),
+          ops.Logistic.features(fileStream(s, dir, "documents"), carry = Seq("source")),
           w1, carry = Seq("source"))
         .withColumn("event_ts", timestamp_seconds(col("doc_id")))
-      val sink = s"stream_par_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      withRocksStateStore(s, s"$dir/documents.parquet") {
-        val q = ops.Evaluation.windowedConfusionCounts(scored, "source")
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
-      val counts = ops.Evaluation
-        .drainLatestConfusion(drainMemorySink(s, sink), "source")
+      val counts = ops.Evaluation.drainLatestConfusion(
+          drain(s, s"$dir/documents.parquet", "update")(
+            ops.Evaluation.windowedConfusionCounts(scored, "source")),
+          "source")
         .select(expr("unix_timestamp(w.start) div 256").as("window_id"),
           col("source"), col("n_docs"), col("tp"), col("fp"),
           col("tn"), col("fn"))
@@ -2342,34 +2147,24 @@ object SparkEntry {
     // (Similarity.ivfCandidatePairs), so batch and stream cannot
     // drift — and the oracle IS p42's, replayed on the same split.
     "x30_stream_ann_serve" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val emb = t(s, dir, "embeddings")
       val corpus = emb.where(col("vec_id") < 250)
-      val cbPath = java.nio.file.Files.createTempDirectory("graft_x30_cb")
-        .resolve("codebook").toString
-      ops.Similarity.saveCodebook(s, cbPath,
-        ops.Similarity.fitCodebook(corpus, nCentroids = 8))
+      val cb = savedAndLoaded(
+        ops.Similarity.saveCodebook(s, _, ops.Similarity.fitCodebook(corpus, nCentroids = 8)))(
+        ops.Similarity.loadCodebook(s, _))
       val pairs = ops.Similarity.ivfCandidatePairs(corpus,
-        embStream(s, dir).where(col("vec_id") >= 250),
-        ops.Similarity.loadCodebook(s, cbPath), nProbe = 2)
+        fileStream(s, dir, "embeddings").where(col("vec_id") >= 250), cb, nProbe = 2)
       val k = 5
       val topk = udaf(new ops.TopKCandAgg(k),
         org.apache.spark.sql.Encoders.product[ops.ScoredCand])
-      val sink = s"stream_ann_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      withRocksStateStore(s, s"$dir/embeddings.parquet") {
-        val q = pairs
-          .withColumn("ts", timestamp_seconds(col("query_id")))
-          .withWatermark("ts", "256 seconds")
-          .groupBy(window(col("ts"), "256 seconds").as("w"), col("query_id"))
-          .agg(topk(col("cosine") * -1, col("neighbor_id")).as("tk"))
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
       // re-rank the drained updates (ranking semantics = rankTopK:
       // cosine desc, ties to the lowest neighbor id); distinct first —
       // a candidate surviving several batches appears in each update
-      drainMemorySink(s, sink)
+      drain(s, s"$dir/embeddings.parquet", "update")(pairs
+          .withColumn("ts", timestamp_seconds(col("query_id")))
+          .withWatermark("ts", "256 seconds")
+          .groupBy(window(col("ts"), "256 seconds").as("w"), col("query_id"))
+          .agg(topk(col("cosine") * -1, col("neighbor_id")).as("tk")))
         .select(col("query_id"), explode(col("tk").getField("cands")).as("__c"))
         .select(col("query_id"), col("__c.nc").as("nc"),
           col("__c.neighbor_id").as("neighbor_id"))
@@ -2381,23 +2176,14 @@ object SparkEntry {
           round(col("nc") * -1, 6).as("cosine"), col("rank").cast("long").as("rank"))
     }),
     "x29_stream_pq_encode" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
       val emb = t(s, dir, "embeddings")
-      val cbPath = java.nio.file.Files.createTempDirectory("graft_x29_cb")
-        .resolve("pq_codebooks").toString
-      ops.Pq.savePqCodebooks(s, cbPath,
-        ops.Pq.fitPqCodebooks(emb.where(col("vec_id") < 250), m = 4, ksub = 8, iters = 2))
-      val cbs = ops.Pq.loadPqCodebooks(s, cbPath, expectedM = 4)
-      val sink = s"stream_pq_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      withStreamParts(s, s"$dir/embeddings.parquet") {
-      val q = ops.Pq.encodePq(embStream(s, dir).where(col("vec_id") >= 250), cbs)
-        .groupBy(col("sub"), col("code"))
-        .agg(count(lit(1)).as("n_vectors"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      }
-      drainMemorySink(s, sink)
+      val cbs = savedAndLoaded(ops.Pq.savePqCodebooks(s, _,
+        ops.Pq.fitPqCodebooks(emb.where(col("vec_id") < 250), m = 4, ksub = 8, iters = 2)))(
+        ops.Pq.loadPqCodebooks(s, _, expectedM = 4))
+      drain(s, s"$dir/embeddings.parquet", "complete")(
+        ops.Pq.encodePq(fileStream(s, dir, "embeddings").where(col("vec_id") >= 250), cbs)
+          .groupBy(col("sub"), col("code"))
+          .agg(count(lit(1)).as("n_vectors")))
         .select(col("sub"), col("code"), col("n_vectors"))
     }),
     // D9: referential-integrity audit — FK orphan checks in p37's
@@ -3148,13 +2934,12 @@ object SparkEntry {
     "p42_ivf_incremental" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val corpus = emb.where(col("vec_id") < 250)
-      val cbPath = java.nio.file.Files.createTempDirectory("graft_p42_cb")
-        .resolve("codebook").toString
-      Similarity.saveCodebook(s, cbPath, Similarity.fitCodebook(corpus, nCentroids = 8))
+      val cb = savedAndLoaded(
+        Similarity.saveCodebook(s, _, Similarity.fitCodebook(corpus, nCentroids = 8)))(
+        Similarity.loadCodebook(s, _))
       Similarity.ivfCosineTopKIncremental(
         corpus, emb.where(col("vec_id") >= 250),
-        k = 5, nCentroids = 8, nProbe = 2,
-        codebook = Some(Similarity.loadCodebook(s, cbPath)))
+        k = 5, nCentroids = 8, nProbe = 2, codebook = Some(cb))
         .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"),
           col("rank").cast("long").as("rank"))
     }),
@@ -3187,9 +2972,10 @@ object SparkEntry {
     // ABLATION twin: production callers use p66's residual form,
     // which captures 0.803 vs 0.462 here on clustered embeddings
     // (RecallStructuredSpec); this query pins what residual encoding
-    // buys. Config chosen by the ProbePq decomposition: raw
-    // m=4 ADC ranked at 0.085 recall vs the p65 exact twin; this
-    // config recovers the cell-capture ceiling (RecallSpec floor).
+    // buys. Config chosen by the ProbePq decomposition (commit
+    // 7ad950a): raw m=4 ADC ranked at 0.085 recall vs the p65 exact
+    // twin; this config recovers the cell-capture ceiling (RecallSpec
+    // floor).
     "p64_ivfpq_topk" -> ((s, dir) =>
       ops.Pq.ivfPqTopK(t(s, dir, "embeddings"), k = 5)
         .select(col("query_id"), col("neighbor_id"), col("l2sq"),
@@ -3228,12 +3014,10 @@ object SparkEntry {
     // the fit). O(batch) per arrival — the p38/p42 incremental shape.
     "p67_pq_incremental" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val cbPath = java.nio.file.Files.createTempDirectory("graft_p67_cb")
-        .resolve("pq_codebooks").toString
-      ops.Pq.savePqCodebooks(s, cbPath,
-        ops.Pq.fitPqCodebooks(emb.where(col("vec_id") < 250), m = 4, ksub = 8, iters = 2))
-      ops.Pq.encodePq(emb.where(col("vec_id") >= 250),
-          ops.Pq.loadPqCodebooks(s, cbPath, expectedM = 4))
+      val cbs = savedAndLoaded(ops.Pq.savePqCodebooks(s, _,
+        ops.Pq.fitPqCodebooks(emb.where(col("vec_id") < 250), m = 4, ksub = 8, iters = 2)))(
+        ops.Pq.loadPqCodebooks(s, _, expectedM = 4))
+      ops.Pq.encodePq(emb.where(col("vec_id") >= 250), cbs)
         .select(col("vec_id"), col("sub"), col("code"), col("qdist"))
     }),
     // P65: exact squared-L2 top-k — p64's brute-force quality oracle
@@ -4439,8 +4223,8 @@ object SparkEntry {
        |SELECT a.vec_id, CAST(a.cell AS BIGINT) AS cell, d.vec_id IS NULL AS keep
        |FROM assign a LEFT JOIN sd_dropped d ON d.vec_id = a.vec_id""".stripMargin
 
-  /** Shared by p1 (batch hash-groupBy dedup) and p16 (stateful
-    * streaming dedup): one logical dup-group query, two executions.
+  /** Shared by x2, its source-format twins and the x7 streaming twin:
+    * one logical hourly aggregation, several physical executions.
     */
   private val hourlyAggSql =
     """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n_events,
@@ -4485,6 +4269,9 @@ object SparkEntry {
       |FROM grams g JOIN bench b USING (ng)
       |GROUP BY 1, 2 HAVING count(*) >= 3""".stripMargin
 
+  /** Shared by p1 (batch hash-groupBy dedup) and p16 (stateful
+    * streaming dedup): one logical dup-group query, two executions.
+    */
   private val exactDedupSql =
     """WITH all_docs AS (
       |  SELECT doc_id, text FROM documents
@@ -4940,10 +4727,7 @@ object SparkEntry {
     "x3_sessionize" -> sessionizeSql,
     // streaming twin — same gap-split semantics, same oracle
     "x8_stream_sessionize" -> sessionizeSql,
-    "x7_stream_hourly" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n_events,
-        |       round(sum(value), 4) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
+    "x7_stream_hourly" -> hourlyAggSql,
     // the oracle IS the full recompute the incremental merge must equal
     "x19_incremental_agg" ->
       """SELECT event_type, count(*) AS n_events,

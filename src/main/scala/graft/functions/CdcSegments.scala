@@ -17,7 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * pays a position exchange and a doc-keyed join for what is
   * inherently per-row work, and the transform-lambda formulation
   * keeps it per-row but evaluates the hash through the interpreted
-  * higher-order-function path (~20× slower — Probe7). This generator
+  * higher-order-function path (~20× slower — Probe7, commit
+  * 7ad950a). This generator
   * is the altitude the operation wants: per-row, zero shuffle, the
   * hash loop in plain JVM code ([[Md5Hex64Math]] direct calls, no
   * expression-interpreter overhead), and the `Generate` operator

@@ -251,7 +251,8 @@ object Pq {
     * Returns the exact distances of the refined top-k, ascending, ties
     * to the lowest neighbor id.
     *
-    * Measured on the sf0.01 fixture (ProbePq decomposition): raw
+    * Measured on the sf0.01 fixture (ProbePq decomposition, commit
+    * 7ad950a): raw
     * m=4/ksub=8 ADC ranks at 0.085 recall vs the exact-L2 twin — the
     * quantization noise of 3-bit codes over 16-dim subspaces swamps
     * neighbor distance gaps — while m=16/ksub=16 + top-20 refine
@@ -343,7 +344,8 @@ object Pq {
     * broadcast volume (= the whole corpus, in pieces) stops paying for
     * itself and the plain id-equi-join fallback takes over — that
     * fallback is the MEASURED envelope, not a guess: at a 64k-vector
-    * fixture (ProbePqRefine, BASELINE.md round 10) it refined in
+    * fixture (ProbePqRefine at commit 7ad950a, BASELINE.md round 10)
+    * it refined in
     * 64.5 s vs 36.2 s broadcast — 1.8×, bit-identical (PqSpec pins
     * equality across all three regimes). The round-11 500k-vector
     * probe measures the sharded middle regime against both.

@@ -60,7 +60,7 @@ object SubstringDedup {
     * slicing AND content hashing — is ONE custom Catalyst generator
     * ([[graft.functions.CdcSegments]]): per-row, zero shuffle, the
     * per-position hash loop in plain JVM code. Two prior formulations
-    * are recorded in Probe7 for the record: a `transform` lambda
+    * are recorded in Probe7 (commit 7ad950a): a `transform` lambda
     * (shuffle-free but interpreted HOF hashing, ~20× slower per
     * position) and explode→filter→regroup→join (codegen hashing but a
     * position exchange plus a doc-keyed join for inherently per-row

@@ -389,8 +389,9 @@ abstract class RecallFloorsSpec(sfDir: String) extends SparkSpec {
     // the labeled twin (p65) defines the target: the true 5 nearest
     // by squared L2 over all pairs. p64 approximates twice — coarse
     // cosine cells prune candidates (the p13 recall regime: capture
-    // measured 0.52 by the ProbePq decomposition) AND ranking inside
-    // the lists runs on PQ codes — but the exact top-rerankK refine
+    // measured 0.52 by the ProbePq decomposition, commit 7ad950a)
+    // AND ranking inside the lists runs on PQ codes — but the exact
+    // top-rerankK refine
     // recovers most of the in-cell ranking, so the measured recall
     // sits near the cell ceiling AT BOTH SCALES: 0.4648 at sf0.01,
     // 0.4681 at sf0.1 (m=16/ksub=16; Pq.autoRerankK holds the

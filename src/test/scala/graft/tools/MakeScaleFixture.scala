@@ -5,8 +5,9 @@ import java.nio.file.{Files, Paths}
 
 import graft.etl.{AppConfig, DatabaseConfig, EtlJob, LoggingConfig, ProcessingConfig}
 
-/** Rebuilds the /tmp/scale_study fixture used by the Probe mains and
-  * BASELINE.md measurements:
+/** Rebuilds the /tmp/scale_study fixture used by the BASELINE.md
+  * measurements (and by the ProbeEtlScale main, last at commit
+  * 7ad950a):
   *
   *   Test/runMain graft.MakeScaleFixture [nStudies] [samples] [genes] [root]
   *
