@@ -878,23 +878,18 @@ object SparkEntry {
           count(lit(1)).as("n_rows"))),
 
     // --- dim maintenance (D1) -----------------------------------------
-    // Routed through the PRODUCTION get-or-create path (Dims.upsertDim:
-    // distinct -> anti-join -> max-key + zipKeys dense numbering)
-    // against an empty existing dim, so the bench pins the real
-    // surrogate-key operator (SURVEY §7.4 decision 1; the former
-    // global row_number window became zipKeys' parallel
-    // range-partitioned sort in round 15).
+    // Routed through the PRODUCTION get-or-create keying (Dims.natural's
+    // guard, then Dims.Known.fresh: distinct new naturals numbered from
+    // the max key + 1 in Spark's string order) against an empty dim, so
+    // the bench pins the real surrogate-key operator (SURVEY §7.4
+    // decision 1). The distinct brands are collected and keyed on the
+    // driver, as the ETL load keys a batch's vocabulary.
     "d1_dim_build" -> ((s, dir) => {
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("brand_key",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("brand",
-          org.apache.spark.sql.types.StringType)))
-      val empty = s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      graft.etl.Dims.upsertDim(empty,
-        t(s, dir, "part").select(col("p_brand").as("brand")),
-        "brand_key", "brand")
+      val brands = t(s, dir, "part").select(col("p_brand")).distinct().collect()
+        .flatMap(r => graft.etl.Dims.natural(r.getString(0)))
+      graft.etl.Dims.localRows(s, "brand_key", "brand",
+        graft.etl.Dims.Known(Map.empty[String, Long], 0L)
+          .fresh(brands.toSeq)(graft.etl.Dims.SparkStringOrder))
     }),
     // D3: conditional-fill dimension merge (reference sample-upsert
     // semantics: an existing non-UNKNOWN value wins; UNKNOWN/absent is
@@ -1349,7 +1344,7 @@ object SparkEntry {
         val langs = docs.select(col("lang")).distinct()
           .collect().map(r => Option(r.getString(0))).toSeq.sortBy(_.getOrElse(""))
         langs.foreach { l =>
-          wh.appendFacts("documents",
+          wh.append("documents",
             docs.where(col("lang") <=> lit(l.orNull)))
         }
         wh.deleteWhere("documents",
@@ -1372,9 +1367,9 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val staged = stagedDir(s"lake_evolve:$dir") { p =>
         val wh = new etl.SnapshotWarehouse(s, p.toString)
-        wh.appendFacts("documents", docs.where(col("doc_id") % 2 === 0)
+        wh.append("documents", docs.where(col("doc_id") % 2 === 0)
           .select("doc_id", "source", "n_chars"))
-        wh.appendFacts("documents", docs.where(col("doc_id") % 2 === 1)
+        wh.append("documents", docs.where(col("doc_id") % 2 === 1)
           .select("doc_id", "source", "n_chars", "lang"))
         ()
       }
@@ -1399,7 +1394,7 @@ object SparkEntry {
         // contiguous (lo, hi] quartiles partition the ids exactly
         val bounds = Seq(-1L, mx / 4, mx / 2, mx * 3 / 4, mx)
         (0 until 4).foreach { q =>
-          wh.appendFacts("documents", docs.where(
+          wh.append("documents", docs.where(
             col("doc_id") > bounds(q) && col("doc_id") <= bounds(q + 1)))
         }
         ()
@@ -1426,11 +1421,11 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val staged = stagedDir(s"lake_nulls:$dir") { p =>
         val wh = new etl.SnapshotWarehouse(s, p.toString)
-        wh.appendFacts("documents", docs.where(col("doc_id") % 3 === 0)
+        wh.append("documents", docs.where(col("doc_id") % 3 === 0)
           .select("doc_id", "source", "n_chars"))
-        wh.appendFacts("documents", docs.where(col("doc_id") % 3 === 1)
+        wh.append("documents", docs.where(col("doc_id") % 3 === 1)
           .select("doc_id", "source", "n_chars", "lang"))
-        wh.appendFacts("documents", docs.where(col("doc_id") % 3 === 2)
+        wh.append("documents", docs.where(col("doc_id") % 3 === 2)
           .select(col("doc_id"), col("source"), col("n_chars"),
             nullif(col("lang"), lit("zh")).as("lang")))
         ()
@@ -1458,9 +1453,9 @@ object SparkEntry {
       val staged = stagedDir(s"lake_tail:$dir") { p =>
         val wh = new etl.SnapshotWarehouse(s, p.toString)
         val mid = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
-        wh.appendFacts("documents", docs.where(col("doc_id") <= mid))
+        wh.append("documents", docs.where(col("doc_id") <= mid))
         etl.LakeConsumers.dedupStep(wh)
-        wh.appendFacts("documents", docs.where(col("doc_id") > mid))
+        wh.append("documents", docs.where(col("doc_id") > mid))
         etl.LakeConsumers.dedupStep(wh)
         ()
       }

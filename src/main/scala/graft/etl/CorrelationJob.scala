@@ -37,24 +37,26 @@ class CorrelationJob(spark: SparkSession, warehouseDir: String,
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
   private val wh = Warehouse(spark, warehouseDir)
 
-  /** F7 study-filtered facts. On the snapshot backend the predicate
-    * ALSO prunes at manifest resolution (whole segments whose stamped
-    * study set cannot match are skipped before any footer listing —
-    * [[SnapshotWarehouse.readStudies]]); every backend still pushes
-    * it as a hive partition filter at the scan.
+  /** F7 study-filtered rows of a `study_key`-partitioned table (the
+    * facts, `dim_sample`). On the snapshot backend the predicate ALSO
+    * prunes at manifest resolution (whole segments whose stamped study
+    * set cannot match are skipped before any footer listing —
+    * [[SnapshotWarehouse.readStudies]]); every backend still pushes it
+    * as a hive partition filter at the scan.
     */
-  private def factsForStudies(studyKeys: Seq[Long]): DataFrame = wh match {
-    case sw: SnapshotWarehouse => sw.readStudies("fact_expression", studyKeys)
-    case _ =>
-      wh.read("fact_expression").where(col("study_key").isin(studyKeys: _*)) // partition pruning
+  private def forStudies(table: String, studyKeys: Seq[Long]): DataFrame = wh match {
+    case sw: SnapshotWarehouse => sw.readStudies(table, studyKeys)
+    case _ => wh.read(table).where(Warehouse.inSet("study_key", studyKeys)) // partition pruning
   }
 
   /** J1: facts keyed to their sample accessions — the requested
-    * studies' (F7-pruned) when `studyKeys` is given, else every study's.
+    * studies' facts and samples (F7-pruned) when `studyKeys` is given,
+    * else every study's.
     */
   private def longFacts(studyKeys: Option[Seq[Long]]): DataFrame = {
-    val facts = studyKeys.fold(wh.read("fact_expression"))(factsForStudies)
-    val dimSample = wh.read("dim_sample").select("sample_key", "gsm_accession")
+    def read(table: String) = studyKeys.fold(wh.read(table))(forStudies(table, _))
+    val facts = read("fact_expression")
+    val dimSample = read("dim_sample").select("sample_key", "gsm_accession")
     facts.join(broadcast(dimSample), Seq("sample_key"))
       .select(col("study_key"), col("gene_key"), col("gsm_accession"), col("expression_value"))
   }
@@ -81,7 +83,7 @@ class CorrelationJob(spark: SparkSession, warehouseDir: String,
     def run(keys: Seq[Long], dense: Boolean): Option[DataFrame] =
       if (keys.isEmpty) None
       else {
-        val subset = long.where(col("study_key").isin(keys: _*))
+        val subset = long.where(Warehouse.inSet("study_key", keys))
         Some(
           if (dense) Spearman.pairCorrelationsDense(subset, Seq("study_key"),
             "gene_key", "gsm_accession", "expression_value", minSamples)

@@ -2,6 +2,8 @@ package graft.etl
 
 import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Aggregator
@@ -20,22 +22,26 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, SparkSes
   *
   * Studies are DATA parallelism (SURVEY.md §2.10 X1) from the dims on:
   * every study's rows flow through ONE set of batched plans — one
-  * upsert per dimension, one whitelist-filtered melt union, one
-  * anti-join dedup, one fact append. Before that, each study's prep
-  * (discovery, one metadata aggregate, the driver-side expression
-  * header read) runs one Spark action per study; the preps run at once on a
-  * driver pool, the reference's per-study thread pool
+  * lookup and one write per dimension, one whitelist-filtered melt
+  * union, one anti-join dedup, one fact append. Before that, each
+  * study's prep (discovery, one metadata aggregate, the driver-side
+  * expression header read) runs one Spark action per study; the preps
+  * run at once on a driver pool, the reference's per-study thread pool
   * (pipeline.py:340-356). The gene whitelist is read on the driver,
   * and the whitelist-filtered melt union is cached for the publish
-  * phase: dim_gene and the fact join both read it, so the expression
-  * matrices are parsed once. The four vocabulary branches (dim_study,
-  * dim_platform, dim_illness, dim_gene) read and write only their own
-  * tables and run at once on the same kind of pool; dim_sample,
-  * StudyState and the fact append then follow in order, since each
-  * reads what the step before it wrote. The append is not cached or
-  * counted beforehand: the per-study fact counts are an `Observation`
-  * on the append itself. Every pool is
-  * bounded by min(tasks, driver cores) and lives for one call
+  * phase: the dim lookup and the fact join both read it, so the
+  * expression matrices are parsed once.
+  *
+  * Every dim key of the batch is assigned on the driver from one
+  * lookup query ([[Dims.keyBatch]]). The five dim writes then run at
+  * once, each writing only the batch's own rows: the vocabulary dims
+  * append their new rows (nothing when there are none), `dim_sample`
+  * replaces the batch's study partitions. StudyState and the fact
+  * append follow in order; the fact join keys through the batch's
+  * local key maps, not through reads of the dims. The append is not
+  * cached or counted beforehand: the per-study fact counts are an
+  * `Observation` on the append itself. Every pool is bounded by
+  * min(tasks, driver cores) and lives for one call
   * ([[EtlJob.inParallel]]). Failure isolation per study (the
   * reference's swallow-log-continue, pipeline.py:351-356) happens where
   * its format errors surface: prep excludes a bad study before
@@ -60,10 +66,13 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
     processUnioned(StudyDiscovery.discoverStudyDirs(config.processing.inputDirectory), resume)
 
   /** A prepared study: its normalized samples, its melted expression
-    * rows, and the A1 sample / age / sex completion counts.
+    * rows, the A1 sample / age / sex completion counts, and its
+    * distinct GSM accessions, platform and illness labels (the naturals
+    * [[Dims.keyBatch]] keys).
     */
   private case class Prep(acc: String, samples: DataFrame, melted: DataFrame,
-      total: Long, completeAge: Long, completeSex: Long)
+      total: Long, completeAge: Long, completeSex: Long,
+      gsms: Seq[String], platforms: Seq[String], illnesses: Seq[String])
 
   /** The load over an EXPLICIT study-directory list — the engine of
     * [[run]] (which discovers from the config root) and of
@@ -104,8 +113,9 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
 
   /** One study's prep, a task of [[processUnioned]]'s pool: discovery,
     * then ONE metadata aggregate that serves the empty check, the X6
-    * mismatch warning, the A1 completion counts and the expected sample
-    * columns, then the expression header read on the driver. A failure
+    * mismatch warning, the A1 completion counts, the expected sample
+    * columns and the study's platform and illness labels, then the
+    * expression header read on the driver. A failure
     * is this study's result, never the batch's.
     */
   private def prepare(dir: java.nio.file.Path, done: Set[String]): Either[StudyResult, Prep] =
@@ -123,7 +133,9 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
           countWhere(col("study_accession") =!= acc && col("study_accession") =!= Schema.UnknownValue),
           countWhere(col("age") =!= Schema.UnknownValue),
           countWhere(col("sex") =!= Schema.UnknownValue),
-          array_sort(collect_set(col("gsm_accession")))).head()
+          array_sort(collect_set(col("gsm_accession"))),
+          collect_set(col("platform_accession")),
+          collect_set(col("illness_label"))).head()
         if (stats.getLong(0) == 0)
           throw new StudyProcessingError(s"No valid samples found in metadata ${files.metadataFile}")
         val mismatches = stats.getLong(1)
@@ -132,7 +144,8 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
         val melted = ExpressionMatrix.load(spark, files.expressionFile.toString, stats.getSeq[String](4))
           .withColumn("study_accession", lit(acc))
         Right(Prep(acc, Metadata.overrideStudyAccession(raw, acc), melted,
-          stats.getLong(0), stats.getLong(2), stats.getLong(3)))
+          stats.getLong(0), stats.getLong(2), stats.getLong(3),
+          stats.getSeq[String](4), stats.getSeq[String](5), stats.getSeq[String](6)))
       }
     } catch {
       case e: Exception if !interrupted(e) =>
@@ -160,26 +173,26 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
     */
   private def publishUnioned(w: Warehouse, preps: Seq[Prep]): Seq[StudyResult] = {
     val allSamples = preps.map(_.samples).reduce(_ unionByName _).cache()
-    // the whitelist-filtered melt union is read twice, by dim_gene and
-    // by the fact join below: cached, the expression matrices are
+    // the whitelist-filtered melt union is read twice, by the dim lookup
+    // and by the fact join below: cached, the expression matrices are
     // parsed once per load
-    val filtered = GeneFilter.filterGenes(preps.map(_.melted).reduce(_ unionByName _),
-      GeneFilter.load(spark, config.processing.geneFilterFile.toString), "gene_id").cache()
+    val whitelist = GeneFilter.ids(spark, config.processing.geneFilterFile.toString)
+    val filtered = {
+      import spark.implicits._
+      GeneFilter.filterGenes(preps.map(_.melted).reduce(_ unionByName _),
+        whitelist.toDF("ensembl_id"), "gene_id").cache()
+    }
     try {
-      // ---- vocabulary dims: one upsert each across every study, the four
-      // branches at once; each reads and writes only its own table -------
-      def vocab(table: String, upsert: DataFrame => DataFrame): () => Unit =
-        () => w.writeDim(table, upsert(w.read(table)))
-      EtlJob.inParallel(spark, Seq(
-        vocab("dim_study", Dims.upsertDim(_,
-          allSamples.select(col("study_accession").as("gse_accession")), "study_key", "gse_accession")),
-        vocab("dim_platform", Dims.upsertDim(_,
-          allSamples.select(col("platform_accession")), "platform_key", "platform_accession")),
-        vocab("dim_illness", Dims.upsertDim(_,
-          allSamples.select(col("illness_label")), "illness_key", "illness_label")),
-        vocab("dim_gene", Dims.upsertGeneDim(_, filtered.select(col("gene_id").as("ensembl_id"))))))
-      val studyDim = w.read("dim_study")
-        .select(col("gse_accession").as("study_accession"), col("study_key"))
+      // ---- dims: every key assigned on the driver from one lookup, then
+      // each dim gets only its new rows, the five writes at once ---------
+      val keys = Dims.keyBatch(w,
+        preps.groupMapReduce(_.acc)(_.gsms)((a, b) => (a ++ b).distinct),
+        preps.flatMap(_.platforms), preps.flatMap(_.illnesses),
+        filtered.select(col("gene_id")), whitelist)
+      def local(keyCol: String, naturalCol: String, keyed: Iterable[(String, Long)]) =
+        Dims.localRows(spark, keyCol, naturalCol, keyed)
+      val studyKeys = local("study_key", "study_accession", keys.study.all)
+      val batchStudies = keys.study.all.values.toSeq
 
       // __ord pins the reference's "first row in file wins" duplicate-GSM
       // resolution (Dims.upsertSampleDim). It comes from Metadata.load:
@@ -189,27 +202,44 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
       // within one (gsm, study) group.)
       val incoming = Dims.resolveFk(
         Dims.resolveFk(
-          allSamples.join(broadcast(studyDim), Seq("study_accession")),
-          w.read("dim_platform"), "platform_accession", "platform_accession", "platform_key"),
-        w.read("dim_illness"), "illness_label", "illness_label", "illness_key")
+          allSamples.join(broadcast(studyKeys), Seq("study_accession")),
+          local("platform_key", "platform_accession", keys.platform.all),
+          "platform_accession", "platform_accession", "platform_key"),
+        local("illness_key", "illness_label", keys.illness.all),
+        "illness_label", "illness_label", "illness_key")
         .select("gsm_accession", "study_key", "platform_key", "illness_key", "age", "sex", "__ord")
-      w.writeDim("dim_sample", Dims.upsertSampleDim(w.read("dim_sample"), incoming))
+      // the existing rows come from the lookup, not a read of the
+      // partitions the replace deletes first
+      val existingSamples = spark.createDataFrame(
+        keys.existingSamples.asJava, Warehouse.schemas("dim_sample"))
+      def appendNew(table: String, keyCol: String, naturalCol: String, k: Dims.Keyed): () => Unit =
+        () => if (k.fresh.nonEmpty) w.append(table, local(keyCol, naturalCol, k.fresh))
+      EtlJob.inParallel(spark, Seq(
+        appendNew("dim_study", "study_key", "gse_accession", keys.study),
+        appendNew("dim_platform", "platform_key", "platform_accession", keys.platform),
+        appendNew("dim_illness", "illness_key", "illness_label", keys.illness),
+        appendNew("dim_gene", "gene_key", "ensembl_id", keys.gene),
+        () => w.replaceStudyPartitions("dim_sample",
+          Dims.upsertSampleDim(existingSamples, incoming, keys.freshSamples),
+          batchStudies)))
       allSamples.unpersist()
       // D4: metadata phase committed for every prepared study
       StudyState.upsert(w, spark, preps.map(_.acc), metadataLoaded = true,
         factsLoaded = false)
 
-      // ---- facts: the cached filtered melt union, one key join, one dedup,
-      // one append -------------------------------------------------------------
-      // sample dim joins on (gsm, study) WITHOUT an explicit broadcast:
-      // across many studies it is not small; AQE picks the strategy.
-      val sampleDim = w.read("dim_sample")
-        .select(col("gsm_accession").as("sample_accession"), col("study_key"), col("sample_key"))
-      val geneDim = w.read("dim_gene").select(col("ensembl_id").as("gene_id"), col("gene_key"))
+      // ---- facts: the cached filtered melt union keyed through the batch's
+      // local key maps, one dedup, one append ----------------------------------
+      // the sample map is the batch's GSMs, not a bounded vocabulary: the
+      // planner broadcasts it by its size
+      val sampleKeys = {
+        import spark.implicits._
+        keys.samples.toSeq.map { case ((gsm, study), k) => (gsm, study, k) }
+          .toDF("sample_accession", "study_key", "sample_key")
+      }
       val keyed = filtered
-        .join(broadcast(studyDim), Seq("study_accession"))
-        .join(sampleDim, Seq("sample_accession", "study_key"))
-        .join(broadcast(geneDim), Seq("gene_id"))
+        .join(broadcast(studyKeys), Seq("study_accession"))
+        .join(sampleKeys, Seq("sample_accession", "study_key"))
+        .join(broadcast(local("gene_key", "gene_id", keys.gene.all)), Seq("gene_id"))
         .select("sample_key", "gene_key", "study_key", "expression_value")
         // intra-batch dedup: the reference's per-row seen-set also drops
         // duplicates WITHIN one file (repeated gene row / repeated GSM
@@ -220,17 +250,15 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
       // J7 against the batch's own studies only: a sample key belongs to
       // one study, so facts outside the batch can never match, and the
       // study_key predicate prunes their partitions at the scan (F7)
-      val keyByAcc = studyDim.where(col("study_accession").isin(preps.map(_.acc): _*)).collect()
-        .map(r => r.getAs[String]("study_accession") -> r.getAs[Long]("study_key")).toMap
       val existing = w.read("fact_expression")
-        .where(col("study_key").isin(keyByAcc.values.toSeq: _*))
+        .where(Warehouse.inSet("study_key", batchStudies))
         .select("sample_key", "gene_key")
       val fresh = keyed.join(existing, Seq("sample_key", "gene_key"), "left_anti")
       // per-study fact counts ride the append: ONE observed aggregate,
       // whose per-row cost does not grow with the batch's study count.
       // Observation.get blocks until the observed write has finished.
       val appended = Observation()
-      w.appendFacts("fact_expression",
+      w.append("fact_expression",
         fresh.observe(appended, EtlJob.countPerKey(col("study_key")).as("facts")))
       val factsByStudy = appended.get("facts").asInstanceOf[scala.collection.Map[Long, Long]]
       // D4 terminal state: the batch analog of the reference's
@@ -245,7 +273,7 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
       }
       preps.map { p =>
         val (samples, age, sex) = sampleStats(p.acc)
-        val facts = keyByAcc.get(p.acc).flatMap(factsByStudy.get).getOrElse(0L)
+        val facts = keys.study.all.get(p.acc).flatMap(factsByStudy.get).getOrElse(0L)
         if (config.logging.logDataQuality) {
           val total = samples.max(1L)
           log.info(f"Study ${p.acc}: $samples samples, " +

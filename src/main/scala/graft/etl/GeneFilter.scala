@@ -29,6 +29,12 @@ object GeneFilter {
     * only, as Spark's `trim` does.
     */
   def load(spark: SparkSession, path: String): DataFrame = {
+    import spark.implicits._
+    ids(spark, path).toDF("ensembl_id")
+  }
+
+  /** The whitelist's ids, as [[load]] reads them. */
+  def ids(spark: SparkSession, path: String): Seq[String] = {
     val settings = new CSVOptions(Map("sep" -> "\t", "header" -> "true"),
       columnPruning = false, defaultTimeZoneId = "UTC").asParserSettings
     // line by line, skipping blank lines, like the CSV reader's
@@ -54,8 +60,7 @@ object GeneFilter {
     if (ids.isEmpty)
       throw new GeneFilterError(
         s"Gene filter file $path did not contain any gene identifiers")
-    import spark.implicits._
-    ids.toDF("ensembl_id")
+    ids
   }
 
   /** Scan-time whitelist filter (F1): broadcast semi join on gene id. */

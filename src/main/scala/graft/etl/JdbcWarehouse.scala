@@ -203,9 +203,9 @@ class JdbcWarehouse(
   }
 
   /** Same recoverable swap as the parquet backend, in DDL: write the
-    * new dim to `table__tmp` (the live table is also the READ source of
-    * the upsert plan — an in-place overwrite would drop it before the
-    * lazy plan runs), then rename live -> __old, tmp -> live, drop
+    * new table to `table__tmp` (the live table is also the READ source
+    * of a read-modify-write plan — an in-place overwrite would drop it
+    * before the lazy plan runs), then rename live -> __old, tmp -> live, drop
     * __old. Every crash window leaves either live or __old present;
     * read() recovers.
     */
@@ -244,7 +244,8 @@ class JdbcWarehouse(
     }
   }
 
-  def appendFacts(table: String, df: DataFrame): Unit =
+  /** A plain INSERT of `df`'s rows (Spark's JDBC append). */
+  def append(table: String, df: DataFrame): Unit =
     writer(df, table).mode(SaveMode.Append).save()
 
   /** S7 delete-then-insert (repositories.py:303-309): driver-side
@@ -259,7 +260,7 @@ class JdbcWarehouse(
       if (tableExists(conn, table))
         exec(conn, s"""DELETE FROM $table WHERE "study_key" IN (${studyKeys.mkString(",")})""")
     }
-    appendFacts(table, df)
+    append(table, df)
   }
 
   /** Streaming micro-batch replace (S7 applied to streaming):
@@ -279,7 +280,7 @@ class JdbcWarehouse(
       if (tableExists(conn, table))
         exec(conn, s"""DELETE FROM $table WHERE "batch_id" = $batchId""")
     }
-    appendFacts(table, df)
+    append(table, df)
   }
 
   /** Exactly-once micro-batch write, task-retry included. Two phases:

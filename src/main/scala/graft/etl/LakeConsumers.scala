@@ -57,10 +57,10 @@ object LakeConsumers {
         val state = if (hasState) txn.read(SigTable) else sigs.limit(0)
         // pairs are computed against the PRE-batch state and written
         // first; the state append follows in the same transaction
-        txn.appendFacts(PairTable,
+        txn.append(PairTable,
           Dedup.minhashDupPairsIncremental(state, docs, n, numHashes,
             rowsPerBand, tau))
-        txn.appendFacts(SigTable, sigs)
+        txn.append(SigTable, sigs)
       }
     }
   }
@@ -88,7 +88,7 @@ object LakeConsumers {
         }
       val codes = Pq.encodePq(batch.df, cbs)
       if (batch.fullReread) txn.writeDim(CodeTable, codes)
-      else txn.appendFacts(CodeTable, codes)
+      else txn.append(CodeTable, codes)
     }
   }
 }

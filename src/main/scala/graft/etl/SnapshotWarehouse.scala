@@ -10,9 +10,9 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 /** Snapshot-isolated parquet warehouse: cross-TABLE atomic publish.
   *
   * [[ParquetWarehouse]] makes each single-table write crash-recoverable,
-  * but a load that touches several tables (the ETL writes 5 dims + the
-  * fact append, `EtlJob.processUnioned`) has windows where a crash — or
-  * a concurrent reader — observes a MIXED generation: new dims with old
+  * but a load that touches several tables (the ETL writes up to 5
+  * dims + the fact append, `EtlJob.processUnioned`) has windows where
+  * a crash — or a concurrent reader — observes a MIXED generation: new dims with old
   * facts, or `replaceStudyPartitions`' gap between the partition delete
   * and the re-append. The reference gives readers all-or-nothing per
   * study through its per-study transaction (reference
@@ -71,9 +71,10 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
   * unbounded union), `compact` does the same on demand, and `vacuum`
   * drops unreferenced segments and pre-current manifests once no
   * reader needs them (retention is the operator's contract, as in
-  * every table format). Fact segments stay hive-partitioned by
-  * `study_key`, so F7 partition pruning and exclusion-list pruning
-  * both happen at the scan.
+  * every table format). Segments of the tables partitioned by
+  * `study_key` ([[Warehouse.layout]]: the facts and `dim_sample`) stay
+  * hive-partitioned by it, so F7 partition pruning and exclusion-list
+  * pruning both happen at the scan.
   */
 class SnapshotWarehouse(spark: SparkSession, val baseDir: String,
     autoCompactSegments: Int = 16) extends Warehouse {
@@ -188,7 +189,7 @@ class SnapshotWarehouse(spark: SparkSession, val baseDir: String,
   def readStudies(table: String, studyKeys: Seq[Long]): DataFrame = {
     require(studyKeys.nonEmpty, "studyKeys must be non-empty")
     readTable(currentManifest(), table, Some(studyKeys.toSet))
-      .where(col("study_key").isin(studyKeys: _*))
+      .where(Warehouse.inSet("study_key", studyKeys))
   }
 
   /** Predicate read with MANIFEST-LEVEL stats pruning: segments whose
@@ -327,8 +328,8 @@ class SnapshotWarehouse(spark: SparkSession, val baseDir: String,
   def writeDim(table: String, df: DataFrame): Unit =
     transact(_.writeDim(table, df))
 
-  def appendFacts(table: String, df: DataFrame): Unit =
-    transact(_.appendFacts(table, df))
+  def append(table: String, df: DataFrame): Unit =
+    transact(_.append(table, df))
 
   def replaceStudyPartitions(table: String, df: DataFrame, studyKeys: Seq[Long]): Unit =
     transact(_.replaceStudyPartitions(table, df, studyKeys))
@@ -742,22 +743,18 @@ final class SnapshotTxn private[etl] (spark: SparkSession, baseDir: String,
     }
   }
 
-  /** Fact tables partition by study_key inside each segment (F7
-    * pruning); star dims are wholesale single-file rewrites, the
-    * ParquetWarehouse discipline; EXTENSION tables (not in the declared
-    * star schema — a documents corpus) keep their natural partitioning,
-    * because a corpus segment is not dim-tiny and a coalesce(1) would
+  /** Segments follow [[Warehouse.layout]]: tables that refer to a
+    * study partition by `study_key` inside each segment (F7 pruning,
+    * segment study sets); other star tables are one file per segment; EXTENSION tables (not in the declared star schema — a
+    * documents corpus) keep their natural partitioning, because a
+    * corpus segment is not dim-tiny and a coalesce(1) would
     * single-thread the write.
     */
   private[etl] def writeSegment(table: String, df: DataFrame): Segment = {
     validateSchema(table, df)
     val rel = s"$table/seg-${UUID.randomUUID().toString.replace("-", "")}"
-    val partitioned = table.startsWith("fact")
-    val w =
-      (if (partitioned) df.write.partitionBy("study_key")
-       else if (Warehouse.schemas.contains(table)) df.coalesce(1).write
-       else df.write)
-        .mode(SaveMode.ErrorIfExists)
+    val partitioned = Warehouse.partitionedByStudy(table)
+    val w = Warehouse.layout(table, df).mode(SaveMode.ErrorIfExists)
     w.parquet(s"$baseDir/$rel")
     // stamp segment stats from write-side metadata only: the row count
     // AND the per-column long (min, max) bounds come from the parquet
@@ -805,7 +802,7 @@ final class SnapshotTxn private[etl] (spark: SparkSession, baseDir: String,
     stage(table)(_ => Seq(seg))
   }
 
-  def appendFacts(table: String, df: DataFrame): Unit = {
+  def append(table: String, df: DataFrame): Unit = {
     val seg = writeSegment(table, df)
     stage(table)(_ :+ seg)
   }

@@ -2,7 +2,7 @@ package graft.etl
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 
 /** Star-schema warehouse interface (SURVEY.md §2.1 S5-S8).
   *
@@ -18,31 +18,49 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * The contract either backend must honor:
   *  - `read` of an absent table is an EMPTY frame with the declared
-  *    schema (S8 create-on-first-write bootstrap);
-  *  - `writeDim` replaces a dim wholesale and is crash-recoverable
-  *    (the swap never loses the previous version);
-  *  - `appendFacts` is append-only; uniqueness comes from the J7
-  *    anti-join upstream, not a constraint;
+  *    schema, in declared column order (S8 create-on-first-write
+  *    bootstrap);
+  *  - `append` adds rows and deletes nothing — facts and dims alike:
+  *    the load appends a vocabulary dim's new rows, and uniqueness
+  *    comes from the upstream keying (J7 anti-join, [[Dims]]), not a
+  *    constraint;
   *  - `replaceStudyPartitions` is delete-then-insert per study (S7,
   *    reference repositories.py:303-309) — a study whose NEW result is
-  *    empty still loses its stale rows.
+  *    empty still loses its stale rows. `df` must not read the rows it
+  *    replaces: the parquet and JDBC backends delete them first;
+  *  - `writeDim` replaces a table wholesale and is crash-recoverable
+  *    (the swap never loses the previous version). Only whole-table
+  *    rewrites use it: [[StudyState]] and the lake consumers' tables.
+  *
+  * One layout rule ([[Warehouse.layout]]) serves every file backend: a
+  * table whose declared schema refers to a study by `study_key` (the
+  * facts and `dim_sample`) is partitioned by it, so per-study reads
+  * prune (F7) and per-study replace touches only its own directories.
   */
 trait Warehouse {
   def read(table: String): DataFrame
   def writeDim(table: String, df: DataFrame): Unit
-  def appendFacts(table: String, df: DataFrame): Unit
+  def append(table: String, df: DataFrame): Unit
   def replaceStudyPartitions(table: String, df: DataFrame, studyKeys: Seq[Long]): Unit
 }
 
 /** Parquet warehouse — the scale backend.
   *
-  * Facts are partitioned by `study_key`, which gives:
+  * Tables follow [[Warehouse.layout]]: the facts and `dim_sample` are
+  * partitioned by `study_key`, which gives:
   *  - partition pruning for per-study predicates (F7);
   *  - per-study replace (S7 — the reference's delete-then-insert,
   *    repositories.py:303-309, as an explicit partition delete + append
   *    so a study whose NEW result is empty still loses its stale rows);
   *  - per-study write atomicity through the task-commit protocol (the
   *    contract of X2/X3, mechanism replaced per SURVEY.md §7.5).
+  *
+  * A load only appends files and writes its own studies' partitions,
+  * so a reader polling the warehouse never loses a file it listed to a
+  * load of new studies. The cost: each load that adds vocabulary adds
+  * one small file to that vocabulary dim. The snapshot backend folds
+  * such files back (`autoCompactSegments`); here they accumulate,
+  * one per vocabulary-adding batch.
   *
   * All filesystem operations go through the Hadoop FileSystem of the
   * warehouse URI — java.io.File would silently report every table
@@ -69,13 +87,16 @@ class ParquetWarehouse(spark: SparkSession, baseDir: String) extends Warehouse {
     // the old one was set aside -> the set-aside copy is the truth
     if (!fs.exists(dir) && fs.exists(old) && !fs.rename(old, dir))
       throw new java.io.IOException(s"Failed to recover dim $table from $old")
-    if (exists(table))
-      spark.read.schema(schemas(table)).parquet(path(table))
-    else spark.createDataFrame(
+    if (exists(table)) {
+      // the partition column would come back last: pin declared order
+      val schema = schemas(table)
+      spark.read.schema(schema).parquet(path(table))
+        .select(schema.fieldNames.toIndexedSeq.map(org.apache.spark.sql.functions.col): _*)
+    } else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemas(table))
   }
 
-  /** Dims are tiny: rewritten whole per batch via a tmp write and a
+  /** Whole-table rewrite of a small table via a tmp write and a
     * rename sequence (old -> __old, tmp -> live, drop __old) whose
     * crash windows are all recoverable: before the first rename the old
     * dim is live; between the renames read() restores __old; after, the
@@ -86,7 +107,7 @@ class ParquetWarehouse(spark: SparkSession, baseDir: String) extends Warehouse {
     val tmp = new HPath(path(table) + "__tmp")
     val old = new HPath(path(table) + "__old")
     val dir = new HPath(path(table))
-    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    layout(table, df).mode(SaveMode.Overwrite).parquet(tmp.toString)
     if (fs.exists(old) && !fs.delete(old, true))
       throw new java.io.IOException(s"Failed to clear stale $old")
     if (fs.exists(dir) && !fs.rename(dir, old))
@@ -97,8 +118,8 @@ class ParquetWarehouse(spark: SparkSession, baseDir: String) extends Warehouse {
     ()
   }
 
-  def appendFacts(table: String, df: DataFrame): Unit =
-    df.write.mode(SaveMode.Append).partitionBy("study_key").parquet(path(table))
+  def append(table: String, df: DataFrame): Unit =
+    layout(table, df).mode(SaveMode.Append).parquet(path(table))
 
   /** Bucketed twin for co-located joins: two tables bucketed by the
     * same key into the same bucket count join WITHOUT any exchange —
@@ -130,8 +151,7 @@ class ParquetWarehouse(spark: SparkSession, baseDir: String) extends Warehouse {
     studyKeys.foreach { k =>
       fs.delete(new HPath(s"${path(table)}/study_key=$k"), true)
     }
-    if (studyKeys.nonEmpty)
-      df.write.mode(SaveMode.Append).partitionBy("study_key").parquet(path(table))
+    if (studyKeys.nonEmpty) append(table, df)
   }
 }
 
@@ -156,6 +176,37 @@ object Warehouse {
     else if (target.startsWith("snapshot:"))
       new SnapshotWarehouse(spark, target.stripPrefix("snapshot:"))
     else new ParquetWarehouse(spark, target)
+
+  /** The layout rule of the file backends ([[ParquetWarehouse]],
+    * [[SnapshotTxn]]): a table whose declared schema refers to a study
+    * by `study_key` (the facts, `dim_sample`) is partitioned by it. Declared tables
+    * other than the facts are small and written by one task: one file
+    * per write, or per study for `dim_sample`. An undeclared table (a
+    * documents corpus) keeps the frame's own partitioning.
+    */
+  def layout(table: String, df: DataFrame): DataFrameWriter[Row] =
+    if (!schemas.contains(table)) df.write
+    else {
+      val w = (if (table.startsWith("fact")) df else df.coalesce(1)).write
+      if (partitionedByStudy(table)) w.partitionBy("study_key") else w
+    }
+
+  /** `column IN values` as one InSet, whatever the number of values
+    * (`isin` inlines up to 10 literals into the generated code). The
+    * code references the set, so it is the same for every batch's keys
+    * and a long-lived driver compiles it once; partition pruning reads
+    * it like an IN list. String values must be `UTF8String`s.
+    */
+  def inSet(column: String, values: Iterable[Any]): org.apache.spark.sql.Column =
+    graft.functions.exprToColumn(org.apache.spark.sql.catalyst.expressions.InSet(
+      graft.functions.columnToExpr(org.apache.spark.sql.functions.col(column)), values.toSet))
+
+  /** Whether [[layout]] partitions `table` by `study_key`: the table
+    * refers to a study, and `study_key` is not its own key (the first
+    * column of every declared dim, so `dim_study` is not partitioned).
+    */
+  def partitionedByStudy(table: String): Boolean =
+    schemas.get(table).exists(s => s.fieldNames.tail.contains("study_key"))
 
   private def f(n: String, t: DataType, nullable: Boolean = false) =
     StructField(n, t, nullable)

@@ -16,9 +16,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * file log gives exactly-once manifest processing across restarts.
   *
   * Each micro-batch routes its studies through the SAME batched plans
-  * as `EtlJob.run` ([[graft.etl.EtlJob.processUnioned]]): one upsert
-  * per dimension, one whitelist-filtered melt union, one anti-join fact
-  * dedup, one append, StudyState committed per phase. A study that
+  * as `EtlJob.run` ([[graft.etl.EtlJob.processUnioned]]): one dim
+  * lookup that keys the batch on the driver, one write per dimension
+  * holding only the batch's new rows (appends, and a replace of the
+  * batch's `dim_sample` partitions), one whitelist-filtered melt union,
+  * one anti-join fact dedup, one append, StudyState committed per
+  * phase. A study that
   * fails — in preparation or in the publish phase — is reported in the
   * batch's results; with `failOpen = false` that fails the micro-batch,
   * so its manifests are retried (see [[ingestAvailable]]).
@@ -29,10 +32,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * anti-join + resume-skip of terminal studies).
   *
   * 100 TB: the manifest stream is driver-scale (paths, not data); all
-  * heavy lifting stays in the distributed batch plans, which scale
-  * with the studies IN the batch, not the warehouse size (the J7
-  * anti-join reads only the batch's `study_key` partitions of the
-  * fact table, F7). Run with [[ingestAvailable]] on a schedule or a
+  * heavy lifting stays in the distributed batch plans, whose writes
+  * scale with the studies IN the batch, not the warehouse size: dims
+  * grow by their new rows, and the J7 anti-join reads only the batch's
+  * `study_key` partitions of the fact table (F7). The dim lookup still
+  * scans each dim for its max key. Run with [[ingestAvailable]] on a schedule or a
   * long-lived `Trigger.ProcessingTime` query — same code path.
   */
 class StreamingEtl(spark: SparkSession, config: AppConfig, warehouseDir: String) {

@@ -14,7 +14,7 @@ class LakeEvolutionSpec extends SparkSpec {
   import spark.implicits._
 
   private def withTempDir[A](f: java.nio.file.Path => A): A = {
-    val p = java.nio.file.Files.createTempDirectory("graft_lake_spec")
+    val p = tmpDir("graft_lake_spec")
     try f(p)
     finally {
       val walk = java.nio.file.Files.walk(p)

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,6 +11,21 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  /** A fresh directory under the system temp dir, deleted with its
+    * contents after the spec's last test.
+    */
+  protected def tmpDir(prefix: String = "graft-spec"): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tmpDirs.add(d)
+    d
+  }
+
+  override protected def afterAll(): Unit =
+    try tmpDirs.forEach(d => SparkSpec.deleteTree(d))
+    finally super.afterAll()
 }
 
 object SparkSpec {
@@ -30,4 +47,13 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Deletes `root` and everything under it; a missing path is a no-op. */
+  def deleteTree(root: Path): Unit =
+    if (Files.exists(root)) {
+      val paths = Files.walk(root)
+      try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => { Files.deleteIfExists(p); () })
+      finally paths.close()
+    }
 }

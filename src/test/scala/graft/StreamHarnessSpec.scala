@@ -24,7 +24,7 @@ class StreamHarnessSpec extends SparkSpec {
   private def tempViews(): Set[String] =
     spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
 
-  private val root = java.nio.file.Files.createTempDirectory("graft-harness")
+  private val root = tmpDir("graft-harness")
   private lazy val input: String = {
     val dir = root.resolve("in").toString
     spark.range(0, 40).select(col("id"), (col("id") % 4).as("k"))

@@ -77,7 +77,7 @@ class StreamParitySpec extends SparkSpec {
   test("event streams read every part file of a directory-form events table") {
     assume(available, s"$sfDir not present")
     // a Spark-written fixture: events.parquet is a DIRECTORY of part files
-    val dir = java.nio.file.Files.createTempDirectory("graft-dirform")
+    val dir = tmpDir("graft-dirform")
     try {
       spark.read.parquet(s"$sfDir/events.parquet").repartition(2)
         .write.parquet(dir.resolve("events.parquet").toString)

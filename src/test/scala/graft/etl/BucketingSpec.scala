@@ -12,7 +12,7 @@ class BucketingSpec extends SparkSpec {
   import spark.implicits._
 
   test("bucketed fact-dim join plans without any shuffle exchange") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bucketing").toString
+    val dir = tmpDir("graft_bucketing").toString
     val wh = new ParquetWarehouse(spark, dir)
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ, not BHJ
@@ -49,7 +49,7 @@ class BucketingSpec extends SparkSpec {
     // the key diff with no exchange at all — the reconciliation
     // report over 100 TB snapshots costs a co-located merge, not a
     // re-shuffle of both tables
-    val dir = java.nio.file.Files.createTempDirectory("graft_bucketing3").toString
+    val dir = tmpDir("graft_bucketing3").toString
     val wh = new ParquetWarehouse(spark, dir)
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -78,7 +78,7 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("bucketized facts: rank window plans without exchange, job output unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bucketing2").toString
+    val dir = tmpDir("graft_bucketing2").toString
     val wh = new ParquetWarehouse(spark, dir)
     try {
       // tiny star warehouse: 1 study, 4 genes x 6 samples, complete
@@ -92,7 +92,7 @@ class BucketingSpec extends SparkSpec {
             "illness_key", "age", "sex"))
       val facts = for { g <- 1L to 4L; s <- 1L to 6L } yield
         (s, g, 1L, (g * 7 + s * 3 % 5).toDouble)
-      wh.appendFacts("fact_expression",
+      wh.append("fact_expression",
         facts.toDF("sample_key", "gene_key", "study_key", "expression_value"))
 
       def jobRows() = {

@@ -10,10 +10,6 @@ import java.nio.file.{Files, Path}
 class EtlSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(): Path = {
-    val d = Files.createTempDirectory("graft-etl")
-    d.toFile.deleteOnExit(); d
-  }
 
   private def write(dir: Path, name: String, content: String): Path = {
     val p = dir.resolve(name)
@@ -57,7 +53,7 @@ class EtlSpec extends SparkSpec {
     LoggingConfig(logLevel = "WARN"))
 
   test("S1: discovery prefers expression_<GSE>.tsv, falls back to <GSE>.tsv") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     val d = makeStudy(root, "GSE1", exprName = Some("GSE1.tsv"))
     val files = StudyDiscovery.discoverStudyFiles(d)
     assert(files.studyAccession == "GSE1")
@@ -73,7 +69,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("S3: metadata normalization — variant header, UNKNOWN substitution, blank-GSM skip") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     val p = write(root, "metadata_GSE9006.tsv", metadataTsv)
     val df = Metadata.load(spark, p.toString, FieldMappingConfig()).orderBy("gsm_accession")
     val rows = df.collect()
@@ -91,7 +87,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("S3: no matching headers -> all UNKNOWN (tests/test_metadata_processing.py:28-41)") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     val p = write(root, "metadata_X.tsv",
       "refinebio_accession_code\texperiment_accession\nGSM1\tGSEX\n")
     val r = Metadata.load(spark, p.toString, FieldMappingConfig()).head
@@ -106,7 +102,7 @@ class EtlSpec extends SparkSpec {
 
   test("S3: header cells are VERBATIM (spark.read.csv + reference parity) — " +
     "padded required header fails, padded optional resolves via tier-3") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     // a whitespace-padded REQUIRED header is NOT trimmed before the
     // required-column check: csv.DictReader keeps fieldnames untrimmed
     // and the reference's check is a verbatim set difference
@@ -127,7 +123,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("S4/R1/F2-F4: melt drops missing sample columns, blank genes, bad numerics") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     val p = write(root, "expression_G.tsv", expressionTsv)
     // GSM5 expected but absent -> warn+drop; GSM1-3 kept
     val out = ExpressionMatrix.load(spark, p.toString, Seq("GSM1", "GSM2", "GSM3", "GSM5"))
@@ -148,7 +144,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("S2: gene filter loads, trims, dedups, errors on empty") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     val p = write(root, "filter.tsv", filterTsv)
     val genes = GeneFilter.load(spark, p.toString)
     assert(genes.as[String].collect().sorted.toSeq == Seq("ENSG1", "ENSG2", "ENSG3"))
@@ -169,36 +165,45 @@ class EtlSpec extends SparkSpec {
       Seq("ENSG1", "ENSG2", "ENSG3"))
   }
 
+  /** The keys `existing` (a dim_sample frame) lacks for `pairs`. */
+  private def freshSamples(existing: org.apache.spark.sql.DataFrame,
+      pairs: Seq[(String, Long)]): Seq[((String, Long), Long)] = {
+    val rows = existing.collect()
+    Dims.Known(rows.map(r => (r.getAs[String]("gsm_accession"), r.getAs[Long]("study_key")) ->
+      r.getAs[Long]("sample_key")).toMap,
+      (0L +: rows.map(_.getAs[Long]("sample_key")).toSeq).max).fresh(pairs)(Dims.SampleOrder)
+  }
+
   test("D1/D2: dim upsert is idempotent with deterministic keys") {
-    val wh = Warehouse(spark, tmpDir().toString)
-    val d0 = wh.read("dim_platform")
-    val d1 = Dims.upsertDim(d0, Seq("GPL97", "GPL96", "GPL96", "UNKNOWN", " ")
-      .toDF("platform_accession"), "platform_key", "platform_accession")
-    val got = d1.orderBy("platform_key").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(got == Seq((1L, "GPL96"), (2L, "GPL97"))) // sorted naturals, UNKNOWN/blank excluded
+    val wh = Warehouse(spark, tmpDir("graft-etl").toString)
+    assert(wh.read("dim_platform").count() == 0)
+    val d1 = Dims.Known(Map.empty[String, Long], 0L).fresh(
+      Seq("GPL97", "GPL96", "GPL96", "UNKNOWN", " ").flatMap(Dims.natural(_)))(Dims.SparkStringOrder)
+      .map(_.swap)
+    assert(d1 == Seq((1L, "GPL96"), (2L, "GPL97"))) // sorted naturals, UNKNOWN/blank excluded
     // re-upsert: no new keys
-    val d2 = Dims.upsertDim(d1, Seq("GPL96", "GPL98").toDF("platform_accession"),
-      "platform_key", "platform_accession")
-    val got2 = d2.orderBy("platform_key").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(got2 == Seq((1L, "GPL96"), (2L, "GPL97"), (3L, "GPL98")))
+    val d2 = d1 ++ Dims.Known(d1.map(_.swap).toMap, 2L).fresh(
+      Seq("GPL96", "GPL98").flatMap(Dims.natural(_)))(Dims.SparkStringOrder).map(_.swap)
+    assert(d2 == Seq((1L, "GPL96"), (2L, "GPL97"), (3L, "GPL98")))
   }
 
   test("D3: sample upsert conditional update (tests/test_repositories.py:28-64)") {
-    val wh = Warehouse(spark, tmpDir().toString)
+    val wh = Warehouse(spark, tmpDir("graft-etl").toString)
     def inc(rows: Seq[(String, Long, Option[Long], Option[Long], String, String, Long)]) =
       rows.toDF("gsm_accession", "study_key", "platform_key", "illness_key", "age", "sex", "__ord")
+    def upsert(existing: org.apache.spark.sql.DataFrame,
+        rows: Seq[(String, Long, Option[Long], Option[Long], String, String, Long)]) =
+      Dims.upsertSampleDim(existing, inc(rows), freshSamples(existing, rows.map(r => (r._1, r._2))))
     // first batch: UNKNOWN age, platform set
-    val s1 = Dims.upsertSampleDim(wh.read("dim_sample"),
-      inc(Seq(("GSM1", 1L, Some(1L), None, "UNKNOWN", "female", 0L))))
+    val s1 = upsert(wh.read("dim_sample"),
+      Seq(("GSM1", 1L, Some(1L), None, "UNKNOWN", "female", 0L)))
     val r1 = s1.head
     assert(r1.getAs[Long]("sample_key") == 1L)
     assert(r1.getAs[String]("age") == "UNKNOWN")
     // second batch: fills UNKNOWN age, does NOT overwrite known sex,
     // updates platform to new non-null value
-    val s2 = Dims.upsertSampleDim(s1,
-      inc(Seq(("GSM1", 1L, Some(2L), Some(5L), "33", "male", 0L))))
+    val s2 = upsert(s1,
+      Seq(("GSM1", 1L, Some(2L), Some(5L), "33", "male", 0L)))
     val r2 = s2.head
     assert(r2.getAs[Long]("sample_key") == 1L) // key stable
     assert(r2.getAs[String]("age") == "33")    // UNKNOWN filled
@@ -206,17 +211,17 @@ class EtlSpec extends SparkSpec {
     assert(r2.getAs[Long]("platform_key") == 2L) // platform updated
     assert(r2.getAs[Long]("illness_key") == 5L)
     // new sample in second study gets next key
-    val s3 = Dims.upsertSampleDim(s2,
-      inc(Seq(("GSM1", 2L, None, None, "40", "male", 0L))))
+    val s3 = upsert(s2,
+      Seq(("GSM1", 2L, None, None, "40", "male", 0L)))
     assert(s3.count() == 2)
     assert(s3.where($"study_key" === 2L).head.getAs[Long]("sample_key") == 2L)
   }
 
   test("E2E slice (SURVEY §7.2): ETL + correlation job, idempotent re-run, stale replace") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     makeStudy(root)
     val filter = write(root, "filter.tsv", filterTsv)
-    val whDir = tmpDir().toString
+    val whDir = tmpDir("graft-etl").toString
     val cfg = config(root, filter)
 
     val job = new EtlJob(spark, cfg, whDir)
@@ -274,7 +279,7 @@ class EtlSpec extends SparkSpec {
 
   test("golden: requirements-doc metadata example normalizes exactly " +
       "(docs/genomic-etl-requirements.md:453-459)") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     val p = write(root, "metadata_GSE9006.tsv",
       """refinebio_accession_code	experiment_accession	refinebio_age	refinebio_sex	refinebio_platform	characteristics_ch1_Age	characteristics_ch1_Sex	characteristics_ch1_Illness
         |GSM228562	GSE9006	16	female	GPL96	16 yrs	F	Healthy
@@ -298,7 +303,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("correlation: mixed complete/incomplete studies in one run exercises both Spearman paths") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     makeStudy(root) // GSE9006: bad cell -> incomplete matrix -> exact path
     val d = Files.createDirectories(root.resolve("GSE0002"))
     write(d, "metadata_GSE0002.tsv",
@@ -309,7 +314,7 @@ class EtlSpec extends SparkSpec {
         "ENSG2\t2.0\t4.0\t6.0\t8.0\n" +
         "ENSG3\t9.0\t5.0\t1.0\t0.5\n")
     val filter = write(root, "filter.tsv", filterTsv)
-    val whDir = tmpDir().toString
+    val whDir = tmpDir("graft-etl").toString
     val results = new EtlJob(spark, config(root, filter), whDir).run()
     assert(results.forall(_.error.isEmpty))
 
@@ -348,7 +353,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("n=2 edge (tests/test_correlation.py:69-85): pair kept, p stored 1.0, q null") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     val d = Files.createDirectories(root.resolve("GSE0003"))
     write(d, "metadata_GSE0003.tsv",
       """refinebio_accession_code	experiment_accession
@@ -358,7 +363,7 @@ class EtlSpec extends SparkSpec {
     write(d, "expression_GSE0003.tsv",
       "gene\tGSM1\tGSM2\nENSG1\t1.0\t2.0\nENSG2\t5.0\t3.0\n")
     val filter = write(root, "filter.tsv", filterTsv)
-    val whDir = tmpDir().toString
+    val whDir = tmpDir("graft-etl").toString
     new EtlJob(spark, config(root, filter), whDir).run()
     new CorrelationJob(spark, whDir).run()
 
@@ -374,7 +379,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("X1: the batched load isolates a bad study; a re-run adds no facts") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     makeStudy(root) // GSE9006 (incomplete matrix + messy metadata)
     val d = Files.createDirectories(root.resolve("GSE0002"))
     write(d, "metadata_GSE0002.tsv",
@@ -387,7 +392,7 @@ class EtlSpec extends SparkSpec {
     write(bad, "expression_GSEBAD.tsv", "gene\tGSMX\nENSG1\t1\n")
     val filter = write(root, "filter.tsv", filterTsv)
 
-    val whDir = tmpDir().toString
+    val whDir = tmpDir("graft-etl").toString
     val results = new EtlJob(spark, config(root, filter), whDir).run()
     // GSE0002: 2 genes x 4 samples; GSE9006: 3 x 4 minus the bad cell
     assert(results.map(r => (r.accession, r.samples, r.facts, r.error.isDefined)) == Seq(
@@ -414,11 +419,11 @@ class EtlSpec extends SparkSpec {
   }
 
   test("F7: the load's J7 anti-join scans only the batch's study_key partitions") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     val first = makeStudy(root, "GSE0001")
     val second = makeStudy(root, "GSE0002")
     val filter = write(root, "filter.tsv", filterTsv)
-    val whDir = tmpDir().toString
+    val whDir = tmpDir("graft-etl").toString
     val job = new EtlJob(spark, config(root, filter), whDir)
     assert(job.processUnioned(Seq(first)).forall(_.error.isEmpty))
 
@@ -487,10 +492,10 @@ class EtlSpec extends SparkSpec {
   }
 
   test("F7: correlate's target-study probe reads only the requested studies' fact partitions") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     Seq("GSE0001", "GSE0002", "GSE0003").foreach(makeStudy(root, _))
     val filter = write(root, "filter.tsv", filterTsv)
-    val whDir = tmpDir().toString
+    val whDir = tmpDir("graft-etl").toString
     assert(new EtlJob(spark, config(root, filter), whDir).run().forall(_.error.isEmpty))
 
     // targets resolve through the per-study shape aggregate over the
@@ -503,33 +508,39 @@ class EtlSpec extends SparkSpec {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-    def factScans(qe: org.apache.spark.sql.execution.QueryExecution) =
+    def scansOf(table: String)(qe: org.apache.spark.sql.execution.QueryExecution) =
       helper.collect(qe.executedPlan) {
         case s: FileSourceScanExec
-            if s.relation.location.rootPaths.exists(_.toString.contains("fact_expression")) => s
+            if s.relation.location.rootPaths.exists(_.toString.contains(table)) => s
       }
+    val factScans = scansOf("fact_expression") _
     val scans = executions.flatMap(factScans)
     assert(scans.nonEmpty, executions.map(_.executedPlan).mkString("\n"))
     // the target-resolving query: an aggregate over a fact scan
     assert(executions.exists(qe => factScans(qe).nonEmpty &&
       helper.collect(qe.executedPlan) { case a: BaseAggregateExec => a }.nonEmpty),
       "no fact-scanning aggregate among correlate's executions")
-    scans.foreach { s =>
+    // the samples the facts join to are read the same way (dim_sample
+    // is partitioned by study_key too)
+    val sampleScans = executions.flatMap(scansOf("dim_sample"))
+    assert(sampleScans.nonEmpty, executions.map(_.executedPlan).mkString("\n"))
+    (scans ++ sampleScans).foreach { s =>
       // isnotnull(study_key) names the column too, so require the IN list
       assert(s.partitionFilters.exists(_.exists {
         case In(a: Attribute, _) => a.name == "study_key"
         case InSet(a: Attribute, _) => a.name == "study_key"
         case _ => false
-      }), s"fact scan is not pruned to the requested studies: ${s.partitionFilters}")
+      }), s"${s.relation.location.rootPaths.mkString} scan is not pruned to the " +
+        s"requested studies: ${s.partitionFilters}")
       assert(s.metrics("numPartitions").value == 2L)
     }
   }
 
   test("correlate: a 2-study run takes at most 5 SQL executions; its pair count is the rows it wrote") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     Seq("GSE0001", "GSE0002", "GSE0003").foreach(makeStudy(root, _))
     val filter = write(root, "filter.tsv", filterTsv)
-    val whDir = tmpDir().toString
+    val whDir = tmpDir("graft-etl").toString
     assert(new EtlJob(spark, config(root, filter), whDir).run().forall(_.error.isEmpty))
     val job = new CorrelationJob(spark, whDir)
     val wh = Warehouse(spark, whDir)
@@ -551,10 +562,10 @@ class EtlSpec extends SparkSpec {
   }
 
   test("load: per-study fact counts equal the rows each study added; a full re-run reports 0") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     makeStudy(root, "GSE0001")
     val filter = write(root, "filter.tsv", filterTsv)
-    val whDir = tmpDir().toString
+    val whDir = tmpDir("graft-etl").toString
     val wh = Warehouse(spark, whDir)
     def perStudy(): Map[String, Long] = wh.read("fact_expression")
       .join(wh.read("dim_study"), "study_key").groupBy("gse_accession").count()
@@ -586,23 +597,98 @@ class EtlSpec extends SparkSpec {
     assert(perStudy() == after)
   }
 
+  test("load: 2 new studies into a loaded warehouse take at most 12 SQL executions") {
+    val root = tmpDir("graft-etl")
+    // the loaded study lacks ENSG3, the new ones bring new platforms and
+    // illnesses: every one of the five dims gets rows
+    val first = makeStudy(root, "GSE0001")
+    write(first, "expression_GSE0001.tsv", expressionTsv.replace("ENSG3\t9.0\t5.0\t1.0\tbad\n", ""))
+    val filter = write(root, "filter.tsv", filterTsv)
+    val whDir = tmpDir("graft-etl").toString
+    val job = new EtlJob(spark, config(root, filter), whDir)
+    assert(job.run().map(r => (r.accession, r.facts)) == Seq(("GSE0001", 8L)))
+    val fresh = Seq("GSE0002", "GSE0003").map { gse =>
+      val d = makeStudy(root, gse)
+      write(d, s"metadata_$gse.tsv", metadataTsv.replace("GPL9", s"GPL$gse-").replace("Healthy", gse))
+      d
+    }
+    val (results, executions) = withExecutions(job.processUnioned(fresh))
+    assert(results.map(r => (r.accession, r.facts, r.error)) ==
+      Seq(("GSE0002", 11L, None), ("GSE0003", 11L, None)))
+    val wh = Warehouse(spark, whDir)
+    assert(Seq("dim_study", "dim_platform", "dim_illness", "dim_gene", "dim_sample")
+      .map(wh.read(_).count()) == Seq(3L, 6L, 4L, 3L, 12L))
+    // 2 preps, 1 dim lookup, 5 dim writes, 2 state writes, 1 fact append
+    assert(executions.size <= 12, s"${executions.size} SQL executions:\n" +
+      executions.map(_.executedPlan.treeString.linesIterator.take(3).mkString("\n")).mkString("\n--\n"))
+  }
+
+  test("load: a drain writes the same dim bytes whether 2 or 20 studies were loaded before") {
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    /** Bytes the drain of one new study writes to the five dims, after
+      * a load of `n` studies.
+      */
+    def dimBytes(n: Int): Long = {
+      val root = tmpDir("graft-etl")
+      val filter = write(root, "filter.tsv", filterTsv)
+      val whDir = tmpDir("graft-etl").toString
+      val job = new EtlJob(spark, config(root, filter), whDir)
+      assert(job.processUnioned((1 to n).map(i => makeStudy(root, f"GSE1$i%03d")))
+        .forall(_.error.isEmpty))
+      val last = makeStudy(root, "GSE9999")
+      write(last, "metadata_GSE9999.tsv", metadataTsv.replace("GPL96", "GPL999"))
+      val (results, executions) = withExecutions(job.processUnioned(Seq(last)))
+      assert(results.map(r => (r.accession, r.facts)) == Seq(("GSE9999", 11L)))
+      val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      val writes = executions.flatMap(qe => helper.collect(qe.executedPlan) {
+        case d @ DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _)
+            if c.outputPath.getName.startsWith("dim_") =>
+          c.outputPath.getName -> d.metrics("numOutputBytes").value
+      })
+      // dim_study, dim_platform and dim_sample get rows; dim_illness and
+      // dim_gene have none to add
+      assert(writes.map(_._1).sorted == Seq("dim_platform", "dim_sample", "dim_study"),
+        writes.toString)
+      writes.map(_._2).sum
+    }
+    val (few, many) = (dimBytes(2), dimBytes(20))
+    assert(few > 0 && few == many, s"dim bytes after 2 studies: $few, after 20: $many")
+  }
+
   test("intra-batch duplicate gene rows collapse to one fact (reference seen-set parity)") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     val d = Files.createDirectories(root.resolve("GSE0004"))
     write(d, "metadata_GSE0004.tsv",
       "refinebio_accession_code\texperiment_accession\nGSM1\tGSE0004\nGSM2\tGSE0004\n")
     write(d, "expression_GSE0004.tsv",
       "gene\tGSM1\tGSM2\nENSG1\t1.0\t2.0\nENSG1\t9.0\t9.0\nENSG2\t3.0\t4.0\n")
     val filter = write(root, "filter.tsv", filterTsv)
-    val whDir = tmpDir().toString
+    val whDir = tmpDir("graft-etl").toString
     val res = new EtlJob(spark, config(root, filter), whDir).run()
     assert(res.head.error.isEmpty)
     assert(res.head.facts == 4) // 2 genes x 2 samples, not 6
     assert(Warehouse(spark, whDir).read("fact_expression").count() == 4)
   }
 
+  test("warehouse: the tables that refer to a study are partitioned by study_key, dim_study is not") {
+    assert(Warehouse.schemas.keys.filter(Warehouse.partitionedByStudy).toSet ==
+      Set("fact_expression", "fact_gene_pair_corr", "dim_sample"))
+    val whDir = tmpDir("graft-etl").toString
+    val wh = Warehouse(spark, whDir)
+    wh.append("dim_study", Seq((1L, "GSE1"), (2L, "GSE2")).toDF("study_key", "gse_accession"))
+    wh.append("dim_sample", Seq((1L, "GSM1", 2L, None: Option[Long], None: Option[Long], "1", "f"))
+      .toDF(Warehouse.schemas("dim_sample").fieldNames.toIndexedSeq: _*))
+    val dirs = Files.list(java.nio.file.Paths.get(whDir, "dim_sample")).toArray.map(_.toString)
+    assert(dirs.exists(_.endsWith("study_key=2")), dirs.mkString(", "))
+    assert(!Files.list(java.nio.file.Paths.get(whDir, "dim_study")).toArray
+      .exists(_.toString.contains("study_key=")))
+    // reads keep the declared column order on every table
+    assert(wh.read("dim_sample").columns.toSeq == Warehouse.schemas("dim_sample").fieldNames.toSeq)
+  }
+
   test("warehouse: empty partitioned append leaves the table readable; empty replace deletes stale partitions") {
-    val whDir = tmpDir().toString
+    val whDir = tmpDir("graft-etl").toString
     val wh = Warehouse(spark, whDir)
     val schema = Warehouse.schemas("fact_gene_pair_corr")
     def empty = spark.createDataFrame(
@@ -610,7 +696,7 @@ class EtlSpec extends SparkSpec {
 
     // a zero-row partitioned append writes no parquet files — the read
     // must still work (declared schema, not inference)
-    wh.appendFacts("fact_gene_pair_corr", empty)
+    wh.append("fact_gene_pair_corr", empty)
     assert(wh.read("fact_gene_pair_corr").count() == 0)
     assert(wh.read("fact_gene_pair_corr").schema("study_key").dataType ==
       org.apache.spark.sql.types.LongType)
@@ -627,7 +713,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("S3: duplicated header cells rename with position suffixes; tier-3 matching still resolves the field") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     // wide GEO/refinebio exports repeat characteristic columns; the
     // CSV-reader path auto-renamed duplicates and the ordinal path
     // must match: refinebio_age appears twice -> refinebio_age2/_age3,
@@ -642,7 +728,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("__ord is FILE order: multi-file metadata where path order ≠ size order resolves duplicate GSMs first-file-wins") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     val metaDir = Files.createDirectories(root.resolve("meta"))
     val header = "refinebio_accession_code\texperiment_accession\trefinebio_age\trefinebio_sex"
     // a_: lexically FIRST but much SMALLER — a size-packed scan (what
@@ -661,23 +747,24 @@ class EtlSpec extends SparkSpec {
     val bMin = df.where($"age" === "99").head.getAs[Long]("__ord")
     assert(aMax < bMin)
     // end-to-end: the duplicate-GSM group keeps the FIRST file's values
-    val wh = Warehouse(spark, tmpDir().toString)
+    val wh = Warehouse(spark, tmpDir("graft-etl").toString)
     val incoming = Dims.resolveFk(
       Dims.resolveFk(df.withColumn("study_key", lit(1L)),
         wh.read("dim_platform"), "platform_accession", "platform_accession", "platform_key"),
       wh.read("dim_illness"), "illness_label", "illness_label", "illness_key")
       .select("gsm_accession", "study_key", "platform_key", "illness_key", "age", "sex", "__ord")
-    val dim = Dims.upsertSampleDim(wh.read("dim_sample"), incoming)
+    val dim = Dims.upsertSampleDim(wh.read("dim_sample"), incoming,
+      freshSamples(wh.read("dim_sample"), Seq("GSMDUP" -> 1L) ++ (1 to 2000).map(i => s"GSMF$i" -> 1L)))
     val dup = dim.where($"gsm_accession" === "GSMDUP").head
     assert(dup.getAs[String]("age") == "11")
     assert(dup.getAs[String]("sex") == "female")
   }
 
   test("CLI: resume is the DEFAULT — a re-run skips the completed study; --no-resume re-scans") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     makeStudy(root)
     val filter = write(root, "filter.tsv", filterTsv)
-    val whDir = tmpDir().toString
+    val whDir = tmpDir("graft-etl").toString
     val yaml = write(root, "etl.yaml",
       s"""database:
          |  connection_string: unused
@@ -709,11 +796,11 @@ class EtlSpec extends SparkSpec {
   }
 
   test("CLI: a publish-time failure reports FAILED for every study, exits 1, commits nothing") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     makeStudy(root, "GSE0001")
     makeStudy(root, "GSE0002")
     val filter = write(root, "filter.tsv", filterTsv)
-    val snapDir = tmpDir()
+    val snapDir = tmpDir("graft-etl")
     // both studies prepare cleanly; the fact append then fails because
     // the fact table's path is a plain file, not a parquet directory
     write(snapDir, "fact_expression", "not parquet\n")
@@ -741,10 +828,10 @@ class EtlSpec extends SparkSpec {
   test("an interrupted load propagates the interrupt instead of reporting failed studies") {
     // a streaming query's stop() interrupts its micro-batch mid-load;
     // the batch must stay uncommitted, not report its studies as FAILED
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     makeStudy(root)
     val filter = write(root, "filter.tsv", filterTsv)
-    val job = new EtlJob(spark, config(root, filter), tmpDir().toString)
+    val job = new EtlJob(spark, config(root, filter), tmpDir("graft-etl").toString)
     // every other exception becomes a per-study result, so a throw
     // here is the interrupt propagating
     Thread.currentThread().interrupt()
@@ -753,10 +840,10 @@ class EtlSpec extends SparkSpec {
   }
 
   test("X6: differing experiment accession is overridden to directory accession") {
-    val root = tmpDir()
+    val root = tmpDir("graft-etl")
     makeStudy(root)
     val filter = write(root, "filter.tsv", filterTsv)
-    val whDir = tmpDir().toString
+    val whDir = tmpDir("graft-etl").toString
     new EtlJob(spark, config(root, filter), whDir).run()
     val wh = Warehouse(spark, whDir)
     // GSM4 row claimed GSE_OTHER but must land in GSE9006

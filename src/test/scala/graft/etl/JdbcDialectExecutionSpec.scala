@@ -20,7 +20,7 @@ class JdbcDialectExecutionSpec extends SparkSpec {
   ShimJdbc.register
 
   private def url(dialect: String): String = {
-    val d = Files.createTempDirectory("graft-shim"); d.toFile.deleteOnExit()
+    val d = tmpDir("graft-shim")
     s"jdbc:$dialect:shim:$d/wh"
   }
 

@@ -11,13 +11,9 @@ import java.nio.file.{Files, Path}
   */
 class JdbcWarehouseSpec extends SparkSpec {
 
-  private def tmpDir(): Path = {
-    val d = Files.createTempDirectory("graft-jdbc")
-    d.toFile.deleteOnExit(); d
-  }
 
   // keep derby.log out of the repo working dir
-  System.setProperty("derby.system.home", tmpDir().toString)
+  System.setProperty("derby.system.home", tmpDir("graft-jdbc").toString)
 
   private def write(dir: Path, name: String, content: String): Path = {
     val p = dir.resolve(name)
@@ -57,10 +53,10 @@ class JdbcWarehouseSpec extends SparkSpec {
     LoggingConfig(logLevel = "WARN"))
 
   private def derbyUrl(): String =
-    s"jdbc:derby:${tmpDir()}/wh;create=true"
+    s"jdbc:derby:${tmpDir("graft-jdbc")}/wh;create=true"
 
   test("S5 E2E: ETL + correlation over embedded Derby matches the parquet slice") {
-    val root = tmpDir()
+    val root = tmpDir("graft-jdbc")
     makeStudy(root)
     val filter = write(root, "filter.tsv", filterTsv)
     val url = derbyUrl()
@@ -198,7 +194,7 @@ class JdbcWarehouseSpec extends SparkSpec {
     val facts = (1L to 400L).map(i =>
       (i % 50, i % 120, i % 4 + 1, i.toDouble))
       .toDF("sample_key", "gene_key", "study_key", "expression_value")
-    wh.appendFacts("fact_expression", facts)
+    wh.append("fact_expression", facts)
     val back = wh.read("fact_expression")
     assert(back.count() == 400)
     assert(back.rdd.getNumPartitions > 1,
@@ -215,7 +211,7 @@ class JdbcWarehouseSpec extends SparkSpec {
     val wh = Warehouse(spark, derbyUrl())
     val facts = (1L to 200L).map(i => (i % 50, i % 20, i % 4 + 1, i.toDouble))
       .toDF("sample_key", "gene_key", "study_key", "expression_value")
-    wh.appendFacts("fact_expression", facts)
+    wh.append("fact_expression", facts)
     // the correlation job's F7 scan shape: fact read filtered to one
     // study. The filter must reach the DATABASE (the scan node's
     // PushedFilters), not run Spark-side over a full-table drain —

@@ -13,13 +13,9 @@ import java.nio.file.{Files, Path}
 class LakeTailSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(): Path = {
-    val d = Files.createTempDirectory("graft-tail")
-    d.toFile.deleteOnExit(); d
-  }
 
   private def sw(): SnapshotWarehouse =
-    new SnapshotWarehouse(spark, tmpDir().toString)
+    new SnapshotWarehouse(spark, tmpDir("graft-tail").toString)
 
   private def docs(ids: Range) =
     ids.map(i => (i.toLong, s"text body number $i with shared tail", 10L + i))
@@ -30,8 +26,8 @@ class LakeTailSpec extends SparkSpec {
 
   test("runOnce delivers pending appends once; offset rides the commit; a restarted consumer resumes, not replays") {
     val wh = sw()
-    wh.appendFacts("documents", docs(0 until 10))
-    wh.appendFacts("documents", docs(10 until 15))
+    wh.append("documents", docs(0 until 10))
+    wh.append("documents", docs(10 until 15))
     val tail = new LakeTail(wh, "c1", "documents")
     assert(tail.lastProcessed() == 0L)
     val b1 = tail.runOnce((_, b) => assert(ids(b.df) == (0L until 15L).toSet))
@@ -45,7 +41,7 @@ class LakeTailSpec extends SparkSpec {
     assert(tail2.lastProcessed() == 2L)
     assert(tail2.runOnce((_, _) => fail("no batch expected")).isEmpty)
     // a new arrival delivers ONLY the new rows
-    wh.appendFacts("documents", docs(15 until 18))
+    wh.append("documents", docs(15 until 18))
     val b2 = tail2.runOnce((_, b) => assert(ids(b.df) == Set(15L, 16L, 17L)))
       .getOrElse(fail("expected a batch"))
     assert(b2.fromVersion == b1.toVersion + 1 || b2.fromVersion == b1.toVersion,
@@ -58,14 +54,14 @@ class LakeTailSpec extends SparkSpec {
 
   test("exactly-once: a handler crash publishes NOTHING (no offset, no outputs); the retry redelivers the same window") {
     val wh = sw()
-    wh.appendFacts("documents", docs(0 until 8))
+    wh.append("documents", docs(0 until 8))
     val tail = new LakeTail(wh, "c1", "documents")
     val vBefore = wh.currentVersion()
     intercept[RuntimeException] {
       tail.runOnce { (txn, b) =>
         // the handler stages real output THEN dies — the staged segment
         // must never publish, and the offset must not move
-        txn.appendFacts("derived", b.df.select("doc_id"))
+        txn.append("derived", b.df.select("doc_id"))
         throw new RuntimeException("boom mid-batch")
       }
     }
@@ -75,7 +71,7 @@ class LakeTailSpec extends SparkSpec {
     // the retry sees the SAME window and this time everything — output
     // and offset — lands in one commit
     val b = tail.runOnce { (txn, b) =>
-      txn.appendFacts("derived", b.df.select("doc_id"))
+      txn.append("derived", b.df.select("doc_id"))
     }.getOrElse(fail("expected redelivery"))
     assert(ids(b.df) == (0L until 8L).toSet)
     assert(wh.currentVersion() == vBefore + 1, "output + offset must be ONE commit")
@@ -85,18 +81,18 @@ class LakeTailSpec extends SparkSpec {
 
   test("a rewrite inside the window (takedown) delivers a full re-read, flagged, pinned at the head snapshot") {
     val wh = sw()
-    wh.appendFacts("documents", docs(0 until 10))
+    wh.append("documents", docs(0 until 10))
     val tail = new LakeTail(wh, "c1", "documents")
     tail.runOnce((_, _) => ())
     // a takedown makes the next window non-append
-    wh.appendFacts("documents", docs(10 until 12))
+    wh.append("documents", docs(10 until 12))
     wh.deleteWhere("documents", col("doc_id") < 3L)
     val b = tail.runOnce((_, b) =>
       assert(ids(b.df) == ((3L until 12L)).toSet, "full current table expected"))
       .getOrElse(fail("expected a batch"))
     assert(b.fullReread, "a non-append window must be delivered as a full re-read")
     // and the tail returns to incremental deliveries afterwards
-    wh.appendFacts("documents", docs(12 until 14))
+    wh.append("documents", docs(12 until 14))
     val b2 = tail.runOnce((_, b) => assert(ids(b.df) == Set(12L, 13L)))
       .getOrElse(fail("expected a batch"))
     assert(!b2.fullReread)
@@ -104,12 +100,12 @@ class LakeTailSpec extends SparkSpec {
 
   test("commits that add nothing to the tailed table are skipped without empty checkpoint commits") {
     val wh = sw()
-    wh.appendFacts("documents", docs(0 until 5))
+    wh.append("documents", docs(0 until 5))
     val tail = new LakeTail(wh, "c1", "documents")
     tail.runOnce((_, _) => ())
     val v = wh.currentVersion()
     // churn on OTHER tables only
-    wh.appendFacts("events_agg", Seq((1L, 2L)).toDF("k", "v"))
+    wh.append("events_agg", Seq((1L, 2L)).toDF("k", "v"))
     assert(tail.runOnce((_, _) => fail("no documents batch expected")).isEmpty)
     // the consumer wrote NO manifest of its own for the no-op poll
     assert(wh.currentVersion() == v + 1)
@@ -123,9 +119,9 @@ class LakeTailSpec extends SparkSpec {
       (2L, "completely different content with no overlap at all here x"),
       (3L, "alpha beta gamma delta epsilon zeta eta theta iota kappXa"))
       .toDF("doc_id", "text")
-    wh.appendFacts("documents", d.where(col("doc_id") <= 2L))
+    wh.append("documents", d.where(col("doc_id") <= 2L))
     LakeConsumers.dedupStep(wh, tau = 0.2)
-    wh.appendFacts("documents", d.where(col("doc_id") === 3L))
+    wh.append("documents", d.where(col("doc_id") === 3L))
     LakeConsumers.dedupStep(wh, tau = 0.2)
     val pairs = wh.read(LakeConsumers.PairTable)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -143,9 +139,9 @@ class LakeTailSpec extends SparkSpec {
   }
 
   test("lake-tail-dedup CLI drains pending commits, advances the offset, and is a clean no-op when caught up") {
-    val dir = tmpDir().toString
+    val dir = tmpDir("graft-tail").toString
     val wh = new SnapshotWarehouse(spark, dir)
-    wh.appendFacts("documents", docs(0 until 6))
+    wh.append("documents", docs(0 until 6))
     assert(Main.run(Array("lake-tail-dedup", "--warehouse", s"snapshot:$dir"), spark) == 0)
     assert(new LakeTail(wh, "minhash-dedup", "documents").lastProcessed() > 0L)
     assert(wh.currentManifest().tables.contains(LakeConsumers.SigTable))
@@ -160,10 +156,10 @@ class LakeTailSpec extends SparkSpec {
     val wh = sw()
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val mid = emb.agg(max(col("vec_id"))).head.getLong(0) / 2
-    val cbPath = tmpDir().resolve("cb").toString
-    wh.appendFacts("embeddings", emb.where(col("vec_id") <= mid))
+    val cbPath = tmpDir("graft-tail").resolve("cb").toString
+    wh.append("embeddings", emb.where(col("vec_id") <= mid))
     assert(LakeConsumers.pqStep(wh, cbPath).nonEmpty)
-    wh.appendFacts("embeddings", emb.where(col("vec_id") > mid))
+    wh.append("embeddings", emb.where(col("vec_id") > mid))
     assert(LakeConsumers.pqStep(wh, cbPath).nonEmpty)
     assert(LakeConsumers.pqStep(wh, cbPath).isEmpty, "caught up")
     val codes = wh.read(LakeConsumers.CodeTable)

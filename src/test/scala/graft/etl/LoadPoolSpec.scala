@@ -13,10 +13,6 @@ import scala.jdk.CollectionConverters._
   */
 class LoadPoolSpec extends SparkSpec {
 
-  private def tmpDir(): Path = {
-    val d = Files.createTempDirectory("graft-pool")
-    d.toFile.deleteOnExit(); d
-  }
 
   private def poolThreads(): Seq[Thread] =
     Thread.getAllStackTraces.keySet.asScala.toSeq
@@ -109,7 +105,7 @@ class LoadPoolSpec extends SparkSpec {
     }
 
   test("loading the same studies 5 times gives identical dims and facts") {
-    val root = tmpDir()
+    val root = tmpDir("graft-pool")
     makeStudies(root)
     val filter = root.resolve("filter.tsv")
     Files.writeString(filter, filterTsv)
@@ -126,7 +122,7 @@ class LoadPoolSpec extends SparkSpec {
             r.getAs[Number](2).longValue(), r.getDouble(3))).toSet)
     }
     val loads = (1 to 5).map { i =>
-      val whDir = if (i % 2 == 0) s"snapshot:${tmpDir()}" else tmpDir().toString
+      val whDir = if (i % 2 == 0) s"snapshot:${tmpDir("graft-pool")}" else tmpDir("graft-pool").toString
       val results = new EtlJob(spark, cfg, whDir).run()
       assert(results.map(r => (r.accession, r.samples, r.error)) ==
         (1 to 4).map(s => (f"GSE$s%04d", 3L, None)))
@@ -145,7 +141,7 @@ class LoadPoolSpec extends SparkSpec {
   }
 
   test("an interrupt during a load propagates, reports no failed study, and commits nothing") {
-    val root = tmpDir()
+    val root = tmpDir("graft-pool")
     makeStudies(root)
     val filter = root.resolve("filter.tsv")
     Files.writeString(filter, filterTsv)
@@ -153,7 +149,7 @@ class LoadPoolSpec extends SparkSpec {
       LoggingConfig(logLevel = "WARN"))
     // the snapshot backend publishes in one commit, so "nothing
     // committed" holds wherever in the load the interrupt lands
-    val snapDir = tmpDir().toString
+    val snapDir = tmpDir("graft-pool").toString
     val job = new EtlJob(spark, cfg, s"snapshot:$snapDir")
     val caller = Thread.currentThread()
     val fired = new java.util.concurrent.atomic.AtomicBoolean(false)

@@ -24,13 +24,9 @@ import java.nio.file.{Files, Path}
 class ManySegmentLakeSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(): Path = {
-    val d = Files.createTempDirectory("graft-manyseg")
-    d.toFile.deleteOnExit(); d
-  }
 
   test("5001-segment lake: driver-cheap prune, O(matching) probe jobs, bounded manifest cost") {
-    val dir = tmpDir().toString
+    val dir = tmpDir("graft-manyseg").toString
     // auto-compaction OFF: the point is to HOLD a many-segment table,
     // not to watch the engine fold it back to one segment
     val wh = new SnapshotWarehouse(spark, dir, autoCompactSegments = 0)
@@ -39,11 +35,11 @@ class ManySegmentLakeSpec extends SparkSpec {
     // in ONE commit; stats stamped from their own footers
     wh.transact { txn =>
       (0 until 50).foreach { i =>
-        txn.appendFacts("docs5k",
+        txn.append("docs5k",
           (i * 1000L until i * 1000L + 10L).map(x => (x, x % 97))
             .toDF("doc_id", "n_chars"))
       }
-      txn.appendFacts("docs5k",
+      txn.append("docs5k",
         Seq((needleId, 7L)).toDF("doc_id", "n_chars"))
     }
     val m0 = wh.currentManifest()

@@ -13,13 +13,9 @@ import java.nio.file.{Files, Path}
 class SnapshotWarehouseSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(): Path = {
-    val d = Files.createTempDirectory("graft-snap")
-    d.toFile.deleteOnExit(); d
-  }
 
   private def sw(): SnapshotWarehouse =
-    Warehouse(spark, s"snapshot:${tmpDir()}") match {
+    Warehouse(spark, s"snapshot:${tmpDir("graft-snap")}") match {
       case s: SnapshotWarehouse => s
       case other => fail(s"snapshot: prefix dispatched to $other")
     }
@@ -48,8 +44,8 @@ class SnapshotWarehouseSpec extends SparkSpec {
     val wh = sw()
     wh.writeDim("dim_gene", gene(1L -> "ENSG1", 2L -> "ENSG2"))
     assert(wh.currentVersion() == 1L)
-    wh.appendFacts("fact_expression", facts(0 until 10, study = 1L))
-    wh.appendFacts("fact_expression", facts(10 until 15, study = 2L))
+    wh.append("fact_expression", facts(0 until 10, study = 1L))
+    wh.append("fact_expression", facts(10 until 15, study = 2L))
     assert(wh.currentVersion() == 3L)
     assert(wh.read("dim_gene").count() == 2)
     assert(factSet(wh.read("fact_expression")) ==
@@ -62,7 +58,7 @@ class SnapshotWarehouseSpec extends SparkSpec {
 
   test("replace keeps no delete window and an empty recompute still drops stale rows") {
     val wh = sw()
-    wh.appendFacts("fact_expression", facts(0 until 10, 1L)
+    wh.append("fact_expression", facts(0 until 10, 1L)
       .unionByName(facts(10 until 20, 2L)))
     // a reader planned against the PRE-replace snapshot...
     val before = wh.read("fact_expression")
@@ -87,7 +83,7 @@ class SnapshotWarehouseSpec extends SparkSpec {
   test("a writer killed between table writes publishes NOTHING — never a mixed generation") {
     val wh = sw()
     wh.writeDim("dim_gene", gene(1L -> "ENSG1"))
-    wh.appendFacts("fact_expression", facts(0 until 5, 1L))
+    wh.append("fact_expression", facts(0 until 5, 1L))
     val v = wh.currentVersion()
 
     // the load: new dim generation + new facts, crash after BOTH data
@@ -96,7 +92,7 @@ class SnapshotWarehouseSpec extends SparkSpec {
     intercept[RuntimeException] {
       wh.transact { txn =>
         txn.writeDim("dim_gene", gene(1L -> "ENSG1", 2L -> "ENSG2"))
-        txn.appendFacts("fact_expression", facts(5 until 9, 1L))
+        txn.append("fact_expression", facts(5 until 9, 1L))
         // within the txn, read-your-writes sees both...
         assert(txn.read("dim_gene").count() == 2)
         assert(txn.read("fact_expression").count() == 9)
@@ -111,7 +107,7 @@ class SnapshotWarehouseSpec extends SparkSpec {
     // and the retried load lands atomically as ONE version
     wh.transact { txn =>
       txn.writeDim("dim_gene", gene(1L -> "ENSG1", 2L -> "ENSG2"))
-      txn.appendFacts("fact_expression", facts(5 until 9, 1L))
+      txn.append("fact_expression", facts(5 until 9, 1L))
     }
     assert(wh.currentVersion() == v + 1)
     assert(wh.read("dim_gene").count() == 2)
@@ -137,13 +133,13 @@ class SnapshotWarehouseSpec extends SparkSpec {
 
   test("compact folds segments; vacuum drops orphans and keeps the live generation readable") {
     val wh = sw()
-    (0 until 4).foreach(i => wh.appendFacts("fact_expression",
+    (0 until 4).foreach(i => wh.append("fact_expression",
       facts(i * 5 until (i + 1) * 5, 1L)))
     wh.replaceStudyPartitions("fact_expression", facts(100 until 101, 1L), Seq(1L))
     // plus a crashed load's orphan segment
     intercept[RuntimeException] {
       wh.transact { txn =>
-        txn.appendFacts("fact_expression", facts(500 until 600, 9L))
+        txn.append("fact_expression", facts(500 until 600, 9L))
         throw new RuntimeException("kill")
       }
     }
@@ -161,8 +157,8 @@ class SnapshotWarehouseSpec extends SparkSpec {
 
   test("vacuum honors a retention horizon: kept versions stay time-travelable") {
     val wh = sw()
-    wh.appendFacts("fact_expression", facts(0 until 5, 1L))   // v1
-    wh.appendFacts("fact_expression", facts(5 until 8, 2L))   // v2
+    wh.append("fact_expression", facts(0 until 5, 1L))   // v1
+    wh.append("fact_expression", facts(5 until 8, 2L))   // v2
     wh.replaceStudyPartitions("fact_expression",
       facts(100 until 101, 1L), Seq(1L))                      // v3
     wh.vacuum(keepVersions = 2)
@@ -177,7 +173,7 @@ class SnapshotWarehouseSpec extends SparkSpec {
 
   test("partition pruning survives the segment-union read path") {
     val wh = sw()
-    (0 until 3).foreach(i => wh.appendFacts("fact_expression",
+    (0 until 3).foreach(i => wh.append("fact_expression",
       facts(i * 5 until (i + 1) * 5, 1L).unionByName(
         facts(100 + i * 5 until 100 + (i + 1) * 5, 2L))))
     val df = wh.read("fact_expression").where(col("study_key") === 2L)
@@ -194,10 +190,10 @@ class SnapshotWarehouseSpec extends SparkSpec {
   }
 
   test("auto-compaction bounds segment growth inside the appending commit itself") {
-    val dir = tmpDir()
+    val dir = tmpDir("graft-snap")
     val wh = new SnapshotWarehouse(spark, dir.toString, autoCompactSegments = 4)
     (0 until 12).foreach(i =>
-      wh.appendFacts("fact_expression", facts(i * 3 until (i + 1) * 3, 1L)))
+      wh.append("fact_expression", facts(i * 3 until (i + 1) * 3, 1L)))
     // every append that would leave >4 segments folded to 1 in ITS OWN
     // commit — the manifest never names an unbounded union
     val segs = wh.currentManifest().tables("fact_expression")
@@ -209,10 +205,10 @@ class SnapshotWarehouseSpec extends SparkSpec {
 
   test("vacuum racing an in-flight transaction spares its freshly staged segments") {
     val wh = sw()
-    wh.appendFacts("fact_expression", facts(0 until 5, 1L)) // v1
-    wh.appendFacts("fact_expression", facts(5 until 8, 1L)) // v2
+    wh.append("fact_expression", facts(0 until 5, 1L)) // v1
+    wh.append("fact_expression", facts(5 until 8, 1L)) // v2
     wh.transact { txn =>
-      txn.appendFacts("fact_expression", facts(100 until 110, 9L))
+      txn.append("fact_expression", facts(100 until 110, 9L))
       // a maintenance vacuum fires while the load is between staging
       // and commit: with the default orphan grace the staged (not yet
       // referenced) segment survives — before the grace window this
@@ -281,7 +277,7 @@ class SnapshotWarehouseSpec extends SparkSpec {
     // table: the commit must rebase onto the winner's snapshot and
     // publish BOTH outcomes instead of throwing
     wh.transact { txn =>
-      txn.appendFacts("fact_expression", facts(0 until 5, 1L))
+      txn.append("fact_expression", facts(0 until 5, 1L))
       other.writeDim("dim_platform",
         Seq((1L, "GPL570")).toDF("platform_key", "platform_accession"))
       ()
@@ -296,8 +292,8 @@ class SnapshotWarehouseSpec extends SparkSpec {
     // the loser must still throw, and its staged rows stay invisible
     intercept[ConcurrentWriteException] {
       wh.transact { txn =>
-        txn.appendFacts("fact_expression", facts(5 until 8, 2L))
-        other.appendFacts("fact_expression", facts(100 until 103, 3L))
+        txn.append("fact_expression", facts(5 until 8, 2L))
+        other.append("fact_expression", facts(100 until 103, 3L))
         ()
       }
     }
@@ -409,7 +405,7 @@ class SnapshotWarehouseSpec extends SparkSpec {
         new Thread(() => {
           start.await()
           val r = try Right {
-            wh.appendFacts("fact_expression", facts(i * 3 until i * 3 + 3, study = round * 10L + i))
+            wh.append("fact_expression", facts(i * 3 until i * 3 + 3, study = round * 10L + i))
           } catch { case t: Throwable => Left(t) }
           outcomes.add(r)
         })
@@ -482,9 +478,9 @@ class SnapshotWarehouseSpec extends SparkSpec {
 
   test("manifest segment stats skip non-matching segments before any footer is listed") {
     val wh = sw()
-    wh.appendFacts("fact_expression", facts(0 until 5, 1L))
-    wh.appendFacts("fact_expression", facts(5 until 9, 2L))
-    wh.appendFacts("fact_expression", facts(9 until 12, 3L))
+    wh.append("fact_expression", facts(0 until 5, 1L))
+    wh.append("fact_expression", facts(5 until 9, 2L))
+    wh.append("fact_expression", facts(9 until 12, 3L))
     // stats were stamped at write time from directory names + footers
     val segs = wh.currentManifest().tables("fact_expression")
     assert(segs.map(_.rows) == Seq(5L, 4L, 3L))
@@ -515,7 +511,7 @@ class SnapshotWarehouseSpec extends SparkSpec {
     // the reference's per-study transaction made literal (pipeline.py
     // rollback-on-error): metadata is valid, but the corrupt expression
     // file kills the study, and NOTHING publishes
-    val root = tmpDir()
+    val root = tmpDir("graft-snap")
     val d = Files.createDirectories(root.resolve("GSE1"))
     Files.writeString(d.resolve("metadata_GSE1.tsv"),
       """refinebio_accession_code	experiment_accession	refinebio_age	refinebio_sex	refinebio_platform	characteristics_ch2_illness
@@ -527,7 +523,7 @@ class SnapshotWarehouseSpec extends SparkSpec {
     val cfg = AppConfig(DatabaseConfig("unused"),
       ProcessingConfig(root, filter), LoggingConfig(logLevel = "WARN"))
 
-    val snapDir = tmpDir().toString
+    val snapDir = tmpDir("graft-snap").toString
     val results = new EtlJob(spark, cfg, s"snapshot:$snapDir").run()
     assert(results.exists(_.error.isDefined), s"study should have failed: $results")
     val snap = new SnapshotWarehouse(spark, snapDir)
@@ -537,13 +533,13 @@ class SnapshotWarehouseSpec extends SparkSpec {
 
     // the plain backend publishes nothing either: the expression header
     // fails validation before any warehouse write
-    val plainDir = tmpDir().toString
+    val plainDir = tmpDir("graft-snap").toString
     new EtlJob(spark, cfg, plainDir).run()
     assert(Warehouse(spark, plainDir).read("dim_study").count() == 0)
   }
 
   test("E2E: the unioned ETL against the snapshot backend matches the plain parquet backend") {
-    val root = tmpDir()
+    val root = tmpDir("graft-snap")
     val metadataTsv =
       """refinebio_accession_code	experiment_accession	refinebio_age	refinebio_sex	refinebio_platform	characteristics_ch2_illness
         |GSM1	GSE1	16	female	GPL96	Healthy
@@ -565,8 +561,8 @@ class SnapshotWarehouseSpec extends SparkSpec {
     def cfg = AppConfig(DatabaseConfig("unused"),
       ProcessingConfig(root, filter), LoggingConfig(logLevel = "WARN"))
 
-    val plainDir = tmpDir().toString
-    val snapDir = s"snapshot:${tmpDir()}"
+    val plainDir = tmpDir("graft-snap").toString
+    val snapDir = s"snapshot:${tmpDir("graft-snap")}"
     val rPlain = new EtlJob(spark, cfg, plainDir).run()
     val rSnap = new EtlJob(spark, cfg, snapDir).run()
     assert(rPlain.map(r => (r.accession, r.samples, r.facts)) ==
@@ -608,7 +604,7 @@ class SnapshotWarehouseSpec extends SparkSpec {
 
   test("schema contract: type drift on a core column is rejected at commit and NOTHING publishes") {
     val wh = sw()
-    wh.appendFacts("fact_expression", facts(0 until 10, 1L))
+    wh.append("fact_expression", facts(0 until 10, 1L))
     val v = wh.currentVersion()
     // a writer whose expression_value drifted to string: the declared-
     // schema read would silently null the column — must reject loudly
@@ -616,7 +612,7 @@ class SnapshotWarehouseSpec extends SparkSpec {
       (i.toLong, i.toLong % 7, 1L, s"${i * 1.5}")).toDF(
       "sample_key", "gene_key", "study_key", "expression_value")
     val e = intercept[SchemaContractViolation] {
-      wh.appendFacts("fact_expression", drifted)
+      wh.append("fact_expression", drifted)
     }
     assert(e.getMessage.contains("expression_value") &&
       e.getMessage.contains("incompatible type"))
@@ -624,7 +620,7 @@ class SnapshotWarehouseSpec extends SparkSpec {
     val missing = (10 until 15).map(i => (i.toLong, i.toLong % 7, 1L))
       .toDF("sample_key", "gene_key", "study_key")
     val e2 = intercept[SchemaContractViolation] {
-      wh.appendFacts("fact_expression", missing)
+      wh.append("fact_expression", missing)
     }
     assert(e2.getMessage.contains("missing required column"))
     // the rejections aborted BEFORE the manifest rename: no new
@@ -639,11 +635,11 @@ class SnapshotWarehouseSpec extends SparkSpec {
     // the core — the manifest, not Warehouse.schemas, is its schema of
     // record
     val gen1 = Seq((1L, 100L), (2L, 200L)).toDF("doc_id", "n_chars")
-    wh.appendFacts("documents", gen1)
+    wh.append("documents", gen1)
     // additive column: accepted
     val gen2 = Seq((3L, 300L, "en"), (4L, 400L, "de"))
       .toDF("doc_id", "n_chars", "lang")
-    wh.appendFacts("documents", gen2)
+    wh.append("documents", gen2)
     val read = wh.read("documents")
     assert(read.columns.toSeq == Seq("doc_id", "n_chars", "lang"))
     val byId = read.collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
@@ -652,12 +648,12 @@ class SnapshotWarehouseSpec extends SparkSpec {
     assert(byId(3L).getAs[String]("lang") == "en")
     // a later writer missing part of the (first-write) core is rejected
     intercept[SchemaContractViolation] {
-      wh.appendFacts("documents", Seq(5L).toDF("doc_id"))
+      wh.append("documents", Seq(5L).toDF("doc_id"))
     }
     // an additive column recommitted under a DIFFERENT type is rejected
     // (the read-side union must never coerce)
     val e = intercept[SchemaContractViolation] {
-      wh.appendFacts("documents",
+      wh.append("documents",
         Seq((6L, 600L, 99L)).toDF("doc_id", "n_chars", "lang"))
     }
     assert(e.getMessage.contains("additive column 'lang'"))
@@ -673,9 +669,9 @@ class SnapshotWarehouseSpec extends SparkSpec {
   test("readWhere: a predicate on an additive column stays answerable when every segment carrying it prunes") {
     val wh = sw()
     // pre-evolution segment: no lang column at all
-    wh.appendFacts("documents", Seq((1L, 100L)).toDF("doc_id", "n_chars"))
+    wh.append("documents", Seq((1L, 100L)).toDF("doc_id", "n_chars"))
     // evolved segment: lang stamped with bounds [de, en]
-    wh.appendFacts("documents",
+    wh.append("documents",
       Seq((2L, 200L, "en"), (3L, 300L, "de")).toDF("doc_id", "n_chars", "lang"))
     // 'fr' is outside [de, en], so the ONLY segment carrying lang
     // prunes; the union must still expose the full evolved schema —
@@ -690,9 +686,9 @@ class SnapshotWarehouseSpec extends SparkSpec {
 
   test("deleteWhere: only matching segments rewrite (untouched paths stay byte-identical); one atomic commit; time travel keeps pre-delete rows") {
     val wh = sw()
-    wh.appendFacts("fact_expression", facts(0 until 10, 1L))
-    wh.appendFacts("fact_expression", facts(10 until 20, 2L))
-    wh.appendFacts("fact_expression", facts(20 until 30, 3L))
+    wh.append("fact_expression", facts(0 until 10, 1L))
+    wh.append("fact_expression", facts(10 until 20, 2L))
+    wh.append("fact_expression", facts(20 until 30, 3L))
     val vBefore = wh.currentVersion()
     val mBefore = wh.currentManifest()
     val deleted = wh.deleteWhere("fact_expression",
@@ -725,10 +721,10 @@ class SnapshotWarehouseSpec extends SparkSpec {
   }
 
   test("lake CLI: lake-delete / lake-compact / lake-vacuum drive the snapshot backend end-to-end") {
-    val dir = tmpDir().toString
+    val dir = tmpDir("graft-snap").toString
     val wh = Warehouse(spark, s"snapshot:$dir").asInstanceOf[SnapshotWarehouse]
-    wh.appendFacts("fact_expression", facts(0 until 10, 1L))
-    wh.appendFacts("fact_expression", facts(10 until 20, 2L))
+    wh.append("fact_expression", facts(0 until 10, 1L))
+    wh.append("fact_expression", facts(10 until 20, 2L))
     def run(args: String*): Int = Main.run(args.toArray, spark)
     // takedown by SQL predicate
     assert(run("lake-delete", "--warehouse", s"snapshot:$dir",
@@ -752,7 +748,7 @@ class SnapshotWarehouseSpec extends SparkSpec {
     assert(wh.read("fact_expression").count() == 15)
     intercept[IllegalArgumentException] { wh.readAt("fact_expression", v) }
     // lake commands refuse non-snapshot targets with usage, not a cast
-    assert(run("lake-compact", "--warehouse", tmpDir().toString,
+    assert(run("lake-compact", "--warehouse", tmpDir("graft-snap").toString,
       "--table", "fact_expression") == 2)
   }
 
@@ -762,7 +758,7 @@ class SnapshotWarehouseSpec extends SparkSpec {
     // four segments with disjoint doc_id ranges (an extension table —
     // stats generalize beyond the star schema)
     (0 until 4).foreach { q =>
-      wh.appendFacts("documents",
+      wh.append("documents",
         (q * 100L until q * 100L + 50L).map(i => (i, i % 7)).toDF("doc_id", "n_chars"))
     }
     val segs = wh.currentManifest().tables("documents")
@@ -828,12 +824,12 @@ class SnapshotWarehouseSpec extends SparkSpec {
     import spark.implicits._
     val wh = sw()
     // seg0: pre-evolution — no lang column (reads all-NULL via schema)
-    wh.appendFacts("documents", Seq((1L, 10L)).toDF("doc_id", "n_chars"))
+    wh.append("documents", Seq((1L, 10L)).toDF("doc_id", "n_chars"))
     // seg1: lang never null
-    wh.appendFacts("documents",
+    wh.append("documents",
       Seq((2L, 20L, "en"), (3L, 30L, "de")).toDF("doc_id", "n_chars", "lang"))
     // seg2: lang present but ALL null (typed) — no string bounds exist
-    wh.appendFacts("documents", Seq((4L, 40L)).toDF("doc_id", "n_chars")
+    wh.append("documents", Seq((4L, 40L)).toDF("doc_id", "n_chars")
       .withColumn("lang", lit(null).cast("string")))
     val m = wh.currentManifest()
     val segs = m.tables("documents")
@@ -878,12 +874,12 @@ class SnapshotWarehouseSpec extends SparkSpec {
   test("appendsSince: exactly the appended rows over a pure-append window; anything else fails loudly") {
     import spark.implicits._
     val wh = sw()
-    wh.appendFacts("documents", Seq((1L, 10L), (2L, 20L)).toDF("doc_id", "n_chars"))
-    wh.appendFacts("documents", Seq((3L, 30L)).toDF("doc_id", "n_chars"))
+    wh.append("documents", Seq((1L, 10L), (2L, 20L)).toDF("doc_id", "n_chars"))
+    wh.append("documents", Seq((3L, 30L)).toDF("doc_id", "n_chars"))
     val v = wh.currentVersion()
     // two more appends, the second additively evolved
-    wh.appendFacts("documents", Seq((4L, 40L)).toDF("doc_id", "n_chars"))
-    wh.appendFacts("documents",
+    wh.append("documents", Seq((4L, 40L)).toDF("doc_id", "n_chars"))
+    wh.append("documents",
       Seq((5L, 50L, "en")).toDF("doc_id", "n_chars", "lang"))
     val inc = wh.appendsSince("documents", v)
     assert(inc.select("doc_id").as[Long].collect().toSet == Set(4L, 5L))
@@ -904,7 +900,7 @@ class SnapshotWarehouseSpec extends SparkSpec {
     wh.compact("documents")
     intercept[IllegalStateException] { wh.appendsSince("documents", v3) }
     // a fact-table replace (exclusion-list mutation) breaks it as well
-    wh.appendFacts("fact_expression", facts(0 until 5, 1L))
+    wh.append("fact_expression", facts(0 until 5, 1L))
     val v4 = wh.currentVersion()
     wh.replaceStudyPartitions("fact_expression", facts(10 until 12, 1L), Seq(1L))
     val e2 = intercept[IllegalStateException] {
@@ -918,7 +914,7 @@ class SnapshotWarehouseSpec extends SparkSpec {
     val wh = sw()
     // one segment per language — the s19 layout
     Seq("de", "en", "zh").foreach { l =>
-      wh.appendFacts("documents",
+      wh.append("documents",
         (1L to 20L).map(i => (i, l, i % 5)).toDF("doc_id", "lang", "n_chars"))
     }
     val segs = wh.currentManifest().tables("documents")
@@ -951,7 +947,7 @@ class SnapshotWarehouseSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(wh.read("documents").count() == 50L)
     // long values (> 64 chars) are NOT stamped — and therefore never prune
-    wh.appendFacts("documents",
+    wh.append("documents",
       Seq((100L, "x" * 200, 1L)).toDF("doc_id", "lang", "n_chars"))
     val seg4 = wh.currentManifest().tables("documents").last
     assert(!seg4.stringBounds.contains("lang"))
@@ -960,8 +956,8 @@ class SnapshotWarehouseSpec extends SparkSpec {
 
   test("deleteWhere: NULL-predicate rows are KEPT (SQL DELETE semantics) and emptying a table leaves its schema readable") {
     val wh = sw()
-    wh.appendFacts("documents", Seq((1L, 10L)).toDF("doc_id", "n_chars"))
-    wh.appendFacts("documents",
+    wh.append("documents", Seq((1L, 10L)).toDF("doc_id", "n_chars"))
+    wh.append("documents",
       Seq((2L, 20L, "zh"), (3L, 30L, "en")).toDF("doc_id", "n_chars", "lang"))
     // doc 1 has lang NULL (pre-evolution): `lang = 'zh'` is NULL there,
     // and NULL must not delete

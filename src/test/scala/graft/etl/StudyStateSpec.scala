@@ -8,10 +8,6 @@ import java.nio.file.{Files, Path}
   */
 class StudyStateSpec extends SparkSpec {
 
-  private def tmpDir(): Path = {
-    val d = Files.createTempDirectory("graft-state")
-    d.toFile.deleteOnExit(); d
-  }
 
   private def write(dir: Path, name: String, content: String): Path = {
     val p = dir.resolve(name)
@@ -36,11 +32,11 @@ class StudyStateSpec extends SparkSpec {
     LoggingConfig(logLevel = "WARN"))
 
   test("state rows observable after a run; resume skips completed studies only") {
-    val root = tmpDir()
+    val root = tmpDir("graft-state")
     makeStudy(root, "GSE0001")
     makeStudy(root, "GSE0002")
     val filter = write(root, "filter.tsv", "ensembl_id\nENSG1\nENSG2\n")
-    val whDir = tmpDir().toString
+    val whDir = tmpDir("graft-state").toString
     val wh = Warehouse(spark, whDir)
     val job = new EtlJob(spark, config(root, filter), whDir)
 

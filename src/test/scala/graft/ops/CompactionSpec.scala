@@ -8,13 +8,10 @@ import java.nio.file.Files
 class CompactionSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(): String = {
-    val d = Files.createTempDirectory("graft-compact")
-    d.toFile.deleteOnExit(); d.toString + "/t"
-  }
+  private def tablePath(): String = tmpDir("graft-compact").toString + "/t"
 
   test("compaction merges a many-small-files table losslessly to the byte-targeted count") {
-    val dir = tmpDir()
+    val dir = tablePath()
     // 40 single-row appends — the streaming-ingest worst case
     (1 to 40).foreach { i =>
       Seq((i.toLong, s"payload_$i")).toDF("id", "v")
@@ -36,7 +33,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("compaction recovers a table stranded mid-swap, and a trailing slash cannot nest the swap dirs") {
-    val dir = tmpDir()
+    val dir = tablePath()
     (1 to 5).foreach { i =>
       Seq((i.toLong, s"v$i")).toDF("id", "v").coalesce(1).write.mode("append").parquet(dir)
     }
@@ -54,7 +51,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("compaction SPLITS oversized inputs too: more output files than scan partitions") {
-    val dir = tmpDir()
+    val dir = tablePath()
     (0 until 2000).map(i => (i.toLong, "x" * 100)).toDF("id", "v")
       .coalesce(1).write.mode("append").parquet(dir)
     val one = Compaction.compactParquetDir(spark, dir, targetBytes = Long.MaxValue)
@@ -69,7 +66,7 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("sorted compaction range-partitions and orders within files (stats-skipping layout)") {
-    val dir = tmpDir()
+    val dir = tablePath()
     (0 until 10).foreach { i =>
       (0 until 100).map(j => ((j * 37 + i) % 1000, s"r$i-$j"))
         .toDF("k", "v").coalesce(1).write.mode("append").parquet(dir)

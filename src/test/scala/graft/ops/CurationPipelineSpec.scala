@@ -254,7 +254,7 @@ class CurationPipelineSpec extends SparkSpec {
   test("lr_gate stage scores with FROZEN saved weights and equals the direct scoreWith keep set") {
     val feat = Logistic.features(docs).localCheckpoint(true)
     val w = Logistic.train(feat, rounds = 3)
-    val wPath = java.nio.file.Files.createTempDirectory("graft_cp_lrw")
+    val wPath = tmpDir("graft_cp_lrw")
       .resolve("weights").toString
     Logistic.saveWeights(spark, wPath, w)
     val cfg = loadString(
@@ -323,7 +323,7 @@ class CurationPipelineSpec extends SparkSpec {
   }
 
   test("curate CLI: end-to-end YAML run from Main, exit 0, survivors written") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_curate_cli")
+    val tmp = tmpDir("graft_curate_cli")
     val cfgPath = tmp.resolve("pipeline.yaml")
     java.nio.file.Files.writeString(cfgPath,
       """pipeline:
@@ -361,7 +361,7 @@ class CurationPipelineSpec extends SparkSpec {
     // stage localCheckpoints (the plan source becomes a LogicalRDD),
     // so Main must refuse BEFORE the write — and leave the source
     // untouched
-    val tmp = java.nio.file.Files.createTempDirectory("graft_curate_overlap")
+    val tmp = tmpDir("graft_curate_overlap")
     val cfgPath = tmp.resolve("pipeline.yaml")
     java.nio.file.Files.writeString(cfgPath,
       "pipeline:\n  stages:\n    - kind: quality_gate\n      min_quality: 0.5\n")

@@ -130,7 +130,7 @@ class IvfCodebookSpec extends SparkSpec {
   }
 
   test("codebook save/load roundtrip is exact; incremental probe honors the index split") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cb").toString
+    val dir = tmpDir("graft_cb").toString
     val corpus = skewed.where(col("vec_id") < 200)
     val batch = skewed.where(col("vec_id") >= 200)
     val cb = Similarity.fitCodebook(corpus, nCentroids = 8)

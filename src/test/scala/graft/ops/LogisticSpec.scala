@@ -66,21 +66,18 @@ class LogisticSpec extends SparkSpec {
   test("x26: weight persistence round-trips bit-identically and rejects malformed files") {
     val feat = Logistic.features(fixture).localCheckpoint(true)
     val w = Logistic.train(feat, rounds = 3)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_lrw_spec").resolve("w").toString
+    val path = tmpDir("graft_lrw_spec").resolve("w").toString
     Logistic.saveWeights(spark, path, w)
     assert(Logistic.loadWeights(spark, path).toSeq == w.toSeq)
     // a gapped file must fail loudly, not score garbage
-    val bad = java.nio.file.Files
-      .createTempDirectory("graft_lrw_spec").resolve("bad").toString
+    val bad = tmpDir("graft_lrw_spec").resolve("bad").toString
     Seq((0, 1L), (2, 2L)).toDF("j", "w_micro")
       .write.mode("overwrite").parquet(bad)
     intercept[IllegalArgumentException] { Logistic.loadWeights(spark, bad) }
     // a contiguous PREFIX truncation is undetectable from the file
     // alone (weights are now any-arity); a caller that knows its
     // feature arity closes the hole with expectedN
-    val trunc = java.nio.file.Files
-      .createTempDirectory("graft_lrw_spec").resolve("trunc").toString
+    val trunc = tmpDir("graft_lrw_spec").resolve("trunc").toString
     Seq((0, 1L), (1, 2L)).toDF("j", "w_micro")
       .write.mode("overwrite").parquet(trunc)
     assert(Logistic.loadWeights(spark, trunc).length == 2,

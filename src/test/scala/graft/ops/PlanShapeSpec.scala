@@ -589,7 +589,7 @@ class PlanShapeSpec extends SparkSpec {
   test("lr_gate: the frozen-weights gate is join-free (weights are literals, carry rides)") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val feat = graft.ops.Logistic.features(docs).localCheckpoint(true)
-    val wPath = java.nio.file.Files.createTempDirectory("graft_ps_lrw")
+    val wPath = tmpDir("graft_ps_lrw")
       .resolve("w").toString
     graft.ops.Logistic.saveWeights(spark, wPath,
       graft.ops.Logistic.train(feat, rounds = 1))

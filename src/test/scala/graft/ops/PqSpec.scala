@@ -131,7 +131,7 @@ class PqSpec extends SparkSpec {
     val data = emb((0L to 11L).map(i =>
       (i, Seq(i.toDouble, 10.0 - i, (i % 3).toDouble, 0.5 * i))): _*)
     val cbs = Pq.fitPqCodebooks(data, m = 2, ksub = 3, iters = 2)
-    val path = java.nio.file.Files.createTempDirectory("graft_pq_cb_spec")
+    val path = tmpDir("graft_pq_cb_spec")
       .resolve("cb").toString
     Pq.savePqCodebooks(spark, path, cbs)
     val loaded = Pq.loadPqCodebooks(spark, path)
@@ -139,14 +139,14 @@ class PqSpec extends SparkSpec {
     // drop subspace 0's rows (an interior gap: sub 1 remains, so the
     // sequence 0..max is broken) -> the load must refuse, not mis-slice
     val broken = spark.read.parquet(path).where(col("sub") =!= 0)
-    val badPath = java.nio.file.Files.createTempDirectory("graft_pq_cb_spec2")
+    val badPath = tmpDir("graft_pq_cb_spec2")
       .resolve("cb").toString
     broken.write.parquet(badPath)
     val e = intercept[IllegalArgumentException] { Pq.loadPqCodebooks(spark, badPath) }
     assert(e.getMessage.contains("missing subspaces"))
     // a missing TAIL subspace is invisible without expectedM (m is
     // inferred from the max sub id) — expectedM closes the hole
-    val tailPath = java.nio.file.Files.createTempDirectory("graft_pq_cb_spec3")
+    val tailPath = tmpDir("graft_pq_cb_spec3")
       .resolve("cb").toString
     spark.read.parquet(path).where(col("sub") =!= 1).write.parquet(tailPath)
     assert(Pq.loadPqCodebooks(spark, tailPath).length == 1,

@@ -24,10 +24,7 @@ import java.nio.file.Files
 class RuntimeFilterSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(): String = {
-    val d = Files.createTempDirectory("graft-rtf")
-    d.toFile.deleteOnExit(); d.toString
-  }
+  private def tmpPath(): String = tmpDir("graft-rtf").toString
 
   private def withConfs[T](confs: Seq[(String, String)])(body: => T): T = {
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
@@ -40,7 +37,7 @@ class RuntimeFilterSpec extends SparkSpec {
   }
 
   test("dynamic partition pruning: a dim-side filter prunes fact partitions through the join") {
-    val dir = tmpDir()
+    val dir = tmpPath()
     // fact partitioned by the join key; dim carries the selective filter
     (0 until 20000).map(i => (i % 40, i.toLong, i * 1.5))
       .toDF("dim_key", "fact_id", "v")
@@ -73,7 +70,7 @@ class RuntimeFilterSpec extends SparkSpec {
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "10485760",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")) {
-      val dir = tmpDir()
+      val dir = tmpPath()
       // the filter pushes toward a real scan — build both sides as files
       spark.range(0, 200000).select(col("id"),
         concat(lit("x" * 32), col("id")).as("payload"))

@@ -31,8 +31,7 @@ class ZOrderSpec extends SparkSpec {
     // degenerates (the full narrow width IS the tile)
     val rows = for (x <- 0 until 64; y <- 0 until 64) yield (x, y, x * 64 + y)
     val df = rows.toDF("x", "y", "payload")
-    val base = Files.createTempDirectory("graft-zorder")
-    base.toFile.deleteOnExit()
+    val base = tmpDir("graft-zorder")
     val zDir = s"$base/z"
     val linDir = s"$base/lin"
     ZOrder.writeZOrdered(df, zDir, "x", "y", nFiles = 16)

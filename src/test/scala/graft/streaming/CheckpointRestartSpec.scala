@@ -48,7 +48,7 @@ class CheckpointRestartSpec extends SparkSpec {
 
   /** Land `data` as one new file in the streaming source directory. */
   private def land(srcDir: java.nio.file.Path, name: String, data: Seq[Row]): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-restart-stage")
+    val tmp = tmpDir("graft-restart-stage")
     spark.createDataFrame(spark.sparkContext.parallelize(data, 1), schema)
       .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = java.nio.file.Files.list(tmp).filter(_.getFileName.toString.endsWith(".parquet"))
@@ -57,7 +57,7 @@ class CheckpointRestartSpec extends SparkSpec {
   }
 
   test("x31 monitor restarts from its checkpoint: offsets and RocksDB window state both survive the stop") {
-    val root = java.nio.file.Files.createTempDirectory("graft-restart")
+    val root = tmpDir("graft-restart")
     val srcDir = java.nio.file.Files.createDirectory(root.resolve("in"))
     val ckpt = root.resolve("ckpt").toString
     // w0 = [0, 256): closed well before the restart

@@ -13,10 +13,6 @@ import java.nio.file.{Files, Path}
   */
 class StreamingEtlSpec extends SparkSpec {
 
-  private def tmpDir(): Path = {
-    val d = Files.createTempDirectory("graft-setl")
-    d.toFile.deleteOnExit(); d
-  }
 
   private def write(dir: Path, name: String, content: String): Path = {
     val p = dir.resolve(name)
@@ -69,21 +65,21 @@ class StreamingEtlSpec extends SparkSpec {
   }
 
   test("two-batch streaming arrival ≡ one-shot batch load; restart drains only new manifests; re-listed studies skip") {
-    val root = tmpDir()
+    val root = tmpDir("graft-setl")
     val a = makeStudy(root, "GSE9006")
     val b = makeStudy(root, "GSE0002")
     val filter = write(root, "filter.tsv", filterTsv)
     val cfg = config(root, filter)
 
     // one-shot batch baseline over both studies
-    val whBatch = tmpDir().toString
+    val whBatch = tmpDir("graft-setl").toString
     val batchResults = new EtlJob(spark, cfg, whBatch).run()
     assert(batchResults.forall(_.error.isEmpty))
 
     // streaming: manifest batch 1 lists study A only
-    val whStream = tmpDir().toString
-    val manifests = tmpDir()
-    val checkpoint = tmpDir().resolve("ckpt").toString
+    val whStream = tmpDir("graft-setl").toString
+    val manifests = tmpDir("graft-setl")
+    val checkpoint = tmpDir("graft-setl").resolve("ckpt").toString
     write(manifests, "arrival_1.txt", s"$a\n")
     val etl = new StreamingEtl(spark, cfg, whStream)
     val r1 = etl.ingestAvailable(manifests.toString, checkpoint)
@@ -111,15 +107,15 @@ class StreamingEtlSpec extends SparkSpec {
   }
 
   test("streaming ingest into the snapshot backend: one atomic manifest commit per micro-batch") {
-    val root = tmpDir()
+    val root = tmpDir("graft-setl")
     val a = makeStudy(root, "GSE9006")
     val b = makeStudy(root, "GSE0002")
     val filter = write(root, "filter.tsv", filterTsv)
     val cfg = config(root, filter)
 
-    val snapDir = tmpDir().toString
-    val manifests = tmpDir()
-    val checkpoint = tmpDir().resolve("ckpt").toString
+    val snapDir = tmpDir("graft-setl").toString
+    val manifests = tmpDir("graft-setl")
+    val checkpoint = tmpDir("graft-setl").resolve("ckpt").toString
     val etl = new StreamingEtl(spark, cfg, s"snapshot:$snapDir")
     val sw = new graft.etl.SnapshotWarehouse(spark, snapDir)
 
@@ -133,7 +129,7 @@ class StreamingEtlSpec extends SparkSpec {
     assert(sw.currentVersion() == 2L)
 
     // contents identical to the plain-backend one-shot load
-    val whBatch = tmpDir().toString
+    val whBatch = tmpDir("graft-setl").toString
     new EtlJob(spark, cfg, whBatch).run()
     assert(factTuples(s"snapshot:$snapDir") == factTuples(whBatch))
 
@@ -148,12 +144,12 @@ class StreamingEtlSpec extends SparkSpec {
   }
 
   test("a failed study fails the batch: its manifest stays unprocessed and the next drain retries it") {
-    val root = tmpDir()
+    val root = tmpDir("graft-setl")
     val filter = write(root, "filter.tsv", filterTsv)
     val cfg = config(root, filter)
-    val whDir = tmpDir().toString
-    val manifests = tmpDir()
-    val checkpoint = tmpDir().resolve("ckpt").toString
+    val whDir = tmpDir("graft-setl").toString
+    val manifests = tmpDir("graft-setl")
+    val checkpoint = tmpDir("graft-setl").resolve("ckpt").toString
     val etl = new StreamingEtl(spark, cfg, whDir)
 
     // broken study: metadata has the wrong columns
@@ -178,19 +174,19 @@ class StreamingEtlSpec extends SparkSpec {
   }
 
   test("long-lived ProcessingTime query ingests manifests dropped while running (round-4 verdict #6)") {
-    val root = tmpDir()
+    val root = tmpDir("graft-setl")
     val a = makeStudy(root, "GSE9006")
     val b = makeStudy(root, "GSE0002")
     val filter = write(root, "filter.tsv", filterTsv)
     val cfg = config(root, filter)
 
     // batch baseline for value-identity
-    val whBatch = tmpDir().toString
+    val whBatch = tmpDir("graft-setl").toString
     assert(new EtlJob(spark, cfg, whBatch).run().forall(_.error.isEmpty))
 
-    val whStream = tmpDir().toString
-    val manifests = tmpDir()
-    val checkpoint = tmpDir().resolve("ckpt").toString
+    val whStream = tmpDir("graft-setl").toString
+    val manifests = tmpDir("graft-setl")
+    val checkpoint = tmpDir("graft-setl").resolve("ckpt").toString
     val etl = new StreamingEtl(spark, cfg, whStream)
     val results = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     // first manifest present at start; the second drops mid-flight
@@ -216,14 +212,14 @@ class StreamingEtlSpec extends SparkSpec {
   }
 
   test("replayed second batch (crash between side-effect and checkpoint commit) lands zero facts") {
-    val root = tmpDir()
+    val root = tmpDir("graft-setl")
     val a = makeStudy(root, "GSE9006")
     val b = makeStudy(root, "GSE0002")
     val filter = write(root, "filter.tsv", filterTsv)
     val cfg = config(root, filter)
-    val whDir = tmpDir().toString
-    val manifests = tmpDir()
-    val ckpt = tmpDir().resolve("ckpt")
+    val whDir = tmpDir("graft-setl").toString
+    val manifests = tmpDir("graft-setl")
+    val ckpt = tmpDir("graft-setl").resolve("ckpt")
     val etl = new StreamingEtl(spark, cfg, whDir)
 
     write(manifests, "m1.txt", s"$a\n")
@@ -232,7 +228,7 @@ class StreamingEtlSpec extends SparkSpec {
     // snapshot the checkpoint BEFORE batch 2: restoring it afterwards
     // simulates the crash window where the warehouse side-effect
     // committed but the streaming checkpoint did not
-    val snap = tmpDir().resolve("ckpt_snap")
+    val snap = tmpDir("graft-setl").resolve("ckpt_snap")
     copyTree(ckpt, snap)
     write(manifests, "m2.txt", s"$b\n")
     assert(etl.ingestAvailable(manifests.toString, ckpt.toString).map(_.facts) == Seq(12L))
@@ -252,12 +248,12 @@ class StreamingEtlSpec extends SparkSpec {
 
   test("a second drain+correlate of new studies reuses the first round's generated code") {
     import org.apache.spark.metrics.source.CodegenMetrics
-    val root = tmpDir()
+    val root = tmpDir("graft-setl")
     val filter = write(root, "filter.tsv", filterTsv)
     val cfg = config(root, filter)
-    val whDir = tmpDir().toString
-    val manifests = tmpDir()
-    val checkpoint = tmpDir().resolve("ckpt").toString
+    val whDir = tmpDir("graft-setl").toString
+    val manifests = tmpDir("graft-setl")
+    val checkpoint = tmpDir("graft-setl").resolve("ckpt").toString
     val etl = new StreamingEtl(spark, cfg, whDir)
 
     // one complete study (dense correlate path) and one with a bad cell
@@ -311,7 +307,7 @@ class StreamingEtlSpec extends SparkSpec {
   }
 
   test("CLI: etl-stream drains manifests through Main with the same results") {
-    val root = tmpDir()
+    val root = tmpDir("graft-setl")
     val a = makeStudy(root, "GSE9006")
     val filter = write(root, "filter.tsv", filterTsv)
     val yaml = write(root, "etl.yaml",
@@ -323,8 +319,8 @@ class StreamingEtlSpec extends SparkSpec {
          |logging:
          |  log_level: WARN
          |""".stripMargin)
-    val whDir = tmpDir().toString
-    val manifests = tmpDir()
+    val whDir = tmpDir("graft-setl").toString
+    val manifests = tmpDir("graft-setl")
     write(manifests, "m1.txt", s"$a\n")
     val out = new java.io.ByteArrayOutputStream()
     val code = Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
@@ -337,7 +333,7 @@ class StreamingEtlSpec extends SparkSpec {
   }
 
   test("CLI: etl-stream --follow keeps ticking and exits 0 on operator stop") {
-    val root = tmpDir()
+    val root = tmpDir("graft-setl")
     val a = makeStudy(root, "GSE9006")
     val b = makeStudy(root, "GSE0002")
     val filter = write(root, "filter.tsv", filterTsv)
@@ -350,8 +346,8 @@ class StreamingEtlSpec extends SparkSpec {
          |logging:
          |  log_level: WARN
          |""".stripMargin)
-    val whDir = tmpDir().toString
-    val manifests = tmpDir()
+    val whDir = tmpDir("graft-setl").toString
+    val manifests = tmpDir("graft-setl")
     write(manifests, "m1.txt", s"$a\n")
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
@@ -372,14 +368,17 @@ class StreamingEtlSpec extends SparkSpec {
     assert(Await.result(cli, 60.seconds) == 0)
   }
 
-  /** Polls the condition; a throwing read counts as not-yet — the
-    * poller races the micro-batch's dim overwrite, so a transient
-    * FILE_NOT_EXIST on the warehouse parquet is expected mid-swap.
+  /** Polls the condition; only a warehouse path the first micro-batch
+    * has not created yet counts as not-yet. Any other failed read fails
+    * the test: a load appends dim rows and writes new partitions, so a
+    * reader never loses a file under it.
     */
   private def eventually(cond: => Boolean, what: String,
       timeoutMs: Long = 30000): Unit = {
     val t0 = System.currentTimeMillis()
-    while (!(try cond catch { case scala.util.control.NonFatal(_) => false })) {
+    def notYetCreated(e: org.apache.spark.sql.AnalysisException) =
+      e.getCondition == "PATH_NOT_FOUND"
+    while (!(try cond catch { case e: org.apache.spark.sql.AnalysisException if notYetCreated(e) => false })) {
       if (System.currentTimeMillis() - t0 > timeoutMs)
         fail(s"timed out waiting for $what")
       Thread.sleep(100)

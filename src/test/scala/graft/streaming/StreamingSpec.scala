@@ -272,7 +272,7 @@ class StreamingSpec extends SparkSpec {
   test("state-partition sizing falls back to cores when the input cannot be sized") {
     val cores = spark.sparkContext.defaultParallelism
     assert(cores > 1, "the fallback is only distinguishable from 1 with several cores")
-    val missing = java.nio.file.Files.createTempDirectory("graft-sizing")
+    val missing = tmpDir("graft-sizing")
       .resolve("no-such-input.parquet").toString
     assert(graft.SparkEntry.streamStateParts(spark, missing) == cores)
     // a readable small input still sizes down to one partition
@@ -284,7 +284,7 @@ class StreamingSpec extends SparkSpec {
   test("state-partition sizing reads a file:// URI through the Hadoop FileSystem") {
     assert(spark.sparkContext.defaultParallelism > 1,
       "a sizing fallback (cores) is only distinguishable from 1 with several cores")
-    val dir = java.nio.file.Files.createTempDirectory("graft-sizing-uri")
+    val dir = tmpDir("graft-sizing-uri")
     java.nio.file.Files.writeString(dir.resolve("part-0.parquet"), "x" * 1024)
     java.nio.file.Files.writeString(dir.resolve("part-1.parquet"), "y" * 1024)
     // a few KB of input sizes to one partition; an unsized input would

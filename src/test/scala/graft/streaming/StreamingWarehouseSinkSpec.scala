@@ -14,13 +14,9 @@ import java.nio.file.{Files, Path}
 class StreamingWarehouseSinkSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(): Path = {
-    val d = Files.createTempDirectory("graft-stream-wh")
-    d.toFile.deleteOnExit(); d
-  }
-  System.setProperty("derby.system.home", tmpDir().toString)
+  System.setProperty("derby.system.home", tmpDir("graft-stream-wh").toString)
 
-  private def derbyUrl(): String = s"jdbc:derby:${tmpDir()}/wh;create=true"
+  private def derbyUrl(): String = s"jdbc:derby:${tmpDir("graft-stream-wh")}/wh;create=true"
 
   private def facts(ids: Range): org.apache.spark.sql.DataFrame =
     ids.map(i => (i.toLong, i.toLong % 7, 1L, i * 1.5)).toDF(
@@ -36,8 +32,8 @@ class StreamingWarehouseSinkSpec extends SparkSpec {
   test("AvailableNow ingest is exactly-once across a checkpoint restart with new data") {
     val url = derbyUrl()
     val wh = new JdbcWarehouse(spark, url, maxRetries = 1, retryBackoffSeconds = 0)
-    val src = tmpDir()
-    val ckpt = tmpDir().toString
+    val src = tmpDir("graft-stream-wh")
+    val ckpt = tmpDir("graft-stream-wh").toString
     val schema = facts(0 until 0).schema
 
     facts(0 until 20).coalesce(1).write.mode("append").parquet(src.toString)
@@ -69,8 +65,8 @@ class StreamingWarehouseSinkSpec extends SparkSpec {
     val url = derbyUrl()
     val wh = new JdbcWarehouse(spark, url, maxRetries = 1, retryBackoffSeconds = 0)
     val rows = facts(0 until 5).withColumn("batch_id", lit(0L))
-    wh.appendFacts("fact_stream__stage", rows)          // the original tasks
-    wh.appendFacts("fact_stream__stage", rows.limit(2)) // the retried partition, doubled
+    wh.append("fact_stream__stage", rows)          // the original tasks
+    wh.append("fact_stream__stage", rows.limit(2)) // the retried partition, doubled
     wh.promoteStage("fact_stream__stage", "fact_stream", 0L, rows.columns.toSeq)
     val live = readBack(url)
     assert(live.map(_._1) == (0 until 5).map(_.toLong).toSet,
@@ -133,7 +129,7 @@ class StreamingWarehouseSinkSpec extends SparkSpec {
 
     // crash window 2: only PART of batch 1 landed (executor died mid
     // append) — replay must clear the partial before appending
-    wh.appendFacts("fact_stream", facts(10 until 13)
+    wh.append("fact_stream", facts(10 until 13)
       .withColumn("batch_id", lit(1L))
       .withColumn("row_seq", col("sample_key") - 9L))
     writer(facts(10 until 20), 1L)
