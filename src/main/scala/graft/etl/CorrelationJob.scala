@@ -37,24 +37,14 @@ class CorrelationJob(spark: SparkSession, warehouseDir: String,
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
   private val wh = Warehouse(spark, warehouseDir)
 
-  /** F7 study-filtered rows of a `study_key`-partitioned table (the
-    * facts, `dim_sample`). On the snapshot backend the predicate ALSO
-    * prunes at manifest resolution (whole segments whose stamped study
-    * set cannot match are skipped before any footer listing —
-    * [[SnapshotWarehouse.readStudies]]); every backend still pushes it
-    * as a hive partition filter at the scan.
-    */
-  private def forStudies(table: String, studyKeys: Seq[Long]): DataFrame = wh match {
-    case sw: SnapshotWarehouse => sw.readStudies(table, studyKeys)
-    case _ => wh.read(table).where(Warehouse.inSet("study_key", studyKeys)) // partition pruning
-  }
-
   /** J1: facts keyed to their sample accessions — the requested
-    * studies' facts and samples (F7-pruned) when `studyKeys` is given,
-    * else every study's.
+    * studies' facts and samples (F7-pruned, [[Warehouse.readStudies]];
+    * the parquet backend lists only their partitions, the snapshot
+    * backend only their segments) when `studyKeys` is given, else every
+    * study's.
     */
   private def longFacts(studyKeys: Option[Seq[Long]]): DataFrame = {
-    def read(table: String) = studyKeys.fold(wh.read(table))(forStudies(table, _))
+    def read(table: String) = studyKeys.fold(wh.read(table))(wh.readStudies(table, _))
     val facts = read("fact_expression")
     val dimSample = read("dim_sample").select("sample_key", "gsm_accession")
     facts.join(broadcast(dimSample), Seq("sample_key"))

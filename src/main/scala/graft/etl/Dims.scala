@@ -133,7 +133,7 @@ object Dims {
     val loaded = knownOf("dim_study").keys.values.toSeq
     val existing =
       if (loaded.isEmpty) Seq.empty[Row]
-      else w.read("dim_sample").where(Warehouse.inSet("study_key", loaded)).collect().toSeq
+      else w.readStudies("dim_sample", loaded).collect().toSeq
     val pairs = gsms.toSeq.flatMap { case (acc, ids) =>
       study.all.get(acc).toSeq.flatMap(k => ids.map(_ -> k)) }
     val knownSamples = Known(existing.map(r =>

@@ -186,7 +186,7 @@ class SnapshotWarehouse(spark: SparkSession, val baseDir: String,
     * partition filter, so directory pruning applies twice: once on
     * the manifest, once at the scan.
     */
-  def readStudies(table: String, studyKeys: Seq[Long]): DataFrame = {
+  override def readStudies(table: String, studyKeys: Seq[Long]): DataFrame = {
     require(studyKeys.nonEmpty, "studyKeys must be non-empty")
     readTable(currentManifest(), table, Some(studyKeys.toSet))
       .where(Warehouse.inSet("study_key", studyKeys))

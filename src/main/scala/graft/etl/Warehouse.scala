@@ -28,6 +28,10 @@ import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSes
   *    reference repositories.py:303-309) — a study whose NEW result is
   *    empty still loses its stale rows. `df` must not read the rows it
   *    replaces: the parquet and JDBC backends delete them first;
+  *  - `readStudies` returns the rows of the given studies of a
+  *    `study_key`-partitioned table, the predicate applied as a
+  *    partition filter (F7); a backend may also skip the other
+  *    studies before the scan is planned;
   *  - `writeDim` replaces a table wholesale and is crash-recoverable
   *    (the swap never loses the previous version). Only whole-table
   *    rewrites use it: [[StudyState]] and the lake consumers' tables.
@@ -39,6 +43,8 @@ import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSes
   */
 trait Warehouse {
   def read(table: String): DataFrame
+  def readStudies(table: String, studyKeys: Seq[Long]): DataFrame =
+    read(table).where(Warehouse.inSet("study_key", studyKeys))
   def writeDim(table: String, df: DataFrame): Unit
   def append(table: String, df: DataFrame): Unit
   def replaceStudyPartitions(table: String, df: DataFrame, studyKeys: Seq[Long]): Unit
@@ -87,14 +93,31 @@ class ParquetWarehouse(spark: SparkSession, baseDir: String) extends Warehouse {
     // the old one was set aside -> the set-aside copy is the truth
     if (!fs.exists(dir) && fs.exists(old) && !fs.rename(old, dir))
       throw new java.io.IOException(s"Failed to recover dim $table from $old")
-    if (exists(table)) {
-      // the partition column would come back last: pin declared order
-      val schema = schemas(table)
-      spark.read.schema(schema).parquet(path(table))
-        .select(schema.fieldNames.toIndexedSeq.map(org.apache.spark.sql.functions.col): _*)
-    } else spark.createDataFrame(
+    if (exists(table)) inDeclaredOrder(table, spark.read.schema(schemas(table)).parquet(path(table)))
+    else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemas(table))
   }
+
+  /** F7 at listing time: only the partition directories of
+    * `studyKeys` are listed, so the scan, and the size estimate its
+    * joins are planned by, cover those studies however many others
+    * the table holds — a correlate of two studies plans alike on a
+    * warehouse of 2 studies or 200. The predicate still applies, as a
+    * partition filter.
+    */
+  override def readStudies(table: String, studyKeys: Seq[Long]): DataFrame = {
+    val dirs =
+      if (!partitionedByStudy(table)) Seq.empty
+      else studyKeys.distinct.map(k => new HPath(path(table), s"study_key=$k")).filter(fs.exists)
+    if (dirs.isEmpty) super.readStudies(table, studyKeys)
+    else inDeclaredOrder(table, spark.read.schema(schemas(table))
+      .option("basePath", path(table)).parquet(dirs.map(_.toString): _*))
+      .where(inSet("study_key", studyKeys))
+  }
+
+  // the partition column would come back last: pin declared order
+  private def inDeclaredOrder(table: String, df: DataFrame): DataFrame =
+    df.select(schemas(table).fieldNames.toIndexedSeq.map(org.apache.spark.sql.functions.col): _*)
 
   /** Whole-table rewrite of a small table via a tmp write and a
     * rename sequence (old -> __old, tmp -> live, drop __old) whose
