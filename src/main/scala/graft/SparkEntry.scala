@@ -887,9 +887,10 @@ object SparkEntry {
     "d1_dim_build" -> ((s, dir) => {
       val brands = t(s, dir, "part").select(col("p_brand")).distinct().collect()
         .flatMap(r => graft.etl.Dims.natural(r.getString(0)))
-      graft.etl.Dims.localRows(s, "brand_key", "brand",
+      import org.apache.spark.sql.types.{LongType, StringType}
+      graft.etl.Dims.local(s, "brand_key" -> LongType, "brand" -> StringType)(
         graft.etl.Dims.Known(Map.empty[String, Long], 0L)
-          .fresh(brands.toSeq)(graft.etl.Dims.SparkStringOrder))
+          .fresh(brands.toSeq)(graft.etl.Dims.SparkStringOrder).map(_.swap))
     }),
     // D3: conditional-fill dimension merge (reference sample-upsert
     // semantics: an existing non-UNKNOWN value wins; UNKNOWN/absent is

@@ -1,8 +1,8 @@
 package graft.etl
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Dimension maintenance — get-or-create keyed on the driver
@@ -13,8 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * lookup per load ([[keyBatch]]): one query through the warehouse view
   * returns the keys the dims already hold for the batch's naturals and
   * each dim's max key; a second, F7-pruned read returns the
-  * `dim_sample` rows of the batch's studies, and runs only when one of
-  * them was loaded before. The driver numbers the naturals no dim holds
+  * `(gsm_accession, study_key, sample_key)` rows of the batch's
+  * studies, and runs only when one of them was loaded before. The driver numbers the naturals no dim holds
   * from max key + 1, in the order a Spark sort gives them (UTF-8 bytes,
   * [[SparkStringOrder]]; samples by `(gsm_accession, study_key)`) — the
   * dense numbering of a global row_number over the new rows, stable
@@ -25,9 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Bound: nothing collected is larger than data the driver already
   * holds. The vocabulary naturals are the batch's distinct labels,
   * which the prep aggregate collects; the gene ids are a subset of the
-  * whitelist, which `GeneFilter.load` reads on the driver; the sample
-  * rows are the batch's GSM lists (collected by the prep aggregate)
-  * plus, for a re-delivered study, the rows its earlier load wrote.
+  * whitelist, which `GeneFilter.ids` reads on the driver; the sample
+  * keys are the batch's GSM lists (collected by the prep aggregate)
+  * plus, for a re-delivered study, the keys its earlier loads gave.
   */
 object Dims {
   import Schema.UnknownValue
@@ -72,13 +72,10 @@ object Dims {
   case class Keyed(all: Map[String, Long], fresh: Seq[(String, Long)])
 
   /** A batch's keys, all on the driver. `samples` maps each
-    * `(gsm_accession, study_key)` of the batch to its sample key;
-    * `existingSamples` holds the `dim_sample` rows of the batch's
-    * studies, the rows its replace must keep or update.
+    * `(gsm_accession, study_key)` of the batch to its sample key.
     */
   case class BatchKeys(study: Keyed, platform: Keyed, illness: Keyed, gene: Keyed,
-      samples: Map[(String, Long), Long], freshSamples: Seq[((String, Long), Long)],
-      existingSamples: Seq[Row])
+      samples: Map[(String, Long), Long], freshSamples: Seq[((String, Long), Long)])
 
   /** Keys every dim row a batch needs, through `w` (so a snapshot
     * transaction sees its own view). `gsms` maps each study accession
@@ -127,38 +124,40 @@ object Dims {
       r.getString(1) }.toSeq.flatMap(natural(_, dropUnknown = false))
     val study = keyed("dim_study", studyNaturals)
 
-    // D3: the batch's (gsm, study) pairs; the study's existing rows are
+    // D3: the batch's (gsm, study) pairs; the study's existing keys are
     // read only when the study was loaded before, pruned to its
     // partitions (F7)
     val loaded = knownOf("dim_study").keys.values.toSeq
     val existing =
       if (loaded.isEmpty) Seq.empty[Row]
-      else w.readStudies("dim_sample", loaded).collect().toSeq
+      else w.readStudies("dim_sample", loaded)
+        .select("gsm_accession", "study_key", "sample_key").collect().toSeq
     val pairs = gsms.toSeq.flatMap { case (acc, ids) =>
       study.all.get(acc).toSeq.flatMap(k => ids.map(_ -> k)) }
     val knownSamples = Known(existing.map(r =>
-      (r.getAs[String]("gsm_accession"), r.getAs[Number]("study_key").longValue()) ->
-        r.getAs[Number]("sample_key").longValue()).toMap, knownOf("dim_sample").maxKey)
+      (r.getString(0), r.getAs[Number](1).longValue()) -> r.getAs[Number](2).longValue()).toMap,
+      knownOf("dim_sample").maxKey)
     val freshSamples = knownSamples.fresh(pairs)(SampleOrder)
     val sampleKeys = knownSamples.keys ++ freshSamples
     BatchKeys(study, keyed("dim_platform", platformNaturals),
       keyed("dim_illness", illnessNaturals), keyed("dim_gene", geneNaturals),
-      pairs.map(p => p -> sampleKeys(p)).toMap, freshSamples, existing)
+      pairs.map(p => p -> sampleKeys(p)).toMap, freshSamples)
   }
 
-  /** `(key, natural)` rows as a local frame. */
-  def localRows(spark: org.apache.spark.sql.SparkSession, keyCol: String, naturalCol: String,
-      keyed: Iterable[(String, Long)]): DataFrame = {
+  /** Driver-held tuples as a local relation, which no job builds: one
+    * non-null column per `(name, type)` of `cols`, in tuple order.
+    */
+  def local(spark: SparkSession, cols: (String, DataType)*)(rows: Iterable[Product]): DataFrame = {
     import scala.jdk.CollectionConverters._
-    spark.createDataFrame(keyed.map { case (n, k) => Row(k, n) }.toSeq.asJava,
-      StructType(Seq(StructField(keyCol, LongType, nullable = false),
-        StructField(naturalCol, StringType, nullable = false))))
+    spark.createDataFrame(rows.map(Row.fromTuple).toSeq.asJava,
+      StructType(cols.map { case (n, t) => StructField(n, t, nullable = false) }))
   }
 
   /** D3: sample-dimension merge-upsert on (gsm_accession, study_key).
     *
     * `existing`: the `dim_sample` rows of the incoming studies (all of
-    * them — the result replaces those studies' rows). `incoming`
+    * them — the result replaces those studies' rows, and may be written
+    * by the replace that reads them, [[Warehouse]]). `incoming`
     * columns: gsm_accession, study_key, platform_key, illness_key
     * (already-resolved nullable FKs — UNKNOWN ⇒ null, F8), age, sex,
     * __ord (intra-batch order for duplicate-GSM resolution). `fresh`:
@@ -204,13 +203,9 @@ object Dims {
         col("i_sex").isNotNull && col("i_sex") =!= UnknownValue, col("i_sex"))
         .otherwise(coalesce(col("sex"), lit(UnknownValue))).as("sex"))
 
-    val freshKeys = {
-      import scala.jdk.CollectionConverters._
-      incoming.sparkSession.createDataFrame(
-        fresh.map { case ((gsm, study), k) => Row(gsm, study, k) }.asJava,
-        StructType(Seq(StructField("i_gsm", StringType), StructField("i_study", LongType),
-          StructField("sample_key", LongType))))
-    }
+    val freshKeys = local(incoming.sparkSession,
+      "i_gsm" -> StringType, "i_study" -> LongType, "sample_key" -> LongType)(
+      fresh.map { case ((gsm, study), k) => (gsm, study, k) })
     val added = joined.where(col("sample_key").isNull).drop("sample_key")
       .join(broadcast(freshKeys), Seq("i_gsm", "i_study"))
       .select(col("sample_key"),

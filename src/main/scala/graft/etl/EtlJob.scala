@@ -2,12 +2,11 @@ package graft.etl
 
 import java.util.concurrent.{ExecutionException, Executors, TimeUnit}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, SparkSession, classic}
 
 /** The full ETL pipeline (reference: scripts/run_etl.py →
@@ -189,9 +188,9 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
         preps.groupMapReduce(_.acc)(_.gsms)((a, b) => (a ++ b).distinct),
         preps.flatMap(_.platforms), preps.flatMap(_.illnesses),
         filtered.select(col("gene_id")), whitelist)
-      def local(keyCol: String, naturalCol: String, keyed: Iterable[(String, Long)]) =
-        Dims.localRows(spark, keyCol, naturalCol, keyed)
-      val studyKeys = local("study_key", "study_accession", keys.study.all)
+      def keyRows(keyCol: String, naturalCol: String, keyed: Iterable[(String, Long)]) =
+        Dims.local(spark, keyCol -> LongType, naturalCol -> StringType)(keyed.map(_.swap))
+      val studyKeys = keyRows("study_key", "study_accession", keys.study.all)
       val batchStudies = keys.study.all.values.toSeq
 
       // __ord pins the reference's "first row in file wins" duplicate-GSM
@@ -203,24 +202,21 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
       val incoming = Dims.resolveFk(
         Dims.resolveFk(
           allSamples.join(broadcast(studyKeys), Seq("study_accession")),
-          local("platform_key", "platform_accession", keys.platform.all),
+          keyRows("platform_key", "platform_accession", keys.platform.all),
           "platform_accession", "platform_accession", "platform_key"),
-        local("illness_key", "illness_label", keys.illness.all),
+        keyRows("illness_key", "illness_label", keys.illness.all),
         "illness_label", "illness_label", "illness_key")
         .select("gsm_accession", "study_key", "platform_key", "illness_key", "age", "sex", "__ord")
-      // the existing rows come from the lookup, not a read of the
-      // partitions the replace deletes first
-      val existingSamples = spark.createDataFrame(
-        keys.existingSamples.asJava, Warehouse.schemas("dim_sample"))
       def appendNew(table: String, keyCol: String, naturalCol: String, k: Dims.Keyed): () => Unit =
-        () => if (k.fresh.nonEmpty) w.append(table, local(keyCol, naturalCol, k.fresh))
+        () => if (k.fresh.nonEmpty) w.append(table, keyRows(keyCol, naturalCol, k.fresh))
       EtlJob.inParallel(spark, Seq(
         appendNew("dim_study", "study_key", "gse_accession", keys.study),
         appendNew("dim_platform", "platform_key", "platform_accession", keys.platform),
         appendNew("dim_illness", "illness_key", "illness_label", keys.illness),
         appendNew("dim_gene", "gene_key", "ensembl_id", keys.gene),
         () => w.replaceStudyPartitions("dim_sample",
-          Dims.upsertSampleDim(existingSamples, incoming, keys.freshSamples),
+          Dims.upsertSampleDim(w.readStudies("dim_sample", batchStudies), incoming,
+            keys.freshSamples),
           batchStudies)))
       allSamples.unpersist()
       // D4: metadata phase committed for every prepared study
@@ -231,15 +227,13 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
       // local key maps, one dedup, one append ----------------------------------
       // the sample map is the batch's GSMs, not a bounded vocabulary: the
       // planner broadcasts it by its size
-      val sampleKeys = {
-        import spark.implicits._
-        keys.samples.toSeq.map { case ((gsm, study), k) => (gsm, study, k) }
-          .toDF("sample_accession", "study_key", "sample_key")
-      }
+      val sampleKeys = Dims.local(spark,
+        "sample_accession" -> StringType, "study_key" -> LongType, "sample_key" -> LongType)(
+        keys.samples.map { case ((gsm, study), k) => (gsm, study, k) })
       val keyed = filtered
         .join(broadcast(studyKeys), Seq("study_accession"))
         .join(sampleKeys, Seq("sample_accession", "study_key"))
-        .join(broadcast(local("gene_key", "gene_id", keys.gene.all)), Seq("gene_id"))
+        .join(broadcast(keyRows("gene_key", "gene_id", keys.gene.all)), Seq("gene_id"))
         .select("sample_key", "gene_key", "study_key", "expression_value")
         // intra-batch dedup: the reference's per-row seen-set also drops
         // duplicates WITHIN one file (repeated gene row / repeated GSM

@@ -28,12 +28,6 @@ object GeneFilter {
     * emptiness jobs a CSV read would run. Ids are trimmed of spaces
     * only, as Spark's `trim` does.
     */
-  def load(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    ids(spark, path).toDF("ensembl_id")
-  }
-
-  /** The whitelist's ids, as [[load]] reads them. */
   def ids(spark: SparkSession, path: String): Seq[String] = {
     val settings = new CSVOptions(Map("sep" -> "\t", "header" -> "true"),
       columnPruning = false, defaultTimeZoneId = "UTC").asParserSettings

@@ -26,8 +26,9 @@ import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSes
   *    database.py:38-60): [[withRetries]] around every driver-side
   *    connection acquisition; executor-side task writes get Spark's own
   *    task retry on top;
-  *  - delete-then-insert replace (S7, repositories.py:303-309): a
-  *    driver-side DELETE of the studies' rows, then an appended write;
+  *  - delete-then-insert replace (S7, repositories.py:303-309): the
+  *    new rows written to a stage table, then one driver-side
+  *    transaction of DELETE + INSERT ... SELECT;
   *  - DDL bootstrap (S8): Spark's JDBC sink creates absent tables on
   *    first write; string columns get explicit VARCHAR widths
   *    (reference models.py String(32..128)) because several dialects
@@ -248,19 +249,22 @@ class JdbcWarehouse(
   def append(table: String, df: DataFrame): Unit =
     writer(df, table).mode(SaveMode.Append).save()
 
-  /** S7 delete-then-insert (repositories.py:303-309): driver-side
-    * DELETE of the replaced studies, then append. Not transactional
-    * across the two statements — same contract as the reference, which
-    * also deletes and re-inserts in separate statements within a job.
+  /** S7 delete-then-insert (repositories.py:303-309) in one
+    * transaction: `df` is written to `table__replace` first (so it may
+    * read the rows it replaces), then one driver-side transaction
+    * deletes the studies' rows and inserts the staged ones. A failure
+    * anywhere leaves the studies' previous rows in place.
     */
   def replaceStudyPartitions(table: String, df: DataFrame, studyKeys: Seq[Long]): Unit = {
     if (studyKeys.isEmpty) return
-    withConn(s"delete studies from $table") { conn =>
-      // Spark's JDBC sink creates columns QUOTED (exact-case) — match it
-      if (tableExists(conn, table))
-        exec(conn, s"""DELETE FROM $table WHERE "study_key" IN (${studyKeys.mkString(",")})""")
+    val stage = table + "__replace"
+    writer(df, stage).mode(SaveMode.Overwrite).save()
+    promote(stage, table, s""""study_key" IN (${studyKeys.mkString(",")})""", df.columns.toSeq,
+      distinct = false)
+    try withConn(s"drop $stage")(conn => exec(conn, s"DROP TABLE $stage"))
+    catch {
+      case e: SQLException => log.warn(s"dropping $stage failed (the replace committed): ${e.getMessage}")
     }
-    append(table, df)
   }
 
   /** Streaming micro-batch replace (S7 applied to streaming):
@@ -318,23 +322,32 @@ class JdbcWarehouse(
     promoteStage(stage, table, batchId, df.columns.toSeq)
   }
 
-  /** The transactional promote. `cols` pins the INSERT column list by
-    * NAME: a pre-existing warehouse table whose physical column order
-    * differs from the Spark-written stage (the scenario read() already
-    * defends against) would silently shift values under a positional
-    * `INSERT ... SELECT *`.
+  /** The transactional promote of a batch. `cols` pins the INSERT
+    * column list by NAME: a pre-existing warehouse table whose physical
+    * column order differs from the Spark-written stage (the scenario
+    * read() already defends against) would silently shift values under
+    * a positional `INSERT ... SELECT *`.
     */
   private[graft] def promoteStage(stage: String, table: String, batchId: Long,
       cols: Seq[String]): Unit =
-    withConn(s"promote batch $batchId into $table") { conn =>
+    promote(stage, table, s""""batch_id" = $batchId""", cols, distinct = true)
+
+  /** One transaction: delete `table`'s rows matching `where`, insert
+    * `stage`'s rows (DISTINCT with `distinct`), commit — creating
+    * `table` like `stage` when absent.
+    */
+  private def promote(stage: String, table: String, where: String, cols: Seq[String],
+      distinct: Boolean): Unit =
+    withConn(s"promote $stage into $table") { conn =>
       val auto = conn.getAutoCommit
       conn.setAutoCommit(false)
       val colList = cols.map(c => "\"" + c + "\"").mkString(", ")
       try {
         if (!tableExists(conn, table))
           exec(conn, JdbcWarehouse.createEmptyLikeSql(url, table, stage))
-        exec(conn, s"""DELETE FROM $table WHERE "batch_id" = $batchId""")
-        exec(conn, s"INSERT INTO $table ($colList) SELECT DISTINCT $colList FROM $stage")
+        exec(conn, s"DELETE FROM $table WHERE $where")
+        exec(conn, s"INSERT INTO $table ($colList) SELECT ${if (distinct) "DISTINCT " else ""}" +
+          s"$colList FROM $stage")
         conn.commit()
       } catch {
         case t: Throwable =>

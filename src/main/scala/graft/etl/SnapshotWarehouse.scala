@@ -13,9 +13,10 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
   * but a load that touches several tables (the ETL writes up to 5
   * dims + the fact append, `EtlJob.processUnioned`) has windows where
   * a crash — or a concurrent reader — observes a MIXED generation: new dims with old
-  * facts, or `replaceStudyPartitions`' gap between the partition delete
-  * and the re-append. The reference gives readers all-or-nothing per
-  * study through its per-study transaction (reference
+  * facts, or the moment of `replaceStudyPartitions`' roll-forward when
+  * a study's old files are gone and its new ones not yet moved in. The
+  * reference gives readers all-or-nothing per study through its
+  * per-study transaction (reference
   * src/pipeline.py:271-301: rollback on error, commit at end); this
   * backend extends that contract to multi-table reader isolation, the
   * way a lakehouse table format does:
@@ -37,7 +38,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
   *    are immutable, the resolved plan stays valid — and keeps
   *    returning its own consistent snapshot — even if a replace commits
   *    (or ten commits land) while the query runs. This closes
-  *    [[ParquetWarehouse.replaceStudyPartitions]]'s delete-then-append
+  *    [[ParquetWarehouse.replaceStudyPartitions]]'s roll-forward
   *    window entirely: the old generation's files still exist.
   *  - `readAt(version)` is time travel to any unvacuumed snapshot.
   *

@@ -26,8 +26,11 @@ import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSes
   *    constraint;
   *  - `replaceStudyPartitions` is delete-then-insert per study (S7,
   *    reference repositories.py:303-309) — a study whose NEW result is
-  *    empty still loses its stale rows. `df` must not read the rows it
-  *    replaces: the parquet and JDBC backends delete them first;
+  *    empty still loses its stale rows. `df` may read the rows it
+  *    replaces, and a failure or crash part way never loses them: each
+  *    backend writes `df` out before it deletes anything (a parquet
+  *    stage rolled forward on the next read, a JDBC stage table moved
+  *    in by one transaction, a snapshot segment);
   *  - `readStudies` returns the rows of the given studies of a
   *    `study_key`-partitioned table, the predicate applied as a
   *    partition filter (F7); a backend may also skip the other
@@ -56,7 +59,7 @@ trait Warehouse {
   * partitioned by `study_key`, which gives:
   *  - partition pruning for per-study predicates (F7);
   *  - per-study replace (S7 — the reference's delete-then-insert,
-  *    repositories.py:303-309, as an explicit partition delete + append
+  *    repositories.py:303-309, as a staged swap of the studies' files,
   *    so a study whose NEW result is empty still loses its stale rows);
   *  - per-study write atomicity through the task-commit protocol (the
   *    contract of X2/X3, mechanism replaced per SURVEY.md §7.5).
@@ -87,6 +90,7 @@ class ParquetWarehouse(spark: SparkSession, baseDir: String) extends Warehouse {
   private def exists(table: String): Boolean = fs.exists(new HPath(path(table)))
 
   def read(table: String): DataFrame = {
+    recover(table)
     val dir = new HPath(path(table))
     val old = new HPath(path(table) + "__old")
     // crash recovery for writeDim's swap: the live dir vanished after
@@ -106,6 +110,7 @@ class ParquetWarehouse(spark: SparkSession, baseDir: String) extends Warehouse {
     * partition filter.
     */
   override def readStudies(table: String, studyKeys: Seq[Long]): DataFrame = {
+    recover(table)
     val dirs =
       if (!partitionedByStudy(table)) Seq.empty
       else studyKeys.distinct.map(k => new HPath(path(table), s"study_key=$k")).filter(fs.exists)
@@ -141,8 +146,10 @@ class ParquetWarehouse(spark: SparkSession, baseDir: String) extends Warehouse {
     ()
   }
 
-  def append(table: String, df: DataFrame): Unit =
+  def append(table: String, df: DataFrame): Unit = {
+    requireStudyLayout(table)
     layout(table, df).mode(SaveMode.Append).parquet(path(table))
+  }
 
   /** Bucketed twin for co-located joins: two tables bucketed by the
     * same key into the same bucket count join WITHOUT any exchange —
@@ -165,16 +172,116 @@ class ParquetWarehouse(spark: SparkSession, baseDir: String) extends Warehouse {
   }
 
   /** S7: replace the given studies' partitions with `df`'s rows —
-    * explicit delete-then-append, the reference's semantics. Dynamic
-    * partition overwrite alone cannot express "this study now has no
-    * rows": it only touches partitions PRESENT in the frame, so a
-    * study whose recomputation is empty would keep its stale rows.
+    * the reference's delete-then-insert, staged so that no crash or
+    * cancel loses a study's previous rows. Dynamic partition overwrite
+    * alone cannot express "this study now has no rows": it only touches
+    * partitions PRESENT in the frame, so a study whose recomputation is
+    * empty would keep its stale rows.
+    *
+    * Three steps ([[stageReplace]], [[rollForward]]):
+    *  1. `df` is written to a stage directory beside the table (`df`
+    *     may read the rows it replaces: nothing is deleted yet);
+    *  2. a marker naming the stage's files and the replaced studies'
+    *     current files is written and renamed into the stage — the
+    *     commit point. A stage without a marker is discarded;
+    *  3. the named old files are deleted and the staged files renamed
+    *     into their `study_key=K` directories.
+    *
+    * Step 3 only deletes files the marker names and only moves files
+    * still in the stage, so it can be repeated: every `read` of the
+    * table first rolls a committed stage forward, as `read` recovers
+    * [[writeDim]]'s swap.
     */
-  def replaceStudyPartitions(table: String, df: DataFrame, studyKeys: Seq[Long]): Unit = {
-    studyKeys.foreach { k =>
-      fs.delete(new HPath(s"${path(table)}/study_key=$k"), true)
+  def replaceStudyPartitions(table: String, df: DataFrame, studyKeys: Seq[Long]): Unit =
+    if (studyKeys.nonEmpty) {
+      require(partitionedByStudy(table), s"$table is not partitioned by study_key")
+      requireStudyLayout(table)
+      recover(table, dropUncommitted = true)
+      rollForward(stageReplace(table, df, studyKeys))
     }
-    if (studyKeys.nonEmpty) append(table, df)
+
+  private def stageName(table: String) = s"${table}__replace-"
+  private val Marker = "_replaces"
+
+  /** Steps 1 and 2 of [[replaceStudyPartitions]]: returns the
+    * committed stage.
+    */
+  private[etl] def stageReplace(table: String, df: DataFrame, studyKeys: Seq[Long]): HPath = {
+    val stage = new HPath(baseDir, stageName(table) + java.util.UUID.randomUUID())
+    layout(table, df).mode(SaveMode.Overwrite).parquet(stage.toString)
+    def files(root: HPath, dirs: Seq[String]): Seq[String] = dirs.flatMap { d =>
+      val dir = new HPath(root, d)
+      if (!fs.exists(dir)) Nil
+      else fs.listStatus(dir).toSeq.filter(_.isFile).map(f => s"$d/${f.getPath.getName}")
+    }
+    val stagedDirs = fs.listStatus(stage).toSeq
+      .filter(f => f.isDirectory && f.getPath.getName.startsWith("study_key="))
+      .map(_.getPath.getName)
+    val lines = files(new HPath(path(table)), studyKeys.distinct.map(k => s"study_key=$k"))
+      .map("old " + _) ++ files(stage, stagedDirs).map("new " + _)
+    val pending = new HPath(stage, Marker + ".tmp")
+    val out = fs.create(pending, true)
+    try out.write(lines.mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    if (!fs.rename(pending, new HPath(stage, Marker)))
+      throw new java.io.IOException(s"Failed to commit stage $stage of $table")
+    stage
+  }
+
+  /** Step 3 of [[replaceStudyPartitions]] for one committed stage; a
+    * no-op once the stage is gone. Safe to run twice at once.
+    */
+  private[etl] def rollForward(stage: HPath): Unit = {
+    val lines =
+      try {
+        val in = fs.open(new HPath(stage, Marker))
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector finally in.close()
+      } catch { case _: java.io.FileNotFoundException => return }
+    val table = new HPath(baseDir, stage.getName.substring(0, stage.getName.indexOf("__replace-")))
+    val (old, staged) = lines.partition(_.startsWith("old "))
+    old.foreach(l => fs.delete(new HPath(table, l.drop(4)), false))
+    // a file another roll-forward moved first is gone from the stage;
+    // one still there after a failed rename keeps the stage
+    staged.map(_.drop(4)).foreach { rel =>
+      val src = new HPath(stage, rel)
+      val dst = new HPath(table, rel)
+      if (fs.exists(src) && !(fs.mkdirs(dst.getParent) && fs.rename(src, dst)) && fs.exists(src))
+        throw new java.io.IOException(s"Failed to move $src into $table")
+    }
+    // a replaced study left without rows loses its directory (a
+    // non-recursive delete fails on a directory that still holds files)
+    val dir = (l: String) => l.drop(4).takeWhile(_ != '/')
+    (old.map(dir).distinct diff staged.map(dir)).foreach { d =>
+      try fs.delete(new HPath(table, d), false) catch { case _: java.io.IOException => () }
+    }
+    fs.delete(new HPath(stage, Marker), false)
+    fs.delete(stage, true)
+    ()
+  }
+
+  /** Rolls every committed stage of `table` forward; with
+    * `dropUncommitted` (the writer, before it stages) also deletes the
+    * stages a failed replace left without a marker.
+    */
+  private def recover(table: String, dropUncommitted: Boolean = false): Unit =
+    if (partitionedByStudy(table))
+      Option(fs.globStatus(new HPath(baseDir, stageName(table) + "*"))).toSeq.flatten
+        .map(_.getPath).foreach { stage =>
+          if (fs.exists(new HPath(stage, Marker))) rollForward(stage)
+          else if (dropUncommitted) fs.delete(stage, true)
+        }
+
+  /** A `study_key`-partitioned table written before it was partitioned
+    * holds its files at its root; a partitioned write beside them would
+    * mix the two layouts, which Spark cannot read.
+    */
+  private def requireStudyLayout(table: String): Unit = {
+    val dir = new HPath(path(table))
+    if (partitionedByStudy(table) && fs.exists(dir) && fs.listStatus(dir).exists(f =>
+        f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")))
+      throw new IllegalStateException(s"$table at $dir holds files outside its study_key=K " +
+        "directories: it was written before the table was partitioned by study_key. " +
+        "Reload the warehouse into a new directory.")
   }
 }
 

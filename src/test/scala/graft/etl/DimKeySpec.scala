@@ -106,6 +106,64 @@ class DimKeySpec extends SparkSpec {
       sorted(keyTable))
   }
 
+  /** Loads GSE_Z and GSE_M into `target`, fails a replace of GSE_M's
+    * `dim_sample` rows part way (the new rows' plan throws), then
+    * re-delivers both studies. Returns `dim_sample` and the fact count
+    * before the failure and after the re-run.
+    */
+  private def failedReplaceThenReload(target: String) = {
+    val root = tmpDir("graft-dimkeys")
+    val filter = root.resolve("filter.tsv")
+    Files.writeString(filter, filterTsv)
+    val job = new EtlJob(spark, AppConfig(DatabaseConfig("unused"), ProcessingConfig(root, filter),
+      LoggingConfig(logLevel = "WARN")), target)
+    val dirs = Seq(
+      study(root, "GSE_Z", Seq(("GSMz2", "40", "male", "GPL1", "Healthy"),
+        ("GSMz1", "UNKNOWN", "female", "GPL2", "UNKNOWN")), Seq("ENSG_B", "ENSG_A")),
+      study(root, "GSE_M", Seq(("GSMm1", "27", "female", "GPL2", "Ill"),
+        ("GSMm0", "50", "male", "GPL1", "Healthy")), Seq("ENSG_A", "ENSG_C")))
+    def load() = {
+      val results = job.processUnioned(dirs)
+      assert(results.forall(_.error.isEmpty), results.toString)
+    }
+    load()
+    val wh = Warehouse(spark, target)
+    def state() = (wh.read("dim_sample").collect().map(_.toString).sorted.toSeq,
+      wh.read("fact_expression").count())
+    val before = state()
+    import org.apache.spark.sql.functions.{col, udf}
+    val planted = udf((k: Long) => if (k > 0) throw new IllegalStateException("planted") else k)
+    val m = wh.read("dim_study").where(col("gse_accession") === "GSE_M").head.getLong(0)
+    intercept[Exception] {
+      wh.replaceStudyPartitions("dim_sample", wh.readStudies("dim_sample", Seq(m))
+        .withColumn("sample_key", planted(col("sample_key"))), Seq(m))
+    }
+    load()
+    (before, state())
+  }
+
+  test("a failed dim_sample replace keeps a re-delivered study's sample keys (parquet)") {
+    val dir = tmpDir("graft-dimkeys-wh")
+    val (before, after) = failedReplaceThenReload(dir.toString)
+    assert(before._1.size == 4 && before._2 == 8)
+    assert(after == before)
+    assert(!Files.list(dir).toArray.exists(_.toString.contains("__replace-")))
+  }
+
+  test("a failed dim_sample replace keeps a re-delivered study's sample keys (snapshot)") {
+    val (before, after) = failedReplaceThenReload(s"snapshot:${tmpDir("graft-dimkeys-snap")}")
+    assert(before._1.size == 4 && before._2 == 8)
+    assert(after == before)
+  }
+
+  test("a failed dim_sample replace keeps a re-delivered study's sample keys (JDBC, Derby)") {
+    System.setProperty("derby.system.home", tmpDir("graft-dimkeys-derby").toString)
+    val (before, after) =
+      failedReplaceThenReload(s"jdbc:derby:${tmpDir("graft-dimkeys-jdbc")}/wh;create=true")
+    assert(before._1.size == 4 && before._2 == 8)
+    assert(after == before)
+  }
+
   test("new naturals are numbered in Spark's UTF-8 string order, not Java's UTF-16 order") {
     val labels = Seq(s"GPL$grin", s"GPL$fullA", "GPL2", " GPL2 ", "UNKNOWN", "")
     // Java's order puts the surrogate pair first

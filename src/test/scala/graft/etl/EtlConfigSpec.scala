@@ -11,6 +11,7 @@ class EtlConfigSpec extends AnyFunSuite {
 
   private def write(content: String): String = {
     val f = Files.createTempFile("etlconfig", ".yaml")
+    f.toFile.deleteOnExit()
     Files.writeString(f, content)
     f.toString
   }

@@ -146,22 +146,21 @@ class EtlSpec extends SparkSpec {
   test("S2: gene filter loads, trims, dedups, errors on empty") {
     val root = tmpDir("graft-etl")
     val p = write(root, "filter.tsv", filterTsv)
-    val genes = GeneFilter.load(spark, p.toString)
-    assert(genes.as[String].collect().sorted.toSeq == Seq("ENSG1", "ENSG2", "ENSG3"))
+    assert(GeneFilter.ids(spark, p.toString).sorted == Seq("ENSG1", "ENSG2", "ENSG3"))
     val noCol = write(root, "f2.tsv", "wrong\nx\n")
-    intercept[GeneFilterError] { GeneFilter.load(spark, noCol.toString) }
+    intercept[GeneFilterError] { GeneFilter.ids(spark, noCol.toString) }
     val empty = write(root, "f3.tsv", "ensembl_id\n\n  \n")
-    intercept[GeneFilterError] { GeneFilter.load(spark, empty.toString) }
+    intercept[GeneFilterError] { GeneFilter.ids(spark, empty.toString) }
     // CSV quoting as spark.read parses it; the id column need not be first
     val quoted = write(root, "f4.tsv",
       "symbol\tensembl_id\nA\t\"ENSG9\"\nB\t\" ENSG1 \"\nC\t\"\"\nD\n")
-    assert(GeneFilter.load(spark, quoted.toString).as[String].collect().sorted.toSeq ==
+    assert(GeneFilter.ids(spark, quoted.toString).sorted ==
       Seq("ENSG1", "ENSG9"))
     // a compressed whitelist decompresses through its codec
     val gz = root.resolve("filter.tsv.gz")
     val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(gz))
     try out.write(filterTsv.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
-    assert(GeneFilter.load(spark, gz.toString).as[String].collect().sorted.toSeq ==
+    assert(GeneFilter.ids(spark, gz.toString).sorted ==
       Seq("ENSG1", "ENSG2", "ENSG3"))
   }
 
@@ -644,7 +643,8 @@ class EtlSpec extends SparkSpec {
       val writes = executions.flatMap(qe => helper.collect(qe.executedPlan) {
         case d @ DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _)
             if c.outputPath.getName.startsWith("dim_") =>
-          c.outputPath.getName -> d.metrics("numOutputBytes").value
+          // a replace writes to a stage beside its table
+          c.outputPath.getName.split("__replace-").head -> d.metrics("numOutputBytes").value
       })
       // dim_study, dim_platform and dim_sample get rows; dim_illness and
       // dim_gene have none to add
@@ -710,6 +710,57 @@ class EtlSpec extends SparkSpec {
     assert(wh.read("fact_gene_pair_corr").count() == 1)
     wh.replaceStudyPartitions("fact_gene_pair_corr", empty, Seq(7L))
     assert(wh.read("fact_gene_pair_corr").count() == 0)
+  }
+
+  test("warehouse: a parquet replace cut after its commit point is rolled forward by the next read") {
+    val whDir = tmpDir("graft-etl")
+    val wh = new ParquetWarehouse(spark, whDir.toString)
+    val schema = Warehouse.schemas("fact_gene_pair_corr")
+    def rows(study: Long, rho: Double*) = rho.zipWithIndex.map { case (r, i) =>
+      (i.toLong, i + 1L, None: Option[Long], r, 0.1, Some(0.2), 3L, "t", study) }
+      .toDF(schema.fieldNames.toIndexedSeq: _*)
+    def rhos() = wh.read("fact_gene_pair_corr").select("study_key", "rho_spearman").as[(Long, Double)]
+      .collect().sorted.toSeq
+    def stages() = Files.list(whDir).toArray.map(_.toString).filter(_.contains("__replace-")).toSeq
+    wh.append("fact_gene_pair_corr", rows(7L, 0.1, 0.2).unionByName(rows(8L, 0.3)))
+    wh.append("fact_gene_pair_corr", rows(9L, 0.4))
+
+    // the cut: the stage is committed, study 7's old files are deleted
+    // (the roll-forward's first step), no new file is in place yet
+    wh.stageReplace("fact_gene_pair_corr", rows(7L, 0.5), Seq(7L, 8L))
+    Files.list(whDir.resolve("fact_gene_pair_corr/study_key=7")).toArray
+      .map(_.asInstanceOf[Path]).foreach(Files.delete)
+    assert(stages().size == 1)
+    val reopened = new ParquetWarehouse(spark, whDir.toString)
+    assert(reopened.read("fact_gene_pair_corr").select("study_key", "rho_spearman")
+      .as[(Long, Double)].collect().sorted.toSeq == Seq(7L -> 0.5, 9L -> 0.4))
+    assert(stages().isEmpty)
+    assert(!Files.exists(whDir.resolve("fact_gene_pair_corr/study_key=8")))
+
+    // a stage cut before its commit point is never read, and the next
+    // replace drops it
+    wh.stageReplace("fact_gene_pair_corr", rows(7L, 0.6), Seq(7L))
+    stages().foreach(d => Files.delete(java.nio.file.Paths.get(d, "_replaces")))
+    assert(rhos() == Seq(7L -> 0.5, 9L -> 0.4))
+    wh.replaceStudyPartitions("fact_gene_pair_corr", rows(9L, 0.7, 0.8), Seq(9L))
+    assert(rhos() == Seq(7L -> 0.5, 9L -> 0.7, 9L -> 0.8))
+    assert(stages().isEmpty)
+  }
+
+  test("warehouse: a flat dim_sample written before it was partitioned fails its first write") {
+    val whDir = tmpDir("graft-etl").toString
+    val row = Seq((1L, "GSM1", 2L, None: Option[Long], None: Option[Long], "1", "f"))
+      .toDF(Warehouse.schemas("dim_sample").fieldNames.toIndexedSeq: _*)
+    row.write.parquet(s"$whDir/dim_sample")
+    val wh = Warehouse(spark, whDir)
+    Seq[() => Unit](() => wh.append("dim_sample", row),
+      () => wh.replaceStudyPartitions("dim_sample", row, Seq(2L))).foreach { write =>
+      val e = intercept[IllegalStateException](write())
+      assert(e.getMessage.contains("Reload the warehouse"), e.getMessage)
+    }
+    assert(!Files.list(java.nio.file.Paths.get(whDir, "dim_sample")).toArray
+      .exists(_.toString.contains("study_key=")))
+    assert(wh.read("dim_sample").count() == 1)
   }
 
   test("S3: duplicated header cells rename with position suffixes; tier-3 matching still resolves the field") {

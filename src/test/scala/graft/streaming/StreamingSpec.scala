@@ -276,7 +276,7 @@ class StreamingSpec extends SparkSpec {
       .resolve("no-such-input.parquet").toString
     assert(graft.SparkEntry.streamStateParts(spark, missing) == cores)
     // a readable small input still sizes down to one partition
-    val small = java.nio.file.Files.createTempFile("graft-sizing", ".parquet")
+    val small = tmpDir("graft-sizing").resolve("small.parquet")
     java.nio.file.Files.writeString(small, "x" * 1024)
     assert(graft.SparkEntry.streamStateParts(spark, small.toString) == 1)
   }
