@@ -107,18 +107,21 @@ class ParquetWarehouse(spark: SparkSession, baseDir: String) extends Warehouse {
     * joins are planned by, cover those studies however many others
     * the table holds — a correlate of two studies plans alike on a
     * warehouse of 2 studies or 200. The predicate still applies, as a
-    * partition filter.
+    * partition filter. A study without a directory has no rows; when
+    * none has one the result is an empty local relation, which the
+    * optimizer folds away (a load of new studies merges their samples
+    * without a join).
     */
-  override def readStudies(table: String, studyKeys: Seq[Long]): DataFrame = {
-    recover(table)
-    val dirs =
-      if (!partitionedByStudy(table)) Seq.empty
-      else studyKeys.distinct.map(k => new HPath(path(table), s"study_key=$k")).filter(fs.exists)
-    if (dirs.isEmpty) super.readStudies(table, studyKeys)
-    else inDeclaredOrder(table, spark.read.schema(schemas(table))
-      .option("basePath", path(table)).parquet(dirs.map(_.toString): _*))
-      .where(inSet("study_key", studyKeys))
-  }
+  override def readStudies(table: String, studyKeys: Seq[Long]): DataFrame =
+    if (!partitionedByStudy(table)) super.readStudies(table, studyKeys)
+    else {
+      recover(table)
+      val dirs = studyKeys.distinct.map(k => new HPath(path(table), s"study_key=$k")).filter(fs.exists)
+      if (dirs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schemas(table))
+      else inDeclaredOrder(table, spark.read.schema(schemas(table))
+        .option("basePath", path(table)).parquet(dirs.map(_.toString): _*))
+        .where(inSet("study_key", studyKeys))
+    }
 
   // the partition column would come back last: pin declared order
   private def inDeclaredOrder(table: String, df: DataFrame): DataFrame =
