@@ -1913,9 +1913,11 @@ object SparkEntry {
       val arr = drain(s, sizedBy, "complete")(stream
         .agg(count(lit(1)).as("__n"),
           sum(when(allSet, 1L).otherwise(0L)).as("__nn"))).head()
-      val survivors = drain(s, sizedBy, "append")(
+      // the survivors are counted inside the stream, after the dedup:
+      // the driver receives one number, never the surviving keys
+      val survivors = drain(s, sizedBy, "complete")(
         ops.Expectations.uniqueSurvivors(stream, keys, "ts", "10 minutes")
-          .select(keys.map(col): _*)).count()
+          .agg(count(lit(1)).as("__survivors"))).head().getLong(0)
       ops.Expectations.uniqueReportRow(s, name, arr.getLong(0), arr.getLong(1), survivors)
     }),
     // X26: the p57 classifier SERVED on a stream — train offline on

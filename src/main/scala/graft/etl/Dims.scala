@@ -13,21 +13,25 @@ import org.apache.spark.unsafe.types.UTF8String
   * lookup per load ([[keyBatch]]): one query through the warehouse view
   * returns the keys the dims already hold for the batch's naturals and
   * each dim's max key; a second, F7-pruned read returns the
-  * `(gsm_accession, study_key, sample_key)` rows of the batch's
-  * studies, and runs only when one of them was loaded before. The driver numbers the naturals no dim holds
-  * from max key + 1, in the order a Spark sort gives them (UTF-8 bytes,
-  * [[SparkStringOrder]]; samples by `(gsm_accession, study_key)`) — the
-  * dense numbering of a global row_number over the new rows, stable
-  * across re-runs (SURVEY.md §7.4 decision 1). Each dim then gets only
-  * its new rows: the vocabulary dims an append, `dim_sample` a replace
-  * of the batch's study partitions ([[upsertSampleDim]]).
+  * `dim_sample` rows of the batch's studies, and runs only when one of
+  * them was loaded before. The driver numbers the naturals no dim
+  * holds from max key + 1, in the order a Spark sort gives them (UTF-8
+  * bytes, [[SparkStringOrder]]; samples by `(gsm_accession,
+  * study_key)`) — the dense numbering of a global row_number over the
+  * new rows, stable across re-runs (SURVEY.md §7.4 decision 1). Each
+  * dim then gets only its new rows: the vocabulary dims an append,
+  * `dim_sample` a replace of the batch's study partitions, whose rows
+  * the driver merges ([[mergeSamples]], the reference's in-memory
+  * upsert) and writes as a local relation.
   *
   * Bound: nothing collected is larger than data the driver already
-  * holds. The vocabulary naturals are the batch's distinct labels,
-  * which the prep aggregate collects; the gene ids are a subset of the
-  * whitelist, which `GeneFilter.ids` reads on the driver; the sample
-  * keys are the batch's GSM lists (collected by the prep aggregate)
-  * plus, for a re-delivered study, the keys its earlier loads gave.
+  * holds. The vocabulary naturals are the batch's distinct labels; the
+  * gene ids are a subset of the whitelist, which `GeneFilter.ids`
+  * reads on the driver. The sample rows are O(samples): each study's
+  * prep collects its normalized metadata rows (seven short columns a
+  * sample, the same order as the GSM lists the expression read needs),
+  * and a re-delivered study adds the `dim_sample` rows its earlier
+  * loads wrote. Expression facts never come to the driver.
   */
 object Dims {
   import Schema.UnknownValue
@@ -72,10 +76,26 @@ object Dims {
   case class Keyed(all: Map[String, Long], fresh: Seq[(String, Long)])
 
   /** A batch's keys, all on the driver. `samples` maps each
-    * `(gsm_accession, study_key)` of the batch to its sample key.
+    * `(gsm_accession, study_key)` of the batch to its sample key;
+    * `loaded` holds the `dim_sample` rows of the batch's studies that
+    * were loaded before.
     */
   case class BatchKeys(study: Keyed, platform: Keyed, illness: Keyed, gene: Keyed,
-      samples: Map[(String, Long), Long], freshSamples: Seq[((String, Long), Long)])
+      samples: Map[(String, Long), Long], loaded: Seq[SampleRow])
+
+  /** One normalized metadata row ([[Metadata.normalize]]'s columns) as
+    * a study's prep collects it: the labels as the TSV gave them, and
+    * `ord`, the row's FILE order.
+    */
+  case class SampleMeta(gsm: String, study: String, platform: String, illness: String,
+      age: String, sex: String, ord: Long)
+
+  /** A `dim_sample` row; a null FK is None. */
+  case class SampleRow(sampleKey: Long, gsm: String, studyKey: Long,
+      platformKey: Option[Long], illnessKey: Option[Long], age: String, sex: String) {
+    def toRow: Row =
+      Row(sampleKey, gsm, studyKey, platformKey.getOrElse(null), illnessKey.getOrElse(null), age, sex)
+  }
 
   /** Keys every dim row a batch needs, through `w` (so a snapshot
     * transaction sees its own view). `gsms` maps each study accession
@@ -124,24 +144,24 @@ object Dims {
       r.getString(1) }.toSeq.flatMap(natural(_, dropUnknown = false))
     val study = keyed("dim_study", studyNaturals)
 
-    // D3: the batch's (gsm, study) pairs; the study's existing keys are
-    // read only when the study was loaded before, pruned to its
-    // partitions (F7)
-    val loaded = knownOf("dim_study").keys.values.toSeq
-    val existing =
-      if (loaded.isEmpty) Seq.empty[Row]
-      else w.readStudies("dim_sample", loaded)
-        .select("gsm_accession", "study_key", "sample_key").collect().toSeq
+    // D3: the batch's (gsm, study) pairs; the studies' existing rows are
+    // read only when one was loaded before, pruned to its partitions (F7)
+    val loadedStudies = knownOf("dim_study").keys.values.toSeq
+    val loaded =
+      if (loadedStudies.isEmpty) Seq.empty[SampleRow]
+      else w.readStudies("dim_sample", loadedStudies).collect().toSeq.map { r =>
+        def key(c: String) = Option(r.getAs[Number](c)).map(_.longValue())
+        SampleRow(key("sample_key").get, r.getAs[String]("gsm_accession"), key("study_key").get,
+          key("platform_key"), key("illness_key"), r.getAs[String]("age"), r.getAs[String]("sex"))
+      }
     val pairs = gsms.toSeq.flatMap { case (acc, ids) =>
       study.all.get(acc).toSeq.flatMap(k => ids.map(_ -> k)) }
-    val knownSamples = Known(existing.map(r =>
-      (r.getString(0), r.getAs[Number](1).longValue()) -> r.getAs[Number](2).longValue()).toMap,
+    val knownSamples = Known(loaded.map(r => (r.gsm, r.studyKey) -> r.sampleKey).toMap,
       knownOf("dim_sample").maxKey)
-    val freshSamples = knownSamples.fresh(pairs)(SampleOrder)
-    val sampleKeys = knownSamples.keys ++ freshSamples
+    val sampleKeys = knownSamples.keys ++ knownSamples.fresh(pairs)(SampleOrder)
     BatchKeys(study, keyed("dim_platform", platformNaturals),
       keyed("dim_illness", illnessNaturals), keyed("dim_gene", geneNaturals),
-      pairs.map(p => p -> sampleKeys(p)).toMap, freshSamples)
+      pairs.map(p => p -> sampleKeys(p)).toMap, loaded)
   }
 
   /** Driver-held tuples as a local relation, which no job builds: one
@@ -153,79 +173,57 @@ object Dims {
       StructType(cols.map { case (n, t) => StructField(n, t, nullable = false) }))
   }
 
-  /** D3: sample-dimension merge-upsert on (gsm_accession, study_key).
-    *
-    * `existing`: the `dim_sample` rows of the incoming studies (all of
-    * them — the result replaces those studies' rows, and may be written
-    * by the replace that reads them, [[Warehouse]]). `incoming`
-    * columns: gsm_accession, study_key, platform_key, illness_key
-    * (already-resolved nullable FKs — UNKNOWN ⇒ null, F8), age, sex,
-    * __ord (intra-batch order for duplicate-GSM resolution). `fresh`:
-    * the keys of the incoming pairs `existing` lacks ([[Known.fresh]]).
-    *
-    * Matched rows: platform/illness overwritten by the LAST non-null
-    * incoming value (each differing value updates in the reference's
-    * row loop); age/sex filled by the FIRST non-UNKNOWN incoming value
-    * and only if the current value is UNKNOWN (repositories.py:188-251).
-    * New rows: inserted with UNKNOWN defaults and their fresh keys.
-    */
-  def upsertSampleDim(existing: DataFrame, incoming: DataFrame,
-      fresh: Seq[((String, Long), Long)]): DataFrame = {
-    val collapsed = incoming
-      .groupBy("gsm_accession", "study_key")
-      .agg(
-        max_by(struct(col("platform_key")), when(col("platform_key").isNotNull, col("__ord")))
-          .getField("platform_key").as("platform_key"),
-        max_by(struct(col("illness_key")), when(col("illness_key").isNotNull, col("__ord")))
-          .getField("illness_key").as("illness_key"),
-        min_by(struct(col("age")), when(col("age") =!= UnknownValue, col("__ord")))
-          .getField("age").as("age"),
-        min_by(struct(col("sex")), when(col("sex") =!= UnknownValue, col("__ord")))
-          .getField("sex").as("sex"))
-
-    val inc = collapsed.select(
-      col("gsm_accession").as("i_gsm"), col("study_key").as("i_study"),
-      col("platform_key").as("i_platform"), col("illness_key").as("i_illness"),
-      col("age").as("i_age"), col("sex").as("i_sex"))
-
-    val joined = existing.join(inc,
-      col("gsm_accession") === col("i_gsm") && col("study_key") === col("i_study"),
-      "full_outer")
-
-    val matchedOrExisting = joined.where(col("sample_key").isNotNull).select(
-      col("sample_key"), col("gsm_accession"), col("study_key"),
-      coalesce(col("i_platform"), col("platform_key")).as("platform_key"),
-      coalesce(col("i_illness"), col("illness_key")).as("illness_key"),
-      when((col("age").isNull || col("age") === UnknownValue) &&
-        col("i_age").isNotNull && col("i_age") =!= UnknownValue, col("i_age"))
-        .otherwise(coalesce(col("age"), lit(UnknownValue))).as("age"),
-      when((col("sex").isNull || col("sex") === UnknownValue) &&
-        col("i_sex").isNotNull && col("i_sex") =!= UnknownValue, col("i_sex"))
-        .otherwise(coalesce(col("sex"), lit(UnknownValue))).as("sex"))
-
-    val freshKeys = local(incoming.sparkSession,
-      "i_gsm" -> StringType, "i_study" -> LongType, "sample_key" -> LongType)(
-      fresh.map { case ((gsm, study), k) => (gsm, study, k) })
-    val added = joined.where(col("sample_key").isNull).drop("sample_key")
-      .join(broadcast(freshKeys), Seq("i_gsm", "i_study"))
-      .select(col("sample_key"),
-        col("i_gsm").as("gsm_accession"), col("i_study").as("study_key"),
-        col("i_platform").as("platform_key"), col("i_illness").as("illness_key"),
-        coalesce(col("i_age"), lit(UnknownValue)).as("age"),
-        coalesce(col("i_sex"), lit(UnknownValue)).as("sex"))
-
-    matchedOrExisting.unionByName(added)
+  /** `rows` as a local relation in `dim_sample`'s declared schema. */
+  def sampleRelation(spark: SparkSession, rows: Seq[SampleRow]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.map(_.toRow).asJava, Warehouse.schemas("dim_sample"))
   }
 
-  /** Resolve a dim's natural value to its nullable FK with the UNKNOWN
-    * guard (F8): blank/UNKNOWN ⇒ null key, never a dim row.
+  /** D3: the sample-dimension merge-upsert on `(gsm_accession,
+    * study_key)`, on the driver — the reference's in-memory row loop
+    * (repositories.py:188-251). Returns the `dim_sample` rows of the
+    * batch's studies: the `keys.loaded` rows, updated by the `incoming`
+    * rows of their pair, and a new row per pair they lack, with its key
+    * from `keys.samples`.
+    *
+    * The incoming labels key through `keys` (study by accession,
+    * platform and illness by natural); a blank or UNKNOWN label is a
+    * null FK (F8). Per pair, platform and illness take the LAST
+    * non-null FK in `ord` order (each differing value updates in the
+    * reference's loop), and overwrite the loaded value; age and sex
+    * take the FIRST non-UNKNOWN value, which fills only an UNKNOWN
+    * loaded value. A new row with no known age or sex stores UNKNOWN.
     */
-  def resolveFk(df: DataFrame, dim: DataFrame, naturalCol: String,
-      dimNatural: String, keyCol: String): DataFrame = {
-    val d = dim.select(col(keyCol), col(dimNatural).as(naturalCol))
-    df.withColumn(naturalCol,
-        when(col(naturalCol) === UnknownValue || col(naturalCol) === "", lit(null))
-          .otherwise(col(naturalCol)))
-      .join(broadcast(d), Seq(naturalCol), "left")
+  def mergeSamples(incoming: Seq[SampleMeta], keys: BatchKeys): Seq[SampleRow] = {
+    def fk(k: Keyed, label: String): Option[Long] = natural(label).flatMap(k.all.get)
+    // (ord, position) orders the rows; the position breaks ties between
+    // two preps of one accession as input order
+    val byPair = incoming.zipWithIndex.flatMap { case (m, i) =>
+      keys.study.all.get(m.study).map(s => ((m.gsm, s), (m, (m.ord, i))))
+    }.groupMap(_._1)(_._2).view.mapValues(_.sortBy(_._2).map(_._1)).toMap
+    def lastFk(rows: Seq[SampleMeta], k: Keyed, label: SampleMeta => String) =
+      rows.reverseIterator.flatMap(m => fk(k, label(m))).nextOption()
+    def firstKnown(rows: Seq[SampleMeta], v: SampleMeta => String) =
+      rows.iterator.map(v).find(_ != UnknownValue)
+    def fill(current: String, in: Option[String]) =
+      if (current == UnknownValue) in.getOrElse(current) else current
+    val updated = keys.loaded.map { r =>
+      byPair.get((r.gsm, r.studyKey)).fold(r) { rows =>
+        r.copy(
+          platformKey = lastFk(rows, keys.platform, _.platform).orElse(r.platformKey),
+          illnessKey = lastFk(rows, keys.illness, _.illness).orElse(r.illnessKey),
+          age = fill(r.age, firstKnown(rows, _.age)),
+          sex = fill(r.sex, firstKnown(rows, _.sex)))
+      }
+    }
+    val have = keys.loaded.map(r => (r.gsm, r.studyKey)).toSet
+    val added = byPair.toSeq.filterNot { case (pair, _) => have(pair) }.map {
+      case (pair @ (gsm, study), rows) =>
+        SampleRow(keys.samples(pair), gsm, study,
+          lastFk(rows, keys.platform, _.platform), lastFk(rows, keys.illness, _.illness),
+          firstKnown(rows, _.age).getOrElse(UnknownValue),
+          firstKnown(rows, _.sex).getOrElse(UnknownValue))
+    }
+    (updated ++ added).sortBy(_.sampleKey)
   }
 }

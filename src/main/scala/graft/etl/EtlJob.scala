@@ -23,25 +23,32 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, SparkSes
   * every study's rows flow through ONE set of batched plans — one
   * lookup and one write per dimension, one whitelist-filtered melt
   * union, one anti-join dedup, one fact append. Before that, each
-  * study's prep (discovery, one metadata aggregate, the driver-side
-  * expression header read) runs one Spark action per study; the preps
-  * run at once on a driver pool, the reference's per-study thread pool
-  * (pipeline.py:340-356). The gene whitelist is read on the driver,
-  * and the whitelist-filtered melt union is cached for the publish
-  * phase: the dim lookup and the fact join both read it, so the
-  * expression matrices are parsed once.
+  * study's prep (discovery, one collect of its normalized metadata
+  * rows, the driver-side expression header read) runs one Spark action
+  * per study; the preps run at once on a driver pool, the reference's
+  * per-study thread pool (pipeline.py:340-356). The gene whitelist is
+  * read on the driver, and the whitelist-filtered melt union is cached
+  * for the publish phase: the dim lookup and the fact join both read
+  * it, so the expression matrices are parsed once.
   *
-  * Every dim key of the batch is assigned on the driver from one
-  * lookup query ([[Dims.keyBatch]]). The five dim writes then run at
-  * once, each writing only the batch's own rows: the vocabulary dims
-  * append their new rows (nothing when there are none), `dim_sample`
-  * replaces the batch's study partitions. StudyState and the fact
-  * append follow in order; the fact join keys through the batch's
-  * local key maps, not through reads of the dims. The append is not
-  * cached or counted beforehand: the per-study fact counts are an
-  * `Observation` on the append itself. Every pool is bounded by
-  * min(tasks, driver cores) and lives for one call
-  * ([[EtlJob.inParallel]]). Failure isolation per study (the
+  * The publish order:
+  *  1. every dim key of the batch is assigned on the driver from one
+  *     lookup query ([[Dims.keyBatch]]), and the driver merges the
+  *     batch's `dim_sample` rows ([[Dims.mergeSamples]]);
+  *  2. the five dim writes run at once, each writing only the batch's
+  *     own rows: the vocabulary dims append their new rows (nothing
+  *     when there are none), `dim_sample` replaces the batch's study
+  *     partitions with the merged rows, a local relation;
+  *  3. the in-flight [[StudyState]] row and the fact append run at
+  *     once. The fact join keys through the batch's local key maps,
+  *     not through reads of the dims; the J7 anti-join reads the
+  *     batch's study partitions, nothing for a batch of new studies.
+  *     The append is not cached or counted beforehand: the per-study
+  *     fact counts are an `Observation` on the append itself;
+  *  4. the terminal StudyState row, after both.
+  *
+  * Every pool is bounded by min(tasks, driver cores) and lives for one
+  * call ([[EtlJob.inParallel]]). Failure isolation per study (the
   * reference's swallow-log-continue, pipeline.py:351-356) happens where
   * its format errors surface: prep excludes a bad study before
   * anything publishes.
@@ -64,14 +71,12 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
   def run(resume: Boolean = false): Seq[StudyResult] =
     processUnioned(StudyDiscovery.discoverStudyDirs(config.processing.inputDirectory), resume)
 
-  /** A prepared study: its normalized samples, its melted expression
-    * rows, the A1 sample / age / sex completion counts, and its
-    * distinct GSM accessions, platform and illness labels (the naturals
-    * [[Dims.keyBatch]] keys).
+  /** A prepared study: its normalized metadata rows (X6-overridden to
+    * `acc`), its melted expression rows and its distinct GSM
+    * accessions in Spark's string order.
     */
-  private case class Prep(acc: String, samples: DataFrame, melted: DataFrame,
-      total: Long, completeAge: Long, completeSex: Long,
-      gsms: Seq[String], platforms: Seq[String], illnesses: Seq[String])
+  private case class Prep(acc: String, samples: Seq[Dims.SampleMeta], melted: DataFrame,
+      gsms: Seq[String])
 
   /** The load over an EXPLICIT study-directory list — the engine of
     * [[run]] (which discovers from the config root) and of
@@ -111,11 +116,12 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
   }
 
   /** One study's prep, a task of [[processUnioned]]'s pool: discovery,
-    * then ONE metadata aggregate that serves the empty check, the X6
-    * mismatch warning, the A1 completion counts, the expected sample
-    * columns and the study's platform and illness labels, then the
-    * expression header read on the driver. A failure
-    * is this study's result, never the batch's.
+    * then ONE collect of the normalized metadata rows, which serve the
+    * empty check, the X6 mismatch warning, the A1 completion counts,
+    * the expected sample columns, the study's platform and illness
+    * labels and the driver's `dim_sample` merge, then the expression
+    * header read on the driver. A failure is this study's result,
+    * never the batch's.
     */
   private def prepare(dir: java.nio.file.Path, done: Set[String]): Either[StudyResult, Prep] =
     try {
@@ -125,26 +131,22 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
         log.info(s"Skipping completed study $acc (resume)")
         Left(StudyResult(acc, 0, 0, skipped = true))
       } else {
-        val raw = Metadata.load(spark, files.metadataFile.toString, config.fieldMappings)
-        def countWhere(c: org.apache.spark.sql.Column) = sum(when(c, 1L).otherwise(0L))
-        val stats = raw.agg(
-          count(lit(1)),
-          countWhere(col("study_accession") =!= acc && col("study_accession") =!= Schema.UnknownValue),
-          countWhere(col("age") =!= Schema.UnknownValue),
-          countWhere(col("sex") =!= Schema.UnknownValue),
-          array_sort(collect_set(col("gsm_accession"))),
-          collect_set(col("platform_accession")),
-          collect_set(col("illness_label"))).head()
-        if (stats.getLong(0) == 0)
+        val rows = Metadata.load(spark, files.metadataFile.toString, config.fieldMappings)
+          .select("gsm_accession", "study_accession", "platform_accession", "illness_label",
+            "age", "sex", "__ord")
+          .collect().toSeq.map(r => Dims.SampleMeta(r.getString(0), r.getString(1), r.getString(2),
+            r.getString(3), r.getString(4), r.getString(5), r.getLong(6)))
+        if (rows.isEmpty)
           throw new StudyProcessingError(s"No valid samples found in metadata ${files.metadataFile}")
-        val mismatches = stats.getLong(1)
+        val mismatches = rows.count(m => m.study != acc && m.study != Schema.UnknownValue)
         if (mismatches > 0)
           log.warn(s"$mismatches samples referenced differing study accession (expected $acc)")
-        val melted = ExpressionMatrix.load(spark, files.expressionFile.toString, stats.getSeq[String](4))
+        val gsms = rows.map(_.gsm).distinct.sorted(Dims.SparkStringOrder)
+        val melted = ExpressionMatrix.load(spark, files.expressionFile.toString, gsms)
           .withColumn("study_accession", lit(acc))
-        Right(Prep(acc, Metadata.overrideStudyAccession(raw, acc), melted,
-          stats.getLong(0), stats.getLong(2), stats.getLong(3),
-          stats.getSeq[String](4), stats.getSeq[String](5), stats.getSeq[String](6)))
+        // X6: every sample belongs to the directory's study
+        // (pipeline.py:131-139)
+        Right(Prep(acc, rows.map(_.copy(study = acc)), melted, gsms))
       }
     } catch {
       case e: Exception if !interrupted(e) =>
@@ -171,7 +173,6 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
     * one atomic commit).
     */
   private def publishUnioned(w: Warehouse, preps: Seq[Prep]): Seq[StudyResult] = {
-    val allSamples = preps.map(_.samples).reduce(_ unionByName _).cache()
     // the whitelist-filtered melt union is read twice, by the dim lookup
     // and by the fact join below: cached, the expression matrices are
     // parsed once per load
@@ -186,27 +187,19 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
       // each dim gets only its new rows, the five writes at once ---------
       val keys = Dims.keyBatch(w,
         preps.groupMapReduce(_.acc)(_.gsms)((a, b) => (a ++ b).distinct),
-        preps.flatMap(_.platforms), preps.flatMap(_.illnesses),
+        preps.flatMap(_.samples.map(_.platform)), preps.flatMap(_.samples.map(_.illness)),
         filtered.select(col("gene_id")), whitelist)
       def keyRows(keyCol: String, naturalCol: String, keyed: Iterable[(String, Long)]) =
         Dims.local(spark, keyCol -> LongType, naturalCol -> StringType)(keyed.map(_.swap))
       val studyKeys = keyRows("study_key", "study_accession", keys.study.all)
       val batchStudies = keys.study.all.values.toSeq
 
-      // __ord pins the reference's "first row in file wins" duplicate-GSM
-      // resolution (Dims.upsertSampleDim). It comes from Metadata.load:
-      // per-file byte offsets, so the order is FILE order regardless of
-      // how the scan packs splits — safe for multi-file metadata too.
-      // (Cross-study collisions are harmless: __ord only orders rows
-      // within one (gsm, study) group.)
-      val incoming = Dims.resolveFk(
-        Dims.resolveFk(
-          allSamples.join(broadcast(studyKeys), Seq("study_accession")),
-          keyRows("platform_key", "platform_accession", keys.platform.all),
-          "platform_accession", "platform_accession", "platform_key"),
-        keyRows("illness_key", "illness_label", keys.illness.all),
-        "illness_label", "illness_label", "illness_key")
-        .select("gsm_accession", "study_key", "platform_key", "illness_key", "age", "sex", "__ord")
+      // D3 on the driver: the batch's metadata rows merged into its
+      // re-delivered studies' rows. __ord pins the reference's "first row
+      // in file wins" duplicate-GSM resolution; it comes from
+      // Metadata.load: per-file byte offsets, so the order is FILE order
+      // regardless of how the scan packs splits.
+      val samples = Dims.mergeSamples(preps.flatMap(_.samples), keys)
       def appendNew(table: String, keyCol: String, naturalCol: String, k: Dims.Keyed): () => Unit =
         () => if (k.fresh.nonEmpty) w.append(table, keyRows(keyCol, naturalCol, k.fresh))
       EtlJob.inParallel(spark, Seq(
@@ -214,14 +207,8 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
         appendNew("dim_platform", "platform_key", "platform_accession", keys.platform),
         appendNew("dim_illness", "illness_key", "illness_label", keys.illness),
         appendNew("dim_gene", "gene_key", "ensembl_id", keys.gene),
-        () => w.replaceStudyPartitions("dim_sample",
-          Dims.upsertSampleDim(w.readStudies("dim_sample", batchStudies), incoming,
-            keys.freshSamples),
+        () => w.replaceStudyPartitions("dim_sample", Dims.sampleRelation(spark, samples),
           batchStudies)))
-      allSamples.unpersist()
-      // D4: metadata phase committed for every prepared study
-      StudyState.upsert(w, spark, preps.map(_.acc), metadataLoaded = true,
-        factsLoaded = false)
 
       // ---- facts: the cached filtered melt union keyed through the batch's
       // local key maps, one dedup, one append ----------------------------------
@@ -242,18 +229,23 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
         .groupBy("sample_key", "gene_key", "study_key")
         .agg(min(col("expression_value")).as("expression_value"))
       // J7 against the batch's own studies only: a sample key belongs to
-      // one study, so facts outside the batch can never match, and the
-      // study_key predicate prunes their partitions at the scan (F7)
-      val existing = w.read("fact_expression")
-        .where(Warehouse.inSet("study_key", batchStudies))
+      // one study, so facts outside the batch can never match. The read
+      // lists only the studies' partitions (F7); for a batch of new
+      // studies it is an empty local relation and the anti-join folds away
+      val existing = w.readStudies("fact_expression", batchStudies)
         .select("sample_key", "gene_key")
       val fresh = keyed.join(existing, Seq("sample_key", "gene_key"), "left_anti")
       // per-study fact counts ride the append: ONE observed aggregate,
       // whose per-row cost does not grow with the batch's study count.
       // Observation.get blocks until the observed write has finished.
       val appended = Observation()
-      w.append("fact_expression",
-        fresh.observe(appended, EtlJob.countPerKey(col("study_key")).as("facts")))
+      // D4: the in-flight state (metadata committed, facts not) is written
+      // beside the fact append; the terminal state waits for both
+      EtlJob.inParallel(spark, Seq(
+        () => StudyState.upsert(w, spark, preps.map(_.acc), metadataLoaded = true,
+          factsLoaded = false),
+        () => w.append("fact_expression",
+          fresh.observe(appended, EtlJob.countPerKey(col("study_key")).as("facts")))))
       val factsByStudy = appended.get("facts").asInstanceOf[scala.collection.Map[Long, Long]]
       // D4 terminal state: the batch analog of the reference's
       // clear_state-on-success (pipeline.py:299-301) — see StudyState
@@ -261,10 +253,11 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
         factsLoaded = true)
 
       // per-study sample counts and A1 completion (metadata_processing.py:26-38)
-      // from the prep aggregates, summed per accession like the dims
-      val sampleStats = preps.groupMapReduce(_.acc)(p => (p.total, p.completeAge, p.completeSex)) {
-        case ((n1, a1, s1), (n2, a2, s2)) => (n1 + n2, a1 + a2, s1 + s2)
-      }
+      // from the prep rows, summed per accession like the dims
+      val sampleStats = preps.groupMapReduce(_.acc) { p =>
+        def known(v: Dims.SampleMeta => String) = p.samples.count(v(_) != Schema.UnknownValue).toLong
+        (p.samples.size.toLong, known(_.age), known(_.sex))
+      } { case ((n1, a1, s1), (n2, a2, s2)) => (n1 + n2, a1 + a2, s1 + s2) }
       preps.map { p =>
         val (samples, age, sex) = sampleStats(p.acc)
         val facts = keys.study.all.get(p.acc).flatMap(factsByStudy.get).getOrElse(0L)

@@ -197,11 +197,4 @@ object Metadata {
     raw.select(fields: _*)
       .where(col("gsm_accession") =!= "") // F5: blank-GSM rows dropped
   }
-
-  /** X6: samples referencing a different experiment accession are
-    * forced to the directory-derived study (pipeline.py:131-139);
-    * returns the overridden frame (the caller logs the mismatch count).
-    */
-  def overrideStudyAccession(samples: DataFrame, accession: String): DataFrame =
-    samples.withColumn("study_accession", lit(accession))
 }

@@ -150,8 +150,10 @@ class SnapshotWarehouse(spark: SparkSession, val baseDir: String,
   private[etl] def readTable(m: Manifest, table: String,
       onlyStudies: Option[Set[Long]] = None): DataFrame = {
     val base = baseSchema(m, table)
+    // a local relation, so a table with no matching segment folds away
+    // in the optimizer instead of planning a scan of nothing
     val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], base)
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), base)
     val segs = m.tables.getOrElse(table, Nil).filter { seg =>
       // manifest-level segment skipping: a segment whose stamped study
       // set (minus exclusions) cannot match the pushed study predicate
@@ -277,8 +279,10 @@ class SnapshotWarehouse(spark: SparkSession, val baseDir: String,
   def appendsBetween(table: String, fromVersion: Long, toVersion: Long): DataFrame = {
     val added = appendedSegments(table, fromVersion, toVersion)
     val base = baseSchema(manifestAt(toVersion), table)
+    // a local relation, so a table with no matching segment folds away
+    // in the optimizer instead of planning a scan of nothing
     val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], base)
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), base)
     added.foldLeft(empty) { (acc, seg) =>
       acc.unionByName(readSegment(seg, base), allowMissingColumns = true)
     }
@@ -695,6 +699,13 @@ final class SnapshotTxn private[etl] (spark: SparkSession, baseDir: String,
     pending.synchronized { pending(table) = segments(entry(table)) }
 
   def read(table: String): DataFrame = owner.readTable(view, table)
+
+  /** [[SnapshotWarehouse.readStudies]] over the transaction's view:
+    * segments without one of `studyKeys` never enter the plan.
+    */
+  override def readStudies(table: String, studyKeys: Seq[Long]): DataFrame =
+    owner.readTable(view, table, Some(studyKeys.toSet))
+      .where(Warehouse.inSet("study_key", studyKeys))
 
   /** The commit-time SCHEMA CONTRACT (nothing a transaction stages is
     * visible before the manifest rename, so rejecting here rejects the

@@ -2,7 +2,6 @@ package graft.etl
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** D4 resume-state surface (reference models.py:124-131,
@@ -15,16 +14,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * branches on: metadata committed, facts committed.
   *
   * Lifecycle per study:
-  *  - after the metadata/dims commit: upsert (metadata_loaded=true,
+  *  - after the metadata/dims commit, beside the facts append (the two
+  *    writes run at once): upsert (metadata_loaded=true,
   *    facts_loaded=false) — the in-flight marker (pipeline.py:274-280);
-  *  - after the facts append: upsert (true, true) — this is the batch
+  *  - after both: upsert (true, true) — this is the batch
   *    analog of the reference's `clear_state` on success
   *    (pipeline.py:299-301): no partial progress remains, and unlike a
   *    row deletion the terminal row stays observable as "last success",
   *    which is what lets a resumed run SKIP finished studies instead of
   *    re-scanning them through the idempotent anti-join path;
   *  - a crash leaves either no row or an in-flight row — both mean
-  *    "process this study" on resume.
+  *    "process this study" on resume. The terminal row is written only
+  *    after the append has finished, so a crash part way through the
+  *    append, whether the in-flight row landed or not, never marks the
+  *    study finished.
   *
   * The table rides the [[Warehouse]] abstraction, so state lives next
   * to the data on either backend (parquet dir or JDBC database — the
@@ -60,9 +63,7 @@ object StudyState {
     val rows = accessions.map(a => (a, metadataLoaded, factsLoaded, now))
     val incoming: DataFrame = spark.createDataFrame(rows)
       .toDF("study_accession", "metadata_loaded", "facts_loaded", "updated_at")
-    val kept = wh.read(Table)
-      .where(!col("study_accession").isin(accessions: _*))
-    wh.writeDim(Table, kept.unionByName(incoming))
+    wh.writeDim(Table, others(wh, accessions).unionByName(incoming))
   }
 
   /** The reference's literal `clear_state` (repositories.py:283-287),
@@ -71,7 +72,14 @@ object StudyState {
     */
   def clear(wh: Warehouse, accessions: Seq[String]): Unit = {
     if (accessions.isEmpty) return
-    wh.writeDim(Table,
-      wh.read(Table).where(!col("study_accession").isin(accessions: _*)))
+    wh.writeDim(Table, others(wh, accessions))
   }
+
+  /** The state rows of every study but `accessions`. The filter refers
+    * to the set ([[Warehouse.inSet]]), so its generated code is the
+    * same whatever the accessions and their number.
+    */
+  private def others(wh: Warehouse, accessions: Seq[String]): DataFrame =
+    wh.read(Table).where(!Warehouse.inSet("study_accession",
+      accessions.map(org.apache.spark.unsafe.types.UTF8String.fromString)))
 }

@@ -328,11 +328,15 @@ object Warehouse {
     * (`isin` inlines up to 10 literals into the generated code). The
     * code references the set, so it is the same for every batch's keys
     * and a long-lived driver compiles it once; partition pruning reads
-    * it like an IN list. String values must be `UTF8String`s.
+    * it like an IN list. The set is always a `HashSet`: the code casts
+    * it to its runtime class, and `toSet` gives a different class
+    * (`Set1`..`Set4`) for each size up to 4. String values must be
+    * `UTF8String`s.
     */
   def inSet(column: String, values: Iterable[Any]): org.apache.spark.sql.Column =
     graft.functions.exprToColumn(org.apache.spark.sql.catalyst.expressions.InSet(
-      graft.functions.columnToExpr(org.apache.spark.sql.functions.col(column)), values.toSet))
+      graft.functions.columnToExpr(org.apache.spark.sql.functions.col(column)),
+      scala.collection.immutable.HashSet.from(values)))
 
   /** Whether [[layout]] partitions `table` by `study_key`: the table
     * refers to a study, and `study_key` is not its own key (the first

@@ -165,12 +165,19 @@ class EtlSpec extends SparkSpec {
   }
 
   /** The keys `existing` (a dim_sample frame) lacks for `pairs`. */
-  private def freshSamples(existing: org.apache.spark.sql.DataFrame,
-      pairs: Seq[(String, Long)]): Seq[((String, Long), Long)] = {
-    val rows = existing.collect()
-    Dims.Known(rows.map(r => (r.getAs[String]("gsm_accession"), r.getAs[Long]("study_key")) ->
-      r.getAs[Long]("sample_key")).toMap,
-      (0L +: rows.map(_.getAs[Long]("sample_key")).toSeq).max).fresh(pairs)(Dims.SampleOrder)
+  /** The batch keys [[Dims.mergeSamples]] reads: the labels keyed as
+    * given, and each `(gsm, study)` pair of `incoming` keyed as
+    * [[Dims.keyBatch]] keys it after `loaded`'s keys.
+    */
+  private def batchKeys(loaded: Seq[Dims.SampleRow], incoming: Seq[Dims.SampleMeta],
+      studies: Map[String, Long], platforms: Map[String, Long] = Map.empty,
+      illnesses: Map[String, Long] = Map.empty): Dims.BatchKeys = {
+    def keyed(m: Map[String, Long]) = Dims.Keyed(m, Nil)
+    val known = Dims.Known(loaded.map(r => (r.gsm, r.studyKey) -> r.sampleKey).toMap,
+      (0L +: loaded.map(_.sampleKey)).max)
+    val pairs = incoming.map(m => (m.gsm, studies(m.study)))
+    Dims.BatchKeys(keyed(studies), keyed(platforms), keyed(illnesses), keyed(Map.empty),
+      known.keys ++ known.fresh(pairs)(Dims.SampleOrder), loaded)
   }
 
   test("D1/D2: dim upsert is idempotent with deterministic keys") {
@@ -187,33 +194,36 @@ class EtlSpec extends SparkSpec {
   }
 
   test("D3: sample upsert conditional update (tests/test_repositories.py:28-64)") {
-    val wh = Warehouse(spark, tmpDir("graft-etl").toString)
-    def inc(rows: Seq[(String, Long, Option[Long], Option[Long], String, String, Long)]) =
-      rows.toDF("gsm_accession", "study_key", "platform_key", "illness_key", "age", "sex", "__ord")
-    def upsert(existing: org.apache.spark.sql.DataFrame,
-        rows: Seq[(String, Long, Option[Long], Option[Long], String, String, Long)]) =
-      Dims.upsertSampleDim(existing, inc(rows), freshSamples(existing, rows.map(r => (r._1, r._2))))
+    // studies S1, S2 and platforms P1, P2 are keyed 1, 2; illness I5 is 5
+    def upsert(loaded: Seq[Dims.SampleRow],
+        rows: Seq[(String, String, String, String, String, String)]) = {
+      val incoming = rows.map { case (gsm, study, platform, illness, age, sex) =>
+        Dims.SampleMeta(gsm, study, platform, illness, age, sex, 0L) }
+      Dims.mergeSamples(incoming, batchKeys(loaded, incoming,
+        Map("S1" -> 1L, "S2" -> 2L), Map("P1" -> 1L, "P2" -> 2L), Map("I5" -> 5L)))
+    }
     // first batch: UNKNOWN age, platform set
-    val s1 = upsert(wh.read("dim_sample"),
-      Seq(("GSM1", 1L, Some(1L), None, "UNKNOWN", "female", 0L)))
+    val s1 = upsert(Nil,
+      Seq(("GSM1", "S1", "P1", "UNKNOWN", "UNKNOWN", "female")))
     val r1 = s1.head
-    assert(r1.getAs[Long]("sample_key") == 1L)
-    assert(r1.getAs[String]("age") == "UNKNOWN")
+    assert(r1.sampleKey == 1L)
+    assert(r1.age == "UNKNOWN")
+    assert(r1.illnessKey.isEmpty) // UNKNOWN label -> null FK (F8)
     // second batch: fills UNKNOWN age, does NOT overwrite known sex,
     // updates platform to new non-null value
     val s2 = upsert(s1,
-      Seq(("GSM1", 1L, Some(2L), Some(5L), "33", "male", 0L)))
+      Seq(("GSM1", "S1", "P2", "I5", "33", "male")))
     val r2 = s2.head
-    assert(r2.getAs[Long]("sample_key") == 1L) // key stable
-    assert(r2.getAs[String]("age") == "33")    // UNKNOWN filled
-    assert(r2.getAs[String]("sex") == "female") // known NOT overwritten
-    assert(r2.getAs[Long]("platform_key") == 2L) // platform updated
-    assert(r2.getAs[Long]("illness_key") == 5L)
+    assert(r2.sampleKey == 1L) // key stable
+    assert(r2.age == "33")    // UNKNOWN filled
+    assert(r2.sex == "female") // known NOT overwritten
+    assert(r2.platformKey.contains(2L)) // platform updated
+    assert(r2.illnessKey.contains(5L))
     // new sample in second study gets next key
     val s3 = upsert(s2,
-      Seq(("GSM1", 2L, None, None, "40", "male", 0L)))
-    assert(s3.count() == 2)
-    assert(s3.where($"study_key" === 2L).head.getAs[Long]("sample_key") == 2L)
+      Seq(("GSM1", "S2", "UNKNOWN", "UNKNOWN", "40", "male")))
+    assert(s3.size == 2)
+    assert(s3.find(_.studyKey == 2L).get.sampleKey == 2L)
   }
 
   test("E2E slice (SURVEY §7.2): ETL + correlation job, idempotent re-run, stale replace") {
@@ -417,6 +427,42 @@ class EtlSpec extends SparkSpec {
       .read("fact_expression").count().toInt)
   }
 
+  /** `qe`'s executed plan and the initial plan of each adaptive plan
+    * in it: an operator adaptive execution replaces at run time (an
+    * anti-join whose side turned out empty) is still in the initial
+    * plan.
+    */
+  private def physicalPlans(qe: org.apache.spark.sql.execution.QueryExecution) = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    qe.executedPlan +: planHelper.collect(qe.executedPlan) { case a: AdaptiveSparkPlanExec => a.initialPlan }
+  }
+
+  private val planHelper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  /** The `fact_expression` scans `executions` planned. */
+  private def factScans(executions: Seq[org.apache.spark.sql.execution.QueryExecution]) = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    executions.flatMap(physicalPlans).flatMap(p => planHelper.collect(p) {
+      case f: FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.toString.contains("/fact_expression")) => f
+    })
+  }
+
+  test("F7: a load of new studies plans no fact_expression scan") {
+    val root = tmpDir("graft-etl")
+    val first = makeStudy(root, "GSE0001")
+    val second = makeStudy(root, "GSE0002")
+    val filter = write(root, "filter.tsv", filterTsv)
+    val job = new EtlJob(spark, config(root, filter), tmpDir("graft-etl").toString)
+    assert(job.processUnioned(Seq(first)).forall(_.error.isEmpty))
+    // the fact table already holds a partition, but none of the batch's:
+    // the J7 read is an empty local relation and its anti-join folds away
+    val (results, executions) = withExecutions(job.processUnioned(Seq(second)))
+    assert(results.map(_.facts) == Seq(11L))
+    assert(factScans(executions).isEmpty,
+      factScans(executions).map(_.simpleString(10000)).mkString("\n"))
+  }
+
   test("F7: the load's J7 anti-join scans only the batch's study_key partitions") {
     val root = tmpDir("graft-etl")
     val first = makeStudy(root, "GSE0001")
@@ -424,41 +470,22 @@ class EtlSpec extends SparkSpec {
     val filter = write(root, "filter.tsv", filterTsv)
     val whDir = tmpDir("graft-etl").toString
     val job = new EtlJob(spark, config(root, filter), whDir)
-    assert(job.processUnioned(Seq(first)).forall(_.error.isEmpty))
+    assert(job.processUnioned(Seq(first, second)).forall(_.error.isEmpty))
+    val key = Warehouse(spark, whDir).read("dim_study")
+      .where($"gse_accession" === "GSE0001").head.getLong(0)
 
-    // the second load runs against a fact table that already holds a
-    // partition; every plan it executes is captured
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit = { plans.add(qe.executedPlan.toString); () }
-      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    val lenKey = "spark.sql.maxMetadataStringLength" // keep scan paths unabbreviated
-    val prevLen = spark.conf.getOption(lenKey)
-    spark.conf.set(lenKey, "10000")
-    spark.listenerManager.register(listener)
-    try {
-      assert(job.processUnioned(Seq(second)).map(_.facts) == Seq(11L))
-      // listener events arrive asynchronously: wait for the fact scan
-      def factScans = plans.toArray(Array.empty[String]).toSeq
-        .flatMap(_.linesIterator).filter(l => l.contains("FileScan") &&
-          l.contains(s"$whDir/fact_expression"))
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (factScans.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(factScans.nonEmpty, s"no fact_expression scan captured:\n${plans.toArray.mkString("\n")}")
-      factScans.foreach { l =>
-        val partitionFilters = "PartitionFilters: \\[[^\\]]*".r.findFirstIn(l).getOrElse("")
-        assert(partitionFilters.contains("study_key"),
-          s"fact_expression scan is not pruned to the batch's studies:\n$l")
-      }
-    } finally {
-      spark.listenerManager.unregister(listener)
-      prevLen match {
-        case Some(v) => spark.conf.set(lenKey, v)
-        case None => spark.conf.unset(lenKey)
-      }
+    // a --no-resume re-load of a loaded study: its J7 scan reads its own
+    // partition of a fact table that holds two
+    val (results, executions) = withExecutions(job.processUnioned(Seq(first)))
+    assert(results.map(_.facts) == Seq(0L))
+    val scans = factScans(executions)
+    assert(scans.nonEmpty, s"no fact_expression scan captured:\n" +
+      executions.map(_.executedPlan.treeString).mkString("\n--\n"))
+    scans.foreach { f =>
+      assert(f.partitionFilters.exists(_.references.exists(_.name == "study_key")),
+        s"fact_expression scan is not pruned to the batch's studies:\n${f.simpleString(10000)}")
+      assert(f.relation.location.rootPaths.map(_.getName) == Seq(s"study_key=$key"),
+        s"fact_expression scan lists more than the batch's partition:\n${f.simpleString(10000)}")
     }
   }
 
@@ -620,6 +647,34 @@ class EtlSpec extends SparkSpec {
     // 2 preps, 1 dim lookup, 5 dim writes, 2 state writes, 1 fact append
     assert(executions.size <= 12, s"${executions.size} SQL executions:\n" +
       executions.map(_.executedPlan.treeString.linesIterator.take(3).mkString("\n")).mkString("\n--\n"))
+  }
+
+  test("load: the dim_sample write of 2 new studies has no Join or Aggregate under it") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val root = tmpDir("graft-etl")
+    val filter = write(root, "filter.tsv", filterTsv)
+    val job = new EtlJob(spark, config(root, filter), tmpDir("graft-etl").toString)
+    assert(job.processUnioned(Seq(makeStudy(root, "GSE0001"))).forall(_.error.isEmpty))
+    val (results, executions) = withExecutions(
+      job.processUnioned(Seq(makeStudy(root, "GSE0002"), makeStudy(root, "GSE0003"))))
+    assert(results.map(r => (r.accession, r.facts, r.error)) ==
+      Seq(("GSE0002", 11L, None), ("GSE0003", 11L, None)))
+    val writes = executions.flatMap(physicalPlans).flatMap(p => planHelper.collect(p) {
+      case d @ DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _)
+          if c.outputPath.getName.startsWith("dim_sample") => d
+    })
+    assert(writes.nonEmpty, executions.map(_.executedPlan.treeString).mkString("\n--\n"))
+    // the merged rows are a local relation: the driver did the D3 merge
+    writes.foreach { w =>
+      val merge = planHelper.collect(w.child) {
+        case j: BaseJoinExec => j
+        case a: BaseAggregateExec => a
+      }
+      assert(merge.isEmpty, w.treeString)
+    }
   }
 
   test("load: a drain writes the same dim bytes whether 2 or 20 studies were loaded before") {
@@ -798,17 +853,15 @@ class EtlSpec extends SparkSpec {
     val bMin = df.where($"age" === "99").head.getAs[Long]("__ord")
     assert(aMax < bMin)
     // end-to-end: the duplicate-GSM group keeps the FIRST file's values
-    val wh = Warehouse(spark, tmpDir("graft-etl").toString)
-    val incoming = Dims.resolveFk(
-      Dims.resolveFk(df.withColumn("study_key", lit(1L)),
-        wh.read("dim_platform"), "platform_accession", "platform_accession", "platform_key"),
-      wh.read("dim_illness"), "illness_label", "illness_label", "illness_key")
-      .select("gsm_accession", "study_key", "platform_key", "illness_key", "age", "sex", "__ord")
-    val dim = Dims.upsertSampleDim(wh.read("dim_sample"), incoming,
-      freshSamples(wh.read("dim_sample"), Seq("GSMDUP" -> 1L) ++ (1 to 2000).map(i => s"GSMF$i" -> 1L)))
-    val dup = dim.where($"gsm_accession" === "GSMDUP").head
-    assert(dup.getAs[String]("age") == "11")
-    assert(dup.getAs[String]("sex") == "female")
+    val incoming = df.collect().toSeq.map(r => Dims.SampleMeta(
+      r.getAs[String]("gsm_accession"), r.getAs[String]("study_accession"),
+      r.getAs[String]("platform_accession"), r.getAs[String]("illness_label"),
+      r.getAs[String]("age"), r.getAs[String]("sex"), r.getAs[Long]("__ord")))
+    val dim = Dims.mergeSamples(incoming, batchKeys(Nil, incoming, Map("GSEX" -> 1L)))
+    assert(dim.size == 2001)
+    val dup = dim.find(_.gsm == "GSMDUP").get
+    assert(dup.age == "11")
+    assert(dup.sex == "female")
   }
 
   test("CLI: resume is the DEFAULT — a re-run skips the completed study; --no-resume re-scans") {

@@ -153,7 +153,7 @@ class LoadPoolSpec extends SparkSpec {
     val job = new EtlJob(spark, cfg, s"snapshot:$snapDir")
     val caller = Thread.currentThread()
     val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-    // the load's first Spark job is a prep aggregate on a pool thread:
+    // the load's first Spark job is a prep's metadata collect on a pool thread:
     // interrupt the caller, which is then waiting on the pool
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =

@@ -507,6 +507,26 @@ class SnapshotWarehouseSpec extends SparkSpec {
     assert(wh.read("fact_expression").count() == 9)
   }
 
+  test("a transaction's read of studies no segment holds is an empty local relation") {
+    val wh = sw()
+    wh.append("fact_expression", facts(0 until 5, 1L))
+    wh.transact { txn =>
+      txn.append("fact_expression", facts(5 until 9, 2L))
+      // the J7 read of a load of new studies: nothing to scan, so the
+      // optimizer folds it (and an anti-join against it) away
+      val absent = txn.readStudies("fact_expression", Seq(3L, 4L))
+      absent.queryExecution.optimizedPlan match {
+        case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => assert(l.data.isEmpty)
+        case other => fail(s"expected an empty local relation, got:\n$other")
+      }
+      // a staged segment is seen, a committed one too
+      assert(factSet(txn.readStudies("fact_expression", Seq(2L))) ==
+        (5 until 9).map(_.toLong -> 2L).toSet)
+      assert(factSet(txn.readStudies("fact_expression", Seq(1L))) ==
+        (0 until 5).map(_.toLong -> 1L).toSet)
+    }
+  }
+
   test("per-study rollback: a study failing AFTER its dim upserts publishes nothing on the snapshot backend") {
     // the reference's per-study transaction made literal (pipeline.py
     // rollback-on-error): metadata is valid, but the corrupt expression

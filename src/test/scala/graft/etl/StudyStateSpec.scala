@@ -72,4 +72,23 @@ class StudyStateSpec extends SparkSpec {
     val r4 = job.run(resume = true)
     assert(!r4.find(_.accession == "GSE0001").get.skipped)
   }
+
+  test("an upsert of a different number of accessions compiles no new code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val wh = Warehouse(spark, tmpDir("graft-state").toString)
+    def upsert(accessions: String*): Unit =
+      StudyState.upsert(wh, spark, accessions, metadataLoaded = true, factsLoaded = false)
+    // the first upsert writes the table; the second reads it back, as
+    // every later one does, and compiles the read-modify-write's code
+    upsert("GSE0000")
+    upsert("GSE0001")
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    upsert("GSE0002", "GSE0003", "GSE0004")
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    // a filter that inlines its accessions, or casts its set to Scala's
+    // size-specialized Set1..Set4 classes, compiles new code per set
+    // size, which a long-lived `etl-stream --follow` pays on every size
+    assert(compiled == 0, s"a 3-accession upsert after a 1-accession one compiled $compiled classes")
+    assert(StudyState.load(wh).keySet == (0 to 4).map(i => s"GSE000$i").toSet)
+  }
 }
