@@ -115,8 +115,7 @@ class CorrelationJob(spark: SparkSession, warehouseDir: String,
   def run(requested: Seq[String] = Seq.empty): JobSummary = {
     val dimStudy = wh.read("dim_study")
     val named = (if (requested.isEmpty) dimStudy
-        else dimStudy.where(Warehouse.inSet("gse_accession",
-          requested.map(org.apache.spark.unsafe.types.UTF8String.fromString))))
+        else dimStudy.where(Warehouse.inSet("gse_accession", requested)))
       .select("study_key", "gse_accession").collect()
       .map(r => asLong(r, "study_key") -> r.getAs[String]("gse_accession")).toMap
     val long = longFacts(if (requested.isEmpty) None else Some(named.keys.toSeq))

@@ -117,7 +117,7 @@ object Dims {
       w.read(table).select(lit(table).as("dim"), natural.cast(StringType).as("natural"),
         col(keyCol).as("key"))
     def batchOnly(naturalCol: String, naturals: Seq[String]) =
-      when(Warehouse.inSet(naturalCol, naturals.map(UTF8String.fromString)), col(naturalCol))
+      when(Warehouse.inSet(naturalCol, naturals), col(naturalCol))
     val genes = geneIds.toDF("natural")
       .select(lit("dim_gene").as("dim"), col("natural"), lit(null).cast(LongType).as("key"))
     val rows = Seq(

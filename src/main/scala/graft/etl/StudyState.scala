@@ -80,6 +80,5 @@ object StudyState {
     * same whatever the accessions and their number.
     */
   private def others(wh: Warehouse, accessions: Seq[String]): DataFrame =
-    wh.read(Table).where(!Warehouse.inSet("study_accession",
-      accessions.map(org.apache.spark.unsafe.types.UTF8String.fromString)))
+    wh.read(Table).where(!Warehouse.inSet("study_accession", accessions))
 }

@@ -330,13 +330,16 @@ object Warehouse {
     * and a long-lived driver compiles it once; partition pruning reads
     * it like an IN list. The set is always a `HashSet`: the code casts
     * it to its runtime class, and `toSet` gives a different class
-    * (`Set1`..`Set4`) for each size up to 4. String values must be
-    * `UTF8String`s.
+    * (`Set1`..`Set4`) for each size up to 4. A `String` value is
+    * stored as the `UTF8String` the expression compares.
     */
   def inSet(column: String, values: Iterable[Any]): org.apache.spark.sql.Column =
     graft.functions.exprToColumn(org.apache.spark.sql.catalyst.expressions.InSet(
       graft.functions.columnToExpr(org.apache.spark.sql.functions.col(column)),
-      scala.collection.immutable.HashSet.from(values)))
+      scala.collection.immutable.HashSet.from(values.iterator.map {
+        case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
+        case v => v
+      })))
 
   /** Whether [[layout]] partitions `table` by `study_key`: the table
     * refers to a study, and `study_key` is not its own key (the first
