@@ -164,7 +164,6 @@ class EtlSpec extends SparkSpec {
       Seq("ENSG1", "ENSG2", "ENSG3"))
   }
 
-  /** The keys `existing` (a dim_sample frame) lacks for `pairs`. */
   /** The batch keys [[Dims.mergeSamples]] reads: the labels keyed as
     * given, and each `(gsm, study)` pair of `incoming` keyed as
     * [[Dims.keyBatch]] keys it after `loaded`'s keys.
