@@ -35,17 +35,19 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Observation, SparkSes
   *  1. every dim key of the batch is assigned on the driver from one
   *     lookup query ([[Dims.keyBatch]]), and the driver merges the
   *     batch's `dim_sample` rows ([[Dims.mergeSamples]]);
-  *  2. the five dim writes run at once, each writing only the batch's
+  *  2. a study an earlier run finished (a `--no-resume` re-load) has
+  *     its terminal [[StudyState]] row downgraded to in-flight; no
+  *     other study gets a state row yet;
+  *  3. the five dim writes run at once, each writing only the batch's
   *     own rows: the vocabulary dims append their new rows (nothing
   *     when there are none), `dim_sample` replaces the batch's study
   *     partitions with the merged rows, a local relation;
-  *  3. the in-flight [[StudyState]] row and the fact append run at
-  *     once. The fact join keys through the batch's local key maps,
-  *     not through reads of the dims; the J7 anti-join reads the
-  *     batch's study partitions, nothing for a batch of new studies.
-  *     The append is not cached or counted beforehand: the per-study
-  *     fact counts are an `Observation` on the append itself;
-  *  4. the terminal StudyState row, after both.
+  *  4. the fact append. The fact join keys through the batch's local
+  *     key maps, not through reads of the dims; the J7 anti-join reads
+  *     the batch's study partitions, nothing for a batch of new
+  *     studies. The append is not cached or counted beforehand: the
+  *     per-study fact counts are an `Observation` on the append itself;
+  *  5. the terminal StudyState row of every study of the batch.
   *
   * Every pool is bounded by min(tasks, driver cores) and lives for one
   * call ([[EtlJob.inParallel]]). Failure isolation per study (the
@@ -90,7 +92,8 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
     * never thrown.
     */
   def processUnioned(dirs: Seq[java.nio.file.Path], resume: Boolean = false): Seq[StudyResult] = {
-    val done = if (resume) StudyState.completed(wh) else Set.empty[String]
+    val finished = StudyState.completed(wh)
+    val done = if (resume) finished else Set.empty[String]
     val attempts = EtlJob.inParallel(spark, dirs.map(dir => () => prepare(dir, done)))
     val failures = attempts.collect { case Left(f) => f }
     val preps = attempts.collect { case Right(p) => p }
@@ -105,8 +108,8 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
     // individually crash-safe; X2 idempotence covers re-runs).
     val ok =
       try wh match {
-        case sw: SnapshotWarehouse => sw.transact(txn => publishUnioned(txn, preps))
-        case other => publishUnioned(other, preps)
+        case sw: SnapshotWarehouse => sw.transact(txn => publishUnioned(txn, preps, finished))
+        case other => publishUnioned(other, preps, finished)
       } catch {
         case e: Exception if !interrupted(e) =>
           log.error(s"Failed to publish studies ${preps.map(_.acc).mkString(", ")}: ${e.getMessage}")
@@ -170,9 +173,11 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
   /** The publish phase of [[processUnioned]] — all warehouse reads and
     * writes go through `w`, which is either the backend itself or a
     * [[SnapshotTxn]] (read-your-writes view that defers visibility to
-    * one atomic commit).
+    * one atomic commit). `finished` holds the accessions whose state
+    * row was terminal when the load started.
     */
-  private def publishUnioned(w: Warehouse, preps: Seq[Prep]): Seq[StudyResult] = {
+  private def publishUnioned(w: Warehouse, preps: Seq[Prep],
+      finished: Set[String]): Seq[StudyResult] = {
     // the whitelist-filtered melt union is read twice, by the dim lookup
     // and by the fact join below: cached, the expression matrices are
     // parsed once per load
@@ -200,6 +205,11 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
       // Metadata.load: per-file byte offsets, so the order is FILE order
       // regardless of how the scan packs splits.
       val samples = Dims.mergeSamples(preps.flatMap(_.samples), keys)
+      // D4: a finished study is marked in-flight before the load writes
+      // any of its rows, so a cut load cannot leave its terminal row over
+      // a partial append; see StudyState
+      StudyState.upsert(w, spark, preps.map(_.acc).filter(finished), metadataLoaded = true,
+        factsLoaded = false)
       def appendNew(table: String, keyCol: String, naturalCol: String, k: Dims.Keyed): () => Unit =
         () => if (k.fresh.nonEmpty) w.append(table, keyRows(keyCol, naturalCol, k.fresh))
       EtlJob.inParallel(spark, Seq(
@@ -239,13 +249,8 @@ class EtlJob(spark: SparkSession, config: AppConfig, warehouseDir: String) {
       // whose per-row cost does not grow with the batch's study count.
       // Observation.get blocks until the observed write has finished.
       val appended = Observation()
-      // D4: the in-flight state (metadata committed, facts not) is written
-      // beside the fact append; the terminal state waits for both
-      EtlJob.inParallel(spark, Seq(
-        () => StudyState.upsert(w, spark, preps.map(_.acc), metadataLoaded = true,
-          factsLoaded = false),
-        () => w.append("fact_expression",
-          fresh.observe(appended, EtlJob.countPerKey(col("study_key")).as("facts")))))
+      w.append("fact_expression",
+        fresh.observe(appended, EtlJob.countPerKey(col("study_key")).as("facts")))
       val factsByStudy = appended.get("facts").asInstanceOf[scala.collection.Map[Long, Long]]
       // D4 terminal state: the batch analog of the reference's
       // clear_state-on-success (pipeline.py:299-301) — see StudyState

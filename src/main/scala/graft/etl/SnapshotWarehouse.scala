@@ -189,9 +189,15 @@ class SnapshotWarehouse(spark: SparkSession, val baseDir: String,
     * partition filter, so directory pruning applies twice: once on
     * the manifest, once at the scan.
     */
-  override def readStudies(table: String, studyKeys: Seq[Long]): DataFrame = {
+  override def readStudies(table: String, studyKeys: Seq[Long]): DataFrame =
+    readStudiesAt(currentManifest(), table, studyKeys)
+
+  /** [[readStudies]] over manifest `m`, which is either the published
+    * snapshot or a transaction's read-your-writes view.
+    */
+  private[etl] def readStudiesAt(m: Manifest, table: String, studyKeys: Seq[Long]): DataFrame = {
     require(studyKeys.nonEmpty, "studyKeys must be non-empty")
-    readTable(currentManifest(), table, Some(studyKeys.toSet))
+    readTable(m, table, Some(studyKeys.toSet))
       .where(Warehouse.inSet("study_key", studyKeys))
   }
 
@@ -279,10 +285,8 @@ class SnapshotWarehouse(spark: SparkSession, val baseDir: String,
   def appendsBetween(table: String, fromVersion: Long, toVersion: Long): DataFrame = {
     val added = appendedSegments(table, fromVersion, toVersion)
     val base = baseSchema(manifestAt(toVersion), table)
-    // a local relation, so a table with no matching segment folds away
-    // in the optimizer instead of planning a scan of nothing
     val empty = spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](), base)
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], base)
     added.foldLeft(empty) { (acc, seg) =>
       acc.unionByName(readSegment(seg, base), allowMissingColumns = true)
     }
@@ -704,8 +708,7 @@ final class SnapshotTxn private[etl] (spark: SparkSession, baseDir: String,
     * segments without one of `studyKeys` never enter the plan.
     */
   override def readStudies(table: String, studyKeys: Seq[Long]): DataFrame =
-    owner.readTable(view, table, Some(studyKeys.toSet))
-      .where(Warehouse.inSet("study_key", studyKeys))
+    owner.readStudiesAt(view, table, studyKeys)
 
   /** The commit-time SCHEMA CONTRACT (nothing a transaction stages is
     * visible before the manifest rename, so rejecting here rejects the

@@ -13,21 +13,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * granularity collapses to the two PHASE flags the pipeline actually
   * branches on: metadata committed, facts committed.
   *
-  * Lifecycle per study:
-  *  - after the metadata/dims commit, beside the facts append (the two
-  *    writes run at once): upsert (metadata_loaded=true,
-  *    facts_loaded=false) — the in-flight marker (pipeline.py:274-280);
-  *  - after both: upsert (true, true) — this is the batch
+  * Lifecycle per study. A load reads only `facts_loaded`: a study with
+  * no row and a study with an in-flight row are both processed.
+  *  - a study no run has finished gets no row before its facts land:
+  *    the load writes no in-flight row for it, since no row already
+  *    means "process this study";
+  *  - a study an earlier run finished (a `--no-resume` re-load) is
+  *    downgraded to (metadata_loaded=true, facts_loaded=false), the
+  *    in-flight marker (pipeline.py:274-280), before the load writes
+  *    any of its dim or fact rows;
+  *  - after the fact append: upsert (true, true) — this is the batch
   *    analog of the reference's `clear_state` on success
   *    (pipeline.py:299-301): no partial progress remains, and unlike a
   *    row deletion the terminal row stays observable as "last success",
   *    which is what lets a resumed run SKIP finished studies instead of
   *    re-scanning them through the idempotent anti-join path;
-  *  - a crash leaves either no row or an in-flight row — both mean
-  *    "process this study" on resume. The terminal row is written only
-  *    after the append has finished, so a crash part way through the
-  *    append, whether the in-flight row landed or not, never marks the
-  *    study finished.
+  *  - so a crash leaves no row, an in-flight row, or a terminal row
+  *    over data this load has not touched. It never leaves a terminal
+  *    row over a partial append.
   *
   * The table rides the [[Warehouse]] abstraction, so state lives next
   * to the data on either backend (parquet dir or JDBC database — the

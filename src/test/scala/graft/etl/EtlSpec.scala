@@ -643,9 +643,83 @@ class EtlSpec extends SparkSpec {
     val wh = Warehouse(spark, whDir)
     assert(Seq("dim_study", "dim_platform", "dim_illness", "dim_gene", "dim_sample")
       .map(wh.read(_).count()) == Seq(3L, 6L, 4L, 3L, 12L))
-    // 2 preps, 1 dim lookup, 5 dim writes, 2 state writes, 1 fact append
+    // 1 state read, 2 preps, 1 dim lookup, 5 dim writes, 1 fact append,
+    // 1 state write
     assert(executions.size <= 12, s"${executions.size} SQL executions:\n" +
       executions.map(_.executedPlan.treeString.linesIterator.take(3).mkString("\n")).mkString("\n--\n"))
+  }
+
+  /** Runs `body` and returns the start and end of every SQL execution
+    * that wrote a warehouse table, in the order they happened, as
+    * (table, "start" | "end"). A staged write (`<table>__tmp`,
+    * `<table>__replace-<id>`) counts as a write of its table. Listener
+    * events arrive asynchronously but in order; a sentinel query marks
+    * the point by which all of `body`'s events were delivered.
+    */
+  private def tableWrites(body: => Unit): Seq[(String, String)] = {
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+    // the write command may sit under an adaptive plan
+    val written = """InsertIntoHadoopFsRelationCommand \S*/([A-Za-z_]+?)(?:__\S*)?,""".r.unanchored
+    val marker = s"sentinel-${java.util.UUID.randomUUID()}"
+    val tables = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val sentinelDone = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.physicalPlanDescription.contains(marker) =>
+          tables.put(s.executionId, marker)
+        case s: SparkListenerSQLExecutionStart =>
+          def nodes(p: SparkPlanInfo): Iterator[SparkPlanInfo] =
+            Iterator.single(p) ++ p.children.iterator.flatMap(nodes)
+          nodes(s.sparkPlanInfo).map(_.simpleString).collectFirst { case written(table) => table }
+            .foreach { table => tables.put(s.executionId, table); events.add(table -> "start") }
+        case x: SparkListenerSQLExecutionEnd => Option(tables.get(x.executionId)).foreach { t =>
+          if (t == marker) sentinelDone.countDown() else events.add(t -> "end")
+        }
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.range(1).select(lit(marker)).collect()
+      assert(sentinelDone.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never delivered the sentinel query")
+      events.toArray(Array.empty[(String, String)]).toSeq
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("D4: a --no-resume re-load marks a finished study in-flight before writing its rows") {
+    val root = tmpDir("graft-etl")
+    val first = makeStudy(root, "GSE0001")
+    val filter = write(root, "filter.tsv", filterTsv)
+    val whDir = tmpDir("graft-etl").toString
+    val job = new EtlJob(spark, config(root, filter), whDir)
+    val wh = Warehouse(spark, whDir)
+
+    // a study no run has finished gets only its terminal row, after its facts
+    val loaded = tableWrites(assert(
+      job.processUnioned(Seq(first)).map(r => (r.accession, r.facts, r.error)) ==
+        Seq(("GSE0001", 11L, None))))
+    assert(loaded.filter(_._1 == "etl_study_state") ==
+      Seq("etl_study_state" -> "start", "etl_study_state" -> "end"), loaded)
+    assert(loaded.indexOf("etl_study_state" -> "start") >
+      loaded.indexOf("fact_expression" -> "end"), loaded)
+    assert(StudyState.completed(wh) == Set("GSE0001"))
+
+    // re-loading it: the terminal row is downgraded before the dim_sample
+    // replace and the fact append start, so a load cut part way through
+    // them leaves the study to be processed again
+    val reloaded = tableWrites(assert(
+      job.processUnioned(Seq(first)).map(r => (r.accession, r.facts, r.error)) ==
+        Seq(("GSE0001", 0L, None))))
+    val downgraded = reloaded.indexOf("etl_study_state" -> "end")
+    assert(downgraded >= 0 && Seq("dim_sample", "fact_expression").forall { t =>
+      reloaded.indexOf(t -> "start") > downgraded
+    }, reloaded)
+    assert(reloaded.count(_ == ("etl_study_state" -> "start")) == 2, reloaded)
+    assert(StudyState.load(wh) == Map("GSE0001" -> StudyState.State(true, true)))
   }
 
   test("load: the dim_sample write of 2 new studies has no Join or Aggregate under it") {
